@@ -15,9 +15,10 @@ Scaling mode (north-rule evidence, no real cluster in this sandbox):
 
     python bench.py --scaling
 
-runs the same pages pipeline in two fresh subprocesses at local[8] and
-local[32] on an identical synthetic pages table and reports throughput at
-both plus efficiency = (thr_32/thr_8)/4. Results go to BENCH.md.
+runs the CLI's extract stage plus the headline full_pipeline in two fresh
+subprocesses at local[N] and local[4N] (N = $SPARK_GRAFT_SCALE_N, default
+4) on an identical synthetic pages table and reports throughput at both
+plus efficiency = (thr_4N/thr_N)/4. Results go to BENCH.md.
 
 Internal worker mode: ``python bench.py --pipeline-only`` (used by
 --scaling subprocesses; prints a small JSON with docs/sec).
@@ -139,36 +140,17 @@ def ensure_bench_pages(spark, rows: int = BENCH_PAGES_ROWS) -> str:
 
 
 def run_pages_pipeline(spark, pages_dir: str) -> tuple[int, float]:
-    """The north-rule job: extract -> label -> quality -> exact -> fuzzy
-    over a pages table; returns (docs_in, seconds)."""
-    from pyspark.sql import functions as F
-
-    from redpajama_v2_processing_spark.config import PROD_MINHASH
-    from redpajama_v2_processing_spark.functions.extract import extract_text
-    from redpajama_v2_processing_spark.operators.exact_dedup import exact_keep_ids
-    from redpajama_v2_processing_spark.operators.minhash_lsh import (
-        fuzzy_dedup_keep_ids,
-    )
-    from redpajama_v2_processing_spark.plans.pipeline import label_documents
-    from redpajama_v2_processing_spark.sources.pages import read_pages, with_ids
+    """The north-rule job: the CLI's extract stage, then the headline
+    full_pipeline (label -> quality -> exact -> fuzzy) over a pages table
+    into a noop sink; returns (docs_in, seconds)."""
+    from redpajama_v2_processing_spark.plans.pipeline import full_pipeline
+    from redpajama_v2_processing_spark.sources.pages import pages_stages, read_pages
 
     pages = read_pages(spark, pages_dir)
     n_in = pages.count()
     t0 = time.time()
-    docs = with_ids(
-        pages.withColumn("text", extract_text(F.col("html").cast("string"))).drop("html")
-    )
-    # fully lazy, single action: recomputing the (cheap, perfectly parallel)
-    # label stage per consumer beats persist+materialize fixed costs here —
-    # caching wins only below ~8 cores; a real cluster job would checkpoint
-    # stage outputs to the warehouse (tableio) instead of executor memory.
-    labeled = label_documents(docs, id_col="id_int").where(F.col("keep"))
-    exact = labeled.join(exact_keep_ids(labeled, "id_int"), "id_int", "left_semi")
-    fuzzy_keep = fuzzy_dedup_keep_ids(
-        exact, "id_int", cfg=PROD_MINHASH, base="xxhash", salted=True
-    ).withColumnRenamed("id", "id_int")
-    survivors = exact.join(fuzzy_keep, "id_int", "left_semi")
-    survivors.write.mode("overwrite").format("noop").save()
+    docs = pages_stages()[0].fn(pages)
+    full_pipeline(docs, "id_int").write.mode("overwrite").format("noop").save()
     return n_in, time.time() - t0
 
 
@@ -471,8 +453,10 @@ def main() -> int:
         "total_query_sec": round(sum(qtimes.values()), 2),
         # methodology version — rev 3 introduced headline-first ordering,
         # best-of-2 for slow queries, and min-over-spread samples; numbers
-        # are NOT apples-to-apples with rev<3 rounds (BENCH_r01/r02)
-        "bench_rev": 3,
+        # are NOT apples-to-apples with rev<3 rounds (BENCH_r01/r02). rev 4:
+        # the --scaling job runs full_pipeline (the headline's composition)
+        # instead of the older exact/fuzzy keep-ids + semi-join composition
+        "bench_rev": 4,
     }))
     return 0
 

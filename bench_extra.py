@@ -11,9 +11,9 @@ OPTIMIZATION_r*.md are backed by reproducible numbers:
   ``.explain("formatted")`` for each query to ``<out>/<q>_<suffix>.txt``
   (guide §7.2 — Exchange count, join strategy, PushedFilters).
 * ``--pipeline-stages``: stage-by-stage timing of the headline
-  full_pipeline job (label / exact / fuzzy / compose), each isolated
-  with a noop sink, so the optimization targets the stage that actually
-  costs (guide §1.2).
+  full_pipeline job: the same ``corpus_stages`` list it fuses, each stage
+  localCheckpoint-ed at its boundary, then the fused job itself, so the
+  optimization targets the stage that actually costs (guide §1.2).
 
 Respects $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS exactly like bench.py.
 """
@@ -97,57 +97,34 @@ def main() -> int:
         return 0
 
     if "--pipeline-stages" in sys.argv:
-        from pyspark.sql import functions as F
-
-        from redpajama_v2_processing_spark.config import PROD_MINHASH
-        from redpajama_v2_processing_spark.operators.exact_dedup import (
-            exact_keep_ids,
-        )
-        from redpajama_v2_processing_spark.operators.minhash_lsh import (
-            fuzzy_dedup_keep_ids, minhash_bands, salted_bucket_edges,
-        )
         from redpajama_v2_processing_spark.plans.pipeline import (
-            full_pipeline, label_documents,
+            corpus_stages, full_pipeline,
         )
 
         docs = spark.read.parquet(f"{staged}/documents.parquet")
         report: dict[str, float] = {}
-        protected: set[int] = set()
-
-        def _stage_cleanup():
-            # like bench._cleanup but keeps the profiler's own staged
-            # checkpoint (surv) alive between timings
-            spark.catalog.clearCache()
-            m = spark.sparkContext._jsc.getPersistentRDDs()
-            for k in m.keySet().toArray():
-                if int(k) not in protected:
-                    m.get(k).unpersist()
-
-        def t(name, build):
+        # the stage list full_pipeline fuses, timed one stage at a time:
+        # each stage runs over the previous stage's localCheckpoint, so its
+        # time covers only its own work
+        cur = docs
+        for st in corpus_stages("doc_id", "text"):
             runs = []
             for _ in range(REPEATS):
-                spark.sparkContext.setJobDescription(f"stage: {name}")
+                spark.sparkContext.setJobDescription(f"stage: {st.name}")
                 t0 = time.time()
-                _noop(build())
+                out = st.fn(cur).localCheckpoint(eager=True)
                 runs.append(time.time() - t0)
-                _stage_cleanup()
-            report[name] = round(min(runs), 3)
-
-        t("label_only", lambda: label_documents(docs).where(F.col("keep")))
-        labeled = label_documents(docs).where(F.col("keep"))
-        t("exact_ids_only", lambda: exact_keep_ids(labeled, "doc_id"))
-        surv = labeled.join(
-            exact_keep_ids(labeled, "doc_id"), "doc_id", "left_semi"
-        ).localCheckpoint(eager=True)
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        protected = {int(k) for k in m.keySet().toArray()}
-        t("fuzzy_bands_only", lambda: minhash_bands(
-            surv, "doc_id", cfg=PROD_MINHASH, base="xxhash"))
-        t("fuzzy_edges_only", lambda: salted_bucket_edges(minhash_bands(
-            surv, "doc_id", cfg=PROD_MINHASH, base="xxhash")))
-        t("fuzzy_keep_from_surv", lambda: fuzzy_dedup_keep_ids(
-            surv, "doc_id", cfg=PROD_MINHASH, base="xxhash", salted=True))
-        t("full_pipeline", lambda: full_pipeline(docs))
+            report[st.name] = round(min(runs), 3)
+            cur = out
+        _cleanup(spark)
+        runs = []
+        for _ in range(REPEATS):
+            spark.sparkContext.setJobDescription("stage: full_pipeline")
+            t0 = time.time()
+            _noop(full_pipeline(docs))
+            runs.append(time.time() - t0)
+            _cleanup(spark)
+        report["full_pipeline"] = round(min(runs), 3)
         print(json.dumps({"pipeline_stages": report, "sf": SF_DIR,
                           "cpus": int(CPUS)}))
         return 0

@@ -56,38 +56,6 @@ def xxhash_seeded(seed: Column | int, col: Column) -> Column:
     return F.xxhash64(s, col)
 
 
-def minhash_signature(
-    shingles: Column, num_perm: int, portable: bool = False
-) -> Column:
-    """array<bigint> of ``num_perm`` min-hashes over the shingle array.
-
-    Single nested-lambda expression: for each permutation p,
-    min over shingles of hash_p(shingle). NULL signature for empty input
-    (mirrors the reference's null-signature guard, src/minhashlsh.py:112).
-    """
-    fam = md5int_seeded if portable else xxhash_seeded
-    perms = F.sequence(F.lit(0), F.lit(num_perm - 1))
-    sig = F.transform(perms, lambda p: F.array_min(F.transform(shingles, lambda s: fam(p, s))))
-    return F.when(F.size(shingles) == 0, F.lit(None).cast("array<bigint>")).otherwise(sig)
-
-
-def band_hashes(sig: Column, bands: int, rows: int, portable: bool = False) -> Column:
-    """array<bigint>: one LSH band hash per band (hash of that band's slice).
-
-    Mirrors the reference's banding (9 bands at sim0.8,
-    src/minhashlsh.py:101) but as a native expression. Band b covers
-    sig[b*rows+1 .. (b+1)*rows] (1-indexed slice).
-    """
-    def one(b: Column) -> Column:
-        joined = F.concat_ws("|", F.transform(F.slice(sig, b * rows + 1, rows), lambda x: x.cast("string")))
-        payload = F.concat(b.cast("string"), F.lit("#"), joined)
-        return md5int(payload) if portable else F.xxhash64(payload)
-
-    return F.when(sig.isNull(), F.lit(None).cast("array<bigint>")).otherwise(
-        F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), one)
-    )
-
-
 # NOTE: the per-row SimHash is implemented as an explode + hash-aggregate
 # plan in operators/simhash_dedup.py (whole-stage codegen), not as a nested
 # higher-order expression: Spark evaluates array lambdas interpreted, and

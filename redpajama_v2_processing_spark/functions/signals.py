@@ -123,17 +123,6 @@ def repetition_ratio(grams: Column) -> Column:
     )
 
 
-def char_repetition(text: Column, n: int) -> Column:
-    """1 - distinct/total character n-grams (0.0 when no n-grams)."""
-    return repetition_ratio(char_ngrams(text, n))
-
-
-def word_repetition(tok: Column, n: int = 2) -> Column:
-    """1 - distinct/total word n-grams (0.0 when no n-grams).
-    ``tok`` MUST be a plain column reference (see module note)."""
-    return repetition_ratio(word_ngrams(tok, n))
-
-
 def duplicate_line_signals(
     df: DataFrame, id_col: str, text_col: str = "text"
 ) -> DataFrame:

@@ -106,6 +106,12 @@ def connected_components(
     """edges: DF(src:long, dst:long) undirected. Returns DF(id, root) for
     every node appearing in the edge set; root = component min id.
 
+    Input contract: duplicate (and self) edges are tolerated — the result
+    is the same — but distinct input is recommended. ``driver_threshold``
+    (default ``config.CC_DRIVER_THRESHOLD``) is compared with the raw edge
+    row count, duplicates included, so duplicate rows can push a small
+    graph onto the distributed path.
+
     Each round is localCheckpoint-ed (lineage truncation: without it the
     plan doubles per round and analysis time explodes). Superseded rounds'
     checkpoint blocks are explicitly unpersisted once the final result is

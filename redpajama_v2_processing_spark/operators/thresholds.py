@@ -21,10 +21,6 @@ from ..config import DEFAULT_PROFILE, LANG_PROFILE, QUANTILE_PROFILES
 from ..functions.vectors import round_half_up
 
 
-def profile_for(lang: str) -> tuple[float, float]:
-    return QUANTILE_PROFILES[LANG_PROFILE.get(lang, DEFAULT_PROFILE)]
-
-
 def per_lang_thresholds(
     signals: DataFrame,
     signal_cols: list[str],

@@ -2,8 +2,9 @@
 
 Mirrors the reference's four-stage flow (README.md:4-7: download -> exact
 dedup -> quality filter -> fuzzy dedup) as one declarative DataFrame DAG,
-plus the signal computation the reference outsourced. Stage-checkpointed,
-resumable execution lives in tableio.py / run_pipeline.
+plus the signal computation the reference outsourced. The flow is written
+once, as the ``corpus_stages`` list; ``full_pipeline`` fuses it and
+tableio.run_stages commits it stage by stage (resumable).
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from ..operators.exact_dedup import exact_keep_ids
 from ..operators.minhash_lsh import minhash_bands, salted_bucket_edges
 from ..operators.quality_filter import with_quality_label
 from ..config import PROD_MINHASH
+from ..tableio import Stage
 
 
 def label_documents(docs: DataFrame, id_col: str = "doc_id",
@@ -50,51 +52,77 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def corpus_stages(id_col: str = "doc_id", text_col: str = "text",
+                  partition_by: tuple[str, ...] = (),
+                  derive_date_from: str | None = None) -> list[Stage]:
+    """The corpus-production flow as ONE ordered stage list:
+    label -> quality -> exact dedup -> fuzzy dedup. The runner decides how
+    it executes: ``full_pipeline`` folds it into one DAG, ``run_stages``
+    commits each stage as a table (``partition_by`` / ``derive_date_from``
+    are the committed tables' partition spec)."""
+
+    def label(df: DataFrame) -> DataFrame:
+        return label_documents(df, id_col, text_col)
+
+    def quality(df: DataFrame) -> DataFrame:
+        return df.where(F.col("keep"))
+
+    def exact(df: DataFrame) -> DataFrame:
+        # ONE row_number window over the fingerprint column the label stage
+        # already computed: min id per fingerprint among quality-kept docs,
+        # the same rows as exact_keep_ids + left_semi, but one label pass
+        # and one exchange instead of two (Catalyst shares no subplans).
+        # Skew note: a hot fingerprint is an identical-text flood — the
+        # window reducer streams that bucket linearly.
+        w = Window.partitionBy("fingerprint").orderBy(F.col(id_col).asc())
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+
+    def fuzzy(df: DataFrame) -> DataFrame:
+        # ONE left join against the (dup-cluster-sized) CC label frame:
+        # root == id (or no root) keeps the doc — the keep rule of
+        # fuzzy_dedup_keep_ids without its second corpus-wide semi join.
+        # ``df`` is read twice (bands + join): fused runners persist it.
+        bands = minhash_bands(df, id_col, text_col, PROD_MINHASH, "xxhash")
+        cc = connected_components(salted_bucket_edges(bands)).withColumnRenamed(
+            "id", id_col
+        )
+        return (
+            df.join(cc, id_col, "left")
+            .where(F.coalesce("root", F.col(id_col)) == F.col(id_col))
+            .drop("root")
+        )
+
+    return [
+        Stage(name, fn, partition_by, derive_date_from)
+        for name, fn in (("label", label), ("quality", quality),
+                         ("exact_dedup", exact), ("fuzzy_dedup", fuzzy))
+    ]
+
+
 def full_pipeline(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", eager: bool = True) -> DataFrame:
-    """The reference's complete corpus-production semantics in one DAG:
-    quality filter -> exact dedup -> fuzzy dedup; returns surviving docs
-    with labels. (Batch composition; the checkpointed staged variant is
-    tableio.run_stages.)
+    """``corpus_stages`` fused into one DAG: quality filter -> exact dedup
+    -> fuzzy dedup; returns surviving docs with labels. (The committed
+    per-stage variant is tableio.run_stages over the same list.)
 
-    ``eager=True`` (default) materializes the result once via
-    localCheckpoint while the intermediate survivor cache is live, then
-    frees that cache — no dangling persisted intermediate after the call
-    (the result's own checkpoint blocks belong to the returned DataFrame
-    and are context-cleaned when it is dropped). ``eager=False`` returns
-    the fully lazy plan and the caller owns the survivor cache lifetime
-    (``.unpersist()`` any persisted inputs after the final action)."""
-    labeled = label_documents(docs, id_col, text_col).where(F.col("keep"))
-    # exact dedup as ONE row_number window over the fingerprint column the
-    # label stage already computed: the previous exact_keep_ids + left_semi
-    # composition evaluated the full label chain TWICE (Catalyst shares no
-    # subplans, and the quality-keep filter forces the signal expressions on
-    # both sides) and paid two exchanges (groupBy fingerprint + semi join on
-    # id); this is one label pass and one exchange (guide §2.4). Result rows
-    # are identical: min id per fingerprint among quality-kept docs. Skew
-    # note: a hot fingerprint is an identical-text flood — the window
-    # reducer streams that bucket linearly, the same worst case the semi
-    # join's build side had.
-    w = Window.partitionBy("fingerprint").orderBy(F.col(id_col).asc())
-    survivors = (
-        labeled.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .persist()
-    )
-    # fuzzy keep applied as ONE left join against the (dup-cluster-sized)
-    # CC label frame instead of keep-ids + a second corpus-wide semi join:
-    # root == id (or no root) keeps the doc — identical keep rule to
-    # fuzzy_dedup_keep_ids, one fewer corpus shuffle.
-    bands = minhash_bands(survivors, id_col, text_col, PROD_MINHASH, "xxhash")
-    cc = connected_components(salted_bucket_edges(bands)).withColumnRenamed(
-        "id", id_col
-    )
-    out = (
-        survivors.join(cc, id_col, "left")
-        .where(F.coalesce("root", F.col(id_col)) == F.col(id_col))
-        .drop("root")
-    )
+    The exact survivors are persisted once, since the fuzzy stage reads
+    them twice. ``eager=True`` (default) materializes the result once via
+    localCheckpoint while that cache is live, then frees it — no dangling
+    persisted intermediate after the call (the result's own checkpoint
+    blocks belong to the returned DataFrame and are context-cleaned when it
+    is dropped). ``eager=False`` returns the fully lazy plan and the caller
+    owns the survivor cache lifetime (``.unpersist()`` any persisted inputs
+    after the final action)."""
+    *upstream, fuzzy = corpus_stages(id_col, text_col)
+    survivors = docs
+    for st in upstream:
+        survivors = st.fn(survivors)
+    survivors = survivors.persist()
+    out = fuzzy.fn(survivors)
     if eager:
         out = out.localCheckpoint(eager=True)
         survivors.unpersist()

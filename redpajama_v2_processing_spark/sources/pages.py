@@ -12,12 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import PROD_MINHASH
 from ..fixtures import PAGES_SCHEMA
 from ..functions.extract import extract_text
-from ..operators.exact_dedup import exact_keep_ids
-from ..operators.minhash_lsh import fuzzy_dedup_keep_ids
-from ..plans.pipeline import label_documents
+from ..plans.pipeline import corpus_stages
 from ..tableio import Stage
 
 
@@ -41,38 +38,19 @@ def with_ids(df: DataFrame) -> DataFrame:
     return df.withColumn("id_int", F.xxhash64("url"))
 
 
-def pages_stages(minhash_cfg: dict = PROD_MINHASH) -> list[Stage]:
-    """The full corpus-production DAG over a pages table (reference
-    README.md:4-7 re-expressed):
-      extract -> label (signals+langid+scrub) -> quality -> exact -> fuzzy
-    Every stage output is a committed, lang/date-partitioned table."""
+def pages_stages() -> list[Stage]:
+    """The corpus-production DAG over a pages table (reference
+    README.md:4-7 re-expressed): extract, then the shared
+    ``corpus_stages`` list (label -> quality -> exact -> fuzzy). Every
+    stage output is a committed, lang/date-partitioned table."""
 
     def extract(df: DataFrame) -> DataFrame:
         return with_ids(
             df.withColumn("text", extract_text(F.col("html").cast("string"))).drop("html")
         )
 
-    def label(df: DataFrame) -> DataFrame:
-        return label_documents(df, id_col="id_int", text_col="text")
-
-    def quality(df: DataFrame) -> DataFrame:
-        return df.where(F.col("keep"))
-
-    def exact(df: DataFrame) -> DataFrame:
-        keep = exact_keep_ids(df, "id_int", "text")
-        return df.join(keep, "id_int", "left_semi")
-
-    def fuzzy(df: DataFrame) -> DataFrame:
-        keep = fuzzy_dedup_keep_ids(
-            df, "id_int", "text", cfg=minhash_cfg, base="xxhash", salted=True
-        ).withColumnRenamed("id", "id_int")
-        return df.join(keep, "id_int", "left_semi")
-
     part = ("lang",)
     return [
         Stage("extract", extract, part, derive_date_from="warc_ts"),
-        Stage("label", label, part, derive_date_from="warc_ts"),
-        Stage("quality", quality, part, derive_date_from="warc_ts"),
-        Stage("exact_dedup", exact, part, derive_date_from="warc_ts"),
-        Stage("fuzzy_dedup", fuzzy, part, derive_date_from="warc_ts"),
+        *corpus_stages("id_int", "text", part, derive_date_from="warc_ts"),
     ]

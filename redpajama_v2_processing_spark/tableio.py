@@ -365,7 +365,9 @@ def run_stages(
     under ``warehouse/<stage>``. With ``resume=True``, committed stages are
     read back instead of recomputed (snapshot-checkpoint resume). Appends
     one metrics record per executed/skipped stage to
-    ``warehouse/_metrics.jsonl``.
+    ``warehouse/_metrics.jsonl``; an executed stage's ``rows_in`` is the
+    previous stage's ``rows_out`` (the source is counted once, and only
+    when the first stage executes).
 
     ``verify=True`` runs check_completeness on every stage table the DAG
     consumes — freshly committed AND resumed ones — so a lost/truncated
@@ -389,7 +391,9 @@ def run_stages(
                 "rows_out": read_snapshot(tdir)["rows"], "seconds": 0.0,
             }
         else:
-            rows_in = cur.count()
+            # the previous stage's rows_out is the snapshot row count of the
+            # table ``cur`` was read from; only the source needs a count job
+            rows_in = records[-1]["rows_out"] if records else cur.count()
             out = st.fn(cur)
             snap = commit_table(
                 out, tdir, st.partition_by, st.derive_date_from,

@@ -8,12 +8,11 @@ import json
 from pyspark.sql import functions as F
 
 from redpajama_v2_processing_spark.fixtures import generate_pages_pdf, write_pages
-from redpajama_v2_processing_spark.plans.pipeline import label_documents
+from redpajama_v2_processing_spark.plans.pipeline import full_pipeline, label_documents
 from redpajama_v2_processing_spark.sources.pages import pages_stages, read_pages
 from redpajama_v2_processing_spark.tableio import (
     commit_table, read_snapshot, read_table, run_stages, table_committed,
 )
-from redpajama_v2_processing_spark.config import ORACLE_MINHASH
 
 
 def test_fixture_determinism_and_mix():
@@ -50,7 +49,7 @@ def test_run_stages_and_resume(spark, tmp_path):
     src_dir = str(tmp_path / "pages_in")
     write_pages(spark, src_dir, n_rows=120, seed=7, partitions=2)
     warehouse = str(tmp_path / "wh")
-    stages = pages_stages(minhash_cfg=ORACLE_MINHASH)
+    stages = pages_stages()
     src = read_pages(spark, src_dir)
 
     out1, m1 = run_stages(spark, src, stages, warehouse, resume=True)
@@ -58,6 +57,11 @@ def test_run_stages_and_resume(spark, tmp_path):
     assert rows1 > 0
     assert [m["stage"] for m in m1] == [s.name for s in stages]
     assert all(not m["skipped"] for m in m1)
+    # rows_in chains from the previous stage's committed rows_out; only
+    # the source is counted
+    assert m1[0]["rows_in"] == src.count()
+    assert all(m1[i + 1]["rows_in"] == m1[i]["rows_out"]
+               for i in range(len(m1) - 1))
     # monotone non-increasing row counts through the filter/dedup stages
     outs = [m["rows_out"] for m in m1]
     assert outs[1] == outs[0]  # labeling keeps all rows
@@ -76,6 +80,25 @@ def test_run_stages_and_resume(spark, tmp_path):
     # snapshot carries per-partition lineage
     snap = read_snapshot(str(tmp_path / "wh" / "extract"))
     assert sum(snap["partitions"].values()) == snap["rows"]
+
+
+def test_committed_stages_match_full_pipeline(spark, tmp_path):
+    """The committed CLI stages and the fused headline run the same stage
+    list, so they keep exactly the same documents."""
+    src_dir = str(tmp_path / "pages_in")
+    write_pages(spark, src_dir, n_rows=120, seed=7, partitions=2)
+    stages = pages_stages()
+    staged, metrics = run_stages(spark, read_pages(spark, src_dir), stages,
+                                 str(tmp_path / "wh"), resume=False)
+    rows = {m["stage"]: m["rows_out"] for m in metrics}
+    # both dedup stages remove documents on this fixture
+    assert rows["exact_dedup"] < rows["quality"]
+    assert rows["fuzzy_dedup"] < rows["exact_dedup"]
+
+    docs = stages[0].fn(read_pages(spark, src_dir))
+    fused = {r.id_int for r in full_pipeline(docs, "id_int").collect()}
+    assert {r.id_int for r in staged.collect()} == fused
+    assert len(fused) == rows["fuzzy_dedup"]
 
 
 def test_streaming_labels_equal_batch(spark, tmp_path):

@@ -17,6 +17,26 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _plan_nodes(df) -> list[str]:
+    """Node names of the executed plan, walked as a tree: adaptive plans by
+    their current plan, query stages by their plan, and cached relations by
+    their cached plan. Each node counts once (the string form prints an
+    executed adaptive plan's initial plan as well)."""
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        names.append(name)
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        else:
+            for seq in (node.children(), node.innerChildren()):
+                todo.extend(seq.apply(i) for i in range(seq.size()))
+    return names
+
+
 def test_no_python_eval_in_core_pipeline(pages_small):
     """The entire label pipeline must stay JVM-side: zero Python eval nodes
     (the reference is 100% per-row Python; our contract is 0%)."""
@@ -159,6 +179,29 @@ def test_full_pipeline_frees_intermediate_cache(spark, pages_small):
     new = _persistent_ids(sc) - before
     # exactly the result checkpoint survives; the survivors cache is gone
     assert len(new) <= 1
+
+
+def test_full_pipeline_plan_budget(spark, pages_small):
+    """Plan budget of the headline job: three shuffle Exchanges (the exact
+    stage's fingerprint window and both sides of the fuzzy keep join; the
+    driver-side CC frame is a checkpointed scan), no cartesian product and
+    no Python eval."""
+    from redpajama_v2_processing_spark.plans.pipeline import (
+        corpus_stages, full_pipeline,
+    )
+
+    docs = pages_small.select(F.xxhash64("url").alias("doc_id"), "text", "lang")
+    try:
+        nodes = _plan_nodes(full_pipeline(docs, eager=False))
+    finally:
+        # eager=False leaves the exact survivors cached: uncache that plan
+        survivors = docs
+        for st in corpus_stages()[:-1]:
+            survivors = st.fn(survivors)
+        survivors.unpersist()
+    assert nodes.count("Exchange") == 3, nodes
+    assert "CartesianProduct" not in nodes
+    assert not any("EvalPython" in n for n in nodes), nodes
 
 
 def test_domain_cap_windows_are_skew_capped(spark):
