@@ -119,7 +119,7 @@ SIMHASH_BITS = 16  # oracle-checkable small profile (see PROD_SIMHASH)
 PROD_SIMHASH = {"bits": 60, "band_bits": 15, "max_hamming": 3, "max_bucket": 64}
 
 # Connected components: edge sets at or below this count are union-found on
-# the driver in one job (a collected edge Row is ~100 bytes on the driver,
+# the driver after two jobs (a collected edge Row is ~100 bytes on the driver,
 # so 1M edges ~ 100 MB — comfortably inside a multi-GB driver; raise it via
 # RPV2_CC_DRIVER_THRESHOLD only with driver memory to match, set 0 to force
 # the distributed large-star/small-star fixpoint).

@@ -4,9 +4,10 @@
 Replaces the reference's single-process UnionFind over all LSH buckets
 (src/union_find.py:45-81, driven at src/minhashlsh.py:131-145) — the
 component that forced the reference into iterative partial dedups when the
-id set outgrew node RAM (README.md:101-124). Here every round is two
-shuffles over the edge set; convergence is O(log n) rounds; lineage is cut
-with localCheckpoint each round so plans stay bounded.
+id set outgrew node RAM (README.md:101-124). Here every round is ONE
+localCheckpoint job (a window per star and one distinct: three shuffles, no
+join) that also observes the round's convergence signature; convergence is
+O(log n) rounds and the checkpoint keeps plans bounded.
 
 Output invariant (matches the reference's keep rule,
 src/minhashlsh.py:140,169): every node maps to its component's MINIMUM id.
@@ -14,7 +15,7 @@ src/minhashlsh.py:140,169): every node maps to its component's MINIMUM id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -24,35 +25,29 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     )
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """For each u: m = min(N(u) ∪ {u}); emit (v, m) for v in N(u), v > u."""
-    nbrs = _symmetric(edges)
-    mins = nbrs.groupBy("src").agg(F.min("dst").alias("_mn")).select(
-        "src", F.least(F.col("_mn"), F.col("src")).alias("m")
-    )
-    return (
-        nbrs.where(F.col("dst") > F.col("src"))
-        .join(mins, "src")
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Orient edges large->small; for each u: m = min(smaller nbrs ∪ {u});
-    emit (v, m) for v in smaller-nbrs ∪ {u}, v != m."""
-    oriented = edges.select(
-        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-    ).where(F.col("src") != F.col("dst"))
-    mins = oriented.groupBy("src").agg(F.min("dst").alias("m"))
-    to_small = (
-        oriented.join(mins, "src")
+def _star_round(edges: DataFrame) -> DataFrame:
+    """Large star (for each u: m = min(N(u) ∪ {u}); emit (v, m) for v in
+    N(u), v > u), then small star over its already large->small oriented
+    output (m <= u < v; for each u: m = min(smaller nbrs); emit (v, m) for v
+    in smaller-nbrs ∪ {u}, v != m). Large-star duplicates change neither
+    the small star's min nor its final distinct."""
+    by_src = Window.partitionBy("src")
+    large = (
+        _symmetric(edges)
+        .withColumn("m", F.least(F.min("dst").over(by_src), F.col("src")))
+        .where(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
     )
-    self_edge = mins.select(F.col("src"), F.col("m").alias("dst"))
+    # both small-star outputs from one generator, not a union: a union of
+    # two subtrees over one window plan trips the Catalyst bug noted in
+    # minhash_lsh.salted_bucket_edges
     return (
-        to_small.union(self_edge)
+        large.withColumn("m", F.min("dst").over(by_src))
+        .select(F.explode(F.array(
+            F.struct(F.col("dst").alias("src"), F.col("m").alias("dst")),
+            F.struct(F.col("src").alias("src"), F.col("m").alias("dst")),
+        )).alias("_e"))
+        .select("_e.src", "_e.dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
@@ -74,8 +69,8 @@ def _driver_side_cc(edges: DataFrame, edge_rows) -> DataFrame:
 
     After LSH star-edge compression the edge set is usually tiny relative
     to the corpus (one edge per duplicate doc per band). Below the
-    threshold, ~10 Spark jobs of fixpoint latency collapse into one
-    collect + one createDataFrame. Identical output contract."""
+    threshold, one checkpoint job per round of fixpoint latency collapses
+    into one collect + one createDataFrame. Identical output contract."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -134,40 +129,44 @@ def connected_components(
     # internally, and the row-count threshold merely turns conservative
     # (duplicates can push a small graph onto the distributed path, never
     # the reverse). The checkpoint now materializes a narrow filter.
+    n_edges = Observation()
     cur = (
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .where(F.col("src") != F.col("dst"))
+        .observe(n_edges, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    if driver_threshold > 0:
-        # hybrid strategy: graphs under the threshold are union-found on
-        # the driver; only genuinely large graphs pay the distributed
-        # fixpoint. count + collect over the cached blocks is two
-        # PREDICTABLE one-pass jobs; take(threshold+1) ran up to 4
-        # scale-up passes (initialNumPartitions=1, x4 per step) because a
-        # small edge set never fills the limit.
-        if cur.count() <= driver_threshold:
-            result = _driver_side_cc(edges, cur.collect())
-            _unpersist(sc, _persistent_ids(sc) - pre_existing)
-            return result
+    # hybrid strategy: graphs under the threshold are union-found on the
+    # driver. The checkpoint job observes the edge count, so the driver
+    # path is two jobs: that checkpoint and one collect of its blocks.
+    if driver_threshold > 0 and n_edges.get["n"] <= driver_threshold:
+        result = _driver_side_cc(edges, cur.collect())
+        _unpersist(sc, _persistent_ids(sc) - pre_existing)
+        return result
+    # each round's checkpoint job observes its convergence signature (a
+    # modded hash-sum: no ANSI long-overflow) and is named in the event log
+    signature = (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000_007))).alias("h"),
+    )
+    caller_desc = sc.getLocalProperty("spark.job.description")
     prev_sig = None
-    for _ in range(max_iter):
-        cur = _small_star(_large_star(cur)).localCheckpoint()
-        # modded hash-sum avoids ANSI long-overflow on large edge sets
-        sig = cur.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000_007))),
-                F.lit(0),
-            ).alias("h"),
-        ).collect()[0]
-        if prev_sig == (sig["n"], sig["h"]):
-            break
-        prev_sig = (sig["n"], sig["h"])
+    try:
+        for i in range(1, max_iter + 1):
+            sc.setJobDescription(f"connected_components round {i}")
+            obs = Observation()
+            cur = _star_round(cur).observe(obs, *signature).localCheckpoint()
+            sig = tuple(obs.get.values())
+            if sig == prev_sig:
+                break
+            prev_sig = sig
+    finally:
+        sc.setJobDescription(caller_desc)
     loop_ids = _persistent_ids(sc) - pre_existing
     # converged: every edge is (node, component_min); add roots themselves
+    # (duplicates and all: the min-aggregation removes them)
     nodes = cur.select(F.col("src").alias("id"), F.col("dst").alias("root"))
-    roots = cur.select(F.col("dst").alias("id"), F.col("dst").alias("root")).distinct()
+    roots = cur.select(F.col("dst").alias("id"), F.col("dst").alias("root"))
     result = (
         nodes.union(roots).groupBy("id").agg(F.min("root").alias("root"))
         .localCheckpoint()  # eager: materialized before inputs are freed

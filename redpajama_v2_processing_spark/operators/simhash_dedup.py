@@ -144,7 +144,9 @@ def simhash_dedup_keep(
     bucket mins, so high-similarity clusters stay connected (exactly the
     LSH recall model).
     """
-    from .connected_components import connected_components, keep_min_id
+    from .connected_components import (
+        _persistent_ids, _unpersist, connected_components, keep_min_id,
+    )
 
     from ..functions.vectors import verify_partitions
 
@@ -154,9 +156,12 @@ def simhash_dedup_keep(
     # by the bucket key before the checkpoint so (a) the byte-based AQE
     # coalescer cannot serialize it onto one partition and (b) both
     # consumers reuse the partitioning with no further exchange.
+    sc = docs.sparkSession.sparkContext
+    before = _persistent_ids(sc)
     banded = _banded_simhash(sh, bits, band_bits).repartition(
         verify_partitions(docs), "band", "key"
     ).localCheckpoint(eager=True)
+    banded_ids = _persistent_ids(sc) - before
     buckets = banded.groupBy("band", "key").agg(
         F.min("id").alias("_min_id"), F.min_by("simhash", "id").alias("_min_sim")
     )
@@ -173,6 +178,8 @@ def simhash_dedup_keep(
         .distinct()
     )
     cc = connected_components(edges)
+    # cc is materialized (checkpoint or driver-side frame): free the bands
+    _unpersist(sc, banded_ids)
     # ids straight from the docs scan (one row per doc == with_simhash's
     # output set) — selecting off `sh` would re-run the tokenize+vote
     # aggregation just to list ids

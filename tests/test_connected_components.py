@@ -66,3 +66,54 @@ def test_random_graph_matches_union_find(spark):
 
 def test_duplicate_and_self_edges(spark):
     _check(spark, [(1, 2), (2, 1), (1, 2), (3, 3), (3, 4)])
+
+
+def test_empty_edge_set(spark):
+    """The observed edge count and round signatures still arrive when there
+    is no edge (an observation that never arrives blocks forever)."""
+    _check(spark, [])
+
+
+def test_extreme_ids_hub_path_and_random_edges(spark):
+    """The shapes a real dedup run feeds CC, in one graph: ids at both ends
+    of the long range (where rpv2's _cc_key puts uint64 ids), a hot-bucket
+    hub with 2,000 leaves, a 200-node path, and 3,000 random edges."""
+    lo, hi = -(2**63), 2**63 - 1
+    rng = random.Random(11)
+    hub = [(10**6, 10**6 + i) for i in range(1, 2001)]
+    path = [(20_000 + i, 20_000 + i + 1) for i in range(199)]
+    rand = [(rng.randrange(5_000), rng.randrange(5_000)) for _ in range(3000)]
+    extremes = [(lo, 0), (hi, 10**6 + 7), (hi, 20_100), (lo + 1, hi - 1)]
+    _check(spark, hub + path + rand + extremes)
+
+
+def test_cc_and_simhash_keep_free_their_checkpoints(spark, monkeypatch):
+    """Neither CC path nor simhash_dedup_keep leaves an intermediate
+    checkpoint persisted: the only new persistent RDD is the result's own
+    checkpoint (none for the driver path's local frame)."""
+    from redpajama_v2_processing_spark import config
+    from redpajama_v2_processing_spark.operators.connected_components import (
+        _persistent_ids,
+    )
+    from redpajama_v2_processing_spark.operators.simhash_dedup import (
+        simhash_dedup_keep,
+    )
+
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
+    docs = spark.createDataFrame(
+        [(i, f"near duplicate page {i % 4} with shared words") for i in range(24)],
+        "doc_id long, text string",
+    )
+    for threshold in (None, 0):
+        before = _persistent_ids(sc)
+        connected_components(edges, driver_threshold=threshold).count()
+        assert len(_persistent_ids(sc) - before) <= 1
+        # simhash_dedup_keep takes the default threshold from config
+        monkeypatch.setattr(
+            config, "CC_DRIVER_THRESHOLD",
+            config.CC_DRIVER_THRESHOLD if threshold is None else threshold,
+        )
+        before = _persistent_ids(sc)
+        simhash_dedup_keep(docs, "doc_id").count()
+        assert len(_persistent_ids(sc) - before) <= 1

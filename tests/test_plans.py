@@ -363,3 +363,45 @@ def test_full_pipeline_matches_explicit_composition(spark, pages_small):
     got = {r.doc_id for r in out.collect()}
     assert got == want
     assert set(out.columns) == set(survivors.columns)
+
+
+def test_star_round_plan_budget(spark):
+    """One connected-components round is a window per star plus one
+    distinct: three shuffle Exchanges and no join of any kind."""
+    from redpajama_v2_processing_spark.operators.connected_components import (
+        _star_round,
+    )
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
+    nodes = _plan_nodes(_star_round(edges))
+    assert nodes.count("Exchange") == 3, nodes
+    assert not any(n.endswith("Join") for n in nodes), nodes
+
+
+def test_connected_components_job_budget(spark):
+    """Spark jobs one connected_components call launches on the 20-node
+    path graph, counted by job group. Measured on local[4] with 4 shuffle
+    partitions: the driver path ran 4 jobs with a separate threshold count
+    and 2 with the count observed by the input checkpoint; the distributed
+    path ran 64 jobs with two joins per round and a separate convergence
+    query, and 27 with one observed checkpoint job per round. The call
+    leaves the caller's job description in place."""
+    from redpajama_v2_processing_spark.operators.connected_components import (
+        connected_components,
+    )
+
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
+    jobs = {}
+    try:
+        for threshold in (None, 0):
+            group = f"cc-job-budget-{threshold}"
+            sc.setJobGroup(group, group)
+            connected_components(edges, driver_threshold=threshold)
+            jobs[threshold] = len(sc.statusTracker().getJobIdsForGroup(group))
+            # the caller's job description outlives the per-round ones
+            assert sc.getLocalProperty("spark.job.description") == group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert jobs == {None: 2, 0: 27}, jobs
