@@ -267,7 +267,10 @@ def perplexity_buckets(
 
     Plan: the bigram scorer's plan, then ONE groupBy(lang) percentile
     aggregation (tiny result — one row per language — broadcast back) and a
-    CASE label; the corpus side never shuffles for the labeling join.
+    CASE label; the corpus side never shuffles for the labeling join. Both
+    terciles come from one array-valued percentile aggregate: Spark keeps
+    one value buffer per aggregate expression, so two scalar calls would
+    buffer and shuffle every perplexity twice.
 
     ``exact`` (mirrors operators/thresholds.py): True = SQL ``percentile``
     (linear interpolation, DuckDB ``quantile_cont``-identical — the
@@ -285,19 +288,18 @@ def perplexity_buckets(
     scored = with_bigram_perplexity(
         docs, id_col, text_col, lam, round_to, vocab_min_count=vocab_min_count
     ).select(id_col, lang_col, "perplexity_bigram").localCheckpoint(eager=True)
+    ppl = F.col("perplexity_bigram")
     if exact:
-        p33 = F.expr(f"percentile(perplexity_bigram, {p!r})")
-        p67 = F.expr(f"percentile(perplexity_bigram, {2 * p!r})")
+        q = F.percentile(ppl, [p, 2 * p])
     else:
-        p33 = F.percentile_approx(F.col("perplexity_bigram"), p, accuracy)
-        p67 = F.percentile_approx(F.col("perplexity_bigram"), 2 * p, accuracy)
+        q = F.percentile_approx(ppl, [p, 2 * p], accuracy)
     th = scored.groupBy(lang_col).agg(
-        round_half_up(p33.cast("double"), 6).alias("_p33"),
-        round_half_up(p67.cast("double"), 6).alias("_p67"),
+        round_half_up(q[0], 6).alias("_p33"),
+        round_half_up(q[1], 6).alias("_p67"),
     )
     bucket = (
-        F.when(F.col("perplexity_bigram") <= F.col("_p33"), "head")
-        .when(F.col("perplexity_bigram") <= F.col("_p67"), "middle")
+        F.when(ppl <= F.col("_p33"), "head")
+        .when(ppl <= F.col("_p67"), "middle")
         .otherwise("tail")
     )
     return scored.join(F.broadcast(th), lang_col).select(

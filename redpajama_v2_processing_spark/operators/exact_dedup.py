@@ -10,7 +10,11 @@ an in-RAM python set (≤51 GB, 3 h build). Spark realization:
 * ``anti_join_duplicates``: the reference's Bloom-duplicates stage as a
   ``left_anti`` join; Spark's runtime Bloom-filter join pruning
   (spark.sql.optimizer.runtime.bloomFilter.enabled, on in session.py) gives
-  the Bloom prefilter *and* exactness in one declarative plan.
+  the Bloom prefilter *and* exactness in one declarative plan. The
+  duplicates side is joined as given, not ``distinct()``-ed first: an
+  anti-join's output does not depend on how often a key repeats on the
+  build side (and NULL ids never match either way), so a distinct would
+  only add an aggregation exchange and its job.
 """
 
 from __future__ import annotations
@@ -50,8 +54,9 @@ def anti_join_duplicates(docs: DataFrame, duplicates: DataFrame,
 
     AQE picks broadcast vs shuffled-hash by build-side size; with runtime
     Bloom filters on, large probe sides are pre-filtered at the scan.
+    Repeated duplicate ids need no ``distinct()`` (module docstring).
     """
-    dups = duplicates.select(F.col(dup_id_col).alias(id_col)).distinct()
+    dups = duplicates.select(F.col(dup_id_col).alias(id_col))
     return docs.join(dups, id_col, "left_anti")
 
 

@@ -10,15 +10,32 @@ Two modes:
   quantile_cont exactly; used by the oracle-checked queries);
 * exact=False — `percentile_approx` over an optional sample fraction: the
   100 TB path (single-pass sketch, no sort).
+
+One buffer per signal: every quantile a signal needs (both bounds of every
+profile in use) comes from ONE array-valued aggregate,
+``percentile(c, array(p1..pk))`` or its ``percentile_approx`` twin, indexed
+afterwards. Spark keeps a separate value->count map (or sketch) per
+aggregate expression and never shares it between expressions, so k scalar
+calls would buffer, serialize and shuffle every signal value k times; the
+array form reads all k quantiles off the same buffer, with the same
+results.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PROFILE, LANG_PROFILE, QUANTILE_PROFILES
 from ..functions.vectors import round_half_up
+
+
+def _quantiles(c: str, ps: list[float], exact: bool) -> Column:
+    """array<double>: the ``ps`` quantiles of column ``c`` from one
+    aggregate buffer (module docstring)."""
+    if exact:
+        return F.percentile(F.col(c), ps)
+    return F.percentile_approx(F.col(c).cast("double"), ps, 10000)
 
 
 def per_lang_thresholds(
@@ -37,16 +54,10 @@ def per_lang_thresholds(
         df = df.sample(False, sample_fraction, seed=42)
     aggs = []
     for c in signal_cols:
-        col = F.col(c).cast("double")
-        if exact:
-            lo = F.expr(f"percentile({c}, {p_low})")
-            hi = F.expr(f"percentile({c}, {p_high})")
-        else:
-            lo = F.percentile_approx(col, p_low, 10000)
-            hi = F.percentile_approx(col, p_high, 10000)
+        q = _quantiles(c, [p_low, p_high], exact)
         aggs += [
-            round_half_up(lo.cast("double"), round_to).alias(f"{c}_lo"),
-            round_half_up(hi.cast("double"), round_to).alias(f"{c}_hi"),
+            round_half_up(q[0], round_to).alias(f"{c}_lo"),
+            round_half_up(q[1], round_to).alias(f"{c}_hi"),
         ]
     return df.groupBy(lang_col).agg(*aggs)
 
@@ -69,22 +80,21 @@ def profiled_quantile_filter(
     tiny threshold table broadcast-joins back. The corpus side is scanned
     once for thresholds and once for the filter — independent of the
     number of languages.
+
+    One buffer per signal: all 2 x (profiles in use) quantiles of a signal
+    come from a single array-valued percentile aggregate, so each signal
+    value is buffered and shuffled once rather than once per (profile,
+    bound) — Spark does not share buffers between aggregate expressions.
     """
     profiles = sorted({*LANG_PROFILE.values(), DEFAULT_PROFILE})
+    ps = [p for prof in profiles for p in QUANTILE_PROFILES[prof]]
     aggs = []
     for c in signal_cols:
-        for prof in profiles:
-            p_low, p_high = QUANTILE_PROFILES[prof]
-            if exact:
-                lo = F.expr(f"percentile({c}, {p_low})")
-                hi = F.expr(f"percentile({c}, {p_high})")
-            else:
-                col = F.col(c).cast("double")
-                lo = F.percentile_approx(col, p_low, 10000)
-                hi = F.percentile_approx(col, p_high, 10000)
+        q = _quantiles(c, ps, exact)
+        for i, prof in enumerate(profiles):
             aggs += [
-                round_half_up(lo.cast("double"), round_to).alias(f"_{c}_{prof}_lo"),
-                round_half_up(hi.cast("double"), round_to).alias(f"_{c}_{prof}_hi"),
+                round_half_up(q[2 * i], round_to).alias(f"_{c}_{prof}_lo"),
+                round_half_up(q[2 * i + 1], round_to).alias(f"_{c}_{prof}_hi"),
             ]
     th_wide = signals.groupBy(lang_col).agg(*aggs)
 

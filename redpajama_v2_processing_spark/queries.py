@@ -1706,6 +1706,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "source_overlap": q_source_overlap,
     "fuzzy_dedup_keep_longest": q_fuzzy_dedup_keep_longest,
     "bm25_topk": q_bm25_topk,
+    # --- implementation changed: one percentile buffer per signal --------
+    # (profiled_quantile_filter, perplexity_buckets and its ccnet_pipeline
+    # caller; quantile_filter, quality_thresholds and anti_join_duplicates
+    # below already sit in the window)
+    "profiled_quantile_filter": q_profiled_quantile_filter,
+    "perplexity_buckets": q_perplexity_buckets,
+    "ccnet_pipeline": q_ccnet_pipeline,
     # --- implementation/output changed in round 6: re-certify ------------
     # (doc_embeddings exploded reshape; scrub_cc_luhn boundary replace;
     # token_budget_mix exact integer rate; chunking three-level scan feeds
@@ -1755,14 +1762,14 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "fuzzy_dedup_keep": q_fuzzy_dedup_keep,
     "simhash_dedup_keep": q_simhash_dedup_keep,
     "winnow_dedup_keep": q_winnow_dedup_keep,
-    "pq_codebooks": q_pq_codebooks,
-    "ann_pq_topk": q_ann_pq_topk,
-    "ann_ivf_pq_topk": q_ann_ivf_pq_topk,
-    "quality_signals": q_quality_signals,
-    "langid": q_langid,
     # ==================== driver window ends here (50) ====================
     # parked: r4/r5-certified, implementations untouched this round; all
     # remain runnable and locally checkable via tools/check_queries.py
+    "quality_signals": q_quality_signals,
+    "langid": q_langid,
+    "pq_codebooks": q_pq_codebooks,
+    "ann_pq_topk": q_ann_pq_topk,
+    "ann_ivf_pq_topk": q_ann_ivf_pq_topk,
     "incremental_fuzzy_keep": q_incremental_fuzzy_keep,
     "incremental_exact_keep": q_incremental_exact_keep,
     "vocab_coverage": q_vocab_coverage,
@@ -1783,7 +1790,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
     "ngram_jaccard_dedup_keep": q_ngram_jaccard_dedup_keep,
     "gopher_filter": q_gopher_filter,
-    "ccnet_pipeline": q_ccnet_pipeline,
     "contamination_report": q_contamination_report,
     "dedup_cluster_sizes": q_dedup_cluster_sizes,
     "ann_ivf_pq_residual_topk": q_ann_ivf_pq_residual_topk,
@@ -1797,7 +1803,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "embedding_dedup_keep": q_embedding_dedup_keep,
     "perplexity": q_perplexity,
     "perplexity_ngram": q_perplexity_ngram,
-    "perplexity_buckets": q_perplexity_buckets,
     "domain_cap": q_domain_cap,
     "decontaminate_flags": q_decontaminate_flags,
     "dup_ngram_fraction": q_dup_ngram_fraction,
@@ -1808,7 +1813,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_lines": q_dedup_lines,
     "winnow_fingerprints": q_winnow_fingerprints,
     "winnow_near_dup_pairs": q_winnow_near_dup_pairs,
-    "profiled_quantile_filter": q_profiled_quantile_filter,
     "fuzzy_dedup_prod_checked": q_fuzzy_dedup_prod_checked,
     "simhash_prod_near_pairs": q_simhash_prod_near_pairs,
     "simhash_capped_near_pairs": q_simhash_capped_near_pairs,

@@ -32,6 +32,35 @@ def test_anti_join_ignores_dangling(spark):
     assert out == [0, 2]
 
 
+def test_anti_join_repeated_repaired_and_null_duplicate_ids(spark):
+    """Repeated, malformed-then-repaired and NULL duplicate ids: the
+    anti-join keeps exactly the Python set difference (NULL ids never
+    match, and a repeated id drops its doc once, like a single one)."""
+    from redpajama_v2_processing_spark.sources.rpv2 import fix_duplicate_ids
+
+    ids = [f"2014-15/{i % 3}/en_head.json.gz/{i}" for i in range(30)]
+    docs = spark.createDataFrame(
+        [(d,) for d in ids] + [(None,)], "doc_id string"
+    )
+    raw = (
+        [ids[1]] * 3                                             # repeated
+        + [ids[i].replace(".json.gz/", ".json/") for i in (4, 9, 9)]  # malformed
+        + [None, None]                                           # NULL
+        + ["2014-15/0/en_head.json/999"]                         # dangling
+    )
+    dups = fix_duplicate_ids(
+        spark.createDataFrame([(d,) for d in raw], "doc_id string"), "doc_id"
+    )
+    fixed = {d.replace(".json/", ".json.gz/") for d in raw if d is not None}
+    want = sorted((d for d in ids + [None] if d not in fixed), key=str)
+    got = sorted(
+        (r.doc_id for r in anti_join_duplicates(docs, dups, "doc_id", "doc_id").collect()),
+        key=str,
+    )
+    assert got == want
+    assert len(got) == len(ids) + 1 - 3  # ids 1, 4 and 9 drop; the NULL doc stays
+
+
 def _chain_docs(spark):
     # a, b=a+1 word, c=a+2 words: high pairwise shingle overlap; d singleton.
     # The md5 hash family is fixed, so band collisions are deterministic:

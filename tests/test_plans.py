@@ -405,3 +405,81 @@ def test_connected_components_job_budget(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
     assert jobs == {None: 2, 0: 27}, jobs
+
+
+def _walk(node, children):
+    todo = [node]
+    while todo:
+        n = todo.pop()
+        yield n
+        seq = children(n)
+        todo.extend(seq.apply(i) for i in range(seq.size()))
+
+
+def _percentile_columns(df) -> list[str]:
+    """For every distinct Percentile / ApproximatePercentile aggregate in
+    the optimized plan's Aggregate nodes, the column its value input reads.
+    Semantically equal aggregates count once: the physical planner gives
+    them one shared buffer, as it does for the lo/hi lookups of one
+    array-valued percentile."""
+    found = {}
+    for node in _walk(df._jdf.queryExecution().optimizedPlan(), lambda n: n.children()):
+        if node.nodeName() != "Aggregate":
+            continue
+        aggs = node.aggregateExpressions()
+        for i in range(aggs.size()):
+            for e in _walk(aggs.apply(i), lambda n: n.children()):
+                if e.nodeName() in ("Percentile", "ApproximatePercentile"):
+                    refs = e.child().references().toSeq()
+                    found[e.canonicalized().toString()] = [
+                        refs.apply(j).name() for j in range(refs.size())
+                    ]
+    return [c for cols in found.values() for c in cols]
+
+
+def test_one_percentile_buffer_per_signal(spark):
+    """Each aggregated column gets exactly one Percentile /
+    ApproximatePercentile: every quantile of a signal is read off one
+    buffer instead of one buffer per (profile, bound)."""
+    from redpajama_v2_processing_spark.functions.perplexity import (
+        perplexity_buckets,
+    )
+    from redpajama_v2_processing_spark.operators.thresholds import (
+        profiled_quantile_filter,
+    )
+
+    sig = spark.createDataFrame(
+        [(i, ("en", "de")[i % 2], float(i % 7), i % 5) for i in range(40)],
+        "doc_id long, lang string, a double, b int",
+    )
+    for exact in (True, False):
+        for op in (profiled_quantile_filter, quantile_filter):
+            cols = _percentile_columns(op(sig, ["a", "b"], exact=exact))
+            assert sorted(cols) == ["a", "b"], (op.__name__, exact, cols)
+    docs = spark.createDataFrame(
+        [(i, ("en", "de")[i % 2], f"w{i % 3} w{i % 4} w{i % 5}") for i in range(20)],
+        "doc_id long, lang string, text string",
+    )
+    for exact in (True, False):
+        cols = _percentile_columns(perplexity_buckets(docs, "doc_id", exact=exact))
+        assert cols == ["perplexity_bigram"], (exact, cols)
+
+
+def test_anti_join_duplicates_side_has_no_aggregate(spark):
+    """anti_join_duplicates joins the duplicate ids as given: no
+    distinct-aggregation (and so no exchange or job for it) on the
+    duplicates side of the left-anti join."""
+    from redpajama_v2_processing_spark.operators.exact_dedup import (
+        anti_join_duplicates,
+    )
+
+    docs = spark.range(0, 50).select(F.col("id").alias("doc_id"))
+    dups = spark.createDataFrame([(i % 7,) for i in range(30)], "dup_id long")
+    plan = anti_join_duplicates(docs, dups, "doc_id", "dup_id")
+    joins = [
+        n for n in _walk(plan._jdf.queryExecution().optimizedPlan(), lambda n: n.children())
+        if n.nodeName() == "Join" and n.joinType().toString() == "LeftAnti"
+    ]
+    assert len(joins) == 1
+    build = [n.nodeName() for n in _walk(joins[0].right(), lambda n: n.children())]
+    assert "Aggregate" not in build, build

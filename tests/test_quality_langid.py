@@ -9,8 +9,11 @@ from redpajama_v2_processing_spark.functions.signals import with_signals
 from redpajama_v2_processing_spark.operators.quality_filter import (
     quality_filter, with_quality_label,
 )
+from redpajama_v2_processing_spark.config import QUANTILE_PROFILES
+from redpajama_v2_processing_spark.functions.vectors import round_half_up
+from redpajama_v2_processing_spark.operators import thresholds
 from redpajama_v2_processing_spark.operators.thresholds import (
-    per_lang_thresholds, quantile_filter,
+    per_lang_thresholds, profiled_quantile_filter, quantile_filter,
 )
 from tests.conftest import docs_frame
 
@@ -59,6 +62,96 @@ def test_thresholds_and_quantile_filter(spark):
     # tight band drops the tails per language
     kept = quantile_filter(sig, ["number_of_words"], p_low=0.25, p_high=0.75).count()
     assert 0 < kept < 20
+
+
+def _threshold_frame(spark):
+    """Four language groups plus a NULL-lang one; a double signal with
+    NULLs and ties and an int signal."""
+    langs = ["en", "de", "fr", "xx", None]
+    rows = [
+        (i, langs[i % 5],
+         None if i % 11 == 3 else float((i * 37) % 23) / 7.0,
+         (i * 13) % 17)
+        for i in range(120)
+    ]
+    return spark.createDataFrame(
+        rows, "doc_id long, lang string, d double, n int"
+    )
+
+
+def _scalar_bound(c, p, exact):
+    """The per-quantile form: one aggregate (and one buffer) per bound."""
+    if exact:
+        q = F.expr(f"percentile({c}, {p})")
+    else:
+        q = F.percentile_approx(F.col(c).cast("double"), p, 10000)
+    return round_half_up(q.cast("double"), 6)
+
+
+def _scalar_thresholds(df, cols, exact) -> dict:
+    """{(lang, col, profile): (lo, hi)} from scalar percentile calls."""
+    aggs = [
+        _scalar_bound(c, p, exact).alias(f"{c}|{prof}|{i}")
+        for c in cols
+        for prof, bounds in QUANTILE_PROFILES.items()
+        for i, p in enumerate(bounds)
+    ]
+    out = {}
+    for r in df.groupBy("lang").agg(*aggs).collect():
+        for c in cols:
+            for prof in QUANTILE_PROFILES:
+                out[r.lang, c, prof] = (r[f"{c}|{prof}|0"], r[f"{c}|{prof}|1"])
+    return out
+
+
+def test_one_buffer_thresholds_match_scalar_percentiles(spark):
+    """per_lang_thresholds' one array-valued aggregate per signal gives the
+    bounds the scalar per-quantile calls give, bit for bit: exact and
+    approximate, every profile, NULL values, an int column and a NULL-lang
+    group."""
+    df = _threshold_frame(spark)
+    cols = ["d", "n"]
+    for exact in (True, False):
+        want = _scalar_thresholds(df, cols, exact)
+        for prof, (p_low, p_high) in QUANTILE_PROFILES.items():
+            th = per_lang_thresholds(df, cols, p_low=p_low, p_high=p_high,
+                                     exact=exact).collect()
+            assert len(th) == 5 and None in {r.lang for r in th}
+            for r in th:
+                for c in cols:
+                    got = (r[f"{c}_lo"], r[f"{c}_hi"])
+                    assert got == want[r.lang, c, prof], (exact, prof, r.lang, c)
+
+
+def test_profiled_quantile_filter_survivors_match_scalar(spark, monkeypatch):
+    """profiled_quantile_filter keeps exactly the rows the scalar
+    per-quantile thresholds keep, with each language on a different
+    profile (all four in use); NULL signal values and the NULL-lang group
+    never survive."""
+    monkeypatch.setattr(thresholds, "LANG_PROFILE", {
+        "en": "strict", "de": "stricter", "fr": "strictest",
+    })
+    df = _threshold_frame(spark)
+    cols = ["d", "n"]
+    rows = df.collect()
+    for exact in (True, False):
+        th = _scalar_thresholds(df, cols, exact)
+        want = set()
+        for r in rows:
+            if r.lang is None:
+                continue
+            prof = thresholds.LANG_PROFILE.get(r.lang, thresholds.DEFAULT_PROFILE)
+            if all(
+                r[c] is not None and th[r.lang, c, prof][0] <= r[c] <= th[r.lang, c, prof][1]
+                for c in cols
+            ):
+                want.add(r.doc_id)
+        got = {
+            r.doc_id
+            for r in profiled_quantile_filter(df, cols, exact=exact).collect()
+        }
+        assert got == want, exact
+        assert 0 < len(got) < len(rows)
 
 
 def test_langid_markers(spark):
