@@ -120,9 +120,11 @@ PROD_SIMHASH = {"bits": 60, "band_bits": 15, "max_hamming": 3, "max_bucket": 64}
 
 # Connected components: edge sets at or below this count are union-found on
 # the driver after two jobs (a collected edge Row is ~100 bytes on the driver,
-# so 1M edges ~ 100 MB — comfortably inside a multi-GB driver; raise it via
-# RPV2_CC_DRIVER_THRESHOLD only with driver memory to match, set 0 to force
-# the distributed large-star/small-star fixpoint).
+# so 1M edges ~ 100 MB — comfortably inside a multi-GB driver; the label
+# frame it returns is broadcast, at most 2M (id, root) longs ~ 32 MB per
+# executor; raise it via RPV2_CC_DRIVER_THRESHOLD only with driver and
+# executor memory to match, set 0 to force the distributed
+# large-star/small-star fixpoint).
 CC_DRIVER_THRESHOLD = int(os.environ.get("RPV2_CC_DRIVER_THRESHOLD", "1000000"))
 
 # Real-model swap seam: point these at model files (shipped to executors

@@ -70,7 +70,12 @@ def _driver_side_cc(edges: DataFrame, edge_rows) -> DataFrame:
     After LSH star-edge compression the edge set is usually tiny relative
     to the corpus (one edge per duplicate doc per band). Below the
     threshold, one checkpoint job per round of fixpoint latency collapses
-    into one collect + one createDataFrame. Identical output contract."""
+    into one collect + one createDataFrame. Identical output contract.
+
+    The labels come back as ONE partition with a broadcast hint: they are
+    on the driver already and number at most 2 x ``driver_threshold``
+    rows (two nodes per edge), so every keep join against them is a
+    broadcast hash join and the corpus side is not shuffled for it."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -92,7 +97,9 @@ def _driver_side_cc(edges: DataFrame, edge_rows) -> DataFrame:
     rows = [
         (n, min(members)) for root, members in comps.items() for n in members
     ]
-    return edges.sparkSession.createDataFrame(rows, "id long, root long")
+    spark = edges.sparkSession
+    labels = spark.sparkContext.parallelize(rows, 1)
+    return F.broadcast(spark.createDataFrame(labels, "id long, root long"))
 
 
 def connected_components(

@@ -9,6 +9,8 @@ Portable-hash contract (verified cross-engine):
   md5int(s)  = first 15 hex chars of md5(s) as a 60-bit bigint
   Spark: cast(conv(substr(md5(s),1,15),16,10) as bigint)
   DuckDB: ('0x' || substr(md5(s),1,15))::BIGINT
+  xxhash64(s) = Spark's F.xxhash64(s) (XXH64, seed 42, UTF-8 bytes)
+  DuckDB: oracle.xxhash64 (plain SQL over UHUGEINT, no registered function)
 """
 
 from __future__ import annotations
@@ -39,6 +41,93 @@ def sql_list(words) -> str:
 
 def md5int(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
+
+
+_XXH_P1, _XXH_P2, _XXH_P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_XXH_P4, _XXH_P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _u(v: int) -> str:
+    return f"{v}::UHUGEINT"
+
+
+def _mod64(e: str) -> str:
+    return f"(({e}) & {_u(_M64)})"
+
+
+def _rotl(x: str, r: int) -> str:
+    return _mod64(f"(({x}) << {r}) | (({x}) >> {64 - r})")
+
+
+def _xxh_round(acc: str, lane: str) -> str:
+    return _mod64(
+        f"{_rotl(_mod64(f'({acc}) + ({lane}) * {_u(_XXH_P2)}'), 31)} * {_u(_XXH_P1)}"
+    )
+
+
+def _let(value: str, name: str, body: str) -> str:
+    """``body`` with ``name`` bound to ``value`` (a one-element lambda)."""
+    return f"list_transform([{value}], {name} -> {body})[1]"
+
+
+def xxhash64(expr: str) -> str:
+    """Spark's ``xxhash64(expr)`` over a VARCHAR: XXH64 of the UTF-8 bytes
+    with seed 42, as a signed BIGINT. Plain SQL, so every oracle using it
+    stays self-contained: the 64-bit lanes are UHUGEINTs masked to 64 bits
+    after each multiply (a product of two 64-bit values fits in 128), the
+    stripe and tail loops are list_reduce folds over the byte list."""
+    seed = 42
+    p1, p2, p3, p4, p5 = (_u(p) for p in (_XXH_P1, _XXH_P2, _XXH_P3, _XXH_P4, _XXH_P5))
+    hx = f"hex(encode({expr}))"
+    byte_list = (
+        f"list_transform(range(0, octet_length(encode({expr}))), "
+        f"_i -> (('0x' || substr({hx}, 2 * _i + 1, 2))::INTEGER)::UHUGEINT)"
+    )
+
+    def word(start: str, width: int) -> str:  # little-endian, from _b
+        return "(" + " | ".join(
+            f"(_b[{start} + {k + 1}] << {8 * k})" for k in range(width)
+        ) + ")"
+
+    words = f"list_transform(range(0, len(_b) // 8), _j -> {word('8 * _j', 8)})"
+    # 32-byte stripes: lane l folds every 4th word from word l
+    init = (seed + _XXH_P1 + _XXH_P2, seed + _XXH_P2, seed, seed - _XXH_P1)
+    merged = _mod64(" + ".join(
+        _rotl(f"_v{lane}", r) for lane, r in enumerate((1, 7, 12, 18))
+    ))
+    for lane in range(4):
+        merged = _mod64(f"xor({merged}, {_xxh_round(_u(0), f'_v{lane}')}) * {p1} + {p4}")
+    for lane in reversed(range(4)):
+        fold = (
+            f"list_reduce([{_u(init[lane] & _M64)}] || list_transform("
+            f"range(0, len(_b) // 32), _s -> _w[4 * _s + {lane + 1}]), "
+            f"(_a, _x) -> {_xxh_round('_a', '_x')})"
+        )
+        merged = _let(fold, f"_v{lane}", merged)
+    h = _mod64(
+        f"(CASE WHEN len(_b) >= 32 THEN {merged} "
+        f"ELSE {_u((seed + _XXH_P5) & _M64)} END) + len(_b)::UHUGEINT"
+    )
+    # the 8-byte words after the stripes, then one 4-byte word, then bytes
+    step8 = _mod64(_rotl(f"xor(_a, {_xxh_round(_u(0), '_x')})", 27) + f" * {p1} + {p4}")
+    h = (f"list_reduce([{h}] || _w[4 * (len(_b) // 32) + 1:len(_b) // 8], "
+         f"(_a, _x) -> {step8})")
+    k4 = _mod64(f"{word('8 * (len(_b) // 8)', 4)} * {p1}")
+    step4 = _mod64(_rotl(f"xor(_h, {k4})", 23) + f" * {p2} + {p3}")
+    h = _let(h, "_h", f"CASE WHEN len(_b) % 8 >= 4 THEN {step4} ELSE _h END")
+    tail = ("_b[8 * (len(_b) // 8) + (CASE WHEN len(_b) % 8 >= 4 THEN 4 ELSE 0 END)"
+            " + 1:len(_b)]")
+    step1 = _mod64(_rotl(f"xor(_a, {_mod64(f'_x * {p5}')})", 11) + f" * {p1}")
+    h = f"list_reduce([{h}] || {tail}, (_a, _x) -> {step1})"
+    h = _let(h, "_h", _mod64(f"xor(_h, _h >> 33) * {p2}"))
+    h = _let(h, "_h", _mod64(f"xor(_h, _h >> 29) * {p3}"))
+    signed = (
+        "(CASE WHEN _h >= (1::UHUGEINT << 63) THEN _h::HUGEINT - (1::HUGEINT << 64) "
+        "ELSE _h::HUGEINT END)::BIGINT"
+    )
+    h = _let(_let(h, "_h", "xor(_h, _h >> 32)"), "_h", signed)
+    return _let(byte_list, "_b", _let(words, "_w", h))
 
 
 def _strip_ws(expr: str) -> str:
@@ -1437,12 +1526,20 @@ surv AS (SELECT n.* FROM newd n
 SELECT min(doc_id) AS doc_id FROM surv GROUP BY fp"""
 
 
-def _minhash_ctes_universal(cfg) -> str:
-    """Production-scheme twin (minhash_bands portable=False, base='md5'):
-    one md5 base hash per shingle, then the universal integer permutation
-    family (a_i*h32 + b_i mod P) — identical literal coefficients in both
-    engines (functions/hashing.perm_coeffs)."""
+def _minhash_ctes_universal(cfg, base: str = "md5") -> str:
+    """Production-scheme twin (minhash_bands): one base hash per shingle
+    (md5int, or Spark's xxhash64 for ``base='xxhash'``) taken mod 2^32,
+    then the universal integer permutation family (a_i*h32 + b_i mod P) —
+    identical literal coefficients in both engines
+    (functions/hashing.perm_coeffs) — and the same base hash over each
+    band's payload."""
     from .functions.hashing import PERM_PRIME, perm_coeffs
+
+    if base == "md5":
+        h32, band_hash = f"{md5int('s.s')} % 4294967296", md5int
+    else:  # Spark's pmod(xxhash64(s), 2^32)
+        h32 = f"({xxhash64('s.s')} % 4294967296 + 4294967296) % 4294967296"
+        band_hash = xxhash64
 
     k, b, r, n = cfg["num_perm"], cfg["bands"], cfg["rows"], cfg["shingle"]
     coeffs = perm_coeffs(k)
@@ -1464,7 +1561,7 @@ shg AS (
     END AS sh
   FROM tk),
 shh AS (
-  SELECT doc_id, {md5int('s.s')} % 4294967296 AS h
+  SELECT doc_id, {h32} AS h
   FROM shg, unnest(sh) AS s(s)),
 mhf AS (
   SELECT doc_id, p, min((a * h + bc) % {PERM_PRIME}) AS m
@@ -1472,20 +1569,21 @@ mhf AS (
 mh AS (SELECT doc_id, list(m ORDER BY p) AS sig FROM mhf GROUP BY doc_id),
 bands AS (
   SELECT doc_id AS id, bb.b AS band_idx,
-    {md5int(f"bb.b::VARCHAR || '#' || array_to_string(sig[(bb.b*{r}+1)::INT:(bb.b*{r}+{r})::INT], '|')")} AS band_hash
+    {band_hash(f"bb.b::VARCHAR || '#' || array_to_string(sig[(bb.b*{r}+1)::INT:(bb.b*{r}+{r})::INT], '|')")} AS band_hash
   FROM mh, (SELECT unnest(range(0, {b})) AS b) bb)"""
 
 
-def q_fuzzy_dedup_prod_checked(cfg=None) -> str:
+def q_fuzzy_dedup_prod(cfg=None, base: str = "xxhash") -> str:
     """Keep-list of the production fuzzy-dedup plan (117 perms / 9 bands /
-    salted edges / distributed-CC contract) with the md5 base hash. Salted
-    star edges yield the same connected components as plain star edges
-    (every bucket member stays linked through the bucket min), so one
-    recursive CTE covers both edge constructions."""
+    salted edges / distributed-CC contract): the deployed xxhash64 base
+    hash by default, md5 for fuzzy_dedup_prod_checked. Salted star edges
+    yield the same connected components as plain star edges (every bucket
+    member stays linked through the bucket min), so one recursive CTE
+    covers both edge constructions."""
     if cfg is None:
         from .config import PROD_MINHASH as cfg
     return f"""
-WITH RECURSIVE {_minhash_ctes_universal(cfg)}, {_edges_cte()},
+WITH RECURSIVE {_minhash_ctes_universal(cfg, base)}, {_edges_cte()},
 sym AS MATERIALIZED (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
 reach(id, root) AS (
   SELECT doc_id, doc_id FROM documents

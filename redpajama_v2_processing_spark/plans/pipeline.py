@@ -85,6 +85,8 @@ def corpus_stages(id_col: str = "doc_id", text_col: str = "text",
         # ONE left join against the (dup-cluster-sized) CC label frame:
         # root == id (or no root) keeps the doc — the keep rule of
         # fuzzy_dedup_keep_ids without its second corpus-wide semi join.
+        # Driver-path labels carry a broadcast hint, so the join does not
+        # shuffle ``df``.
         # ``df`` is read twice (bands + join): fused runners persist it.
         bands = minhash_bands(df, id_col, text_col, PROD_MINHASH, "xxhash")
         cc = connected_components(salted_bucket_edges(bands)).withColumnRenamed(
@@ -110,13 +112,16 @@ def full_pipeline(docs: DataFrame, id_col: str = "doc_id",
     per-stage variant is tableio.run_stages over the same list.)
 
     The exact survivors are persisted once, since the fuzzy stage reads
-    them twice. ``eager=True`` (default) materializes the result once via
-    localCheckpoint while that cache is live, then frees it — no dangling
-    persisted intermediate after the call (the result's own checkpoint
-    blocks belong to the returned DataFrame and are context-cleaned when it
-    is dropped). ``eager=False`` returns the fully lazy plan and the caller
-    owns the survivor cache lifetime (``.unpersist()`` any persisted inputs
-    after the final action)."""
+    them twice. AQE owns the cache's partition count (the session lets it
+    coalesce cached plans), and on the driver CC path the keep join
+    broadcasts the CC labels (at most 2 x ``CC_DRIVER_THRESHOLD`` rows), so
+    the survivors are not shuffled again. ``eager=True`` (default)
+    materializes the result once via localCheckpoint while that cache is
+    live, then frees it — no dangling persisted intermediate after the call
+    (the result's own checkpoint blocks belong to the returned DataFrame and
+    are context-cleaned when it is dropped). ``eager=False`` returns the
+    fully lazy plan and the caller owns the survivor cache lifetime
+    (``.unpersist()`` any persisted inputs after the final action)."""
     *upstream, fuzzy = corpus_stages(id_col, text_col)
     survivors = docs
     for st in upstream:

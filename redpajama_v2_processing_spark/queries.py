@@ -1706,6 +1706,20 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "source_overlap": q_source_overlap,
     "fuzzy_dedup_keep_longest": q_fuzzy_dedup_keep_longest,
     "bm25_topk": q_bm25_topk,
+    # --- implementation changed: driver-path CC labels broadcast ----------
+    # (connected_components callers; fuzzy_dedup_keep_longest above and
+    # semdedup_keep, fuzzy_dedup_salted, fuzzy_dedup_keep, simhash_dedup_keep
+    # and winnow_dedup_keep below already sit in the window.
+    # fuzzy_dedup_prod is now oracle-checked with the xxhash64 SQL twin)
+    "incremental_fuzzy_keep": q_incremental_fuzzy_keep,
+    "ngram_jaccard_dedup_keep": q_ngram_jaccard_dedup_keep,
+    "dedup_cluster_sizes": q_dedup_cluster_sizes,
+    "embedding_dedup_star_keep": q_embedding_dedup_star_keep,
+    "embedding_dedup_keep": q_embedding_dedup_keep,
+    "embedding_dedup_prod_keep": q_embedding_dedup_prod_keep,
+    "fuzzy_dedup_prod_checked": q_fuzzy_dedup_prod_checked,
+    "rpv2_pre_banded_keep": q_rpv2_pre_banded_keep,
+    "fuzzy_dedup_prod": q_fuzzy_dedup_prod,
     # --- implementation changed: one percentile buffer per signal --------
     # (profiled_quantile_filter, perplexity_buckets and its ccnet_pipeline
     # caller; quantile_filter, quality_thresholds and anti_join_duplicates
@@ -1734,17 +1748,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "fuzzy_dedup_distributed": q_fuzzy_dedup_distributed,
     "semi_join_keeplist": q_semi_join,
     "anti_join_duplicates": q_anti_join,
-    "hash_sample": q_hash_sample,
     "quality_thresholds": q_quality_thresholds,
     "lsh_buckets": q_lsh_buckets,
     "minhash_bands": q_minhash_bands,
     "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
     "lang_downsample": q_lang_downsample,
     "ngram_jaccard": q_jaccard_vs_query,
-    "events_hourly": q_events_hourly,
-    "events_sessions": q_events_sessions,
-    "salted_count": q_salted_count,
-    "top_sources": q_top_sources,
     "fingerprint": q_fingerprint,
     "unigram_entropy": q_unigram_entropy,
     "quantile_filter": q_quantile_filter,
@@ -1755,22 +1764,26 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ann_cosine_topk": q_ann_cosine_topk,
     # --- r4-certified rotation fill (scrub/dedup/ANN siblings of changed
     # modules first) -------------------------------------------------------
-    "audio_pcm_stats": q_audio_pcm_stats,
-    "quality_filter": q_quality_filter,
-    "scrub_pii": q_scrub,
-    "exact_dedup_keep": q_exact_dedup_keep,
     "fuzzy_dedup_keep": q_fuzzy_dedup_keep,
     "simhash_dedup_keep": q_simhash_dedup_keep,
     "winnow_dedup_keep": q_winnow_dedup_keep,
     # ==================== driver window ends here (50) ====================
-    # parked: r4/r5-certified, implementations untouched this round; all
+    # parked: certified in earlier rounds, implementations untouched; all
     # remain runnable and locally checkable via tools/check_queries.py
+    "audio_pcm_stats": q_audio_pcm_stats,
+    "quality_filter": q_quality_filter,
+    "scrub_pii": q_scrub,
+    "exact_dedup_keep": q_exact_dedup_keep,
+    "hash_sample": q_hash_sample,
+    "events_hourly": q_events_hourly,
+    "events_sessions": q_events_sessions,
+    "salted_count": q_salted_count,
+    "top_sources": q_top_sources,
     "quality_signals": q_quality_signals,
     "langid": q_langid,
     "pq_codebooks": q_pq_codebooks,
     "ann_pq_topk": q_ann_pq_topk,
     "ann_ivf_pq_topk": q_ann_ivf_pq_topk,
-    "incremental_fuzzy_keep": q_incremental_fuzzy_keep,
     "incremental_exact_keep": q_incremental_exact_keep,
     "vocab_coverage": q_vocab_coverage,
     "oov_rate": q_oov_rate,
@@ -1788,19 +1801,15 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "url_blocklist": q_url_blocklist,
     "fineweb_filter": q_fineweb_filter,
     "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-    "ngram_jaccard_dedup_keep": q_ngram_jaccard_dedup_keep,
     "gopher_filter": q_gopher_filter,
     "contamination_report": q_contamination_report,
-    "dedup_cluster_sizes": q_dedup_cluster_sizes,
     "ann_ivf_pq_residual_topk": q_ann_ivf_pq_residual_topk,
-    "embedding_dedup_star_keep": q_embedding_dedup_star_keep,
     "langid_confusion": q_langid_confusion,
     "token_counts": q_token_counts,
     "duplicate_line_signals": q_duplicate_line_signals,
     "session_windows": q_session_windows,
     "ann_ivf_trained_topk": q_ann_ivf_trained_topk,
     "events_sliding": q_events_sliding,
-    "embedding_dedup_keep": q_embedding_dedup_keep,
     "perplexity": q_perplexity,
     "perplexity_ngram": q_perplexity_ngram,
     "domain_cap": q_domain_cap,
@@ -1813,14 +1822,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_lines": q_dedup_lines,
     "winnow_fingerprints": q_winnow_fingerprints,
     "winnow_near_dup_pairs": q_winnow_near_dup_pairs,
-    "fuzzy_dedup_prod_checked": q_fuzzy_dedup_prod_checked,
     "simhash_prod_near_pairs": q_simhash_prod_near_pairs,
     "simhash_capped_near_pairs": q_simhash_capped_near_pairs,
     "ann_ivf_topk": q_ann_ivf_topk,
     "embedding_near_dup_prod_pairs": q_embedding_near_dup_prod_pairs,
-    "embedding_dedup_prod_keep": q_embedding_dedup_prod_keep,
     "kmeans_cells": q_kmeans_cells,
-    "rpv2_pre_banded_keep": q_rpv2_pre_banded_keep,
     "image_pixels": q_image_pixels,
     "video_frames": q_video_frames,
     "image_meta": q_image_meta,
@@ -1836,7 +1842,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rollup_counts": q_rollup_counts,
     "cube_counts": q_cube_counts,
     "top_docs_per_lang": q_top_docs_per_lang,
-    "fuzzy_dedup_prod": q_fuzzy_dedup_prod,
 }
 
 ORACLES: dict[str, str] = {
@@ -1917,7 +1922,8 @@ ORACLES: dict[str, str] = {
     # salted edges / distributed CC produce the identical keep-set
     "fuzzy_dedup_salted": oracle.q_fuzzy_dedup_keep(),
     "fuzzy_dedup_distributed": oracle.q_fuzzy_dedup_keep(),
-    "fuzzy_dedup_prod_checked": oracle.q_fuzzy_dedup_prod_checked(),
+    "fuzzy_dedup_prod_checked": oracle.q_fuzzy_dedup_prod(base="md5"),
+    "fuzzy_dedup_prod": oracle.q_fuzzy_dedup_prod(),
     "ngram_jaccard": oracle.q_jaccard_vs_query(),
     "simhash": oracle.q_simhash(),
     "simhash_near_pairs": oracle.q_simhash_near_pairs(),

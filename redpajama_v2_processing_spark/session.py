@@ -3,6 +3,14 @@
 Settings chosen for the 100 TB target (and harmless locally):
 
 * AQE on (runtime coalesce, skew-join splitting, broadcast demotion);
+* AQE may also change a cached plan's output partitioning
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``, false
+  by default in Spark 4.1.2). Without it every stage that reads a cache
+  runs ``spark.sql.shuffle.partitions`` tasks however small the cache is:
+  ``full_pipeline`` over 1,000 pages on local[4] (16 shuffle partitions)
+  ran 48 of its 63 tasks in three 16-task stages over its 0.3 MB survivor
+  cache. With it, those stages coalesce and the pass runs 18 tasks (13
+  with the broadcast driver-path CC labels);
 * Arrow on for any pandas-UDF path;
 * runtime Bloom-filter join pruning on (the Spark-native realization of the
   reference's Bloom-filter exact-dedup stage, README.md:53-56);
@@ -36,6 +44,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # NOTE: runtimeFilter.semiJoinReduction.enabled hangs Spark 4.1.2's
         # optimizer (infinite re-planning) even on trivial scans — do not set.

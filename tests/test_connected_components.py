@@ -117,3 +117,28 @@ def test_cc_and_simhash_keep_free_their_checkpoints(spark, monkeypatch):
         before = _persistent_ids(sc)
         simhash_dedup_keep(docs, "doc_id").count()
         assert len(_persistent_ids(sc) - before) <= 1
+
+
+def test_driver_path_labels_broadcast_from_one_partition(spark):
+    """The driver path returns its labels as one partition with a broadcast
+    hint, so keep_min_id plans a BroadcastHashJoin that builds the labels
+    and leaves the ids side unshuffled. (Both paths' roots are compared
+    with each other and with union-find by _check above.)"""
+    from redpajama_v2_processing_spark.operators.connected_components import (
+        keep_min_id,
+    )
+    from tests.test_plans import _walk
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 20, 2)], "src long, dst long"
+    )
+    cc = connected_components(edges)
+    assert cc.rdd.getNumPartitions() == 1
+    keep = keep_min_id(spark.range(0, 40), cc)
+    plan = keep._jdf.queryExecution().executedPlan().executedPlan()
+    joins = [n for n in _walk(plan, lambda n: n.children()) if n.nodeName().endswith("Join")]
+    assert [j.nodeName() for j in joins] == ["BroadcastHashJoin"]
+    assert joins[0].buildSide().toString() == "BuildRight"
+    ids_side = [n.nodeName() for n in _walk(joins[0].left(), lambda n: n.children())]
+    assert "Exchange" not in ids_side, ids_side
+    assert {r.id for r in keep.collect()} == set(range(0, 20, 2)) | set(range(20, 40))

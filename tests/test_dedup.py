@@ -126,8 +126,8 @@ def _prod_keep(df, **kw):
 
 
 def test_fuzzy_prod_profile_properties(spark):
-    """Property gate for the xxhash production profile (no DuckDB twin —
-    the same plan shape is oracle-checked as fuzzy_dedup_prod_checked):
+    """Property gate for the xxhash production profile (its registry query
+    is oracle-checked through the oracle.xxhash64 SQL twin):
     exact copies cluster, distinct docs survive, keep ⊆ ids, idempotence."""
     texts = [
         "same text body one two three four five",
@@ -155,6 +155,109 @@ def test_fuzzy_prod_base_hash_agreement(spark):
     ]
     df = docs_frame(spark, texts)
     assert _prod_keep(df) == _prod_keep(df, base="md5") == [0, 1, 3]
+
+
+_XXH_P1, _XXH_P2, _XXH_P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_XXH_P4, _XXH_P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _XXH_P2) & _M64, 31) * _XXH_P1 & _M64
+
+
+def spark_xxhash64(text: str) -> int:
+    """Pure-Python XXH64 of the UTF-8 bytes with Spark's seed 42, as the
+    signed long ``F.xxhash64`` returns: the reference the DuckDB oracle's
+    SQL twin (``oracle.xxhash64``) is checked against."""
+    data, seed = text.encode("utf-8"), 42
+    n, i = len(data), 0
+
+    def word(at: int, width: int) -> int:
+        return int.from_bytes(data[at:at + width], "little")
+
+    if n >= 32:
+        v = [seed + _XXH_P1 + _XXH_P2, seed + _XXH_P2, seed, seed - _XXH_P1]
+        v = [x & _M64 for x in v]
+        while i <= n - 32:
+            v = [_xxh_round(v[j], word(i + 8 * j, 8)) for j in range(4)]
+            i += 32
+        h = sum(_rotl(x, r) for x, r in zip(v, (1, 7, 12, 18))) & _M64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _XXH_P1 + _XXH_P4) & _M64
+    else:
+        h = (seed + _XXH_P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        h = (_rotl(h ^ _xxh_round(0, word(i, 8)), 27) * _XXH_P1 + _XXH_P4) & _M64
+        i += 8
+    if i <= n - 4:
+        h = (_rotl(h ^ (word(i, 4) * _XXH_P1 & _M64), 23) * _XXH_P2 + _XXH_P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _XXH_P5 & _M64), 11) * _XXH_P1 & _M64
+    h = (h ^ (h >> 33)) * _XXH_P2 & _M64
+    h = (h ^ (h >> 29)) * _XXH_P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+# the empty string, non-ASCII text, and every branch of the byte loop:
+# tail bytes only, the 4-byte word, 8-byte words, 32-byte stripes
+_XXH_CASES = [
+    "", "naïve café", "漢字テキスト", "emoji 😀 pair",
+    *("abcdefghijklmnopqrstuvwxyz0123456789"[:n] for n in (1, 3, 4, 7, 8, 31, 32, 33)),
+    "é" * 16 + "x", "the quick brown fox jumps over the lazy dog " * 3,
+]
+
+
+def test_xxhash64_reference_matches_spark(spark):
+    """The Python reference is Spark's xxhash64 (seed 42, UTF-8 bytes) on
+    the empty string, non-ASCII text and 1-33 byte lengths, and so is the
+    oracle's SQL twin on the same strings."""
+    import duckdb
+
+    from redpajama_v2_processing_spark.oracle import xxhash64
+
+    assert {len(s.encode()) for s in _XXH_CASES} >= {0, 1, 3, 4, 7, 8, 31, 32, 33}
+    df = spark.createDataFrame([(s,) for s in _XXH_CASES], "s string")
+    got = {r.s: r.h for r in df.select("s", F.xxhash64("s").alias("h")).collect()}
+    assert got == {s: spark_xxhash64(s) for s in _XXH_CASES}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(s,) for s in _XXH_CASES])
+    sql = dict(con.execute(f"SELECT s, {xxhash64('s')} FROM t").fetchall())
+    assert sql == got
+
+
+def test_xxhash64_sql_twin_matches_reference():
+    """oracle.xxhash64 (plain DuckDB SQL) equals the Python reference,
+    registered as a DuckDB function, on 2,000 random strings of 0-49
+    characters mixing 1-4 byte UTF-8 encodings."""
+    import random
+
+    import duckdb
+
+    from redpajama_v2_processing_spark.oracle import xxhash64
+
+    rng = random.Random(5)
+    alphabet = "abcxyz ,.\t\nÄé中文😀"
+    strings = [
+        "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 50)))
+        for _ in range(2000)
+    ]
+    con = duckdb.connect()
+    con.create_function("spark_xxhash64", spark_xxhash64, ["VARCHAR"], "BIGINT")
+    con.execute("CREATE TABLE t (s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(s,) for s in strings])
+    bad = con.execute(
+        f"SELECT s FROM t WHERE spark_xxhash64(s) <> {xxhash64('s')}"
+    ).fetchall()
+    assert bad == []
 
 
 def test_null_and_empty_text_survive(spark):

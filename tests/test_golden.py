@@ -83,8 +83,8 @@ def test_fuzzy_prod_keep_f1_vs_bruteforce_jaccard(spark):
 
 
 # md5 of the sf0.001 documents.parquet generation this pin was taken on.
-# fuzzy_dedup_prod is the registry's ONE no-oracle entry (xxhash base has
-# no DuckDB twin), so keep-set drift would otherwise pass silently — the
+# fuzzy_dedup_prod was the registry's one no-oracle entry until its xxhash64
+# base hash got a DuckDB twin (oracle.xxhash64); this pin predates that — the
 # r5 verdict flagged an apparent 476 -> 477 move between the r4 driver run
 # and a local r5 run. Adjudicated in round 6: the ENGINE never moved
 # (r4-HEAD code reproduces 477 on the current fixture, stable across

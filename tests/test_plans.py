@@ -182,10 +182,12 @@ def test_full_pipeline_frees_intermediate_cache(spark, pages_small):
 
 
 def test_full_pipeline_plan_budget(spark, pages_small):
-    """Plan budget of the headline job: three shuffle Exchanges (the exact
-    stage's fingerprint window and both sides of the fuzzy keep join; the
-    driver-side CC frame is a checkpointed scan), no cartesian product and
-    no Python eval."""
+    """Plan budget of the headline job: one shuffle Exchange (the exact
+    stage's fingerprint window) and one BroadcastExchange. The fuzzy keep
+    join is a BroadcastHashJoin against the driver-side CC label frame, so
+    the survivors are not shuffled for it (measured: 3 shuffle Exchanges
+    and a SortMergeJoin while that frame was not broadcast). No cartesian
+    product and no Python eval."""
     from redpajama_v2_processing_spark.plans.pipeline import (
         corpus_stages, full_pipeline,
     )
@@ -199,9 +201,38 @@ def test_full_pipeline_plan_budget(spark, pages_small):
         for st in corpus_stages()[:-1]:
             survivors = st.fn(survivors)
         survivors.unpersist()
-    assert nodes.count("Exchange") == 3, nodes
+    assert nodes.count("Exchange") == 1, nodes
+    assert nodes.count("BroadcastExchange") == 1, nodes
+    assert [n for n in nodes if n.endswith("Join")] == ["BroadcastHashJoin"], nodes
     assert "CartesianProduct" not in nodes
     assert not any("EvalPython" in n for n in nodes), nodes
+
+
+def test_full_pipeline_task_budget(spark, pages_small):
+    """Spark jobs and tasks of one full_pipeline(eager=True) call on
+    pages_small, counted by job group (local[4], 4 shuffle partitions).
+    AQE may coalesce the exact survivors' cache, and the driver-path CC
+    labels are one broadcast partition: 9 jobs and 12 tasks. Measured
+    while every stage reading that cache ran ``shuffle.partitions`` tasks
+    and the keep join shuffled both sides: 11 jobs and 26 tasks."""
+    from redpajama_v2_processing_spark.plans.pipeline import full_pipeline
+
+    sc = spark.sparkContext
+    docs = pages_small.select(F.xxhash64("url").alias("doc_id"), "text", "lang")
+    group = "full-pipeline-task-budget"
+    try:
+        sc.setJobGroup(group, group)
+        full_pipeline(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        tracker.getStageInfo(stage).numCompletedTasks
+        for job in jobs for stage in tracker.getJobInfo(job).stageIds
+    )
+    assert (len(jobs), tasks) == (9, 12)
 
 
 def test_domain_cap_windows_are_skew_capped(spark):
