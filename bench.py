@@ -248,9 +248,13 @@ def main() -> int:
                 ).count()
                 row[f"emb_{label}_sec"] = round(time.time() - t0, 1)
             # star-edge candidate volume (the linear-by-construction dedup
-            # path): member -> bucket-min edges before the verify
+            # path): member -> bucket-min edges before the verify, counted
+            # through the family's one star-edge builder
             from redpajama_v2_processing_spark.operators.ann import (
                 banded_keys_frame,
+            )
+            from redpajama_v2_processing_spark.operators.minhash_lsh import (
+                candidate_edges,
             )
             from redpajama_v2_processing_spark.operators.simhash_dedup import (
                 _banded_simhash, with_simhash,
@@ -259,26 +263,15 @@ def main() -> int:
             t0 = time.time()
             sh = with_simhash(docs, "id_int", bits=PROD_SIMHASH["bits"],
                               portable=False)
-            sb = _banded_simhash(sh, PROD_SIMHASH["bits"],
-                                 PROD_SIMHASH["band_bits"])
-            sbk = sb.groupBy("band", "key").agg(F.min("id").alias("_m"))
-            row["simhash_star_candidates"] = (
-                sb.join(sbk, ["band", "key"])
-                .where(F.col("id") != F.col("_m"))
-                .select("id", "_m").distinct().count()
-            )
+            row["simhash_star_candidates"] = candidate_edges(_banded_simhash(
+                sh, PROD_SIMHASH["bits"], PROD_SIMHASH["band_bits"]
+            )).count()
             row["simhash_star_sec"] = round(time.time() - t0, 1)
             t0 = time.time()
-            ek = banded_keys_frame(
+            row["emb_star_candidates"] = candidate_edges(banded_keys_frame(
                 emb, "vec_id", "embedding", 64,
                 PROD_EMB_LSH["nbits"], PROD_EMB_LSH["band_bits"],
-            )
-            ebk = ek.groupBy("band", "key").agg(F.min("_id").alias("_m"))
-            row["emb_star_candidates"] = (
-                ek.join(ebk, ["band", "key"])
-                .where(F.col("_id") != F.col("_m"))
-                .select("_id", "_m").distinct().count()
-            )
+            )).count()
             row["emb_star_sec"] = round(time.time() - t0, 1)
             # winnow candidate volume: rare-fingerprint join pairs (the
             # substring-dedup family's scale cost). Bounded by the max_df
@@ -455,8 +448,10 @@ def main() -> int:
         # best-of-2 for slow queries, and min-over-spread samples; numbers
         # are NOT apples-to-apples with rev<3 rounds (BENCH_r01/r02). rev 4:
         # the --scaling job runs full_pipeline (the headline's composition)
-        # instead of the older exact/fuzzy keep-ids + semi-join composition
-        "bench_rev": 4,
+        # instead of the older exact/fuzzy keep-ids + semi-join composition.
+        # rev 5: --growth counts star candidates with
+        # minhash_lsh.candidate_edges (same counts as the old groupBy+join)
+        "bench_rev": 5,
     }))
     return 0
 

@@ -63,16 +63,3 @@ def staged_cosine(
         round_digits,
     )
 
-
-def verify_partitions(df) -> int:
-    """Partition count for ids-only candidate frames feeding an
-    interpreted-expression verify (and for the banded-frame checkpoints
-    that feed bucket self-joins): byte-based AQE coalescing cannot see
-    row-count-proportional interpreted work and would serialize it onto
-    one core (BENCH.md round 6). One partition per core: the r6 fix used
-    4x parallelism, but a round-7 A/B measured the 4x variant ~20%
-    slower across the simhash/embedding/semdedup family — the extra
-    task-launch waves cost more than they rebalance (the hash
-    partitioning is already even), and the count still scales with the
-    cluster's core budget, never a local constant."""
-    return df.sparkSession.sparkContext.defaultParallelism

@@ -125,8 +125,9 @@ def banded_keys_frame(
     nbits: int,
     band_bits: int,
 ) -> DataFrame:
-    """DF(_id, band, key): banded hyperplane keys, whole-stage-codegen
-    formulation — the production signature path.
+    """DF(id, band_idx, band_hash): banded hyperplane keys in the dedup
+    family's banded schema, whole-stage-codegen formulation — the
+    production signature path.
 
     A Column-expression formulation (folding each dot product with
     F.aggregate, as hyperplane_signature does) evaluates INTERPRETED —
@@ -155,12 +156,12 @@ def banded_keys_frame(
     # _hyperplane_band_ctes) — without the filter, posexplode silently
     # drops NULLs here while a SQL twin would emit key-0 band rows.
     ex = embeddings.where(F.size(F.col(vec_col)) == dim).select(
-        F.col(id_col).alias("_id"),
+        F.col(id_col).alias("id"),
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "_x"),
     )
     sums = (
         ex.join(F.broadcast(wdf), "pos")
-        .groupBy("_id")
+        .groupBy("id")
         .agg(
             *[
                 F.sum(
@@ -183,12 +184,12 @@ def banded_keys_frame(
 
     bands = F.array(
         *[
-            F.struct(F.lit(b).alias("band"), key(b).alias("key"))
+            F.struct(F.lit(b).alias("band_idx"), key(b).alias("band_hash"))
             for b in range(nbits // band_bits)
         ]
     )
-    return sums.select("_id", F.explode(bands).alias("_bk")).select(
-        "_id", "_bk.band", "_bk.key"
+    return sums.select("id", F.explode(bands).alias("_bk")).select(
+        "id", "_bk.band_idx", "_bk.band_hash"
     )
 
 
@@ -230,6 +231,37 @@ def ann_multiprobe_lsh_topk(
     )
 
 
+def cosine_verify(cand: DataFrame, vectors: DataFrame, threshold: float) -> DataFrame:
+    """DF(src, dst, cos): candidate pairs DF(src, dst) whose rounded cosine
+    reaches ``threshold`` — the embedding family's one verify (banded
+    pairs, star keep, SemDeDup). Candidates are ids only; ``vectors``
+    DF(id, v) is re-joined per side with its norm staged per VECTOR, so
+    only the dot folds per PAIR (functions/vectors.staged_cosine). The
+    candidates are repartitioned first: AQE would otherwise coalesce the
+    byte-tiny frame and serialize the interpreted verify onto one core
+    (20x wall blowup at the 50k fixture, BENCH.md r6)."""
+    from ..functions.vectors import norm as _vnorm
+    from ..functions.vectors import staged_cosine
+    from .connected_components import verify_partitions
+
+    cand = cand.repartition(verify_partitions(cand), "src", "dst")
+    va = vectors.select(F.col("id").alias("src"), F.col("v").alias("_va")).withColumn(
+        "_na", _vnorm(F.col("_va"))
+    )
+    vb = vectors.select(F.col("id").alias("dst"), F.col("v").alias("_vb")).withColumn(
+        "_nb", _vnorm(F.col("_vb"))
+    )
+    cos = staged_cosine(
+        F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"), ANN_ROUND
+    )
+    return (
+        cand.join(va, "src")
+        .join(vb, "dst")
+        .select("src", "dst", cos.alias("cos"))
+        .where(F.col("cos") >= threshold)
+    )
+
+
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
@@ -259,29 +291,25 @@ def embedding_near_dup_pairs(
     /root/reference/src/minhashlsh.py:101).
 
     Plan shape (banded): explode band keys (id + 2 ints per row — vectors
-    do NOT travel through the band shuffle), equi-self-join per (band,
-    key), distinct (src, dst), then re-join the vectors for the exact
-    cosine verify. The distinct collapses multi-band hits before the
-    expensive cosine, and both verify joins shuffle on the id key.
+    do NOT travel through the band shuffle), equi-self-join per
+    (band_idx, band_hash), distinct (src, dst), then :func:`cosine_verify`
+    re-joins the vectors. The distinct collapses multi-band hits before
+    the expensive cosine, and both verify joins shuffle on the id key.
 
-    ``max_bucket`` (banded path only) caps each (band, key) bucket at its
+    ``max_bucket`` (banded path only) caps each bucket at its
     ``max_bucket`` smallest ids before the self-join: dense half-space
     clusters otherwise make bucket width grow with corpus size and the
     join quadratic again; the cap bounds any bucket to C(cap, 2) pairs
     (approximation — members beyond the cap can still match through
     another band; oracle-pinned in the prod queries).
     """
-    from ..functions.vectors import norm as _vnorm
-    from ..functions.vectors import staged_cosine, verify_partitions
-
-    def _pair_cos():
-        # norms precomputed per VECTOR (columns _na/_nb staged on the join
-        # sides): see functions/vectors.staged_cosine for the economics
-        return staged_cosine(
-            F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"), ANN_ROUND
-        )
+    from .connected_components import checkpoint_banded
+    from .minhash_lsh import cap_bucket_width
 
     if band_bits is None:
+        from ..functions.vectors import norm as _vnorm
+        from ..functions.vectors import staged_cosine
+
         sig = hyperplane_signature(F.col(vec_col), dim, nbits)
         b = embeddings.select(
             F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), sig.alias("_bucket")
@@ -290,56 +318,30 @@ def embedding_near_dup_pairs(
                      F.col("_n").alias("_na"), "_bucket")
         c = b.select(F.col("_id").alias("dst"), F.col("_v").alias("_vb"),
                      F.col("_n").alias("_nb"), "_bucket")
+        # norms staged per VECTOR on the join sides (staged_cosine)
+        cos = staged_cosine(
+            F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"), ANN_ROUND
+        )
         return (
             a.join(c, "_bucket")
             .where(F.col("src") < F.col("dst"))
-            .select("src", "dst", _pair_cos().alias("cos"))
+            .select("src", "dst", cos.alias("cos"))
             .where(F.col("cos") >= threshold)
         )
-    banded = banded_keys_frame(embeddings, id_col, vec_col, dim, nbits, band_bits)
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "key").orderBy("_id")
-        banded = (
-            banded.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= max_bucket)
-            .drop("_rn")
-        )
-    # checkpoint: both self-join sides consume the banded frame (no
-    # subplan sharing in Catalyst — the signature aggregation would run
-    # once per side). Explicit repartition on the join key first: the
-    # byte-tiny banded aggregate otherwise AQE-coalesces to ONE partition
-    # and the checkpoint pins the whole bucket self-join onto one core
-    # (the semdedup r6 lesson); (band, key) partitioning also lets the
-    # self-join reuse the checkpoint partitioning — no further exchange.
-    banded = banded.repartition(
-        verify_partitions(embeddings), "band", "key"
-    ).localCheckpoint(eager=True)
-    a = banded.select(F.col("_id").alias("src"), "band", "key")
-    c = banded.select(F.col("_id").alias("dst"), "band", "key")
-    # explicit repartition of the ids-only candidate frame: byte-based AQE
-    # coalescing otherwise concentrates the row-count-proportional
-    # interpreted verify onto few cores (the semdedup lesson, BENCH.md r6)
+    banded = checkpoint_banded(cap_bucket_width(
+        banded_keys_frame(embeddings, id_col, vec_col, dim, nbits, band_bits),
+        max_bucket,
+    ))
+    a = banded.select(F.col("id").alias("src"), "band_idx", "band_hash")
+    c = banded.select(F.col("id").alias("dst"), "band_idx", "band_hash")
     cand = (
-        a.join(c, ["band", "key"])
+        a.join(c, ["band_idx", "band_hash"])
         .where(F.col("src") < F.col("dst"))
         .select("src", "dst")
         .distinct()
-        .repartition(verify_partitions(embeddings), "src", "dst")
     )
-    va = embeddings.select(
-        F.col(id_col).alias("src"), F.col(vec_col).alias("_va")
-    ).withColumn("_na", _vnorm(F.col("_va")))
-    vb = embeddings.select(
-        F.col(id_col).alias("dst"), F.col(vec_col).alias("_vb")
-    ).withColumn("_nb", _vnorm(F.col("_vb")))
-    return (
-        cand.join(va, "src")
-        .join(vb, "dst")
-        .select("src", "dst", _pair_cos().alias("cos"))
-        .where(F.col("cos") >= threshold)
-    )
+    vectors = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    return cosine_verify(cand, vectors, threshold)
 
 
 def embedding_dedup_keep(
@@ -355,14 +357,15 @@ def embedding_dedup_keep(
     """DF(id): keep-list — one vector (min id) per near-dup component
     (connected components over the near-dup pair graph), singletons kept.
     Same keep rule as the text dedup family (root == id)."""
-    from .connected_components import connected_components, keep_min_id
+    from .connected_components import dedup_keep_min_id
 
-    pairs = embedding_near_dup_pairs(
-        embeddings, threshold, id_col, vec_col, dim, nbits, band_bits, max_bucket
+    return dedup_keep_min_id(
+        embeddings.select(F.col(id_col).alias("id")),
+        lambda: embedding_near_dup_pairs(
+            embeddings, threshold, id_col, vec_col, dim, nbits, band_bits,
+            max_bucket,
+        ).select("src", "dst"),
     )
-    cc = connected_components(pairs.select("src", "dst"))
-    ids = embeddings.select(F.col(id_col).alias("id"))
-    return keep_min_id(ids, cc)
 
 
 def embedding_dedup_star_keep(
@@ -382,7 +385,8 @@ def embedding_dedup_star_keep(
     random data — quadratic over a constant, and no per-bucket cap fixes
     that (measured: the cap never binds on dispersed small buckets,
     BENCH.md). Here each bucket member links only to its bucket MIN id
-    (one grouped arg_min aggregation), the single edge is verified with
+    (the family's star-edge builder, minhash_lsh.candidate_edges: one
+    bucket window, no join), the single edge is verified with
     rounded cosine >= threshold, and connected components assign roots:
     candidates <= n * n_bands BY CONSTRUCTION — the same star-edge shape
     that keeps MinHash-LSH linear (operators/minhash_lsh.candidate_edges).
@@ -392,52 +396,22 @@ def embedding_dedup_star_keep(
     near-dup clusters at high cosine share most band keys, so their
     members reach a common min with probability ~the banding recall curve.
     """
-    from .connected_components import connected_components, keep_min_id
+    from .connected_components import checkpoint_banded, dedup_keep_min_id
+    from .minhash_lsh import candidate_edges
 
-    # the banded frame feeds the bucket-min aggregation AND the join back;
-    # Catalyst does not share subplans, so without this the 64-sum banding
-    # aggregation (the dominant cost) computes twice — same checkpoint the
-    # pairs path takes at embedding_near_dup_pairs. Repartitioned on the
-    # bucket key before the checkpoint (anti-AQE-serialization + both
-    # consumers reuse the partitioning; see embedding_near_dup_pairs).
-    from ..functions.vectors import norm as _vnorm
-    from ..functions.vectors import staged_cosine, verify_partitions
+    def edges() -> DataFrame:
+        # the 64-sum banding aggregation (the dominant cost) runs once,
+        # into the checkpoint; ids-only star candidates meet the vectors
+        # only in the verify
+        cand = candidate_edges(checkpoint_banded(
+            banded_keys_frame(embeddings, id_col, vec_col, dim, nbits, band_bits)
+        ))
+        vectors = embeddings.select(
+            F.col(id_col).alias("id"), F.col(vec_col).alias("v")
+        )
+        return cosine_verify(cand, vectors, threshold).select("src", "dst")
 
-    banded = banded_keys_frame(
-        embeddings, id_col, vec_col, dim, nbits, band_bits
-    ).repartition(verify_partitions(embeddings), "band", "key").localCheckpoint(
-        eager=True
-    )
-    buckets = banded.groupBy("band", "key").agg(F.min("_id").alias("_min_id"))
-
-    # ids-only star candidates explicitly repartitioned + per-vector norm
-    # staging — the same interpreted-verify economics as the pairs path
-    # and semdedup (BENCH.md r6); arithmetic identical to the inline form
-    cand = (
-        banded.join(buckets, ["band", "key"])
-        .where(F.col("_id") != F.col("_min_id"))
-        .select(F.col("_id").alias("src"), F.col("_min_id").alias("dst"))
-        .distinct()
-        .repartition(verify_partitions(embeddings), "src", "dst")
-    )
-    va = embeddings.select(
-        F.col(id_col).alias("src"), F.col(vec_col).alias("_va")
-    ).withColumn("_na", _vnorm(F.col("_va")))
-    vb = embeddings.select(
-        F.col(id_col).alias("dst"), F.col(vec_col).alias("_vb")
-    ).withColumn("_nb", _vnorm(F.col("_vb")))
-    cos = staged_cosine(
-        F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"), ANN_ROUND
-    )
-    edges = (
-        cand.join(va, "src")
-        .join(vb, "dst")
-        .where(cos >= threshold)
-        .select("src", "dst")
-    )
-    cc = connected_components(edges)
-    ids = embeddings.select(F.col(id_col).alias("id"))
-    return keep_min_id(ids, cc)
+    return dedup_keep_min_id(embeddings.select(F.col(id_col).alias("id")), edges)
 
 
 def exact_mean4(col: Column) -> Column:

@@ -15,6 +15,8 @@ src/minhashlsh.py:140,169): every node maps to its component's MINIMUM id.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -181,6 +183,46 @@ def connected_components(
     final_ids = _persistent_ids(sc) - pre_existing - loop_ids
     _unpersist(sc, loop_ids - final_ids)
     return result
+
+
+def verify_partitions(df: DataFrame) -> int:
+    """One partition per core, for banded checkpoints and ids-only
+    candidate frames feeding an interpreted verify: byte-based AQE
+    coalescing cannot see row-count-proportional work and would serialize
+    it onto one core (BENCH.md round 6). A round-7 A/B measured 4x
+    parallelism ~20% slower across the simhash/embedding/semdedup family
+    (extra task waves cost more than they rebalance)."""
+    return df.sparkSession.sparkContext.defaultParallelism
+
+
+def checkpoint_banded(banded: DataFrame) -> DataFrame:
+    """Checkpoint a banded frame DF(id, band_idx, band_hash[, payload])
+    once: its signature aggregation is expensive and Catalyst does not
+    share subplans between its consumers. The repartition keeps the
+    checkpoint at one partition per core (AQE would coalesce the tiny
+    aggregate output to one). Spark 4.1's LogicalRDD does not report
+    that partitioning, so a bucket window or self-join over the
+    checkpoint shuffles again. :func:`dedup_keep_min_id` frees it."""
+    return banded.repartition(
+        verify_partitions(banded), "band_idx", "band_hash"
+    ).localCheckpoint(eager=True)
+
+
+def dedup_keep_min_id(
+    ids: DataFrame, build_edges: Callable[[], DataFrame]
+) -> DataFrame:
+    """DF(id): the dedup family's keep-list — CC over the DF(src, dst)
+    that ``build_edges()`` returns, then :func:`keep_min_id`. Whatever
+    the build staged (eager checkpoints) is read only by the edge plan,
+    so it is freed once CC has materialized: a call leaves only CC's own
+    result checkpoint (distributed path), none on the driver path."""
+    sc = ids.sparkSession.sparkContext
+    before = _persistent_ids(sc)
+    edges = build_edges()
+    staged = _persistent_ids(sc) - before
+    cc = connected_components(edges)
+    _unpersist(sc, staged)
+    return keep_min_id(ids, cc)
 
 
 def keep_min_id(ids: DataFrame, cc: DataFrame) -> DataFrame:

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .connected_components import connected_components, keep_min_id
+from .connected_components import dedup_keep_min_id
 from .minhash_lsh import with_shingles
 from ..functions.signals import ratio6
 
@@ -108,7 +108,9 @@ def ngram_jaccard_dedup_keep(
     """DF(id): keep-list — one doc (the min id) per exact-Jaccard near-dup
     component, singletons (including unsignable null/empty-text docs)
     kept. Same keep rule as the rest of the dedup family (root == id)."""
-    pairs = ngram_jaccard_pairs(docs, id_col, text_col, n, threshold, max_df)
-    cc = connected_components(pairs.select("src", "dst"))
-    ids = docs.select(F.col(id_col).alias("id"))
-    return keep_min_id(ids, cc)
+    return dedup_keep_min_id(
+        docs.select(F.col(id_col).alias("id")),
+        lambda: ngram_jaccard_pairs(
+            docs, id_col, text_col, n, threshold, max_df
+        ).select("src", "dst"),
+    )

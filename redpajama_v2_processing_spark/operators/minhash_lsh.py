@@ -10,14 +10,16 @@ buckets. Spark realization:
   connected components (large-star/small-star)
   keep = ids whose component root == id          (src/minhashlsh.py:140,169)
 
-Skew note: boilerplate pages create hot (band_idx, band_hash) buckets. The
-star-edge construction is already linear in bucket size (no all-pairs
-explosion), and `salted_bucket_edges` caps per-reducer bucket width via a
-two-level salt + re-merge, preserving connectivity (the salt groups of one
-bucket are re-linked through the global bucket min).
+MinHash, RPv2 pre-banded, SimHash and embedding bands share the schema
+DF(id, band_idx, band_hash[, payload]); `candidate_edges` is their one
+star-edge builder. Skew note: star edges are linear in bucket size, but a
+hot (band_idx, band_hash) bucket is still one window partition on one
+reducer, salted or not (see `salted_bucket_edges`).
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -156,27 +158,52 @@ def lsh_buckets(bands_df: DataFrame) -> DataFrame:
     )
 
 
-def candidate_edges(bands_df: DataFrame) -> DataFrame:
+def candidate_edges(
+    bands_df: DataFrame,
+    verify: Callable[[Column, Column], Column] | None = None,
+) -> DataFrame:
     """Star edges (src=id, dst=bucket_min) per bucket, id != min.
 
     Linear in bucket size (vs the quadratic all-pairs a naive LSH join
     emits); connectivity within a bucket is preserved through its min.
     One shuffle (the band-bucket exchange); window-min avoids a join.
+    ``verify(payload, min_payload)``, if given, must also hold, with
+    ``min_payload = min_by(payload, id)`` over the same bucket window.
     """
     w = Window.partitionBy("band_idx", "band_hash")
+    x = bands_df.withColumn("_min", F.min("id").over(w))
+    keep = F.col("id") != F.col("_min")
+    if verify is not None:
+        x = x.withColumn("_min_payload", F.min_by("payload", "id").over(w))
+        keep = keep & verify(F.col("payload"), F.col("_min_payload"))
     return (
-        bands_df.withColumn("_min", F.min("id").over(w))
-        .where(F.col("id") != F.col("_min"))
+        x.where(keep)
         .select(F.col("id").alias("src"), F.col("_min").alias("dst"))
         .distinct()
     )
 
 
+def cap_bucket_width(bands_df: DataFrame, max_bucket: int | None) -> DataFrame:
+    """Each bucket's ``max_bucket`` smallest ids (None: no cap) — bounds a
+    bucket self-join at C(max_bucket, 2) pairs; an approximation."""
+    if max_bucket is None:
+        return bands_df
+    w = Window.partitionBy("band_idx", "band_hash").orderBy("id")
+    return (
+        bands_df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= max_bucket)
+        .drop("_rn")
+    )
+
+
 def salted_bucket_edges(bands_df: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Skew-capped variant: split each (band,hash) bucket into
+    """Salted variant: split each (band,hash) bucket into
     ``salt_buckets`` salt groups, take per-group mins, then link the group
-    mins through the global bucket min. Connectivity is identical; the
-    per-reducer working set shrinks by the salt factor."""
+    mins through the global bucket min. Connectivity is identical. It does
+    NOT shrink the per-reducer working set: one (band_idx, band_hash)
+    Exchange feeds both windows, the ``_bmin`` window buffers the whole
+    bucket, and ``_salt`` rides the band shuffle
+    (plans/r07/salted_edges_subplan_after.txt)."""
     w_g = Window.partitionBy("band_idx", "band_hash", "_salt")
     w_b = Window.partitionBy("band_idx", "band_hash")
     # _bmin FIRST: the coarse (band, hash) exchange it forces also
@@ -372,6 +399,10 @@ def incremental_fuzzy_keep_ids(
 
     Pass ``history_bands`` (from :func:`band_key_index`, possibly read
     back from its table) to skip re-hashing history text.
+
+    The returned plan reads the staged ``hit`` checkpoint (new ids that
+    collide with history), so it is not freed here; the staged ``nb``
+    bands feed only the edge build.
     """
     if history_bands is None:
         if history is None:

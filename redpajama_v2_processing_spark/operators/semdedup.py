@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ANN_ROUND
-from .ann import kmeans_centroids
+from .ann import cosine_verify, kmeans_centroids
 from .connected_components import connected_components
 
 
@@ -169,49 +169,26 @@ def semdedup_keep(
 
     The assignment frame feeds three consumers (both self-join sides and
     the keep rule), so it is checkpointed once; Catalyst does not share
-    subplans and the k-means chain is the dominant cost.
+    subplans and the k-means chain is the dominant cost. The returned
+    plan reads that ``assign`` checkpoint (the keep rule's labels and the
+    malformed-vector anti-join), so it stays persisted with the result
+    and is context-cleaned when the result is dropped.
     """
     assign = semdedup_assign(
         embeddings, k_cells, iters, id_col, vec_col, dim, target_cell_width
     ).localCheckpoint(eager=True)
 
     # ids-only within-cell candidate pairs (vectors stay out of the cid
-    # shuffle), then exact verify on the re-joined vectors.
-    #
-    # Verify-cost shape: the pair cosine is a higher-order-function fold,
-    # which Catalyst evaluates INTERPRETED (~10 us per 64-dim fold) — at
-    # hundreds of thousands of within-cell pairs that is the dominant
-    # cost, so (a) the two NORMS are precomputed per VECTOR (linear work,
-    # identical IEEE arithmetic — norm(a)*norm(b) is the same float
-    # product either way), leaving only the dot fold per PAIR, and (b)
-    # the candidate frame is explicitly repartitioned so the interpreted
-    # filter runs corpus-wide in parallel — without this, AQE coalesces
-    # the byte-tiny ids-only pair shuffle into ONE partition and the
-    # whole verify serializes onto a single core (observed 20x wall
-    # blowup at the 50k certification fixture).
-    from ..functions.vectors import norm as _vnorm
-    from ..functions.vectors import staged_cosine, verify_partitions
-
+    # shuffle), then the family's exact verify on the re-joined vectors
+    # (ann.cosine_verify: per-vector norms, candidates repartitioned so
+    # the interpreted dot fold runs corpus-wide in parallel)
     a = assign.select(F.col("id").alias("src"), "cid")
     b = assign.select(F.col("id").alias("dst"), "cid")
-    cand = (
-        a.join(b, "cid")
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .repartition(verify_partitions(embeddings), "src", "dst")
+    cand = a.join(b, "cid").where(F.col("src") < F.col("dst")).select("src", "dst")
+    vectors = embeddings.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    va = embeddings.select(
-        F.col(id_col).alias("src"), F.col(vec_col).cast("array<double>").alias("_va")
-    ).withColumn("_na", _vnorm(F.col("_va")))
-    vb = embeddings.select(
-        F.col(id_col).alias("dst"), F.col(vec_col).cast("array<double>").alias("_vb")
-    ).withColumn("_nb", _vnorm(F.col("_vb")))
-    cos = staged_cosine(
-        F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"), ANN_ROUND
-    )
-    edges = (
-        cand.join(va, "src").join(vb, "dst").where(cos >= threshold).select("src", "dst")
-    )
+    edges = cosine_verify(cand, vectors, threshold).select("src", "dst")
 
     cc = connected_components(edges)
     labels = assign.join(cc, "id", "left").select(

@@ -3,7 +3,8 @@
 Per-doc simhash is a pure-integer native expression (functions/hashing.py).
 Near-dup pairs use the standard Hamming-LSH trick: split the B-bit hash
 into bands; docs agreeing on any band are candidates (equi-self-join on
-(band, key) — shuffle join), verified with bit_count(xor) <= max_hamming.
+(band_idx, band_hash) — shuffle join), verified with
+bit_count(xor) <= max_hamming.
 
 Band width is the scale lever: each band has 2^band_bits distinct keys, so
 expected bucket population is n / 2^band_bits and the self-join emits
@@ -15,7 +16,7 @@ width cap for adversarially hot keys.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PROD_SIMHASH, SIMHASH_BITS
@@ -99,22 +100,24 @@ def simhash_from_hashes(hv, bits: int = SIMHASH_BITS):
 
 
 def _banded_simhash(sh: DataFrame, bits: int, band_bits: int) -> DataFrame:
-    """DF(id, simhash, band, key): one row per (doc, band)."""
+    """DF(id, band_idx, band_hash, payload): one row per (doc, band) in
+    the dedup family's banded schema; the payload is the doc's simhash."""
     n_bands = bits // band_bits
     mask = (1 << band_bits) - 1
     return sh.select(
         "id",
-        "simhash",
+        F.col("simhash").alias("payload"),
         F.explode(
             F.array(*[
                 F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright("simhash", b * band_bits).bitwiseAND(F.lit(mask)).alias("key"),
+                    F.lit(b).alias("band_idx"),
+                    F.shiftright("simhash", b * band_bits)
+                    .bitwiseAND(F.lit(mask)).alias("band_hash"),
                 )
                 for b in range(n_bands)
             ])
         ).alias("bk"),
-    ).select("id", "simhash", "bk.band", "bk.key")
+    ).select("id", "bk.band_idx", "bk.band_hash", "payload")
 
 
 def simhash_dedup_keep(
@@ -131,12 +134,11 @@ def simhash_dedup_keep(
     The scalable production dedup path: instead of the all-pairs bucket
     self-join (O(sum of bucket_width^2) — quadratic whenever template
     pages flood a bucket), each bucket member links only to its bucket's
-    MIN id (arg_min over one grouped aggregation, map-side combinable),
-    the edge is verified with hamming(member, min) <= max_hamming, and
-    connected components assign cluster roots. Candidate volume is
-    <= n * n_bands BY CONSTRUCTION — linear at any bucket width, the same
-    star-edge shape that keeps MinHash-LSH linear
-    (operators/minhash_lsh.candidate_edges).
+    MIN id, the edge is verified with hamming(member, min) <= max_hamming,
+    and connected components assign cluster roots. Candidate volume is
+    <= n * n_bands BY CONSTRUCTION — linear at any bucket width: the
+    family's star-edge builder (minhash_lsh.candidate_edges) with the
+    Hamming test as its payload predicate: one bucket window, no join.
 
     Approximation vs all-pairs: a member within max_hamming of another
     member but NOT of the bucket min clusters only if some other band
@@ -144,47 +146,20 @@ def simhash_dedup_keep(
     bucket mins, so high-similarity clusters stay connected (exactly the
     LSH recall model).
     """
-    from .connected_components import (
-        _persistent_ids, _unpersist, connected_components, keep_min_id,
-    )
+    from .connected_components import checkpoint_banded, dedup_keep_min_id
+    from .minhash_lsh import candidate_edges
 
-    from ..functions.vectors import verify_partitions
-
-    sh = with_simhash(docs, id_col, text_col, bits, portable)
-    # banded feeds the bucket-min aggregation AND the edge join (no
-    # subplan sharing — the signature pass would run twice); repartition
-    # by the bucket key before the checkpoint so (a) the byte-based AQE
-    # coalescer cannot serialize it onto one partition and (b) both
-    # consumers reuse the partitioning with no further exchange.
-    sc = docs.sparkSession.sparkContext
-    before = _persistent_ids(sc)
-    banded = _banded_simhash(sh, bits, band_bits).repartition(
-        verify_partitions(docs), "band", "key"
-    ).localCheckpoint(eager=True)
-    banded_ids = _persistent_ids(sc) - before
-    buckets = banded.groupBy("band", "key").agg(
-        F.min("id").alias("_min_id"), F.min_by("simhash", "id").alias("_min_sim")
-    )
-    edges = (
-        banded.join(buckets, ["band", "key"])
-        .where(
-            (F.col("id") != F.col("_min_id"))
-            & (
-                F.bit_count(F.col("simhash").bitwiseXOR(F.col("_min_sim")))
-                <= max_hamming
-            )
+    def edges() -> DataFrame:
+        sh = with_simhash(docs, id_col, text_col, bits, portable)
+        return candidate_edges(
+            checkpoint_banded(_banded_simhash(sh, bits, band_bits)),
+            lambda h, h_min: F.bit_count(h.bitwiseXOR(h_min)) <= max_hamming,
         )
-        .select(F.col("id").alias("src"), F.col("_min_id").alias("dst"))
-        .distinct()
-    )
-    cc = connected_components(edges)
-    # cc is materialized (checkpoint or driver-side frame): free the bands
-    _unpersist(sc, banded_ids)
+
     # ids straight from the docs scan (one row per doc == with_simhash's
-    # output set) — selecting off `sh` would re-run the tokenize+vote
-    # aggregation just to list ids
-    ids = docs.select(F.col(id_col).alias("id"))
-    return keep_min_id(ids, cc)
+    # output set) — selecting off the simhash frame would re-run the
+    # tokenize+vote aggregation just to list ids
+    return dedup_keep_min_id(docs.select(F.col(id_col).alias("id")), edges)
 
 
 def simhash_near_pairs(
@@ -200,41 +175,32 @@ def simhash_near_pairs(
     """DF(src, dst, hamming), src < dst, hamming <= max_hamming.
 
     ``max_bucket``: optional cap on per-(band, key) bucket width — rows
-    beyond the cap (in deterministic id order) don't join. An approximation
-    for adversarially hot buckets (boilerplate floods); leave None for
-    exact semantics (oracle-checked profiles).
-    """
-    sh = with_simhash(docs, id_col, text_col, bits, portable)
-    banded = _banded_simhash(sh, bits, band_bits)
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "key").orderBy("id")
-        banded = (
-            banded.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= max_bucket)
-            .drop("_rn")
-        )
-    # checkpoint: both self-join sides consume the banded frame and
-    # Catalyst does not share the subplan — without this the signature
-    # computation (tokenize + explode + bit sums) runs once per side.
-    # EXPLICIT repartition on the join key first: the byte-tiny aggregate
-    # output otherwise AQE-coalesces to ONE partition, the checkpoint
-    # captures that, and the whole bucket self-join serializes onto one
-    # core (the semdedup r6 lesson); partitioning by (band, key) also
-    # lets the self-join reuse the checkpoint partitioning — no further
-    # exchange on either side.
-    from ..functions.vectors import verify_partitions
+    beyond the cap (in deterministic id order) don't join
+    (minhash_lsh.cap_bucket_width). An approximation for adversarially
+    hot buckets (boilerplate floods); leave None for exact semantics
+    (oracle-checked profiles).
 
-    banded = banded.repartition(
-        verify_partitions(docs), "band", "key"
-    ).localCheckpoint(eager=True)
+    Both self-join sides read the banded checkpoint
+    (connected_components.checkpoint_banded), so the signature pass runs
+    once.
+    """
+    from .connected_components import checkpoint_banded
+    from .minhash_lsh import cap_bucket_width
+
+    sh = with_simhash(docs, id_col, text_col, bits, portable)
+    banded = checkpoint_banded(
+        cap_bucket_width(_banded_simhash(sh, bits, band_bits), max_bucket)
+    )
     a = banded.select(
-        F.col("id").alias("src"), F.col("simhash").alias("_ha"), "band", "key"
+        F.col("id").alias("src"), F.col("payload").alias("_ha"),
+        "band_idx", "band_hash",
     )
     b = banded.select(
-        F.col("id").alias("dst"), F.col("simhash").alias("_hb"), "band", "key"
+        F.col("id").alias("dst"), F.col("payload").alias("_hb"),
+        "band_idx", "band_hash",
     )
     return (
-        a.join(b, ["band", "key"])
+        a.join(b, ["band_idx", "band_hash"])
         .where(F.col("src") < F.col("dst"))
         .select(
             "src",

@@ -169,14 +169,14 @@ def winnow_dedup_keep(
     quadratic in corpus size; CC is the same O(log n)-round fixpoint the
     other families use.
     """
-    from .connected_components import connected_components, keep_min_id
+    from .connected_components import dedup_keep_min_id
 
-    pairs = winnow_near_dup_pairs(
-        docs, id_col, text_col, k, w, min_shared, max_df
-    )
-    edges = pairs.where(
-        F.greatest("src_containment", "dst_containment") >= min_containment
-    ).select("src", "dst")
-    cc = connected_components(edges)
-    ids = docs.select(F.col(id_col).alias("id"))
-    return keep_min_id(ids, cc)
+    def edges() -> DataFrame:
+        pairs = winnow_near_dup_pairs(
+            docs, id_col, text_col, k, w, min_shared, max_df
+        )
+        return pairs.where(
+            F.greatest("src_containment", "dst_containment") >= min_containment
+        ).select("src", "dst")
+
+    return dedup_keep_min_id(docs.select(F.col(id_col).alias("id")), edges)

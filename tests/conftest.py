@@ -14,7 +14,14 @@ from redpajama_v2_processing_spark.session import get_spark  # noqa: E402
 def spark():
     s = get_spark(
         app_name="rpv2spark-tests", master="local[4]", shuffle_partitions=4,
-        extra_conf={"spark.sql.files.maxPartitionBytes": "8m"},
+        extra_conf={
+            "spark.sql.files.maxPartitionBytes": "8m",
+            # the status store evicts SKIPPED stages first once it holds
+            # more than retainedStages (default 1000); job-group task
+            # budgets read every stage of their jobs, so keep the whole
+            # suite's stages
+            "spark.ui.retainedStages": "100000",
+        },
     )
     yield s
     s.stop()

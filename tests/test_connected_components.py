@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from redpajama_v2_processing_spark.operators.connected_components import (
     connected_components,
 )
@@ -87,36 +89,93 @@ def test_extreme_ids_hub_path_and_random_edges(spark):
     _check(spark, hub + path + rand + extremes)
 
 
-def test_cc_and_simhash_keep_free_their_checkpoints(spark, monkeypatch):
-    """Neither CC path nor simhash_dedup_keep leaves an intermediate
-    checkpoint persisted: the only new persistent RDD is the result's own
-    checkpoint (none for the driver path's local frame)."""
-    from redpajama_v2_processing_spark import config
-    from redpajama_v2_processing_spark.operators.connected_components import (
-        _persistent_ids,
+def _leak_cases(spark):
+    """name -> zero-argument call returning a frame, for every keep-list
+    that must leave no staged checkpoint persisted (plus CC itself)."""
+    from redpajama_v2_processing_spark.operators.ann import (
+        embedding_dedup_keep, embedding_dedup_star_keep,
+    )
+    from redpajama_v2_processing_spark.operators.jaccard_dedup import (
+        ngram_jaccard_dedup_keep,
+    )
+    from redpajama_v2_processing_spark.operators.minhash_lsh import (
+        fuzzy_dedup_keep_ids,
     )
     from redpajama_v2_processing_spark.operators.simhash_dedup import (
         simhash_dedup_keep,
     )
+    from redpajama_v2_processing_spark.operators.winnow import winnow_dedup_keep
+    from redpajama_v2_processing_spark.sources.rpv2 import rpv2_keep_ids
 
-    sc = spark.sparkContext
     edges = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
+    # four near-dup groups of six docs; each group's words are its own,
+    # so winnow / n-gram fingerprints stay under their max_df of 10
     docs = spark.createDataFrame(
-        [(i, f"near duplicate page {i % 4} with shared words") for i in range(24)],
+        [
+            (i, " ".join(f"w{i % 4}x{j}" for j in range(12)) + f" tail{i % 2}")
+            for i in range(24)
+        ],
         "doc_id long, text string",
     )
-    for threshold in (None, 0):
+    emb = spark.createDataFrame(
+        [(i, [float(i % 5), 1.0, -0.5, 0.25]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    sigs = spark.createDataFrame(
+        [
+            (f"d{i}", i, [bytes([i % 4]), bytes([10 + i % 3])] if i % 7 else None)
+            for i in range(24)
+        ],
+        "id string, id_int long, signature array<binary>",
+    )
+    return {
+        "connected_components": lambda: connected_components(edges),
+        "simhash_dedup_keep": lambda: simhash_dedup_keep(docs, "doc_id"),
+        "embedding_dedup_star_keep": lambda: embedding_dedup_star_keep(
+            emb, 0.95, dim=4, nbits=8, band_bits=4
+        ),
+        "embedding_dedup_keep": lambda: embedding_dedup_keep(
+            emb, 0.95, dim=4, nbits=8, band_bits=4
+        ),
+        "winnow_dedup_keep": lambda: winnow_dedup_keep(docs, "doc_id"),
+        "ngram_jaccard_dedup_keep": lambda: ngram_jaccard_dedup_keep(
+            docs, "doc_id"
+        ),
+        "fuzzy_dedup_keep_ids": lambda: fuzzy_dedup_keep_ids(docs, "doc_id"),
+        "rpv2_keep_ids": lambda: rpv2_keep_ids(sigs),
+    }
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "connected_components", "simhash_dedup_keep",
+        "embedding_dedup_star_keep", "embedding_dedup_keep",
+        "winnow_dedup_keep", "ngram_jaccard_dedup_keep",
+        "fuzzy_dedup_keep_ids", "rpv2_keep_ids",
+    ],
+)
+def test_cc_and_simhash_keep_free_their_checkpoints(spark, monkeypatch, name):
+    """Neither CC path nor any keep-list leaves an intermediate checkpoint
+    persisted: after the call the only new persistent RDD is the result's
+    own CC checkpoint on the distributed path, and none at all on the
+    driver path (its labels are a local frame). semdedup_keep and
+    incremental_fuzzy_keep_ids are not listed: their returned plans read
+    their staged frames (see their docstrings)."""
+    from redpajama_v2_processing_spark import config
+    from redpajama_v2_processing_spark.operators.connected_components import (
+        _persistent_ids,
+    )
+
+    sc = spark.sparkContext
+    call = _leak_cases(spark)[name]
+    for threshold, bound in ((config.CC_DRIVER_THRESHOLD, 0), (0, 1)):
+        # keep-lists take CC's default threshold from config
+        monkeypatch.setattr(config, "CC_DRIVER_THRESHOLD", threshold)
         before = _persistent_ids(sc)
-        connected_components(edges, driver_threshold=threshold).count()
-        assert len(_persistent_ids(sc) - before) <= 1
-        # simhash_dedup_keep takes the default threshold from config
-        monkeypatch.setattr(
-            config, "CC_DRIVER_THRESHOLD",
-            config.CC_DRIVER_THRESHOLD if threshold is None else threshold,
-        )
-        before = _persistent_ids(sc)
-        simhash_dedup_keep(docs, "doc_id").count()
-        assert len(_persistent_ids(sc) - before) <= 1
+        call().count()
+        new = _persistent_ids(sc) - before
+        assert len(new) <= bound, (name, threshold, new)
 
 
 def test_driver_path_labels_broadcast_from_one_partition(spark):

@@ -119,6 +119,99 @@ def test_star_dedup_plans_have_no_cartesian(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _edges_into_cc(monkeypatch, call):
+    """The edge frame a keep-list hands to connected_components, captured
+    while ``call()`` runs (the keep-list's own plan only reads CC's
+    materialized labels)."""
+    from redpajama_v2_processing_spark.operators import connected_components as ccm
+
+    seen, cc = [], ccm.connected_components
+
+    def spy(edges, *args, **kwargs):
+        seen.append(edges)
+        return cc(edges, *args, **kwargs)
+
+    monkeypatch.setattr(ccm, "connected_components", spy)
+    call().count()
+    assert len(seen) == 1
+    return seen[0]
+
+
+def _nodes_above_banded_scan(df) -> list[list[str]]:
+    """For each scan of the banded checkpoint (an ExistingRDD scan with a
+    band_idx column), the node names from that scan up to the first
+    HashAggregate above it — the edge distinct's partial aggregation."""
+    paths, todo = [], [(df._jdf.queryExecution().executedPlan(), [])]
+    while todo:
+        node, above = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append((node.executedPlan(), above))
+            continue
+        kids = node.children()
+        if kids.size() == 0:
+            out = node.output()
+            cols = {out.apply(i).name() for i in range(out.size())}
+            if "ExistingRDD" in name and "band_idx" in cols:
+                path = []
+                for n in reversed(above):
+                    if n == "HashAggregate":
+                        break
+                    path.append(n)
+                paths.append(path)
+        todo.extend((kids.apply(i), above + [name]) for i in range(kids.size()))
+    return paths
+
+
+def test_star_keep_plans_window_not_join(spark, monkeypatch):
+    """The star keep-lists build their bucket-min edges with one window
+    over the banded checkpoint (minhash_lsh.candidate_edges): no join
+    between that checkpoint and the edge distinct. Exchanges in the edge
+    plan handed to CC, on this session (4 shuffle partitions, 4 cores):
+    simhash 2 (band shuffle + distinct), embedding 6 (those two, then
+    two per vector re-join of the cosine verify; the candidate
+    repartition coincides with the distinct's exchange here). The
+    groupBy+join bucket-min form measured 3 and 7, with a SortMergeJoin
+    on the bucket key."""
+    from redpajama_v2_processing_spark.operators.ann import (
+        embedding_dedup_star_keep,
+    )
+    from redpajama_v2_processing_spark.operators.simhash_dedup import (
+        simhash_dedup_keep,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i % 5} words tokens here") for i in range(20)],
+        "doc_id long, text string",
+    )
+    emb = spark.createDataFrame(
+        [(i, [float(i % 7), 1.0, -0.5, 0.25]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    cases = {
+        "simhash": (
+            lambda: simhash_dedup_keep(docs, "doc_id", bits=60, band_bits=15), 2
+        ),
+        "embedding": (
+            lambda: embedding_dedup_star_keep(emb, 0.95, dim=4, nbits=8, band_bits=4),
+            6,
+        ),
+    }
+    # other modules' get_spark calls reset the shared session's partitions
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        for label, (call, exchanges) in cases.items():
+            edges = _edges_into_cc(monkeypatch, call)
+            paths = _nodes_above_banded_scan(edges)
+            assert len(paths) == 1, (label, paths)
+            assert "Window" in paths[0], (label, paths)
+            assert not [n for n in paths[0] if n.endswith("Join")], (label, paths)
+            assert _plan_nodes(edges).count("Exchange") == exchanges, label
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_whole_stage_codegen_covers_signals(pages_small):
     plan = _physical(with_signals(pages_small).select("url", "number_of_words"))
     # "*(n)" prefixes mark WholeStageCodegen stages in the short plan form
