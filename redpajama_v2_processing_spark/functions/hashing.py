@@ -2,9 +2,11 @@
 fast (xxhash64, JVM-native) — used by MinHash, SimHash and fingerprints.
 
 The reference consumes precomputed MinHash signatures
-(/root/reference/src/minhashlsh.py:83-101, signature_sim0.8 = 9 band
-hashes); this engine computes signatures natively inside Spark SQL
-expressions — no UDF, no Python per row.
+(src/minhashlsh.py:83-101 of the reference, signature_sim0.8 = 9 band
+hashes); this engine computes them itself: the base hash of each shingle
+is a Spark SQL expression, and the permutation minima are taken with numpy
+once per Arrow batch (operators/minhash_lsh.minhash_bands) — no Python per
+row.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ from pyspark.sql import functions as F
 # Universal-hash permutation family for MinHash: perm_i(h) =
 # (a_i * (h mod 2^32) + b_i) mod P over a 32-bit prime. One base hash per
 # shingle string; every permutation is then pure 64-bit integer arithmetic
-# (codegen-friendly, ANSI-overflow-safe: a < 2^31 so a*h32 < 2^63), and the
+# (overflow-safe: a < 2^31 so a*h32 + b < 2^63), and the
 # identical arithmetic runs in DuckDB — so the production plan shape is
 # oracle-checkable with an md5 base hash swapped in for xxhash64.
 PERM_PRIME = 4294967291  # largest 32-bit prime

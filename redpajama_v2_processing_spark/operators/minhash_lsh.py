@@ -4,7 +4,8 @@ Reference flow (src/minhashlsh.py:87-193): one python process builds
 ``hash_tables[band][band_hash] -> id set`` in RAM, then union-finds the
 buckets. Spark realization:
 
-  shingles -> minhash signature -> band hashes   (one native expression)
+  shingles -> shingle hashes (JVM) -> signature (numpy, one mapInArrow
+  per Arrow batch) -> band hashes (JVM)           (a narrow map, no shuffle)
   posexplode(bands) -> shuffle on (band_idx, band_hash)  ["band-bucket shuffle"]
   window-min per bucket -> star edges (id, bucket_min)
   connected components (large-star/small-star)
@@ -23,11 +24,14 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..config import ORACLE_MINHASH
 from ..functions.hashing import PERM_PRIME, md5int, perm_coeffs
 from ..functions.text import tokens, word_ngrams, normalize
-from .connected_components import connected_components
+from .connected_components import (
+    _persistent_ids, _unpersist, connected_components, keep_min_id,
+)
 
 
 def shingles_of(tok, norm, n: int):
@@ -83,6 +87,49 @@ def with_shingles(
     return ng.select("id", sh.alias("_sh"))
 
 
+def _signature_fn(coeffs: tuple[tuple[int, int], ...], prime: int):
+    """The ``mapInArrow`` body: batches of (id, _h: array<bigint>) in,
+    batches of (id, _sig: array<bigint>) out, one row per doc with a
+    non-empty ``_h``. Self-contained (numpy and pyarrow are imported per
+    call, nothing from this package is referenced), so executors unpickle
+    it without importing the engine."""
+    a_s = [a for a, _ in coeffs]
+    b_s = [b for _, b in coeffs]
+
+    def signatures(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        k = len(a_s)
+        for batch in batches:
+            h = batch.column(1)
+            lens = pc.fill_null(pc.list_value_length(h), 0).to_numpy()
+            keep = lens > 0
+            n = int(keep.sum())
+            if n == 0:
+                continue
+            # flatten() drops null lists' values; empty lists hold none
+            vals = h.flatten().to_numpy().astype(np.uint64)
+            starts = np.zeros(n, dtype=np.int64)
+            np.cumsum(lens[keep][:-1], out=starts[1:])
+            sig = np.empty((n, k), dtype=np.int64)
+            for i in range(k):
+                # a < 2^31 and h < 2^32: a*h + b < 2^64, exact in uint64
+                v = (vals * np.uint64(a_s[i]) + np.uint64(b_s[i])) % np.uint64(prime)
+                sig[:, i] = np.minimum.reduceat(v, starts)
+            offsets = pa.array(np.arange(0, (n + 1) * k, k, dtype=np.int32))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).filter(pa.array(keep)),
+                    pa.ListArray.from_arrays(offsets, pa.array(sig.ravel())),
+                ],
+                names=["id", "_sig"],
+            )
+
+    return signatures
+
+
 def minhash_bands(
     docs: DataFrame,
     id_col: str,
@@ -92,51 +139,48 @@ def minhash_bands(
 ) -> DataFrame:
     """DF(id, band_idx, band_hash) — one row per (doc, band).
 
-    Flat, whole-stage-codegen formulation: explode shingles, compute the
-    num_perm hash columns per (doc, shingle) row, hash-aggregate per-perm
-    minima (map-side combine shrinks the shuffle to one row per doc per
-    partition), then band hashes from the minima. ~100x faster than the
-    equivalent nested higher-order-function expression, which Spark
-    evaluates interpreted (no codegen inside array lambdas).
+    Three steps, no shuffle: the JVM hashes each shingle once
+    (``transform`` over the staged shingle array), one ``mapInArrow``
+    computes the k-permutation signature per doc with numpy (one Python
+    call per Arrow batch), and the b band hashes are Spark expressions
+    over the signature array. The bands are a narrow map into whatever
+    shuffle consumes them. Docs with a null or empty shingle array have
+    no signature and no bands. Executors need numpy and pyarrow.
 
     Every profile hashes the (variable-length) shingle string ONCE and
     derives the k permutations with the universal integer family
-    (a_i*h32 + b_i mod P — pure codegen arithmetic; hashing per
-    permutation would cost k string hashes per shingle). ``base`` is the
-    single portability knob: ``"md5"`` (default) uses the md5int base hash
-    so the IDENTICAL arithmetic runs in the DuckDB oracle; ``"xxhash"``
-    uses JVM-native xxhash64 — the deployed profile, differing ONLY in
-    that base hash.
+    (a_i*h32 + b_i mod P; hashing per permutation would cost k string
+    hashes per shingle). ``base`` is the single portability knob:
+    ``"md5"`` (default) uses the md5int base hash so the IDENTICAL
+    arithmetic runs in the DuckDB oracle; ``"xxhash"`` uses JVM-native
+    xxhash64 — the deployed profile, differing ONLY in that base hash
+    (for the shingles and for the band hashes alike).
+
+    Cost notes: taking the minima in Spark needs one row per (doc,
+    shingle) with k permutation columns and a ``groupBy(id)`` of k ``min``
+    aggregates. With k = 117 that aggregate is over
+    ``spark.sql.codegen.maxFields``, runs interpreted (forcing codegen
+    made it ~2x slower) and shuffles ~1 KB per doc. The numpy loop runs
+    one permutation at a time, so its peak memory is O(shingles in the
+    batch), never k × shingles.
     """
     if base not in ("md5", "xxhash"):
         raise ValueError(f"base must be 'md5' or 'xxhash', got {base!r}")
     k, b, r = cfg["num_perm"], cfg["bands"], cfg["rows"]
-    flat = with_shingles(docs, id_col, text_col, cfg["shingle"]).select(
-        "id", F.explode("_sh").alias("_s")
+    base_h = F.xxhash64 if base == "xxhash" else md5int
+    hashed = with_shingles(docs, id_col, text_col, cfg["shingle"]).select(
+        "id", F.transform("_sh", lambda s: F.pmod(base_h(s), F.lit(1 << 32))).alias("_h")
     )
-    base_h = F.xxhash64("_s") if base == "xxhash" else md5int(F.col("_s"))
-    coeffs = perm_coeffs(k)
-    hashed = flat.withColumn(
-        "_h32", F.pmod(base_h, F.lit(1 << 32))
-    ).select(
-        "id",
-        *[
-            ((F.lit(a) * F.col("_h32") + F.lit(bb)) % F.lit(PERM_PRIME)).alias(f"_h{i}")
-            for i, (a, bb) in enumerate(coeffs)
-        ],
+    sig_schema = StructType(
+        [hashed.schema["id"], StructField("_sig", ArrayType(LongType(), False))]
     )
-    minh = hashed.groupBy("id").agg(
-        *[F.min(f"_h{i}").alias(f"_m{i}") for i in range(k)]
-    )
-
-    band_portable = base == "md5"
+    sig = hashed.mapInArrow(_signature_fn(perm_coeffs(k), PERM_PRIME), sig_schema)
 
     def band_hash(bi: int):
         joined = F.concat_ws(
-            "|", *[F.col(f"_m{bi * r + j}").cast("string") for j in range(r)]
+            "|", *[F.col("_sig")[bi * r + j].cast("string") for j in range(r)]
         )
-        payload = F.concat(F.lit(str(bi)), F.lit("#"), joined)
-        return md5int(payload) if band_portable else F.xxhash64(payload)
+        return base_h(F.concat(F.lit(str(bi)), F.lit("#"), joined))
 
     bands = F.array(
         *[
@@ -144,7 +188,7 @@ def minhash_bands(
             for bi in range(b)
         ]
     )
-    return minh.select("id", F.explode(bands).alias("_bh")).select(
+    return sig.select("id", F.explode(bands).alias("_bh")).select(
         "id", F.col("_bh.band_idx"), F.col("_bh.band_hash")
     )
 
@@ -402,7 +446,8 @@ def incremental_fuzzy_keep_ids(
 
     The returned plan reads the staged ``hit`` checkpoint (new ids that
     collide with history), so it is not freed here; the staged ``nb``
-    bands feed only the edge build.
+    bands feed only the edge build and are freed once CC has
+    materialized.
     """
     if history_bands is None:
         if history is None:
@@ -411,9 +456,12 @@ def incremental_fuzzy_keep_ids(
     # nb feeds the hit probe AND the survivor frame; hit feeds the
     # survivor frame AND the keep ids. Catalyst does not share subplans,
     # so checkpoint both (nb's shingle+banding chain is the dominant cost)
+    sc = new_docs.sparkSession.sparkContext
+    before = _persistent_ids(sc)
     nb = minhash_bands(new_docs, id_col, text_col, cfg, base).localCheckpoint(
         eager=True
     )
+    staged_nb = _persistent_ids(sc) - before
     hit = (
         nb.join(history_bands, ["band_idx", "band_hash"], "left_semi")
         .select("id")
@@ -425,7 +473,6 @@ def incremental_fuzzy_keep_ids(
         salted_bucket_edges(surv_bands) if salted else candidate_edges(surv_bands)
     )
     cc = connected_components(edges, driver_threshold=cc_driver_threshold)
+    _unpersist(sc, staged_nb)
     ids = new_docs.select(F.col(id_col).alias("id")).join(hit, "id", "left_anti")
-    from .connected_components import keep_min_id
-
     return keep_min_id(ids, cc)

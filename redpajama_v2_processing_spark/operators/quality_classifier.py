@@ -102,12 +102,11 @@ def train_quality_classifier(
     ``label_col`` is a Column of 0/1 labels evaluated against ``df``.
     """
     spark = df.sparkSession
-    # both frames hash-partitioned by id BEFORE the checkpoint (localCheckpoint
-    # preserves outputPartitioning): every iteration's margin groupBy("id"),
-    # margins⨝labels join and feats⨝resid join then reuse the partitioning
-    # with no exchange — one staging shuffle replaces 2-3 corpus-sized
-    # exchanges per GD iteration (guide §2.4; margins stay id-partitioned
-    # through the broadcast weight join).
+    # both frames hash-partitioned by id before the checkpoint. On Spark
+    # 4.1.2 a localCheckpoint reports UnknownPartitioning, so this does
+    # NOT spare each GD iteration's margin groupBy("id"), margins⨝labels
+    # join and feats⨝resid join their exchanges: it only fixes the
+    # checkpoints' partition count.
     feats = (
         feature_frame(df, id_col, text_col, n_buckets)
         .repartition("id")

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..config import ANN_ROUND
 from .ann import cosine_verify, kmeans_centroids
-from .connected_components import connected_components
+from .connected_components import _persistent_ids, _unpersist, connected_components
 
 
 def _modal_dim(embeddings: DataFrame, vec_col: str) -> int:
@@ -172,11 +172,18 @@ def semdedup_keep(
     subplans and the k-means chain is the dominant cost. The returned
     plan reads that ``assign`` checkpoint (the keep rule's labels and the
     malformed-vector anti-join), so it stays persisted with the result
-    and is context-cleaned when the result is dropped.
+    and is context-cleaned when the result is dropped. The final k-means
+    centroid checkpoint is read only through ``assign`` and is freed once
+    ``assign`` has materialized.
     """
+    sc = embeddings.sparkSession.sparkContext
+    before = _persistent_ids(sc)
     assign = semdedup_assign(
         embeddings, k_cells, iters, id_col, vec_col, dim, target_cell_width
-    ).localCheckpoint(eager=True)
+    )
+    staged = _persistent_ids(sc) - before
+    assign = assign.localCheckpoint(eager=True)
+    _unpersist(sc, staged)
 
     # ids-only within-cell candidate pairs (vectors stay out of the cid
     # shuffle), then the family's exact verify on the re-joined vectors

@@ -1707,27 +1707,37 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lang_script_mismatch": q_lang_script_mismatch,
     "jaccard_sim_histogram": q_jaccard_sim_histogram,
     "source_overlap": q_source_overlap,
-    "fuzzy_dedup_keep_longest": q_fuzzy_dedup_keep_longest,
     "bm25_topk": q_bm25_topk,
+    # --- implementation changed: vectorized MinHash signature -----------
+    # (every minhash_bands consumer: hashes per shingle in the JVM, the
+    # k-permutation minima in one mapInArrow, no groupBy(id) shuffle;
+    # rpv2_pre_banded_keep below reads pre-banded input and is untouched)
+    "fuzzy_dedup_keep_longest": q_fuzzy_dedup_keep_longest,
+    "incremental_fuzzy_keep": q_incremental_fuzzy_keep,
+    "dedup_cluster_sizes": q_dedup_cluster_sizes,
+    "fuzzy_dedup_prod_checked": q_fuzzy_dedup_prod_checked,
+    "fuzzy_dedup_prod": q_fuzzy_dedup_prod,
+    "fuzzy_dedup_salted": q_fuzzy_dedup_salted,
+    "fuzzy_dedup_distributed": q_fuzzy_dedup_distributed,
+    "lsh_buckets": q_lsh_buckets,
+    "minhash_bands": q_minhash_bands,
+    "lsh_candidate_edges": q_candidate_edges,
+    "fuzzy_dedup_keep": q_fuzzy_dedup_keep,
     # --- implementation changed: one LSH dedup kernel (the other touched
     # pairs surfaces, lsh_candidate_edges and keep-lists are in the window)
     "simhash_prod_near_pairs": q_simhash_prod_near_pairs,
     "simhash_capped_near_pairs": q_simhash_capped_near_pairs,
     "embedding_near_dup_prod_pairs": q_embedding_near_dup_prod_pairs,
     # --- implementation changed: driver-path CC labels broadcast ----------
-    # (connected_components callers; fuzzy_dedup_keep_longest above and
-    # semdedup_keep, fuzzy_dedup_salted, fuzzy_dedup_keep, simhash_dedup_keep
-    # and winnow_dedup_keep below already sit in the window.
-    # fuzzy_dedup_prod is now oracle-checked with the xxhash64 SQL twin)
-    "incremental_fuzzy_keep": q_incremental_fuzzy_keep,
+    # (connected_components callers; the MinHash keep-lists above and
+    # semdedup_keep, simhash_dedup_keep and winnow_dedup_keep below already
+    # sit in the window. fuzzy_dedup_prod is oracle-checked with the
+    # xxhash64 SQL twin)
     "ngram_jaccard_dedup_keep": q_ngram_jaccard_dedup_keep,
-    "dedup_cluster_sizes": q_dedup_cluster_sizes,
     "embedding_dedup_star_keep": q_embedding_dedup_star_keep,
     "embedding_dedup_keep": q_embedding_dedup_keep,
     "embedding_dedup_prod_keep": q_embedding_dedup_prod_keep,
-    "fuzzy_dedup_prod_checked": q_fuzzy_dedup_prod_checked,
     "rpv2_pre_banded_keep": q_rpv2_pre_banded_keep,
-    "fuzzy_dedup_prod": q_fuzzy_dedup_prod,
     # --- implementation changed: one percentile buffer per signal --------
     # (profiled_quantile_filter, perplexity_buckets and its ccnet_pipeline
     # caller; quantile_filter, quality_thresholds and anti_join_duplicates
@@ -1752,24 +1762,18 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "chunk_documents": q_chunk_documents,
     "temperature_mix": q_temperature_mix,
     # --- stalest driver rows (last certified r3) --------------------------
-    "fuzzy_dedup_salted": q_fuzzy_dedup_salted,
-    "fuzzy_dedup_distributed": q_fuzzy_dedup_distributed,
     "semi_join_keeplist": q_semi_join,
     "anti_join_duplicates": q_anti_join,
     "quality_thresholds": q_quality_thresholds,
-    "lsh_buckets": q_lsh_buckets,
-    "minhash_bands": q_minhash_bands,
     "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
     "ngram_jaccard": q_jaccard_vs_query,
     "fingerprint": q_fingerprint,
     "unigram_entropy": q_unigram_entropy,
     "quantile_filter": q_quantile_filter,
-    "lsh_candidate_edges": q_candidate_edges,
     "simhash": q_simhash,
     "simhash_near_pairs": q_simhash_near_pairs,
     # --- r4-certified rotation fill (scrub/dedup/ANN siblings of changed
     # modules first) -------------------------------------------------------
-    "fuzzy_dedup_keep": q_fuzzy_dedup_keep,
     "simhash_dedup_keep": q_simhash_dedup_keep,
     "winnow_dedup_keep": q_winnow_dedup_keep,
     # ==================== driver window ends here (50) ====================

@@ -91,7 +91,8 @@ def test_extreme_ids_hub_path_and_random_edges(spark):
 
 def _leak_cases(spark):
     """name -> zero-argument call returning a frame, for every keep-list
-    that must leave no staged checkpoint persisted (plus CC itself)."""
+    that must leave no staged checkpoint persisted (plus CC itself) beyond
+    what its returned plan reads (``_READS_STAGED``)."""
     from redpajama_v2_processing_spark.operators.ann import (
         embedding_dedup_keep, embedding_dedup_star_keep,
     )
@@ -99,8 +100,9 @@ def _leak_cases(spark):
         ngram_jaccard_dedup_keep,
     )
     from redpajama_v2_processing_spark.operators.minhash_lsh import (
-        fuzzy_dedup_keep_ids,
+        fuzzy_dedup_keep_ids, incremental_fuzzy_keep_ids,
     )
+    from redpajama_v2_processing_spark.operators.semdedup import semdedup_keep
     from redpajama_v2_processing_spark.operators.simhash_dedup import (
         simhash_dedup_keep,
     )
@@ -143,7 +145,17 @@ def _leak_cases(spark):
         ),
         "fuzzy_dedup_keep_ids": lambda: fuzzy_dedup_keep_ids(docs, "doc_id"),
         "rpv2_keep_ids": lambda: rpv2_keep_ids(sigs),
+        # history holds group 0; groups 1-3 survive it and cluster
+        "incremental_fuzzy_keep_ids": lambda: incremental_fuzzy_keep_ids(
+            docs.where("doc_id % 4 != 0"), docs.where("doc_id % 4 = 0"), "doc_id"
+        ),
+        "semdedup_keep": lambda: semdedup_keep(emb, 0.95, k_cells=2, iters=1, dim=4),
     }
+
+
+# keep-lists whose returned plan reads one staged checkpoint: the new ids
+# that hit history (incremental) and the k-means cell assignment (semdedup)
+_READS_STAGED = {"incremental_fuzzy_keep_ids": 1, "semdedup_keep": 1}
 
 
 @pytest.mark.parametrize(
@@ -153,6 +165,7 @@ def _leak_cases(spark):
         "embedding_dedup_star_keep", "embedding_dedup_keep",
         "winnow_dedup_keep", "ngram_jaccard_dedup_keep",
         "fuzzy_dedup_keep_ids", "rpv2_keep_ids",
+        "incremental_fuzzy_keep_ids", "semdedup_keep",
     ],
 )
 def test_cc_and_simhash_keep_free_their_checkpoints(spark, monkeypatch, name):
@@ -160,8 +173,9 @@ def test_cc_and_simhash_keep_free_their_checkpoints(spark, monkeypatch, name):
     persisted: after the call the only new persistent RDD is the result's
     own CC checkpoint on the distributed path, and none at all on the
     driver path (its labels are a local frame). semdedup_keep and
-    incremental_fuzzy_keep_ids are not listed: their returned plans read
-    their staged frames (see their docstrings)."""
+    incremental_fuzzy_keep_ids may leave one more each, the staged frame
+    their returned plan reads (see their docstrings); the k-means
+    centroids and the new-crawl bands are freed."""
     from redpajama_v2_processing_spark import config
     from redpajama_v2_processing_spark.operators.connected_components import (
         _persistent_ids,
@@ -169,7 +183,8 @@ def test_cc_and_simhash_keep_free_their_checkpoints(spark, monkeypatch, name):
 
     sc = spark.sparkContext
     call = _leak_cases(spark)[name]
-    for threshold, bound in ((config.CC_DRIVER_THRESHOLD, 0), (0, 1)):
+    extra = _READS_STAGED.get(name, 0)
+    for threshold, bound in ((config.CC_DRIVER_THRESHOLD, extra), (0, 1 + extra)):
         # keep-lists take CC's default threshold from config
         monkeypatch.setattr(config, "CC_DRIVER_THRESHOLD", threshold)
         before = _persistent_ids(sc)

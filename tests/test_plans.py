@@ -47,6 +47,19 @@ def test_no_python_eval_in_core_pipeline(pages_small):
     assert "EvalPython" not in plan2
 
 
+def test_minhash_bands_plan_budget(pages_small):
+    """The production MinHash bands are one narrow map: the shingle hashes
+    cross into Python once per Arrow batch (one MapInArrow), and no
+    Exchange, hash aggregate or per-row Python eval is planned."""
+    from redpajama_v2_processing_spark.config import PROD_MINHASH
+
+    nodes = _plan_nodes(minhash_bands(pages_small, "url", cfg=PROD_MINHASH, base="xxhash"))
+    assert nodes.count("Exchange") == 0, nodes
+    assert nodes.count("MapInArrow") == 1, nodes
+    assert "HashAggregate" not in nodes, nodes
+    assert not any("EvalPython" in n for n in nodes), nodes
+
+
 def test_scan_pushdown(spark, tmp_path):
     src = str(tmp_path / "pp")
     write_pages(spark, src, n_rows=100, seed=5, partitions=2)
@@ -280,7 +293,11 @@ def test_full_pipeline_plan_budget(spark, pages_small):
     join is a BroadcastHashJoin against the driver-side CC label frame, so
     the survivors are not shuffled for it (measured: 3 shuffle Exchanges
     and a SortMergeJoin while that frame was not broadcast). No cartesian
-    product and no Python eval."""
+    product and no Python eval node in the keep plan. Python does run in
+    the job, once per Arrow batch: the MinHash signature ``MapInArrow``
+    sits in the bands subplan that feeds connected components, which is
+    materialized before this plan is built (its budget is
+    test_minhash_bands_plan_budget)."""
     from redpajama_v2_processing_spark.plans.pipeline import (
         corpus_stages, full_pipeline,
     )
@@ -305,9 +322,12 @@ def test_full_pipeline_task_budget(spark, pages_small):
     """Spark jobs and tasks of one full_pipeline(eager=True) call on
     pages_small, counted by job group (local[4], 4 shuffle partitions).
     AQE may coalesce the exact survivors' cache, and the driver-path CC
-    labels are one broadcast partition: 9 jobs and 12 tasks. Measured
-    while every stage reading that cache ran ``shuffle.partitions`` tasks
-    and the keep join shuffled both sides: 11 jobs and 26 tasks."""
+    labels are one broadcast partition, and the MinHash bands are a narrow
+    map (no ``groupBy(id)`` exchange): 8 jobs and 11 tasks. Measured with
+    the signature minima taken in a 117-column ``groupBy(id)`` aggregate:
+    9 jobs and 12 tasks; while every stage reading that cache ran
+    ``shuffle.partitions`` tasks and the keep join shuffled both sides:
+    11 jobs and 26 tasks."""
     from redpajama_v2_processing_spark.plans.pipeline import full_pipeline
 
     sc = spark.sparkContext
@@ -325,7 +345,7 @@ def test_full_pipeline_task_budget(spark, pages_small):
         tracker.getStageInfo(stage).numCompletedTasks
         for job in jobs for stage in tracker.getJobInfo(job).stageIds
     )
-    assert (len(jobs), tasks) == (9, 12)
+    assert (len(jobs), tasks) == (8, 11)
 
 
 def test_domain_cap_windows_are_skew_capped(spark):
