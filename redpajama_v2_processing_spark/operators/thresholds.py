@@ -1,9 +1,9 @@
 """Per-language quantile thresholds for quality filtering.
 
-Reference semantics (/root/reference/README.md:77-99): per language, keep a
-doc iff each signal lies within [p_low, p_high] percentiles; profiles
+Reference semantics (reference README.md:77-99): per language, keep a doc
+iff each signal lies within [p_low, p_high] percentiles; profiles
 regular/strict/stricter/strictest = {10/90, 20/80, 30/70, 40/60}; the
-reference computed thresholds externally on a 0.02-0.05 % sample.
+reference hard-coded thresholds computed on a 0.02-0.05 % sample.
 
 Two modes:
 * exact=True  — SQL `percentile` (linear interpolation, matches DuckDB's
@@ -16,26 +16,66 @@ profile in use) comes from ONE array-valued aggregate,
 ``percentile(c, array(p1..pk))`` or its ``percentile_approx`` twin, indexed
 afterwards. Spark keeps a separate value->count map (or sketch) per
 aggregate expression and never shares it between expressions, so k scalar
-calls would buffer, serialize and shuffle every signal value k times; the
-array form reads all k quantiles off the same buffer, with the same
-results.
+calls would buffer, serialize and shuffle every signal value k times.
+
+The filters treat the bounds as constants, as the reference does: one
+collected aggregation (one job, one row per language), a literal
+predicate. What they return plans as the input plus one Filter, with no
+join, aggregate or exchange for a consumer to re-run. Expressions are SQL
+strings: each node of a ``Column`` tree costs py4j round trips.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PROFILE, LANG_PROFILE, QUANTILE_PROFILES
-from ..functions.vectors import round_half_up
 
 
-def _quantiles(c: str, ps: list[float], exact: bool) -> Column:
-    """array<double>: the ``ps`` quantiles of column ``c`` from one
-    aggregate buffer (module docstring)."""
-    if exact:
-        return F.percentile(F.col(c), ps)
-    return F.percentile_approx(F.col(c).cast("double"), ps, 10000)
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _literal(v) -> str:
+    """Exact SQL literal: a string's UTF-8 hex, a number's round-trip repr."""
+    if isinstance(v, str):
+        return f"CAST(X'{v.encode().hex()}' AS STRING)"
+    return f"CAST('{v!r}' AS DOUBLE)"
+
+
+def _quantile_table(signals, signal_cols, lang_col, pairs, exact, round_to) -> DataFrame:
+    """DF(lang, <sig> array<double>, ...): per language, the quantiles of
+    each signal at every p of ``pairs`` from one aggregate buffer, rounded
+    as ``functions.vectors.round_half_up`` rounds."""
+    arr = ", ".join(_literal(float(p)) for pair in pairs for p in pair)
+    scale = _literal(float(10**round_to))
+
+    def agg(c: str):
+        q = (f"percentile({_ident(c)}, array({arr}))" if exact else
+             f"percentile_approx(CAST({_ident(c)} AS DOUBLE), array({arr}), 10000)")
+        return F.expr(f"transform({q}, x -> floor(x * {scale} + {_literal(0.5)})"
+                      f" / {scale}) AS {_ident(c)}")
+
+    return signals.groupBy(lang_col).agg(*[agg(c) for c in signal_cols])
+
+
+def _literal_filter(signals, signal_cols, lang_col, exact, round_to, lang_pairs, default):
+    """Rows whose signals all lie within their language's (p_low, p_high)
+    bounds, ``lang_pairs[lang]`` or ``default``. A NULL language, or one with
+    a NULL bound (its signal all NULL), keeps no rows and gets no branch."""
+    pairs = sorted({*lang_pairs.values(), default})
+    table = _quantile_table(signals, signal_cols, lang_col, pairs, exact, round_to)
+    branches = []
+    for r in sorted((r for r in table.collect() if r[0] is not None), key=lambda r: r[0]):
+        i = 2 * pairs.index(lang_pairs.get(r[0], default))
+        if all(r[c] is not None for c in signal_cols):
+            branches.append("(" + " AND ".join(
+                [f"{_ident(lang_col)} = {_literal(r[0])}"] + [
+                    f"{_ident(c)} BETWEEN {_literal(r[c][i])} AND {_literal(r[c][i + 1])}"
+                    for c in signal_cols
+                ]) + ")")
+    return signals.where(" OR ".join(branches) or "false")
 
 
 def per_lang_thresholds(
@@ -48,18 +88,14 @@ def per_lang_thresholds(
     sample_fraction: float | None = None,
     round_to: int = 6,
 ) -> DataFrame:
-    """DF(lang, <sig>_lo, <sig>_hi, ...) per-language quantile bounds."""
-    df = signals
+    """DF(lang, <sig>_lo, <sig>_hi, ...) per-language quantile bounds (lazy)."""
     if sample_fraction is not None:
-        df = df.sample(False, sample_fraction, seed=42)
-    aggs = []
-    for c in signal_cols:
-        q = _quantiles(c, [p_low, p_high], exact)
-        aggs += [
-            round_half_up(q[0], round_to).alias(f"{c}_lo"),
-            round_half_up(q[1], round_to).alias(f"{c}_hi"),
-        ]
-    return df.groupBy(lang_col).agg(*aggs)
+        signals = signals.sample(False, sample_fraction, seed=42)
+    th = _quantile_table(signals, signal_cols, lang_col, [(p_low, p_high)], exact, round_to)
+    return th.selectExpr(_ident(lang_col), *[
+        f"{_ident(c)}[{i}] AS {_ident(c + suffix)}"
+        for c in signal_cols for i, suffix in enumerate(("_lo", "_hi"))
+    ])
 
 
 def profiled_quantile_filter(
@@ -73,48 +109,17 @@ def profiled_quantile_filter(
     profile's (p_low, p_high) — strict (20/80) for en, regular (10/90)
     otherwise.
 
-    Single pass: ONE groupBy(lang) aggregation computes every in-use
-    profile's percentile pair per signal (grouped percentiles equal the
-    per-language filtered percentiles, so no per-language scan loop), then
-    a CASE on the language->profile map picks the applicable pair, and the
-    tiny threshold table broadcast-joins back. The corpus side is scanned
-    once for thresholds and once for the filter — independent of the
-    number of languages.
-
-    One buffer per signal: all 2 x (profiles in use) quantiles of a signal
-    come from a single array-valued percentile aggregate, so each signal
-    value is buffered and shuffled once rather than once per (profile,
-    bound) — Spark does not share buffers between aggregate expressions.
+    ONE groupBy(lang) aggregation, collected as this call's one job,
+    computes every in-use profile's percentile pair per signal (grouped
+    percentiles equal the per-language filtered ones); each language's
+    profile is picked in Python and its bounds become literals of
+    ``signals.where(...)``.
     """
-    profiles = sorted({*LANG_PROFILE.values(), DEFAULT_PROFILE})
-    ps = [p for prof in profiles for p in QUANTILE_PROFILES[prof]]
-    aggs = []
-    for c in signal_cols:
-        q = _quantiles(c, ps, exact)
-        for i, prof in enumerate(profiles):
-            aggs += [
-                round_half_up(q[2 * i], round_to).alias(f"_{c}_{prof}_lo"),
-                round_half_up(q[2 * i + 1], round_to).alias(f"_{c}_{prof}_hi"),
-            ]
-    th_wide = signals.groupBy(lang_col).agg(*aggs)
-
-    def pick(c: str, bound: str):
-        expr = F.lit(None).cast("double")
-        for lang, prof in LANG_PROFILE.items():
-            expr = F.when(
-                F.col(lang_col) == lang, F.col(f"_{c}_{prof}_{bound}")
-            ).otherwise(expr)
-        return F.coalesce(expr, F.col(f"_{c}_{DEFAULT_PROFILE}_{bound}"))
-
-    th = th_wide.select(
-        lang_col,
-        *[pick(c, b).alias(f"{c}_{b}") for c in signal_cols for b in ("lo", "hi")],
+    return _literal_filter(
+        signals, signal_cols, lang_col, exact, round_to,
+        {lang: QUANTILE_PROFILES[p] for lang, p in LANG_PROFILE.items()},
+        QUANTILE_PROFILES[DEFAULT_PROFILE],
     )
-    out = signals.join(F.broadcast(th), lang_col)
-    cond = F.lit(True)
-    for c in signal_cols:
-        cond = cond & (F.col(c) >= F.col(f"{c}_lo")) & (F.col(c) <= F.col(f"{c}_hi"))
-    return out.where(cond).select(*signals.columns)
 
 
 def quantile_filter(
@@ -125,14 +130,7 @@ def quantile_filter(
     p_high: float = 0.90,
     exact: bool = True,
 ) -> DataFrame:
-    """Keep rows whose every signal is within its per-language bounds.
-
-    Threshold table is tiny (one row per language) -> broadcast join; the
-    corpus side never shuffles.
-    """
-    th = per_lang_thresholds(signals, signal_cols, lang_col, p_low, p_high, exact)
-    out = signals.join(F.broadcast(th), lang_col)
-    cond = F.lit(True)
-    for c in signal_cols:
-        cond = cond & (F.col(c) >= F.col(f"{c}_lo")) & (F.col(c) <= F.col(f"{c}_hi"))
-    return out.where(cond).select(*signals.columns)
+    """Keep rows whose every signal is within its per-language
+    [p_low, p_high] bounds. Calling this runs the one aggregation job; the
+    result is ``signals.where(<literal predicate>)``."""
+    return _literal_filter(signals, signal_cols, lang_col, exact, 6, {}, (p_low, p_high))

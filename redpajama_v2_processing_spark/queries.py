@@ -1738,11 +1738,15 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "embedding_dedup_keep": q_embedding_dedup_keep,
     "embedding_dedup_prod_keep": q_embedding_dedup_prod_keep,
     "rpv2_pre_banded_keep": q_rpv2_pre_banded_keep,
-    # --- implementation changed: one percentile buffer per signal --------
-    # (profiled_quantile_filter, perplexity_buckets and its ccnet_pipeline
-    # caller; quantile_filter, quality_thresholds and anti_join_duplicates
-    # below already sit in the window)
+    # --- implementation changed: thresholds as literals -----------------
+    # (the two filters collect their bounds in one aggregation and filter
+    # on literals; quality_thresholds shares their SQL-string aggregate)
     "profiled_quantile_filter": q_profiled_quantile_filter,
+    "quantile_filter": q_quantile_filter,
+    "quality_thresholds": q_quality_thresholds,
+    # --- implementation changed: one percentile buffer per signal --------
+    # (perplexity_buckets and its ccnet_pipeline caller; the thresholds
+    # above, anti_join_duplicates below)
     "perplexity_buckets": q_perplexity_buckets,
     "ccnet_pipeline": q_ccnet_pipeline,
     # --- implementation/output changed in round 6: re-certify ------------
@@ -1764,12 +1768,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- stalest driver rows (last certified r3) --------------------------
     "semi_join_keeplist": q_semi_join,
     "anti_join_duplicates": q_anti_join,
-    "quality_thresholds": q_quality_thresholds,
     "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
     "ngram_jaccard": q_jaccard_vs_query,
     "fingerprint": q_fingerprint,
     "unigram_entropy": q_unigram_entropy,
-    "quantile_filter": q_quantile_filter,
     "simhash": q_simhash,
     "simhash_near_pairs": q_simhash_near_pairs,
     # --- r4-certified rotation fill (scrub/dedup/ANN siblings of changed

@@ -123,6 +123,28 @@ def test_one_buffer_thresholds_match_scalar_percentiles(spark):
                     assert got == want[r.lang, c, prof], (exact, prof, r.lang, c)
 
 
+def _scalar_survivors(df, cols, exact, profile_of) -> set:
+    """doc_ids whose every signal lies within the scalar per-quantile
+    bounds of its language's profile; NULL values and the NULL-lang group
+    never survive."""
+    th = _scalar_thresholds(df, cols, exact)
+    keep = set()
+    for r in df.collect():
+        if r.lang is None:
+            continue
+        bounds = [th[r.lang, c, profile_of(r.lang)] for c in cols]
+        if all(
+            r[c] is not None and lo is not None and lo <= r[c] <= hi
+            for c, (lo, hi) in zip(cols, bounds)
+        ):
+            keep.add(r.doc_id)
+    return keep
+
+
+def _profile_of(lang):
+    return thresholds.LANG_PROFILE.get(lang, thresholds.DEFAULT_PROFILE)
+
+
 def test_profiled_quantile_filter_survivors_match_scalar(spark, monkeypatch):
     """profiled_quantile_filter keeps exactly the rows the scalar
     per-quantile thresholds keep, with each language on a different
@@ -133,25 +155,73 @@ def test_profiled_quantile_filter_survivors_match_scalar(spark, monkeypatch):
     })
     df = _threshold_frame(spark)
     cols = ["d", "n"]
-    rows = df.collect()
     for exact in (True, False):
-        th = _scalar_thresholds(df, cols, exact)
-        want = set()
-        for r in rows:
-            if r.lang is None:
-                continue
-            prof = thresholds.LANG_PROFILE.get(r.lang, thresholds.DEFAULT_PROFILE)
-            if all(
-                r[c] is not None and th[r.lang, c, prof][0] <= r[c] <= th[r.lang, c, prof][1]
-                for c in cols
-            ):
-                want.add(r.doc_id)
+        want = _scalar_survivors(df, cols, exact, _profile_of)
         got = {
             r.doc_id
             for r in profiled_quantile_filter(df, cols, exact=exact).collect()
         }
         assert got == want, exact
-        assert 0 < len(got) < len(rows)
+        assert 0 < len(got) < df.count()
+
+
+def _filter_cases(df, cols):
+    """(name, filter(df, exact), profile a language's bounds come from)
+    for both threshold filters."""
+    return [
+        ("profiled", lambda exact: profiled_quantile_filter(df, cols, exact=exact), _profile_of),
+        ("quantile", lambda exact: quantile_filter(df, cols, exact=exact), lambda lang: "regular"),
+    ]
+
+
+def test_threshold_filters_literal_edge_cases(spark, monkeypatch):
+    """Both filters bake the bounds into a literal predicate. They keep
+    exactly the scalar reference's survivors for a language value that
+    needs SQL quoting (a quote and a backslash, on its own profile), a
+    language whose signal is all NULL (NULL bounds, no survivors), a
+    language not in LANG_PROFILE and a NULL language."""
+    odd = "it's a \\ lang"
+    monkeypatch.setattr(thresholds, "LANG_PROFILE", {"en": "strict", odd: "stricter"})
+    langs = ["en", odd, "nulls", "xx", None]
+    rows = [
+        (i, langs[i % 5],
+         None if langs[i % 5] == "nulls" or i % 13 == 4 else float((i * 37) % 23) / 7.0,
+         (i * 13) % 17)
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, lang string, d double, n int")
+    cols = ["d", "n"]
+    for name, run, profile_of in _filter_cases(df, cols):
+        for exact in (True, False):
+            want = _scalar_survivors(df, cols, exact, profile_of)
+            got = {r.doc_id for r in run(exact).collect()}
+            assert got == want, (name, exact)
+            kept_langs = {langs[i % 5] for i in got}
+            assert kept_langs == {"en", odd, "xx"}, (name, exact, kept_langs)
+
+
+def test_threshold_filters_empty_and_many_languages(spark):
+    """Empty input gives an empty frame with the input schema and no
+    error; 200 languages (a 200-branch literal predicate) plan, run and
+    keep the scalar reference's survivors."""
+    schema = "doc_id long, lang string, d double, n int"
+    empty = spark.createDataFrame([], schema)
+    for name, run, _ in _filter_cases(empty, ["d", "n"]):
+        for exact in (True, False):
+            out = run(exact)
+            assert out.schema == empty.schema, (name, exact)
+            assert out.collect() == [], (name, exact)
+    rows = [
+        (i, f"l{i % 200:03d}", float((i * 37) % 23) / 7.0, (i * 13) % 17)
+        for i in range(2000)
+    ]
+    df = spark.createDataFrame(rows, schema)
+    for name, run, profile_of in _filter_cases(df, ["d", "n"]):
+        for exact in (True, False):
+            want = _scalar_survivors(df, ["d", "n"], exact, profile_of)
+            got = {r.doc_id for r in run(exact).collect()}
+            assert got == want, (name, exact)
+            assert 0 < len(got) < len(rows)
 
 
 def test_langid_markers(spark):
