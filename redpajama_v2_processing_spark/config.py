@@ -127,16 +127,6 @@ PROD_SIMHASH = {"bits": 60, "band_bits": 15, "max_hamming": 3, "max_bucket": 64}
 # large-star/small-star fixpoint).
 CC_DRIVER_THRESHOLD = int(os.environ.get("RPV2_CC_DRIVER_THRESHOLD", "1000000"))
 
-# Real-model swap seam: point these at model files (shipped to executors
-# via spark-submit --files / SparkFiles) to switch the langid / perplexity
-# pandas-UDF slots from the deterministic stand-ins to real fastText /
-# KenLM inference (functions/langid.langid_model_udf,
-# functions/perplexity.perplexity_model_udf). None (the sandbox
-# default — no model wheels here) selects the stand-ins; either branch
-# yields the identical schema.
-LANGID_MODEL_PATH: str | None = os.environ.get("RPV2_LANGID_MODEL") or None
-KENLM_MODEL_PATH: str | None = os.environ.get("RPV2_KENLM_MODEL") or None
-
 # Per-language downsample ratios — the reference's target of ~500M
 # signatures (~100B tokens) per language (README.md:104,
 # src/downsample_parquet.py:16-20): en was pre-shrunk by the strict

@@ -8,6 +8,11 @@ label = argmax (ties broken by language code order); CJK-heavy text short-
 circuits to 'zh'. Pure integer counting + one IEEE division — exactly
 reproducible in the DuckDB oracle.
 
+The hit counts are staged once, as one array over the label stage's shared
+token staging (``signals.stage_tokens``), and the label is read at its
+first maximum: Spark shares no subexpression across CASE branches, so a
+per-language ``when`` ladder re-ran each lexicon regexp in every branch.
+
 A vectorized Arrow/pandas-UDF variant (`langid_pandas_udf`) exists for
 plugging in a real model (fastText, CLD3) at production time — same
 signature, no per-row Python either way.
@@ -16,15 +21,18 @@ signature, no per-row Python either way.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from pyspark.sql import DataFrame
-
 from ..config import LANG_MARKERS, LANGID_DEFAULT
-from .signals import joined_tokens, lexicon_hits, ratio6
+from .signals import STAGED as _TOKEN_STAGED, joined_tokens, lexicon_hits, ratio6, stage_tokens
 from .text import tokens
+
+#: the languages, in the order ``lang_hits`` counts them
+LANGS: tuple[str, ...] = tuple(sorted(LANG_MARKERS))
+#: the columns ``stage_with_hits`` adds
+STAGED = (*_TOKEN_STAGED, "_hits")
 
 
 def _n_cjk(text: Column) -> Column:
@@ -40,45 +48,53 @@ def cjk_ratio(text: Column) -> Column:
     )
 
 
-def _langid_cols(text: Column, tok: Column, jtok: Column) -> tuple[Column, Column]:
-    """(label, score) from staged token columns. All codegen: marker hits
-    are regexp_count over the joined-token string (see signals.joined_tokens);
-    argmax ties break to the first language in sorted order."""
+def lang_hits(jtok: Column) -> Column:
+    """array<int>: each language's marker-lexicon hits in the joined-token
+    string (see signals.joined_tokens), in ``LANGS`` order."""
+    return F.array(*[lexicon_hits(jtok, LANG_MARKERS[lg]) for lg in LANGS])
+
+
+def _label_score(text: Column, tok: Column, hits: Column) -> tuple[Column, Column]:
+    """(label, score) from the tokens and a ``lang_hits`` array. The label
+    is the language at the first maximum's position, so ties break to the
+    first language in sorted order; no hit at all gives LANGID_DEFAULT."""
     n = F.size(tok)
-    langs = sorted(LANG_MARKERS)
-    hits = {lg: lexicon_hits(jtok, LANG_MARKERS[lg]) for lg in langs}
-    best_hits = F.greatest(*hits.values())
-    label = F.lit(LANGID_DEFAULT)
-    for lg in reversed(langs):
-        label = F.when(hits[lg] == best_hits, F.lit(lg)).otherwise(label)
-    label = F.when(best_hits == 0, F.lit(LANGID_DEFAULT)).otherwise(label)
-    score = F.when((n == 0) | (best_hits == 0), F.lit(0.0)).otherwise(
-        ratio6(best_hits, n)
-    )
+    best = F.array_max(hits)
+    label = F.when(best == 0, F.lit(LANGID_DEFAULT)).otherwise(F.element_at(
+        F.array(*[F.lit(lg) for lg in LANGS]), F.array_position(hits, best).cast("int")
+    ))
+    score = F.when((n == 0) | (best == 0), F.lit(0.0)).otherwise(ratio6(best, n))
     is_cjk = cjk_ratio(text) > 0.2
     label = F.when(is_cjk, F.lit("zh")).otherwise(label)
     score = F.when(is_cjk, ratio6(_n_cjk(text), F.length(text))).otherwise(score)
     return label, score
 
 
+def stage_with_hits(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """``signals.stage_tokens`` plus ``_hits``, the ``lang_hits`` array, so
+    each lexicon is counted once however often label and score read it."""
+    return stage_tokens(df, text_col).withColumn("_hits", lang_hits(F.col("_jtok")))
+
+
+def langid_cols(text_col: str = "text") -> tuple[Column, Column]:
+    """(label, score) over a ``stage_with_hits`` frame."""
+    return _label_score(F.col(text_col), F.col("_tok"), F.col("_hits"))
+
+
 def with_langid(df: DataFrame, text_col: str = "text",
                 label_col: str = "langid", score_col: str = "langid_score") -> DataFrame:
-    """Append langid label + score columns (token columns staged once)."""
-    text = F.col(text_col)
-    staged = df.withColumn("_lid_tok", tokens(text)).withColumn(
-        "_lid_jtok", joined_tokens(F.col("_lid_tok"))
-    )
-    label, score = _langid_cols(text, F.col("_lid_tok"), F.col("_lid_jtok"))
-    return staged.withColumns({label_col: label, score_col: score}).drop(
-        "_lid_tok", "_lid_jtok"
-    )
+    """Append langid label + score columns over the shared token staging
+    (its unread columns are pruned)."""
+    label, score = langid_cols(text_col)
+    staged = stage_with_hits(df, text_col)
+    return staged.withColumns({label_col: label, score_col: score}).drop(*STAGED)
 
 
 def langid_struct(text: Column) -> Column:
     """struct<lang:string, score:double> — single-expression form (inlines
     the token staging; prefer with_langid for whole-table scans)."""
     tok = tokens(text)
-    label, score = _langid_cols(text, tok, joined_tokens(tok))
+    label, score = _label_score(text, tok, lang_hits(joined_tokens(tok)))
     return F.struct(label.alias("lang"), score.alias("score"))
 
 
@@ -89,10 +105,10 @@ _MODEL_CACHE: dict = {}
 
 
 def langid_model_udf(model_path: str | None = None, loader=None):
-    """Config-switched langid slot (the production swap seam).
+    """Langid slot switched by ``model_path`` (the production swap seam).
 
-    * ``model_path`` set (``config.LANGID_MODEL_PATH`` /
-      ``RPV2_LANGID_MODEL``): Arrow-batched inference over the model file —
+    * ``model_path`` set (a fastText model file, shipped to executors via
+      spark-submit --files / SparkFiles): Arrow-batched inference over it —
       ``loader(path)`` must return a fastText-shaped object whose
       ``predict(list[str])`` yields ``(labels, probs)`` with labels like
       ``__label__en``; the default loader is ``fasttext.load_model``. The
@@ -101,7 +117,7 @@ def langid_model_udf(model_path: str | None = None, loader=None):
       stand-in (``langid_pandas_udf``).
 
     Both branches return a ``string`` pandas UDF — schema-identical, so a
-    pipeline swaps models by configuration alone.
+    pipeline swaps models by ``model_path`` alone.
     """
     if model_path is None:
         return langid_pandas_udf
@@ -149,7 +165,7 @@ def langid_pandas_udf(text: pd.Series) -> pd.Series:
     ntok = toks.str.len().replace(0, 1)
     best_lang = pd.Series(LANGID_DEFAULT, index=text.index)
     best_score = pd.Series(0.0, index=text.index)
-    for lg in sorted(LANG_MARKERS):
+    for lg in LANGS:
         pattern = re.compile(" (" + "|".join(LANG_MARKERS[lg]) + ") ")
         score = jtok.str.count(pattern) / ntok
         better = score > best_score

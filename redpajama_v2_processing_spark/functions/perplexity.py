@@ -340,11 +340,11 @@ def perplexity_model_udf(
     fallback_model: dict[str, float] | None = None,
     vocab_logp: float = -10.0,
 ):
-    """Config-switched perplexity slot (the production swap seam).
+    """Perplexity slot switched by ``model_path`` (the production swap seam).
 
-    * ``model_path`` set (``config.KENLM_MODEL_PATH`` /
-      ``RPV2_KENLM_MODEL``): Arrow-batched scoring through a KenLM-shaped
-      object — ``loader(path)`` must return a model with
+    * ``model_path`` set (a KenLM model file, shipped to executors via
+      spark-submit --files / SparkFiles): Arrow-batched scoring through a
+      KenLM-shaped object — ``loader(path)`` must return a model with
       ``score(sentence) -> log10 prob``; per-doc perplexity =
       ``10 ** (-score / n_tokens)`` (KenLM's convention). Default loader is
       ``kenlm.Model``; the model loads lazily per executor process.
@@ -354,7 +354,7 @@ def perplexity_model_udf(
       ``char_bigram_model``).
 
     Both branches return a ``double`` pandas UDF — schema-identical, so a
-    pipeline swaps models by configuration alone.
+    pipeline swaps models by ``model_path`` alone.
     """
     if model_path is None:
         if fallback_model is None:

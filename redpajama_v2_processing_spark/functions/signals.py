@@ -5,12 +5,15 @@ Signal inventory mirrors the reference's 15 precomputed signals
 (/root/reference/README.md:78), which that pipeline only *consumes*
 (src/filter_low_quality.py:53-109); this engine *computes* them.
 
-Performance note: the token/line arrays are staged as intermediate
-projection columns (``with_signals``) instead of being inlined into every
-signal expression. Inlining is quadratic: ``element_at(split(text), i)``
-inside a ``transform`` lambda re-runs the split per element. Catalyst's
+Performance note: the token/line/n-gram arrays and the joined token
+string are staged once, as intermediate projection columns
+(``stage_tokens``), instead of being inlined into every signal
+expression. Inlining is quadratic: ``element_at(split(text), i)`` inside
+a ``transform`` lambda re-runs the split per element. Catalyst's
 CollapseProject keeps the staging projection separate because the array
-expressions are non-cheap and multiply referenced.
+expressions are non-cheap and multiply referenced. The label stage
+(``plans.pipeline.label_documents``) and ``functions.langid`` read the
+same staging, so a labelled document is tokenized and joined once.
 
 Division contract (shared with the DuckDB oracle): every emitted ratio
 is ``floor((num/den)*10^d + 0.5)/10^d`` over the IEEE double quotient
@@ -47,41 +50,9 @@ def ratio6(num: Column, den: Column, digits: int = 6) -> Column:
     return round_half_up(q, digits)
 
 
-def number_of_words(tok: Column) -> Column:
-    return F.size(tok).cast("bigint")
-
-
-def number_of_lines(ls: Column) -> Column:
-    return F.size(ls).cast("bigint")
-
-
-def number_of_characters(text: Column) -> Column:
-    return F.length(text).cast("bigint")
-
-
 def mean_word_length(tok: Column) -> Column:
     total = F.aggregate(tok, F.lit(0).cast("bigint"), lambda a, t: a + F.length(t))
     return ratio6(total, F.size(tok))
-
-
-def words_per_line_mean(tok: Column, ls: Column) -> Column:
-    return ratio6(F.size(tok), F.size(ls))
-
-
-def short_line_ratio(ls: Column, max_chars: int = SHORT_LINE_CHARS) -> Column:
-    short = F.size(F.filter(ls, lambda l: F.length(l) < max_chars))
-    return ratio6(short, F.size(ls))
-
-
-def lines_end_in_punctuation(ls: Column) -> Column:
-    hit = F.size(F.filter(ls, lambda l: l.rlike(r"[.!?]\s*$")))
-    return ratio6(hit, F.size(ls))
-
-
-def special_char_ratio(text: Column) -> Column:
-    """Fraction of characters that are not alphanumeric/whitespace."""
-    n_special = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))
-    return ratio6(n_special, F.length(text))
 
 
 def joined_tokens(tok: Column) -> Column:
@@ -98,20 +69,6 @@ def joined_tokens(tok: Column) -> Column:
 def lexicon_hits(jtok: Column, lexicon: tuple[str, ...]) -> Column:
     pattern = " (" + "|".join(lexicon) + ") "
     return F.regexp_count(jtok, F.lit(pattern))
-
-
-def _lexicon_fraction(tok: Column, jtok: Column, lexicon: tuple[str, ...]) -> Column:
-    return ratio6(lexicon_hits(jtok, lexicon), F.size(tok))
-
-
-def stop_word_fraction(tok: Column, jtok: Column | None = None) -> Column:
-    jtok = joined_tokens(tok) if jtok is None else jtok
-    return _lexicon_fraction(tok, jtok, STOPWORDS)
-
-
-def flagged_word_fraction(tok: Column, jtok: Column | None = None) -> Column:
-    jtok = joined_tokens(tok) if jtok is None else jtok
-    return _lexicon_fraction(tok, jtok, FLAGGED_WORDS)
 
 
 def repetition_ratio(grams: Column) -> Column:
@@ -306,42 +263,62 @@ def gopher_filter(
 # Wide signal frame
 # ---------------------------------------------------------------------------
 
-def with_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append the heuristic signal columns to ``df``.
+#: the columns ``stage_tokens`` adds; each label-stage builder drops them once
+STAGED = ("_tok", "_lines", "_g5", "_g10", "_wg2", "_jtok")
 
-    Two narrow projections, no shuffle: (1) stage token/line arrays,
-    (2) compute all signals over the staged arrays. ``unigram_entropy``
-    and ``perplexity`` need corpus/grouping context and live in their own
-    modules (operators/entropy.py, functions/perplexity.py).
-    """
+
+def stage_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """The label stage's one token staging: ``df`` plus the ``STAGED``
+    columns (token and line arrays, then the n-gram arrays and the joined
+    token string over them). Signals and langid both read it, so each
+    document is split and joined once; Catalyst prunes whatever a consumer
+    leaves unread."""
     text = F.col(text_col)
     staged = df.withColumns({"_tok": tokens(text), "_lines": lines(text)})
-    tok, ls = F.col("_tok"), F.col("_lines")
     # n-gram arrays staged too: repetition_ratio references its gram array
     # three times, and these arrays are the most expensive to build
-    staged = staged.withColumns(
+    return staged.withColumns(
         {
             "_g5": char_ngrams(text, 5),
             "_g10": char_ngrams(text, 10),
-            "_wg2": word_ngrams(tok, 2),
-            "_jtok": joined_tokens(tok),
+            "_wg2": word_ngrams(F.col("_tok"), 2),
+            "_jtok": joined_tokens(F.col("_tok")),
         }
     )
-    jtok = F.col("_jtok")
-    return staged.withColumns(
-        {
-            "number_of_words": number_of_words(tok),
-            "number_of_lines": number_of_lines(ls),
-            "number_of_characters": number_of_characters(text),
-            "mean_word_length": mean_word_length(tok),
-            "words_per_line_mean": words_per_line_mean(tok, ls),
-            "short_line_ratio": short_line_ratio(ls),
-            "lines_end_in_punctuation": lines_end_in_punctuation(ls),
-            "special_char_ratio": special_char_ratio(text),
-            "stop_word_fraction": stop_word_fraction(tok, jtok),
-            "flagged_word_fraction": flagged_word_fraction(tok, jtok),
-            "char_repetition_5gram": repetition_ratio(F.col("_g5")),
-            "char_repetition_10gram": repetition_ratio(F.col("_g10")),
-            "word_repetition_2gram": repetition_ratio(F.col("_wg2")),
-        }
-    ).drop("_tok", "_lines", "_g5", "_g10", "_wg2", "_jtok")
+
+
+def signal_cols(text_col: str = "text") -> dict[str, Column]:
+    """The 13 heuristic signal columns over a ``stage_tokens`` frame.
+    ``special_char_ratio`` counts characters that are not alphanumeric or
+    whitespace."""
+    text, tok, ls, jtok = (F.col(c) for c in (text_col, "_tok", "_lines", "_jtok"))
+    n_tok, n_ls = F.size(tok), F.size(ls)
+    short = F.size(F.filter(ls, lambda l: F.length(l) < SHORT_LINE_CHARS))
+    punct = F.size(F.filter(ls, lambda l: l.rlike(r"[.!?]\s*$")))
+    special = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))
+    return {
+        "number_of_words": n_tok.cast("bigint"),
+        "number_of_lines": n_ls.cast("bigint"),
+        "number_of_characters": F.length(text).cast("bigint"),
+        "mean_word_length": mean_word_length(tok),
+        "words_per_line_mean": ratio6(n_tok, n_ls),
+        "short_line_ratio": ratio6(short, n_ls),
+        "lines_end_in_punctuation": ratio6(punct, n_ls),
+        "special_char_ratio": ratio6(special, F.length(text)),
+        "stop_word_fraction": ratio6(lexicon_hits(jtok, STOPWORDS), n_tok),
+        "flagged_word_fraction": ratio6(lexicon_hits(jtok, FLAGGED_WORDS), n_tok),
+        "char_repetition_5gram": repetition_ratio(F.col("_g5")),
+        "char_repetition_10gram": repetition_ratio(F.col("_g10")),
+        "word_repetition_2gram": repetition_ratio(F.col("_wg2")),
+    }
+
+
+def with_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Append the heuristic signal columns to ``df``.
+
+    Narrow projections, no shuffle: the ``stage_tokens`` staging, then
+    every signal over the staged arrays. ``unigram_entropy`` and
+    ``perplexity`` need corpus/grouping context and live in their own
+    modules (operators/entropy.py, functions/perplexity.py).
+    """
+    return stage_tokens(df, text_col).withColumns(signal_cols(text_col)).drop(*STAGED)

@@ -28,30 +28,10 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..config import ORACLE_MINHASH
 from ..functions.hashing import PERM_PRIME, md5int, perm_coeffs
-from ..functions.text import tokens, word_ngrams, normalize
+from ..functions.text import tokens, normalize
 from .connected_components import (
     _persistent_ids, _unpersist, connected_components, keep_min_id,
 )
-
-
-def shingles_of(tok, norm, n: int):
-    """Word n-gram shingles from staged token/norm columns; docs shorter
-    than n words fall back to a single whole-text shingle so no doc is
-    unsignable. ``tok``/``norm`` should be plain column refs (staged via
-    ``with_shingles``) — inlining the split here is quadratic."""
-    return F.when(
-        F.size(tok) < n,
-        F.when(F.trim(norm) == "", F.array().cast("array<string>")).otherwise(
-            F.array(norm)
-        ),
-    ).otherwise(F.array_distinct(word_ngrams(tok, n)))
-
-
-def shingles(text_col, n: int):
-    """Inline shingle expression — ONLY for single-row lookups (e.g. the
-    jaccard query doc); use ``with_shingles`` for whole-corpus scans."""
-    norm = normalize(text_col)
-    return shingles_of(tokens(norm), norm, n)
 
 
 def with_shingles(
@@ -177,10 +157,8 @@ def minhash_bands(
     sig = hashed.mapInArrow(_signature_fn(perm_coeffs(k), PERM_PRIME), sig_schema)
 
     def band_hash(bi: int):
-        joined = F.concat_ws(
-            "|", *[F.col("_sig")[bi * r + j].cast("string") for j in range(r)]
-        )
-        return base_h(F.concat(F.lit(str(bi)), F.lit("#"), joined))
+        band = F.slice("_sig", bi * r + 1, r).cast("array<string>")
+        return base_h(F.concat(F.lit(str(bi)), F.lit("#"), F.concat_ws("|", band)))
 
     bands = F.array(
         *[

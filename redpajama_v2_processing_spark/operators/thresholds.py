@@ -62,20 +62,26 @@ def _quantile_table(signals, signal_cols, lang_col, pairs, exact, round_to) -> D
 
 def _literal_filter(signals, signal_cols, lang_col, exact, round_to, lang_pairs, default):
     """Rows whose signals all lie within their language's (p_low, p_high)
-    bounds, ``lang_pairs[lang]`` or ``default``. A NULL language, or one with
-    a NULL bound (its signal all NULL), keeps no rows and gets no branch."""
+    bounds, ``lang_pairs[lang]`` or ``default``. Each signal is compared
+    once, against two constant per-language lookups (a literal
+    ``map(lang, bound)[lang]`` per bound), so the predicate's size does not
+    grow with the language count and whole-stage codegen always compiles
+    it. A NULL language, or one with a NULL bound (its signal all NULL), is
+    not in the maps and keeps no rows."""
     pairs = sorted({*lang_pairs.values(), default})
     table = _quantile_table(signals, signal_cols, lang_col, pairs, exact, round_to)
-    branches = []
-    for r in sorted((r for r in table.collect() if r[0] is not None), key=lambda r: r[0]):
-        i = 2 * pairs.index(lang_pairs.get(r[0], default))
-        if all(r[c] is not None for c in signal_cols):
-            branches.append("(" + " AND ".join(
-                [f"{_ident(lang_col)} = {_literal(r[0])}"] + [
-                    f"{_ident(c)} BETWEEN {_literal(r[c][i])} AND {_literal(r[c][i + 1])}"
-                    for c in signal_cols
-                ]) + ")")
-    return signals.where(" OR ".join(branches) or "false")
+    langs = sorted(  # (language, index of its p_low in each quantile array, row)
+        (r[0], 2 * pairs.index(lang_pairs.get(r[0], default)), r) for r in table.collect()
+        if r[0] is not None and all(r[c] is not None for c in signal_cols)
+    )
+
+    def bound(c: str, side: int) -> str:
+        entries = ", ".join(f"{_literal(lg)}, {_literal(r[c][i + side])}" for lg, i, r in langs)
+        return f"map({entries})[{_ident(lang_col)}]"
+
+    return signals.where(" AND ".join(
+        f"{_ident(c)} BETWEEN {bound(c, 0)} AND {bound(c, 1)}" for c in signal_cols
+    ) if langs else "false")
 
 
 def per_lang_thresholds(

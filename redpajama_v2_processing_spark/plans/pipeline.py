@@ -12,9 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.langid import with_langid
+from ..functions.langid import STAGED, langid_cols, stage_with_hits
 from ..functions.scrub import scrub_pii
-from ..functions.signals import with_signals
+from ..functions.signals import signal_cols
 from ..functions.text import fingerprint_int
 from ..operators.connected_components import connected_components
 from ..operators.exact_dedup import exact_keep_ids
@@ -26,13 +26,17 @@ from ..tableio import Stage
 
 def label_documents(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
-    """signals + langid + keep/drop labels + scrubbed text. Narrow
-    (no shuffle): staged projections over the scan."""
-    out = with_langid(with_quality_label(with_signals(docs, text_col)), text_col)
-    return (
-        out.withColumn("scrubbed_text", scrub_pii(F.col(text_col)))
-        .withColumn("fingerprint", fingerprint_int(F.col(text_col)))
-    )
+    """signals + keep/drop labels + langid + scrubbed text + fingerprint.
+    Narrow (no shuffle): projections over ONE token staging, which signals
+    and langid share."""
+    text = F.col(text_col)
+    label, score = langid_cols(text_col)
+    return with_quality_label(
+        stage_with_hits(docs, text_col).withColumns(signal_cols(text_col))
+    ).withColumns({
+        "langid": label, "langid_score": score,
+        "scrubbed_text": scrub_pii(text), "fingerprint": fingerprint_int(text),
+    }).drop(*STAGED)
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,12 +19,24 @@ from ..fixtures import PAGES_SCHEMA
 from ..plans.pipeline import label_documents
 
 
-def read_pages_stream(spark: SparkSession, input_dir: str,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
+def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
+
+
+def _start_parquet_sink(df: DataFrame, output_dir: str, checkpoint_dir: str,
+                        available_now: bool) -> StreamingQuery:
+    """Start ``df`` appending to a checkpointed parquet file sink (exactly
+    once). ``available_now=True`` drains what exists and stops
+    (test/backfill mode); False runs continuously."""
+    writer = (
+        df.writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_labels(
@@ -34,20 +46,11 @@ def stream_labels(
     checkpoint_dir: str,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Label every arriving page; exactly-once via checkpointed file sink.
-    ``available_now=True`` drains what exists and stops (test/backfill
-    mode); False runs continuously."""
+    """Label every arriving page; exactly-once via checkpointed file sink
+    (see ``_start_parquet_sink`` for ``available_now``)."""
     pages = read_pages_stream(spark, input_dir)
     labeled = label_documents(pages, id_col="url", text_col="text")
-    writer = (
-        labeled.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(labeled, output_dir, checkpoint_dir, available_now)
 
 
 def stream_exact_dedup(
@@ -78,15 +81,7 @@ def stream_exact_dedup(
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(deduped, output_dir, checkpoint_dir, available_now)
 
 
 def stream_simhash_dedup(
@@ -123,15 +118,7 @@ def stream_simhash_dedup(
         sh.withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["simhash"])
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(deduped, output_dir, checkpoint_dir, available_now)
 
 
 def stream_lang_rates(
@@ -153,15 +140,7 @@ def stream_lang_rates(
         .agg(F.count("*").alias("n_pages"))
         .select(F.col("w.start").alias("window_start"), "lang", "n_pages")
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(agg, output_dir, checkpoint_dir, available_now)
 
 
 def stream_url_dedup(
@@ -192,15 +171,7 @@ def stream_url_dedup(
         .dropDuplicatesWithinWatermark(["_curl"])
         .drop("_curl")
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(deduped, output_dir, checkpoint_dir, available_now)
 
 
 def stream_incremental_dedup(
@@ -256,15 +227,7 @@ def stream_incremental_dedup(
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(deduped, output_dir, checkpoint_dir, available_now)
 
 
 def stream_wet_ingest(
@@ -301,12 +264,4 @@ def stream_wet_ingest(
         .select("content")
     )
     parsed = files.mapInPandas(_wet_decode, WET_SCHEMA)
-    writer = (
-        parsed.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(parsed, output_dir, checkpoint_dir, available_now)

@@ -20,6 +20,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..config import SESSION_GAP_MINUTES
+from .ingest import _start_parquet_sink
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -125,12 +126,4 @@ def stream_sessions(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     events = reader.parquet(input_dir)
     sessions = sessionize_stream(events, gap_minutes)
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(sessions, output_dir, checkpoint_dir, available_now)

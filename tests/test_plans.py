@@ -141,18 +141,12 @@ def test_profiled_thresholds_single_pass(spark, tmp_path):
             assert sum("Scan" in n for n in nodes) == 1, (op.__name__, exact, nodes)
 
 
-def test_threshold_filter_py4j_build_budget(spark, tmp_path):
-    """py4j commands Python sends the JVM to build each threshold filter over
-    15 signals, its one collected aggregation included: measured 81 for
-    both, built from SQL strings (pinned with ~10 % headroom); measured
-    ~11k (profiled) and ~5k with per-column Column trees and a broadcast
-    join. py4j's object-release commands are not counted: they go out
-    whenever Python's garbage collector frees earlier Java references."""
+def _py4j_build_calls(spark, build) -> int:
+    """py4j commands Python sends the JVM while ``build()`` runs. py4j's
+    object-release commands are not counted: they go out whenever Python's
+    garbage collector frees earlier Java references."""
     import gc
 
-    from redpajama_v2_processing_spark.operators import thresholds
-
-    sig, cols = _threshold_signals(spark, str(tmp_path / "sig"), n_signals=15)
     client = type(spark.sparkContext._gateway._gateway_client)
     send = client.send_command
     sent = []
@@ -161,18 +155,105 @@ def test_threshold_filter_py4j_build_budget(spark, tmp_path):
         sent.append(command)
         return send(self, command, *args, **kwargs)
 
-    calls = {}
+    gc.collect()
     client.send_command = counting
     try:
-        for op in (thresholds.profiled_quantile_filter, thresholds.quantile_filter):
-            gc.collect()
-            sent.clear()
-            op(sig, cols, exact=True)
-            calls[op.__name__] = sum(not c.startswith("m\nd\n") for c in sent)
+        build()
     finally:
         client.send_command = send
+    return sum(not c.startswith("m\nd\n") for c in sent)
+
+
+def test_threshold_filter_py4j_build_budget(spark, tmp_path, pages_small):
+    """py4j commands Python sends the JVM to build each threshold filter over
+    15 signals, its one collected aggregation included: measured 81 for
+    both, built from SQL strings (pinned with ~10 % headroom); measured
+    ~11k (profiled) and ~5k with per-column Column trees and a broadcast
+    join. The same count pins two wide projections: ``label_documents``
+    on ``pages_small`` (measured 3,324 over one shared token staging;
+    3,514 with langid staging its own tokens and a per-language CASE
+    ladder) and the production ``minhash_bands`` (measured 1,360 with
+    xxhash and 1,540 with md5, one ``slice`` per band hash; 5,356 / 5,536
+    with one element expression per signature entry)."""
+    from redpajama_v2_processing_spark.config import PROD_MINHASH
+    from redpajama_v2_processing_spark.operators import thresholds
+
+    sig, cols = _threshold_signals(spark, str(tmp_path / "sig"), n_signals=15)
+    calls = {
+        op.__name__: _py4j_build_calls(spark, lambda: op(sig, cols, exact=True))
+        for op in (thresholds.profiled_quantile_filter, thresholds.quantile_filter)
+    }
+    calls["label_documents"] = _py4j_build_calls(
+        spark, lambda: label_documents(pages_small, id_col="url")
+    )
+    for base in ("xxhash", "md5"):
+        calls[f"minhash_bands_{base}"] = _py4j_build_calls(
+            spark, lambda: minhash_bands(pages_small, "url", cfg=PROD_MINHASH, base=base)
+        )
     assert calls["profiled_quantile_filter"] <= 90, calls
     assert calls["quantile_filter"] <= 90, calls
+    assert calls["label_documents"] <= 3650, calls
+    assert calls["minhash_bands_xxhash"] <= 1500, calls
+    assert calls["minhash_bands_md5"] <= 1700, calls
+
+
+def _plan_exprs(df) -> list:
+    """Every expression node of the optimized logical plan, each counted
+    once, walked as trees (the plan string truncates long expressions)."""
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    nodes, todo, exprs = [df._jdf.queryExecution().optimizedPlan()], [], []
+    while nodes:
+        node = nodes.pop()
+        nodes.extend(seq(node.children()))
+        todo.extend(seq(node.expressions()))
+    while todo:
+        e = todo.pop()
+        exprs.append(e)
+        todo.extend(seq(e.children()))
+    return exprs
+
+
+def _count_exprs(exprs, name, value=None, arg=None) -> int:
+    """Expressions named ``name`` that (or whose child ``arg``) print as
+    ``value``, if given."""
+    return sum(
+        e.nodeName() == name and (value is None or (
+            e if arg is None else e.children().apply(arg)).toString() == value)
+        for e in exprs
+    )
+
+
+def test_label_stage_stages_each_value_once(pages_small):
+    """The label stage tokenizes each document once, builds its joined-token
+    string once and counts each language's lexicon once: in the optimized
+    plan of ``label_documents`` there is exactly one ``\\s+`` split, one
+    joined-token ``concat_ws`` and one literal per ``LANG_MARKERS`` pattern.
+    Measured 2 / 2 / 9 with langid staging its own tokens and choosing the
+    label with a per-language CASE ladder (Spark shares no subexpression
+    across CASE branches)."""
+    from redpajama_v2_processing_spark.config import LANG_MARKERS
+
+    exprs = _plan_exprs(label_documents(pages_small, id_col="url"))
+    assert _count_exprs(exprs, "StringSplit", r"\s+", arg=1) == 1
+    assert _count_exprs(exprs, "ConcatWs", "  ", arg=0) == 1
+    for lang, lexicon in LANG_MARKERS.items():
+        assert _count_exprs(exprs, "Literal", " (" + "|".join(lexicon) + ") ") == 1, lang
+
+
+def test_langid_prunes_unread_staging(pages_small):
+    """``with_langid`` reads the shared token staging; the staged columns
+    it does not read are pruned from its plan: no line split and no
+    n-gram array, only the token split and the lexicon counts."""
+    from redpajama_v2_processing_spark.functions.langid import with_langid
+
+    exprs = _plan_exprs(with_langid(pages_small).select("langid"))
+    assert _count_exprs(exprs, "StringSplit") == 1
+    assert _count_exprs(exprs, "StringSplit", r"\s+", arg=1) == 1
+    assert _count_exprs(exprs, "RegExpExtractAll") > 0
+    for ngram_expr in ("Sequence", "transform", "zip_with", "Slice"):
+        assert _count_exprs(exprs, ngram_expr) == 0, ngram_expr
 
 
 def test_ivf_assign_has_no_window_exchange(spark):

@@ -202,8 +202,11 @@ def test_threshold_filters_literal_edge_cases(spark, monkeypatch):
 
 def test_threshold_filters_empty_and_many_languages(spark):
     """Empty input gives an empty frame with the input schema and no
-    error; 200 languages (a 200-branch literal predicate) plan, run and
-    keep the scalar reference's survivors."""
+    error; 200 languages plan, run and keep the scalar reference's
+    survivors, with the filter compiled: codegen fallback is off for that
+    case, so a predicate Janino cannot compile fails the test instead of
+    running interpreted (measured with one predicate branch per language:
+    ``InternalCompilerException``, code grows beyond 64 KB)."""
     schema = "doc_id long, lang string, d double, n int"
     empty = spark.createDataFrame([], schema)
     for name, run, _ in _filter_cases(empty, ["d", "n"]):
@@ -216,12 +219,17 @@ def test_threshold_filters_empty_and_many_languages(spark):
         for i in range(2000)
     ]
     df = spark.createDataFrame(rows, schema)
-    for name, run, profile_of in _filter_cases(df, ["d", "n"]):
-        for exact in (True, False):
-            want = _scalar_survivors(df, ["d", "n"], exact, profile_of)
-            got = {r.doc_id for r in run(exact).collect()}
-            assert got == want, (name, exact)
-            assert 0 < len(got) < len(rows)
+    fallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        for name, run, profile_of in _filter_cases(df, ["d", "n"]):
+            for exact in (True, False):
+                want = _scalar_survivors(df, ["d", "n"], exact, profile_of)
+                got = {r.doc_id for r in run(exact).collect()}
+                assert got == want, (name, exact)
+                assert 0 < len(got) < len(rows)
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", fallback)
 
 
 def test_langid_markers(spark):
