@@ -118,13 +118,14 @@ SIMHASH_BITS = 16  # oracle-checkable small profile (see PROD_SIMHASH)
 # to C(64,2) pairs while dup clusters stay connected through their minima.
 PROD_SIMHASH = {"bits": 60, "band_bits": 15, "max_hamming": 3, "max_bucket": 64}
 
-# Connected components: edge sets at or below this count are union-found on
-# the driver after two jobs (a collected edge Row is ~100 bytes on the driver,
-# so 1M edges ~ 100 MB — comfortably inside a multi-GB driver; the label
-# frame it returns is broadcast, at most 2M (id, root) longs ~ 32 MB per
-# executor; raise it via RPV2_CC_DRIVER_THRESHOLD only with driver and
-# executor memory to match, set 0 to force the distributed
-# large-star/small-star fixpoint).
+# Connected components: once the input edge set, or the output of a
+# distributed star round, is at or below this count, it is collected and
+# union-found on the driver; a graph under it from the start takes two jobs
+# (a collected edge Row is ~100 bytes on the driver, so 1M edges ~ 100 MB —
+# comfortably inside a multi-GB driver; the label frame it returns is
+# broadcast, at most 2M (id, root) longs ~ 32 MB per executor; raise it via
+# RPV2_CC_DRIVER_THRESHOLD only with driver and executor memory to match,
+# set 0 to force the distributed large-star/small-star fixpoint).
 CC_DRIVER_THRESHOLD = int(os.environ.get("RPV2_CC_DRIVER_THRESHOLD", "1000000"))
 
 # Per-language downsample ratios — the reference's target of ~500M

@@ -6,8 +6,11 @@ Replaces the reference's single-process UnionFind over all LSH buckets
 component that forced the reference into iterative partial dedups when the
 id set outgrew node RAM (README.md:101-124). Here every round is ONE
 localCheckpoint job (a window per star and one distinct: three shuffles, no
-join) that also observes the round's convergence signature; convergence is
-O(log n) rounds and the checkpoint keeps plans bounded.
+join) that also observes the round's edge count and convergence signature;
+convergence is O(log n) rounds and the checkpoint keeps plans bounded. The
+reference's union-find stays as the hand-off: once a round's edge count is
+at or under the driver threshold (the input being round 0), its checkpoint
+is collected and union-found on the driver.
 
 Output invariant (matches the reference's keep rule,
 src/minhashlsh.py:140,169): every node maps to its component's MINIMUM id.
@@ -70,14 +73,20 @@ def _driver_side_cc(edges: DataFrame, edge_rows) -> DataFrame:
     """Small-graph fast path: classic union-find on the driver.
 
     After LSH star-edge compression the edge set is usually tiny relative
-    to the corpus (one edge per duplicate doc per band). Below the
-    threshold, one checkpoint job per round of fixpoint latency collapses
+    to the corpus (one edge per duplicate doc per band), and each star
+    round shrinks it towards one edge per non-root node. At or under the
+    threshold, the remaining checkpoint jobs of fixpoint latency collapse
     into one collect + one createDataFrame. Identical output contract.
 
     The labels come back as ONE partition with a broadcast hint: they are
     on the driver already and number at most 2 x ``driver_threshold``
-    rows (two nodes per edge), so every keep join against them is a
-    broadcast hash join and the corpus side is not shuffled for it."""
+    rows (two nodes per edge; every node of a round's output has an
+    edge), so every keep join against them is a broadcast hash join and
+    the corpus side is not shuffled for it. They are handed to the JVM
+    as one Arrow table (a local relation, no Python RDD: no action over
+    them starts a Python worker), and ``coalesce(1)`` makes the one
+    partition known to the planner, so a count or global aggregate over
+    them needs no exchange."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -93,15 +102,14 @@ def _driver_side_cc(edges: DataFrame, edge_rows) -> DataFrame:
         a, b = find(r["src"]), find(r["dst"])
         if a != b:
             parent[max(a, b)] = min(a, b)
-    comps: dict[int, list[int]] = {}
-    for n in list(parent):
-        comps.setdefault(find(n), []).append(n)
-    rows = [
-        (n, min(members)) for root, members in comps.items() for n in members
-    ]
-    spark = edges.sparkSession
-    labels = spark.sparkContext.parallelize(rows, 1)
-    return F.broadcast(spark.createDataFrame(labels, "id long, root long"))
+    import pyarrow as pa
+
+    # the larger root always joins the smaller: every root is its
+    # component's minimum
+    ids = list(parent)
+    labels = pa.table({"id": pa.array(ids, pa.int64()),
+                       "root": pa.array([find(n) for n in ids], pa.int64())})
+    return F.broadcast(edges.sparkSession.createDataFrame(labels).coalesce(1))
 
 
 def connected_components(
@@ -112,16 +120,21 @@ def connected_components(
 
     Input contract: duplicate (and self) edges are tolerated — the result
     is the same — but distinct input is recommended. ``driver_threshold``
-    (default ``config.CC_DRIVER_THRESHOLD``) is compared with the raw edge
-    row count, duplicates included, so duplicate rows can push a small
-    graph onto the distributed path.
+    (default ``config.CC_DRIVER_THRESHOLD``) is compared with every
+    checkpoint's edge count: the input's raw row count (round 0,
+    duplicates included) and then each star round's distinct edges. The
+    first at or under it is collected and union-found on the driver, so
+    duplicate rows can cost star rounds but the graph still ends on the
+    driver once a round has shrunk it. ``driver_threshold=0`` runs the
+    distributed fixpoint to convergence.
 
     Each round is localCheckpoint-ed (lineage truncation: without it the
     plan doubles per round and analysis time explodes). Superseded rounds'
     checkpoint blocks are explicitly unpersisted once the final result is
-    materialized — iterative checkpoints are the classic slow-leak that
-    degrades every later job in the session. At warehouse scale, persist
-    the returned frame to a table (tableio) rather than holding it cached.
+    materialized (or the hand-off has collected them) — iterative
+    checkpoints are the classic slow-leak that degrades every later job in
+    the session. At warehouse scale, persist the returned frame to a table
+    (tableio) rather than holding it cached.
     """
     if driver_threshold is None:
         from ..config import CC_DRIVER_THRESHOLD
@@ -138,22 +151,12 @@ def connected_components(
     # internally, and the row-count threshold merely turns conservative
     # (duplicates can push a small graph onto the distributed path, never
     # the reverse). The checkpoint now materializes a narrow filter.
-    n_edges = Observation()
-    cur = (
-        edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .where(F.col("src") != F.col("dst"))
-        .observe(n_edges, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    # hybrid strategy: graphs under the threshold are union-found on the
-    # driver. The checkpoint job observes the edge count, so the driver
-    # path is two jobs: that checkpoint and one collect of its blocks.
-    if driver_threshold > 0 and n_edges.get["n"] <= driver_threshold:
-        result = _driver_side_cc(edges, cur.collect())
-        _unpersist(sc, _persistent_ids(sc) - pre_existing)
-        return result
-    # each round's checkpoint job observes its convergence signature (a
-    # modded hash-sum: no ANSI long-overflow) and is named in the event log
+    cur = edges.select(
+        F.col("src").cast("long"), F.col("dst").cast("long")
+    ).where(F.col("src") != F.col("dst"))
+    # every checkpoint job (round 0 is the input's) observes the edge count
+    # n the driver rule reads and the round's convergence signature (a
+    # modded hash-sum: no ANSI long-overflow), and is named in the event log
     signature = (
         F.count(F.lit(1)).alias("n"),
         F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000_007))).alias("h"),
@@ -161,11 +164,24 @@ def connected_components(
     caller_desc = sc.getLocalProperty("spark.job.description")
     prev_sig = None
     try:
-        for i in range(1, max_iter + 1):
+        for i in range(max_iter + 1):
             sc.setJobDescription(f"connected_components round {i}")
             obs = Observation()
-            cur = _star_round(cur).observe(obs, *signature).localCheckpoint()
+            if i:
+                cur = _star_round(cur)
+            cur = cur.observe(obs, *signature).localCheckpoint()
             sig = tuple(obs.get.values())
+            # hybrid strategy: once a round's edge set is at or under the
+            # threshold, the rest is union-found on the driver. A round keeps
+            # every node and component of its input, so the labels are the
+            # same as from the input edges.
+            if driver_threshold > 0 and sig[0] <= driver_threshold:
+                sc.setJobDescription(
+                    f"connected_components driver union-find after round {i}"
+                )
+                result = _driver_side_cc(cur, cur.collect())
+                _unpersist(sc, _persistent_ids(sc) - pre_existing)
+                return result
             if sig == prev_sig:
                 break
             prev_sig = sig

@@ -118,8 +118,10 @@ def full_pipeline(docs: DataFrame, id_col: str = "doc_id",
     The exact survivors are persisted once, since the fuzzy stage reads
     them twice. AQE owns the cache's partition count (the session lets it
     coalesce cached plans), and on the driver CC path the keep join
-    broadcasts the CC labels (at most 2 x ``CC_DRIVER_THRESHOLD`` rows), so
-    the survivors are not shuffled again. ``eager=True`` (default)
+    broadcasts the CC labels, so the survivors are not shuffled again.
+    The labels number at most 2 x ``CC_DRIVER_THRESHOLD`` rows also when CC
+    hands off after star rounds: the collected round has at most that many
+    edges and every labelled node is on one of them. ``eager=True`` (default)
     materializes the result once via localCheckpoint while that cache is
     live, then frees it — no dangling persisted intermediate after the call
     (the result's own checkpoint blocks belong to the returned DataFrame and

@@ -1705,10 +1705,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "jaccard_sim_histogram": q_jaccard_sim_histogram,
     "source_overlap": q_source_overlap,
     "bm25_topk": q_bm25_topk,
-    # --- implementation changed: vectorized MinHash signature -----------
-    # (every minhash_bands consumer: hashes per shingle in the JVM, the
-    # k-permutation minima in one mapInArrow, no groupBy(id) shuffle;
-    # rpv2_pre_banded_keep below reads pre-banded input and is untouched)
+    # --- implementation changed: CC driver hand-off -----------------------
+    # (every connected_components caller: after each star round whose edge
+    # count is at or under the driver threshold, CC collects that round and
+    # union-finds it on the driver. The fuzzy_dedup_* family and
+    # incremental_fuzzy_keep / dedup_cluster_sizes also take the vectorized
+    # MinHash signature; the MinHash and embedding keep-lists the one LSH
+    # kernel; fuzzy_dedup_prod is oracle-checked with the xxhash64 SQL twin)
     "fuzzy_dedup_keep_longest": q_fuzzy_dedup_keep_longest,
     "incremental_fuzzy_keep": q_incremental_fuzzy_keep,
     "dedup_cluster_sizes": q_dedup_cluster_sizes,
@@ -1716,25 +1719,27 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "fuzzy_dedup_prod": q_fuzzy_dedup_prod,
     "fuzzy_dedup_salted": q_fuzzy_dedup_salted,
     "fuzzy_dedup_distributed": q_fuzzy_dedup_distributed,
-    "lsh_buckets": q_lsh_buckets,
-    "minhash_bands": q_minhash_bands,
-    "lsh_candidate_edges": q_candidate_edges,
     "fuzzy_dedup_keep": q_fuzzy_dedup_keep,
-    # --- implementation changed: one LSH dedup kernel (the other touched
-    # pairs surfaces, lsh_candidate_edges and keep-lists are in the window)
-    "simhash_prod_near_pairs": q_simhash_prod_near_pairs,
-    "simhash_capped_near_pairs": q_simhash_capped_near_pairs,
-    "embedding_near_dup_prod_pairs": q_embedding_near_dup_prod_pairs,
-    # --- implementation changed: driver-path CC labels broadcast ----------
-    # (connected_components callers; the MinHash keep-lists above and
-    # semdedup_keep, simhash_dedup_keep and winnow_dedup_keep below already
-    # sit in the window. fuzzy_dedup_prod is oracle-checked with the
-    # xxhash64 SQL twin)
     "ngram_jaccard_dedup_keep": q_ngram_jaccard_dedup_keep,
     "embedding_dedup_star_keep": q_embedding_dedup_star_keep,
     "embedding_dedup_keep": q_embedding_dedup_keep,
     "embedding_dedup_prod_keep": q_embedding_dedup_prod_keep,
     "rpv2_pre_banded_keep": q_rpv2_pre_banded_keep,
+    "simhash_dedup_keep": q_simhash_dedup_keep,
+    "winnow_dedup_keep": q_winnow_dedup_keep,
+    "semdedup_keep": q_semdedup_keep,
+    # --- implementation changed: vectorized MinHash signature -----------
+    # (every minhash_bands consumer: hashes per shingle in the JVM, the
+    # k-permutation minima in one mapInArrow, no groupBy(id) shuffle; its
+    # keep-lists are in the CC block above)
+    "lsh_buckets": q_lsh_buckets,
+    "minhash_bands": q_minhash_bands,
+    "lsh_candidate_edges": q_candidate_edges,
+    # --- implementation changed: one LSH dedup kernel (the other touched
+    # pairs surfaces, lsh_candidate_edges and keep-lists are in the window)
+    "simhash_prod_near_pairs": q_simhash_prod_near_pairs,
+    "simhash_capped_near_pairs": q_simhash_capped_near_pairs,
+    "embedding_near_dup_prod_pairs": q_embedding_near_dup_prod_pairs,
     # --- implementation changed: one label staging -----------------------
     # (signals and langid share one token staging and count each lexicon
     # once; ccnet_pipeline below and the thresholds' map-literal predicate
@@ -1759,12 +1764,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # (doc_embeddings exploded reshape; scrub_cc_luhn boundary replace;
     # token_budget_mix exact integer rate; the chunking three-level scan
     # feeds token_offsets, its consumers are parked below the window;
-    # semdedup derived-k default)
+    # semdedup_keep, with its derived-k default, is in the CC block above)
     "doc_embeddings": q_doc_embeddings,
     "scrub_cc_luhn": q_scrub_cc_luhn,
     "token_budget_mix": q_token_budget_mix,
     "token_offsets": q_token_offsets,
-    "semdedup_keep": q_semdedup_keep,
     # --- stalest driver rows (last certified r3) --------------------------
     "semi_join_keeplist": q_semi_join,
     "anti_join_duplicates": q_anti_join,
@@ -1774,10 +1778,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "unigram_entropy": q_unigram_entropy,
     "simhash": q_simhash,
     "simhash_near_pairs": q_simhash_near_pairs,
-    # --- r4-certified rotation fill (scrub/dedup/ANN siblings of changed
-    # modules first) -------------------------------------------------------
-    "simhash_dedup_keep": q_simhash_dedup_keep,
-    "winnow_dedup_keep": q_winnow_dedup_keep,
     # ==================== driver window ends here (50) ====================
     # parked: certified in earlier rounds, implementations untouched; all
     # remain runnable and locally checkable via tools/check_queries.py

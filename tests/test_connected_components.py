@@ -34,6 +34,22 @@ def _uf_roots(edges):
     return {n: min(members) for members in comp.values() for n in members}
 
 
+def _record_handoffs(mp):
+    """Wraps the driver union-find; returns the list that gets, per call,
+    the job description CC had set when it handed off."""
+    from redpajama_v2_processing_spark.operators import connected_components as ccm
+
+    calls, inner = [], ccm._driver_side_cc
+
+    def wrapped(edges, edge_rows):
+        sc = edges.sparkSession.sparkContext
+        calls.append(sc.getLocalProperty("spark.job.description"))
+        return inner(edges, edge_rows)
+
+    mp.setattr(ccm, "_driver_side_cc", wrapped)
+    return calls
+
+
 def _check(spark, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
     want = _uf_roots(edges)
@@ -43,6 +59,18 @@ def _check(spark, edges):
     # driver-side union-find fast path
     got2 = {r.id: r.root for r in connected_components(df).collect()}
     assert got2 == want
+    # hand-off: each edge three times puts round 0 at 3m non-self rows; a
+    # star round emits at most two distinct edges per distinct input edge,
+    # so round 1 is at or under 2m and hands the rest to the driver. With
+    # no non-self edge (m = 0) the threshold is 0: fully distributed.
+    m = sum(a != b for a, b in edges)
+    with pytest.MonkeyPatch.context() as mp:
+        handoffs = _record_handoffs(mp)
+        cc = connected_components(df.union(df).union(df), driver_threshold=2 * m)
+    want_handoffs = ["connected_components driver union-find after round 1"] if m else []
+    assert handoffs == want_handoffs
+    got3 = {r.id: r.root for r in cc.collect()}
+    assert got3 == want
 
 
 def test_path_graph(spark):
@@ -109,7 +137,9 @@ def _leak_cases(spark):
     from redpajama_v2_processing_spark.operators.winnow import winnow_dedup_keep
     from redpajama_v2_processing_spark.sources.rpv2 import rpv2_keep_ids
 
-    edges = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
+    # the 20-edge path in both orientations: round 1 halves it
+    path = [(i, i + 1) for i in range(20)]
+    edges = spark.createDataFrame(path + [(b, a) for a, b in path], "src long, dst long")
     # four near-dup groups of six docs; each group's words are its own,
     # so winnow / n-gram fingerprints stay under their max_df of 10
     docs = spark.createDataFrame(
@@ -157,6 +187,10 @@ def _leak_cases(spark):
 # that hit history (incremental) and the k-means cell assignment (semdedup)
 _READS_STAGED = {"incremental_fuzzy_keep_ids": 1, "semdedup_keep": 1}
 
+# under every case's round-0 edge count or at or over it: either way CC
+# ends in the driver union-find, after a star round or at the input
+_HANDOFF_THRESHOLD = 25
+
 
 @pytest.mark.parametrize(
     "name",
@@ -172,7 +206,8 @@ def test_cc_and_simhash_keep_free_their_checkpoints(spark, monkeypatch, name):
     """Neither CC path nor any keep-list leaves an intermediate checkpoint
     persisted: after the call the only new persistent RDD is the result's
     own CC checkpoint on the distributed path, and none at all on the
-    driver path (its labels are a local frame). semdedup_keep and
+    driver path (its labels are a local frame), whether CC takes it from
+    the start or hands off to it after star rounds. semdedup_keep and
     incremental_fuzzy_keep_ids may leave one more each, the staged frame
     their returned plan reads (see their docstrings); the k-means
     centroids and the new-crawl bands are freed."""
@@ -184,13 +219,18 @@ def test_cc_and_simhash_keep_free_their_checkpoints(spark, monkeypatch, name):
     sc = spark.sparkContext
     call = _leak_cases(spark)[name]
     extra = _READS_STAGED.get(name, 0)
-    for threshold, bound in ((config.CC_DRIVER_THRESHOLD, extra), (0, 1 + extra)):
+    handoffs = _record_handoffs(monkeypatch)
+    for threshold, bound in (
+        (config.CC_DRIVER_THRESHOLD, extra), (0, 1 + extra), (_HANDOFF_THRESHOLD, extra)
+    ):
         # keep-lists take CC's default threshold from config
         monkeypatch.setattr(config, "CC_DRIVER_THRESHOLD", threshold)
+        handoffs.clear()
         before = _persistent_ids(sc)
         call().count()
         new = _persistent_ids(sc) - before
         assert len(new) <= bound, (name, threshold, new)
+        assert len(handoffs) == (1 if threshold else 0), (name, threshold, handoffs)
 
 
 def test_driver_path_labels_broadcast_from_one_partition(spark):
@@ -208,6 +248,17 @@ def test_driver_path_labels_broadcast_from_one_partition(spark):
     )
     cc = connected_components(edges)
     assert cc.rdd.getNumPartitions() == 1
+    # built JVM-side in one partition the planner knows: no Python RDD
+    # scan, and a count over the labels is one job with no exchange
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-label-count", "cc-label-count")
+    try:
+        assert cc.count() == 20
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-label-count")) == 1
+    assert "ExistingRDD" not in cc._jdf.queryExecution().executedPlan().toString()
     keep = keep_min_id(spark.range(0, 40), cc)
     plan = keep._jdf.queryExecution().executedPlan().executedPlan()
     joins = [n for n in _walk(plan, lambda n: n.children()) if n.nodeName().endswith("Join")]

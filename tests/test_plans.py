@@ -693,27 +693,32 @@ def test_connected_components_job_budget(spark):
     partitions: the driver path ran 4 jobs with a separate threshold count
     and 2 with the count observed by the input checkpoint; the distributed
     path ran 64 jobs with two joins per round and a separate convergence
-    query, and 27 with one observed checkpoint job per round. The call
-    leaves the caller's job description in place."""
+    query, and 27 with one observed checkpoint job per round. With the path
+    in both orientations (40 rows) and a threshold of 20, round 1 brings it
+    to 20 edges and CC hands off to the driver: the input checkpoint, round
+    1's 4 jobs and one collect. The call leaves the caller's job
+    description in place."""
     from redpajama_v2_processing_spark.operators.connected_components import (
         connected_components,
     )
 
     sc = spark.sparkContext
-    edges = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
+    path = [(i, i + 1) for i in range(20)]
+    edges = spark.createDataFrame(path, "src long, dst long")
+    both_ways = spark.createDataFrame(path + [(b, a) for a, b in path], "src long, dst long")
     jobs = {}
     try:
-        for threshold in (None, 0):
+        for threshold, df in ((None, edges), (0, edges), (20, both_ways)):
             group = f"cc-job-budget-{threshold}"
             sc.setJobGroup(group, group)
-            connected_components(edges, driver_threshold=threshold)
+            connected_components(df, driver_threshold=threshold)
             jobs[threshold] = len(sc.statusTracker().getJobIdsForGroup(group))
             # the caller's job description outlives the per-round ones
             assert sc.getLocalProperty("spark.job.description") == group
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
-    assert jobs == {None: 2, 0: 27}, jobs
+    assert jobs == {None: 2, 0: 27, 20: 6}, jobs
 
 
 def _walk(node, children):
