@@ -44,8 +44,8 @@ def _star_round(edges: DataFrame) -> DataFrame:
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
     )
     # both small-star outputs from one generator, not a union: a union of
-    # two subtrees over one window plan trips the Catalyst bug noted in
-    # minhash_lsh.salted_bucket_edges
+    # two subtrees over one window plan trips a Catalyst
+    # DeduplicateRelations bug under AQE in Spark 4.1
     return (
         large.withColumn("m", F.min("dst").over(by_src))
         .select(F.explode(F.array(
@@ -143,8 +143,8 @@ def connected_components(
     sc = edges.sparkSession.sparkContext
     pre_existing = _persistent_ids(sc)
     # NO distinct here: every in-repo edge producer already emits distinct
-    # pairs (candidate_edges/salted_bucket_edges/simhash/winnow/jaccard all
-    # end in .distinct(), the verify paths consume distinct candidates), so
+    # pairs (candidate_edges/simhash/winnow/jaccard all end in .distinct(),
+    # the verify paths consume distinct candidates), so
     # the old upfront distinct was one full exchange of the edge set per
     # dedup query for nothing. Duplicate edges are tolerated everywhere
     # downstream: union-find is idempotent, the star rounds distinct
@@ -241,13 +241,23 @@ def dedup_keep_min_id(
     return keep_min_id(ids, cc)
 
 
-def keep_min_id(ids: DataFrame, cc: DataFrame) -> DataFrame:
-    """DF(id): the dedup family's shared keep rule — ids whose component
-    root is themselves. ``ids`` must be a single-column (id) frame of
-    every candidate id; ids absent from the label frame (singletons and
-    unsignable inputs) keep themselves via the null-root coalesce."""
-    return (
-        ids.join(cc, "id", "left")
-        .where(F.coalesce("root", F.col("id")) == F.col("id"))
-        .select("id")
-    )
+def keep_min_id(rows: DataFrame, cc: DataFrame, key: str = "id") -> DataFrame:
+    """``rows`` minus the duplicates: the dedup family's one keep rule.
+
+    ``rows`` holds every candidate (its ``key`` column the CC node id; any
+    other columns ride along); ``cc`` is connected_components' DF(id,
+    root). A row is dropped iff its key is on the drop-list
+    ``cc.where(root != id)``, so every component keeps its minimum id, and
+    singletons and unsignable inputs (absent from the labels) keep
+    themselves. NULL keys are dropped: no component can claim them.
+
+    A left-anti join is estimated at its left side's size, so a semi-join
+    against the keep-list downstream sees a keep-list no larger than its
+    candidates and plans a broadcast from the start. A left join against
+    the labels (the ``coalesce(root, id) == id`` form) is estimated at the
+    product of both sides' sizes and pushed such a semi-join onto a
+    SortMergeJoin that only AQE demoted, after both its shuffle-map stages
+    had run. The labels' broadcast hint (driver path) reaches the anti
+    join through the filter."""
+    drop = cc.where(F.col("root") != F.col("id")).select(F.col("id").alias(key))
+    return rows.where(F.col(key).isNotNull()).join(drop, key, "left_anti")

@@ -9,13 +9,14 @@ buckets. Spark realization:
   posexplode(bands) -> shuffle on (band_idx, band_hash)  ["band-bucket shuffle"]
   window-min per bucket -> star edges (id, bucket_min)
   connected components (large-star/small-star)
-  keep = ids whose component root == id          (src/minhashlsh.py:140,169)
+  keep = ids minus the drop-list (root != id)     (src/minhashlsh.py:140,169)
 
 MinHash, RPv2 pre-banded, SimHash and embedding bands share the schema
 DF(id, band_idx, band_hash[, payload]); `candidate_edges` is their one
-star-edge builder. Skew note: star edges are linear in bucket size, but a
-hot (band_idx, band_hash) bucket is still one window partition on one
-reducer, salted or not (see `salted_bucket_edges`).
+star-edge builder (`salted_bucket_edges` is an alias kept for old callers:
+its salt column split no bucket). Skew note: star edges are linear in
+bucket size, but a hot (band_idx, band_hash) bucket is still one window
+partition on one reducer.
 """
 
 from __future__ import annotations
@@ -219,40 +220,18 @@ def cap_bucket_width(bands_df: DataFrame, max_bucket: int | None) -> DataFrame:
 
 
 def salted_bucket_edges(bands_df: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Salted variant: split each (band,hash) bucket into
-    ``salt_buckets`` salt groups, take per-group mins, then link the group
-    mins through the global bucket min. Connectivity is identical. It does
-    NOT shrink the per-reducer working set: one (band_idx, band_hash)
-    Exchange feeds both windows, the ``_bmin`` window buffers the whole
-    bucket, and ``_salt`` rides the band shuffle
-    (plans/r07/salted_edges_subplan_after.txt)."""
-    w_g = Window.partitionBy("band_idx", "band_hash", "_salt")
-    w_b = Window.partitionBy("band_idx", "band_hash")
-    # _bmin FIRST: the coarse (band, hash) exchange it forces also
-    # satisfies the salted window's ClusteredDistribution (its keys are a
-    # superset), so the _gmin window needs only a re-sort — one Exchange
-    # for both windows instead of two (guide §2.4; plans/r07/*salted*).
-    x = (
-        bands_df.withColumn("_salt", F.pmod(F.xxhash64("id"), F.lit(salt_buckets)))
-        .withColumn("_bmin", F.min("id").over(w_b))
-        .withColumn("_gmin", F.min("id").over(w_g))
-    )
-    # one edge per row: members link to their salt-group min; the group
-    # leader (id == _gmin) links its group min to the bucket min. Single
-    # pass, no union (a union of two subtrees sharing this window plan
-    # trips a Catalyst DeduplicateRelations bug under AQE in Spark 4.1).
-    edge = F.when(
-        F.col("id") != F.col("_gmin"),
-        F.struct(F.col("id").alias("src"), F.col("_gmin").alias("dst")),
-    ).when(
-        F.col("_gmin") != F.col("_bmin"),
-        F.struct(F.col("_gmin").alias("src"), F.col("_bmin").alias("dst")),
-    )
-    return (
-        x.select(edge.alias("_e"))
-        .where(F.col("_e").isNotNull())
-        .select("_e.src", "_e.dst")
-        .distinct()
+    """:func:`candidate_edges` under the old salted builder's name."""
+    return candidate_edges(bands_df)
+
+
+def _fuzzy_cc(
+    docs: DataFrame, id_col: str, text_col: str, cfg: dict, base: str,
+    cc_driver_threshold: int | None,
+) -> DataFrame:
+    """DF(id, root): CC labels of the docs that have a near-duplicate."""
+    bands = minhash_bands(docs, id_col, text_col, cfg, base)
+    return connected_components(
+        candidate_edges(bands), driver_threshold=cc_driver_threshold
     )
 
 
@@ -262,13 +241,10 @@ def fuzzy_dedup_labels(
     text_col: str = "text",
     cfg: dict = ORACLE_MINHASH,
     base: str = "md5",
-    salted: bool = False,
     cc_driver_threshold: int | None = None,
 ) -> DataFrame:
     """DF(id, root): component root per doc id (root==id for singletons)."""
-    bands = minhash_bands(docs, id_col, text_col, cfg, base)
-    edges = salted_bucket_edges(bands) if salted else candidate_edges(bands)
-    cc = connected_components(edges, driver_threshold=cc_driver_threshold)
+    cc = _fuzzy_cc(docs, id_col, text_col, cfg, base, cc_driver_threshold)
     ids = docs.select(F.col(id_col).alias("id"))
     return ids.join(cc, "id", "left").select(
         "id", F.coalesce("root", F.col("id")).alias("root")
@@ -281,13 +257,12 @@ def dedup_cluster_sizes(
     text_col: str = "text",
     cfg: dict = ORACLE_MINHASH,
     base: str = "md5",
-    salted: bool = False,
 ) -> DataFrame:
     """DF(cluster_size, n_clusters): near-dup component-size histogram
     (singletons included) — the dedup monitoring surface (how much mass
     sits in big boilerplate clusters vs pairs). Two grouped counts over
     the label frame; the histogram is tiny at any corpus size."""
-    labels = fuzzy_dedup_labels(docs, id_col, text_col, cfg, base, salted)
+    labels = fuzzy_dedup_labels(docs, id_col, text_col, cfg, base)
     sizes = labels.groupBy("root").agg(F.count("*").alias("cluster_size"))
     return sizes.groupBy("cluster_size").agg(
         F.count("*").cast("long").alias("n_clusters")
@@ -304,11 +279,11 @@ def fuzzy_dedup_keep_ids(
     cc_driver_threshold: int | None = None,
 ) -> DataFrame:
     """DF(id): the keep-list — one doc (the min id) per near-dup component,
-    singletons included. Mirrors src/minhashlsh.py:169 (keep root==id)."""
-    labels = fuzzy_dedup_labels(
-        docs, id_col, text_col, cfg, base, salted, cc_driver_threshold
-    )
-    return labels.where(F.col("root") == F.col("id")).select("id")
+    singletons included. Mirrors src/minhashlsh.py:169 (keep root==id)
+    through :func:`keep_min_id`. ``salted`` is accepted and ignored: every
+    edge build is :func:`candidate_edges`."""
+    cc = _fuzzy_cc(docs, id_col, text_col, cfg, base, cc_driver_threshold)
+    return keep_min_id(docs.select(F.col(id_col).alias("id")), cc)
 
 
 def fuzzy_dedup_keep_best(
@@ -318,7 +293,6 @@ def fuzzy_dedup_keep_best(
     text_col: str = "text",
     cfg: dict = ORACLE_MINHASH,
     base: str = "md5",
-    salted: bool = False,
     cc_driver_threshold: int | None = None,
 ) -> DataFrame:
     """DF(id): one doc per near-dup component — the member with the
@@ -340,7 +314,7 @@ def fuzzy_dedup_keep_best(
     set), never corpus-sized.
     """
     labels = fuzzy_dedup_labels(
-        docs, id_col, text_col, cfg, base, salted, cc_driver_threshold
+        docs, id_col, text_col, cfg, base, cc_driver_threshold
     )
     scored = docs.select(F.col(id_col).alias("id"), score.alias("_score")).join(
         labels, "id"
@@ -406,7 +380,6 @@ def incremental_fuzzy_keep_ids(
     cfg: dict = ORACLE_MINHASH,
     base: str = "md5",
     history_bands: DataFrame | None = None,
-    salted: bool = False,
     cc_driver_threshold: int | None = None,
 ) -> DataFrame:
     """DF(id): ids of ``new_docs`` kept after incremental fuzzy dedup
@@ -447,10 +420,9 @@ def incremental_fuzzy_keep_ids(
         .localCheckpoint(eager=True)
     )
     surv_bands = nb.join(hit, "id", "left_anti")
-    edges = (
-        salted_bucket_edges(surv_bands) if salted else candidate_edges(surv_bands)
+    cc = connected_components(
+        candidate_edges(surv_bands), driver_threshold=cc_driver_threshold
     )
-    cc = connected_components(edges, driver_threshold=cc_driver_threshold)
     _unpersist(sc, staged_nb)
     ids = new_docs.select(F.col(id_col).alias("id")).join(hit, "id", "left_anti")
     return keep_min_id(ids, cc)

@@ -1575,11 +1575,10 @@ bands AS (
 
 def q_fuzzy_dedup_prod(cfg=None, base: str = "xxhash") -> str:
     """Keep-list of the production fuzzy-dedup plan (117 perms / 9 bands /
-    salted edges / distributed-CC contract): the deployed xxhash64 base
-    hash by default, md5 for fuzzy_dedup_prod_checked. Salted star edges
-    yield the same connected components as plain star edges (every bucket
-    member stays linked through the bucket min), so one recursive CTE
-    covers both edge constructions."""
+    star edges / distributed-CC contract): the deployed xxhash64 base
+    hash by default, md5 for fuzzy_dedup_prod_checked. Star edges link
+    every bucket member through the bucket min, so one recursive CTE
+    yields the same connected components."""
     if cfg is None:
         from .config import PROD_MINHASH as cfg
     return f"""

@@ -16,9 +16,9 @@ from ..functions.langid import STAGED, langid_cols, stage_with_hits
 from ..functions.scrub import scrub_pii
 from ..functions.signals import signal_cols
 from ..functions.text import fingerprint_int
-from ..operators.connected_components import connected_components
+from ..operators.connected_components import connected_components, keep_min_id
 from ..operators.exact_dedup import exact_keep_ids
-from ..operators.minhash_lsh import minhash_bands, salted_bucket_edges
+from ..operators.minhash_lsh import candidate_edges, minhash_bands
 from ..operators.quality_filter import with_quality_label
 from ..config import PROD_MINHASH
 from ..tableio import Stage
@@ -86,21 +86,13 @@ def corpus_stages(id_col: str = "doc_id", text_col: str = "text",
         )
 
     def fuzzy(df: DataFrame) -> DataFrame:
-        # ONE left join against the (dup-cluster-sized) CC label frame:
-        # root == id (or no root) keeps the doc — the keep rule of
-        # fuzzy_dedup_keep_ids without its second corpus-wide semi join.
-        # Driver-path labels carry a broadcast hint, so the join does not
-        # shuffle ``df``.
+        # keep_min_id straight over the rows: ONE anti join against the
+        # (dup-cluster-sized) CC drop-list, without fuzzy_dedup_keep_ids'
+        # second corpus-wide semi join. Driver-path labels carry a
+        # broadcast hint, so the join does not shuffle ``df``.
         # ``df`` is read twice (bands + join): fused runners persist it.
         bands = minhash_bands(df, id_col, text_col, PROD_MINHASH, "xxhash")
-        cc = connected_components(salted_bucket_edges(bands)).withColumnRenamed(
-            "id", id_col
-        )
-        return (
-            df.join(cc, id_col, "left")
-            .where(F.coalesce("root", F.col(id_col)) == F.col(id_col))
-            .drop("root")
-        )
+        return keep_min_id(df, connected_components(candidate_edges(bands)), id_col)
 
     return [
         Stage(name, fn, partition_by, derive_date_from)
@@ -118,7 +110,9 @@ def full_pipeline(docs: DataFrame, id_col: str = "doc_id",
     The exact survivors are persisted once, since the fuzzy stage reads
     them twice. AQE owns the cache's partition count (the session lets it
     coalesce cached plans), and on the driver CC path the keep join
-    broadcasts the CC labels, so the survivors are not shuffled again.
+    broadcasts the CC drop-list (``keep_min_id``: the labels whose root is
+    not themselves, anti-joined), so the survivors are not shuffled again
+    and the result is estimated no larger than the survivors.
     The labels number at most 2 x ``CC_DRIVER_THRESHOLD`` rows also when CC
     hands off after star rounds: the collected round has at most that many
     edges and every labelled node is on one of them. ``eager=True`` (default)

@@ -585,19 +585,11 @@ def q_fuzzy_dedup_keep(spark, sf_dir):
     )
 
 
-def q_fuzzy_dedup_salted(spark, sf_dir):
-    """Same components as fuzzy_dedup_keep through the skew-capped salted
-    edge construction — oracle-checked that salting preserves the keep-set."""
-    return fuzzy_dedup_keep_ids(_docs(spark, sf_dir), "doc_id", salted=True).select(
-        F.col("id").alias("doc_id")
-    )
-
-
 def q_fuzzy_dedup_distributed(spark, sf_dir):
     """Forces the large-star/small-star distributed CC fixpoint
     (cc_driver_threshold=0): the 1000-executor path, oracle-checked."""
     return fuzzy_dedup_keep_ids(
-        _docs(spark, sf_dir), "doc_id", salted=True, cc_driver_threshold=0
+        _docs(spark, sf_dir), "doc_id", cc_driver_threshold=0
     ).select(F.col("id").alias("doc_id"))
 
 
@@ -809,10 +801,10 @@ def q_incremental_exact_keep(spark, sf_dir):
 
 def q_fuzzy_dedup_prod_checked(spark, sf_dir):
     """The full production plan shape (117 perms, 9 bands, universal-hash
-    permutations, salted edges) with the md5 base hash so DuckDB can verify
+    permutations, star edges) with the md5 base hash so DuckDB can verify
     it end-to-end. Only the base string hash differs from fuzzy_dedup_prod."""
     return fuzzy_dedup_keep_ids(
-        _docs(spark, sf_dir), "doc_id", cfg=PROD_MINHASH, base="md5", salted=True,
+        _docs(spark, sf_dir), "doc_id", cfg=PROD_MINHASH, base="md5",
     ).select(F.col("id").alias("doc_id"))
 
 
@@ -855,7 +847,7 @@ def q_rpv2_pre_banded_keep(spark, sf_dir):
         did.alias("id_int"),
         F.array(*[band(b) for b in range(9)]).alias("signature"),
     )
-    return rpv2_keep_ids(sigs, salted=True).select(
+    return rpv2_keep_ids(sigs).select(
         F.col("id_int").cast("long").alias("doc_id"), "id"
     )
 
@@ -1680,7 +1672,7 @@ def q_ann_multiprobe_topk(spark, sf_dir):
 
 def q_fuzzy_dedup_prod(spark, sf_dir):
     return fuzzy_dedup_keep_ids(
-        _docs(spark, sf_dir), "doc_id", cfg=PROD_MINHASH, base="xxhash", salted=True
+        _docs(spark, sf_dir), "doc_id", cfg=PROD_MINHASH, base="xxhash"
     ).select(F.col("id").alias("doc_id"))
 
 
@@ -1705,19 +1697,22 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "jaccard_sim_histogram": q_jaccard_sim_histogram,
     "source_overlap": q_source_overlap,
     "bm25_topk": q_bm25_topk,
-    # --- implementation changed: CC driver hand-off -----------------------
+    # --- implementation changed: CC driver hand-off, one star-edge builder,
+    # one drop-list keep rule ---------------------------------------------
     # (every connected_components caller: after each star round whose edge
     # count is at or under the driver threshold, CC collects that round and
-    # union-finds it on the driver. The fuzzy_dedup_* family and
-    # incremental_fuzzy_keep / dedup_cluster_sizes also take the vectorized
-    # MinHash signature; the MinHash and embedding keep-lists the one LSH
-    # kernel; fuzzy_dedup_prod is oracle-checked with the xxhash64 SQL twin)
+    # union-finds it on the driver. Every MinHash/RPv2 edge build is
+    # candidate_edges (fuzzy_dedup_salted now runs fuzzy_dedup_keep), and
+    # every min-id keep-list is keep_min_id's anti-join against the CC
+    # drop-list. The fuzzy_dedup_* family and incremental_fuzzy_keep /
+    # dedup_cluster_sizes also take the vectorized MinHash signature;
+    # fuzzy_dedup_prod is oracle-checked with the xxhash64 SQL twin)
     "fuzzy_dedup_keep_longest": q_fuzzy_dedup_keep_longest,
     "incremental_fuzzy_keep": q_incremental_fuzzy_keep,
     "dedup_cluster_sizes": q_dedup_cluster_sizes,
     "fuzzy_dedup_prod_checked": q_fuzzy_dedup_prod_checked,
     "fuzzy_dedup_prod": q_fuzzy_dedup_prod,
-    "fuzzy_dedup_salted": q_fuzzy_dedup_salted,
+    "fuzzy_dedup_salted": q_fuzzy_dedup_keep,
     "fuzzy_dedup_distributed": q_fuzzy_dedup_distributed,
     "fuzzy_dedup_keep": q_fuzzy_dedup_keep,
     "ngram_jaccard_dedup_keep": q_ngram_jaccard_dedup_keep,
@@ -1932,7 +1927,7 @@ ORACLES: dict[str, str] = {
     "fuzzy_dedup_keep": oracle.q_fuzzy_dedup_keep(),
     "fuzzy_dedup_keep_longest": oracle.q_fuzzy_dedup_keep_longest(),
     "bm25_topk": oracle.q_bm25_topk(query=BM25_QUERY),
-    # salted edges / distributed CC produce the identical keep-set
+    # fuzzy_dedup_keep under its old name; distributed CC: same keep-set
     "fuzzy_dedup_salted": oracle.q_fuzzy_dedup_keep(),
     "fuzzy_dedup_distributed": oracle.q_fuzzy_dedup_keep(),
     "fuzzy_dedup_prod_checked": oracle.q_fuzzy_dedup_prod(base="md5"),

@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.connected_components import connected_components
-from ..operators.minhash_lsh import candidate_edges, salted_bucket_edges
+from ..operators.connected_components import connected_components, keep_min_id
+from ..operators.minhash_lsh import candidate_edges
 
 # reference band counts per similarity level (src/minhashlsh.py:101)
 RPV2_BAND_COUNTS: dict[str, int] = {"0.7": 14, "0.8": 9, "0.9": 5, "1.0": 1}
@@ -95,17 +95,12 @@ def rpv2_keep_ids(signatures: DataFrame, salted: bool = False) -> DataFrame:
     ``id`` is the reference's STRING document id (its keep-lists and
     downstream joins key on it, src/minhashlsh.py:171-188); ``id_int``
     rides along in its original type (long, or decimal(20,0) for uint64
-    files) for numeric consumers.
+    files) for numeric consumers. ``salted`` is accepted and ignored:
+    the edges are always :func:`candidate_edges`' star edges.
     """
-    bands = pre_banded_bands(signatures)
-    edges = salted_bucket_edges(bands) if salted else candidate_edges(bands)
-    cc = connected_components(edges).withColumnRenamed("id", "_cc_id")
+    cc = connected_components(candidate_edges(pre_banded_bands(signatures)))
     keyed = signatures.select("id", "id_int", _cc_key(signatures).alias("_k"))
-    return (
-        keyed.join(cc, keyed["_k"] == cc["_cc_id"], "left")
-        .where(F.coalesce("root", F.col("_k")) == F.col("_k"))
-        .select("id", "id_int")
-    )
+    return keep_min_id(keyed, cc, "_k").select("id", "id_int")
 
 
 def export_keep_list_jsonl(

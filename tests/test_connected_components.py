@@ -4,8 +4,11 @@ graph shapes (path graphs are the worst case for star algorithms)."""
 from __future__ import annotations
 
 import random
+from collections import Counter
+from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
 from redpajama_v2_processing_spark.operators.connected_components import (
     connected_components,
@@ -267,3 +270,86 @@ def test_driver_path_labels_broadcast_from_one_partition(spark):
     ids_side = [n.nodeName() for n in _walk(joins[0].left(), lambda n: n.children())]
     assert "Exchange" not in ids_side, ids_side
     assert {r.id for r in keep.collect()} == set(range(0, 20, 2)) | set(range(20, 40))
+
+
+def _left_join_keep(rows, cc, key="id"):
+    """The keep rule keep_min_id replaced: left join the labels and keep
+    ``coalesce(root, key) == key``."""
+    labels = cc.withColumnRenamed("id", "_cc_id")
+    return (
+        rows.join(labels, rows[key] == labels["_cc_id"], "left")
+        .where(F.coalesce("root", F.col(key)) == F.col(key))
+        .select(*rows.columns)
+    )
+
+
+def _bag(df):
+    return Counter(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("threshold", [None, 0])
+def test_drop_list_keep_equals_left_join_rule(spark, threshold):
+    """keep_min_id's anti-join against the drop-list keeps exactly the rows
+    the left-join rule kept, on the driver path (default threshold) and the
+    distributed one (0): component minima, singletons absent from the
+    labels, repeated rows as often as they came, extreme ids, and no NULL
+    id."""
+    from redpajama_v2_processing_spark.operators.connected_components import (
+        keep_min_id,
+    )
+
+    lo, hi = -(2**63), 2**63 - 1
+    rng = random.Random(5)
+    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
+    edges += [(lo, 3), (hi, 3), (hi - 1, lo + 1)]
+    cc = connected_components(
+        spark.createDataFrame(edges, "src long, dst long"), driver_threshold=threshold
+    )
+    ids = list(range(80)) + [lo, hi, hi - 1, lo + 1, 7, 7, 70, 70, None, None]
+    rows = spark.createDataFrame([(i, f"r{i}") for i in ids], "id long, tag string")
+    got = _bag(keep_min_id(rows, cc))
+    assert got == _bag(_left_join_keep(rows, cc))
+    roots = _uf_roots(edges)
+    want = Counter(
+        (i, f"r{i}") for i in ids if i is not None and roots.get(i, i) == i
+    )
+    assert got == want
+
+
+@pytest.mark.parametrize("threshold", [None, 0])
+def test_rpv2_keep_ids_uint64_equals_left_join_rule(spark, monkeypatch, threshold):
+    """rpv2_keep_ids through keep_min_id on uint64 ids read as
+    decimal(20,0), both above and below 2^63: the same (id, id_int) rows
+    as the left-join rule over the shifted CC key, unsignable docs kept
+    and a NULL id_int dropped."""
+    from redpajama_v2_processing_spark import config
+    from redpajama_v2_processing_spark.operators.minhash_lsh import candidate_edges
+    from redpajama_v2_processing_spark.sources.rpv2 import (
+        _cc_key, pre_banded_bands, rpv2_keep_ids,
+    )
+
+    if threshold is not None:
+        monkeypatch.setattr(config, "CC_DRIVER_THRESHOLD", threshold)
+    top = 2**64 - 1
+    rows = []
+    for i in range(40):
+        id_int = top - i if i % 2 else i
+        sig = None if i % 13 == 12 else [
+            f"{b}#{i % 6 if b < 2 else i}".encode() for b in range(4)
+        ]
+        rows.append((f"doc{i}", Decimal(id_int), sig))
+    rows.append(("docnull", None, None))
+    sigs = spark.createDataFrame(
+        rows, "id string, id_int decimal(20,0), signature array<binary>"
+    )
+    got = _bag(rpv2_keep_ids(sigs))
+    cc = connected_components(candidate_edges(pre_banded_bands(sigs)))
+    keyed = sigs.select("id", "id_int", _cc_key(sigs).alias("_k"))
+    assert got == _bag(_left_join_keep(keyed, cc, "_k").select("id", "id_int"))
+    # docs sharing i % 6 form one cluster: an even class keeps its
+    # smallest i, an odd class (id_int = 2^64 - 1 - i) its largest; docs
+    # with a null signature (i % 13 == 12) are singletons
+    assert {r[0] for r in got} == {
+        "doc0", "doc2", "doc4", "doc37", "doc39", "doc35",
+        "doc12", "doc25", "doc38",
+    }

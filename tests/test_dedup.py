@@ -101,10 +101,20 @@ def test_fuzzy_dedup_partition_invariance(spark):
 
 
 def test_fuzzy_dedup_salted_equals_unsalted(spark):
+    """The salted_bucket_edges name (kept for old callers) builds the
+    same keep-set as fuzzy_dedup_keep_ids."""
+    from redpajama_v2_processing_spark.operators.connected_components import (
+        connected_components, keep_min_id,
+    )
+    from redpajama_v2_processing_spark.operators.minhash_lsh import (
+        minhash_bands, salted_bucket_edges,
+    )
+
     df = _chain_docs(spark)
-    a = sorted(r.id for r in fuzzy_dedup_keep_ids(df, "doc_id", salted=False).collect())
-    b = sorted(r.id for r in fuzzy_dedup_keep_ids(df, "doc_id", salted=True).collect())
-    assert a == b
+    a = sorted(r.id for r in fuzzy_dedup_keep_ids(df, "doc_id").collect())
+    cc = connected_components(salted_bucket_edges(minhash_bands(df, "doc_id")))
+    ids = df.select(F.col("doc_id").alias("id"))
+    assert a == sorted(r.id for r in keep_min_id(ids, cc).collect())
 
 
 def test_fuzzy_dedup_idempotent(spark):
@@ -120,7 +130,7 @@ def _prod_keep(df, **kw):
     return sorted(
         r.id
         for r in fuzzy_dedup_keep_ids(
-            df, "doc_id", cfg=PROD_MINHASH, salted=True, **kw
+            df, "doc_id", cfg=PROD_MINHASH, **kw
         ).collect()
     )
 

@@ -513,6 +513,45 @@ def test_full_pipeline_task_budget(spark, pages_small):
     assert (len(jobs), tasks) == (8, 11)
 
 
+def test_rpv2_keep_semi_join_broadcasts_before_aqe(spark, tmp_path):
+    """The initial (pre-AQE) plan of filter_fuzzy_duplicates over an
+    rpv2_keep_ids keep-list broadcasts the keep-list: no SortMergeJoin and
+    no shuffle Exchange. keep_min_id's anti join is estimated at its
+    candidates' size; with the left join + ``coalesce(root, id) == id``
+    rule the keep-list was estimated at the product of the candidates' and
+    the labels' sizes (~450 MB here, over the 64 MB broadcast threshold),
+    so the semi-join was planned as a SortMergeJoin that shuffled both
+    sides before AQE could demote it."""
+    from redpajama_v2_processing_spark.sources.rpv2 import (
+        filter_fuzzy_duplicates, rpv2_keep_ids,
+    )
+
+    n, did = 2000, F.col("id")
+    spark.range(n).select(
+        did.cast("string").alias("id"), did.alias("id_int"),
+        F.array(*[
+            F.encode(F.concat(F.lit(f"{b}#"), (did % 97 if b < 3 else did)
+                              .cast("string")), "utf-8")
+            for b in range(5)
+        ]).alias("signature"),
+    ).write.parquet(str(tmp_path / "minhash"))
+    spark.range(n).select(
+        did.cast("string").alias("id"), (did * 2).alias("x")
+    ).write.parquet(str(tmp_path / "signals"))
+    q = spark.read.parquet(str(tmp_path / "signals"))
+    keep = rpv2_keep_ids(spark.read.parquet(str(tmp_path / "minhash")))
+    out = filter_fuzzy_duplicates(q, keep, "id")
+    initial = out._jdf.queryExecution().executedPlan().initialPlan()
+    nodes = list(_walk(initial, lambda n: n.children()))
+    names = [n.nodeName() for n in nodes]
+    assert "SortMergeJoin" not in names, names
+    assert "Exchange" not in names, names
+    semi = [n for n in nodes if n.nodeName().endswith("Join")
+            and n.joinType().toString() == "LeftSemi"]
+    assert [n.nodeName() for n in semi] == ["BroadcastHashJoin"], names
+    assert {r.id for r in out.collect()} == {str(i) for i in range(97)}
+
+
 def test_domain_cap_windows_are_skew_capped(spark):
     """domain_cap must never window the full row stream on the bare domain
     key (one reducer per hot host): under-cap domains bypass windows via a
@@ -663,7 +702,7 @@ def test_full_pipeline_matches_explicit_composition(spark, pages_small):
     exact = exact_keep_ids(labeled, "doc_id")
     survivors = labeled.join(exact, "doc_id", "left_semi")
     fuzzy = fuzzy_dedup_keep_ids(
-        survivors, "doc_id", cfg=PROD_MINHASH, base="xxhash", salted=True
+        survivors, "doc_id", cfg=PROD_MINHASH, base="xxhash"
     ).withColumnRenamed("id", "doc_id")
     want = {
         r.doc_id for r in survivors.join(fuzzy, "doc_id", "left_semi").collect()
