@@ -3,10 +3,24 @@
 * ``cosine_topk``: brute-force exact top-k vs a query vector — the
   baseline. One scan, no shuffle except the final top-k (orderBy+limit is
   a TakeOrderedAndProject: per-partition heaps, driver merges k rows).
-* ``hyperplane_signature`` / ``ann_lsh_topk``: random-hyperplane LSH —
-  the scale path. Planes are derived deterministically from md5 (seeded),
-  so signatures are reproducible everywhere; candidates = query's bucket,
-  re-ranked exactly.
+* ``hyperplane_signature`` / ``ann_lsh_topk`` / ``ann_multiprobe_lsh_topk``:
+  random-hyperplane LSH — the scale path. Planes are derived
+  deterministically from md5 (seeded), so signatures are reproducible
+  everywhere; candidates = the query's probed buckets, re-ranked exactly.
+* The vector-quantizer family (IVF here, PQ in ``operators/pq``, SemDeDup
+  in ``operators/semdedup``) runs on four kernels:
+
+  - ``_nearest_cell``: each point's nearest cell — one broadcast join
+    against the cells and one grouped ``min`` of (distance, cid), ties to
+    the smaller cid; rounded cosine with norms staged per vector
+    and per cell (``functions/vectors.staged_cosine``), or a caller's
+    distance (PQ's integer-exact L2);
+  - ``_probe``: the query's ``n_probe`` nearest cells by rounded cosine,
+    ties to the smaller cell;
+  - ``_mean_vectors`` (over ``_component_means``): the exact_mean4 mean
+    vector per group;
+  - ``_lloyd``: Lloyd iterations over the two above, each iteration
+    checkpointed and the superseded one freed.
 
 Cosines are rounded (config.ANN_ROUND) before ranking so cross-engine
 float-sum noise (~1e-15) cannot flip orderings; ties break on vec_id.
@@ -15,17 +29,32 @@ float-sum noise (~1e-15) cannot flip orderings; ties break on vec_id.
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable, Sequence
 from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ANN_ROUND, ANN_TOPK
-from ..functions.vectors import cosine, round_half_up
+from ..functions.vectors import cosine, norm, round_half_up, staged_cosine
 
 
 def _lit_vec(vec: list[float]) -> Column:
     return F.array(*[F.lit(float(x)) for x in vec])
+
+
+def _topk(scored: DataFrame, score: str, id_col: str, k: int) -> DataFrame:
+    """The ``k`` rows of highest ``score``, ties to the smaller id."""
+    return scored.orderBy(F.col(score).desc(), F.col(id_col).asc()).limit(k)
+
+
+def _rerank(
+    cand: DataFrame, query_vec: list[float], id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """DF(id_col, cos): exact top-k of ``cand`` by rounded cosine to the
+    query, ties by id — the one rerank of every cosine top-k."""
+    c = round_half_up(cosine(F.col(vec_col), _lit_vec(query_vec)), ANN_ROUND)
+    return _topk(cand.select(F.col(id_col), c.alias("cos")), "cos", id_col, k)
 
 
 def cosine_topk(
@@ -36,12 +65,7 @@ def cosine_topk(
     k: int = ANN_TOPK,
 ) -> DataFrame:
     """DF(vec_id, cos) — exact top-k by rounded cosine, ties by id."""
-    c = round_half_up(cosine(F.col(vec_col), _lit_vec(query_vec)), ANN_ROUND)
-    return (
-        embeddings.select(F.col(id_col), c.alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _rerank(embeddings, query_vec, id_col, vec_col, k)
 
 
 @lru_cache(maxsize=16)
@@ -88,6 +112,31 @@ def hyperplane_signature(vec_col: Column, dim: int, nbits: int) -> Column:
     return out
 
 
+def _lsh_topk(
+    embeddings: DataFrame,
+    query_vec: list[float],
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    nbits: int,
+    k: int,
+    flips: Sequence[int],
+) -> DataFrame:
+    """Hyperplane-LSH top-k: the vectors whose signature is the query's
+    or the query's with one bit of ``flips`` flipped, reranked exactly."""
+    qdf = embeddings.sparkSession.createDataFrame(
+        [(query_vec,)], f"{vec_col}: array<float>"
+    )
+    qsig = qdf.select(
+        hyperplane_signature(F.col(vec_col), dim, nbits).alias("b")
+    ).collect()[0]["b"]
+    probes = [qsig] + [qsig ^ (1 << p) for p in flips]
+    sig = hyperplane_signature(F.col(vec_col), dim, nbits)
+    return _rerank(
+        embeddings.where(sig.isin(probes)), query_vec, id_col, vec_col, k
+    )
+
+
 def ann_lsh_topk(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -102,19 +151,7 @@ def ann_lsh_topk(
     At cluster scale the bucket column is a partition/bucketing key, so the
     probe prunes to one bucket's files instead of scanning the corpus.
     """
-    sig = hyperplane_signature(F.col(vec_col), dim, nbits)
-    bucketed = embeddings.withColumn("_bucket", sig)
-    qdf = bucketed.sparkSession.createDataFrame(
-        [(query_vec,)], f"{vec_col}: array<float>"
-    )
-    qsig = qdf.select(hyperplane_signature(F.col(vec_col), dim, nbits).alias("b")).collect()[0]["b"]
-    c = round_half_up(cosine(F.col(vec_col), _lit_vec(query_vec)), ANN_ROUND)
-    return (
-        bucketed.where(F.col("_bucket") == qsig)
-        .select(F.col(id_col), c.alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _lsh_topk(embeddings, query_vec, id_col, vec_col, dim, nbits, k, ())
 
 
 def banded_keys_frame(
@@ -213,21 +250,8 @@ def ann_multiprobe_lsh_topk(
     (still ~n(nbits+1)/2^nbits of the corpus). The probe set is nbits+1
     literals, so at warehouse scale it prunes to nbits+1 bucket partitions.
     """
-    sig = hyperplane_signature(F.col(vec_col), dim, nbits)
-    bucketed = embeddings.withColumn("_bucket", sig)
-    qdf = bucketed.sparkSession.createDataFrame(
-        [(query_vec,)], f"{vec_col}: array<float>"
-    )
-    qsig = qdf.select(
-        hyperplane_signature(F.col(vec_col), dim, nbits).alias("b")
-    ).collect()[0]["b"]
-    probes = [qsig] + [qsig ^ (1 << p) for p in range(nbits)]
-    c = round_half_up(cosine(F.col(vec_col), _lit_vec(query_vec)), ANN_ROUND)
-    return (
-        bucketed.where(F.col("_bucket").isin(probes))
-        .select(F.col(id_col), c.alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(id_col).asc())
-        .limit(k)
+    return _lsh_topk(
+        embeddings, query_vec, id_col, vec_col, dim, nbits, k, range(nbits)
     )
 
 
@@ -240,16 +264,14 @@ def cosine_verify(cand: DataFrame, vectors: DataFrame, threshold: float) -> Data
     candidates are repartitioned first: AQE would otherwise coalesce the
     byte-tiny frame and serialize the interpreted verify onto one core
     (20x wall blowup at the 50k fixture, BENCH.md r6)."""
-    from ..functions.vectors import norm as _vnorm
-    from ..functions.vectors import staged_cosine
     from .connected_components import verify_partitions
 
     cand = cand.repartition(verify_partitions(cand), "src", "dst")
     va = vectors.select(F.col("id").alias("src"), F.col("v").alias("_va")).withColumn(
-        "_na", _vnorm(F.col("_va"))
+        "_na", norm(F.col("_va"))
     )
     vb = vectors.select(F.col("id").alias("dst"), F.col("v").alias("_vb")).withColumn(
-        "_nb", _vnorm(F.col("_vb"))
+        "_nb", norm(F.col("_vb"))
     )
     cos = staged_cosine(
         F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"), ANN_ROUND
@@ -307,13 +329,10 @@ def embedding_near_dup_pairs(
     from .minhash_lsh import cap_bucket_width
 
     if band_bits is None:
-        from ..functions.vectors import norm as _vnorm
-        from ..functions.vectors import staged_cosine
-
         sig = hyperplane_signature(F.col(vec_col), dim, nbits)
         b = embeddings.select(
             F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), sig.alias("_bucket")
-        ).withColumn("_n", _vnorm(F.col("_v")))
+        ).withColumn("_n", norm(F.col("_v")))
         a = b.select(F.col("_id").alias("src"), F.col("_v").alias("_va"),
                      F.col("_n").alias("_na"), "_bucket")
         c = b.select(F.col("_id").alias("dst"), F.col("_v").alias("_vb"),
@@ -434,26 +453,130 @@ def exact_mean4(col: Column) -> Column:
     )
 
 
-def _centroid_vectors(
-    embeddings: DataFrame, label_col: str, vec_col: str
+def _component_means(
+    frame: DataFrame, keys: Sequence[str], vec_col: str = "v", out: str = "c"
 ) -> DataFrame:
-    """DF(label, cv): per-label mean vector via exact_mean4 so both
-    engines derive bit-identical centroids regardless of float summation
-    order (+0.0 normalizes -0.0)."""
+    """DF(*keys, pos, out): the exact_mean4 mean of each vector component
+    per group — posexplode + a two-level hash aggregation (partial means
+    map-side), so both engines derive bit-identical means regardless of
+    float summation order (+0.0 normalizes IEEE negative zero)."""
     return (
-        embeddings.select(
-            F.col(label_col).alias("label"),
-            F.posexplode(F.col(vec_col)).alias("pos", "x"),
-        )
-        .groupBy("label", "pos")
-        .agg((exact_mean4(F.col("x")) + 0.0).alias("c"))
-        .groupBy("label")
+        frame.select(*keys, F.posexplode(F.col(vec_col)).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg((exact_mean4(F.col("x")) + 0.0).alias(out))
+    )
+
+
+def _mean_vectors(
+    frame: DataFrame, keys: Sequence[str], vec_col: str = "v"
+) -> DataFrame:
+    """DF(*keys, cv): the exact mean vector per group (components
+    collected in position order)."""
+    return (
+        _component_means(frame, keys, vec_col)
+        .groupBy(*keys)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
             ).alias("cv")
         )
     )
+
+
+def _nearest_cell(
+    points: DataFrame,
+    cells: DataFrame,
+    keys: Sequence[str] = ("id",),
+    on: Sequence[str] = (),
+    dist: Callable[[Column, Column], Column] | None = None,
+) -> DataFrame:
+    """DF(*keys, cid, _d): each point DF(*keys, v) assigned to its nearest
+    cell DF(*on, cid, cv) of the same ``on`` group, ``_d`` its distance.
+
+    The default distance is the negated rounded cosine, with ``norm(v)``
+    staged once per point and ``norm(cv)`` once per cell
+    (functions/vectors.staged_cosine) so only the dot folds per (point,
+    cell); ``dist(v, cv)`` replaces it (PQ's integer-exact L2). The cells
+    broadcast and the argmin is ONE grouped ``min`` of the struct (_d,
+    cid), ties to the smaller cid: partial-agg friendly, so the exchange
+    carries one row per point (a row_number window would shuffle every
+    joined (point, cell) row)."""
+    if dist is None:
+        points = points.withColumn("_nv", norm(F.col("v")))
+        cells = cells.withColumn("_nc", norm(F.col("cv")))
+        d = -staged_cosine(
+            F.col("v"), F.col("cv"), F.col("_nv"), F.col("_nc"), ANN_ROUND
+        )
+    else:
+        d = dist(F.col("v"), F.col("cv"))
+    return (
+        points.join(F.broadcast(cells), list(on) or None)
+        .withColumn("_d", d)
+        .groupBy(*keys)
+        .agg(F.min(F.struct("_d", "cid")).alias("_w"))
+        .select(*keys, "_w.cid", "_w._d")
+    )
+
+
+def _probe(cells: DataFrame, query_vec: list[float], n_probe: int) -> DataFrame:
+    """DF(cid): the query's ``n_probe`` nearest cells by rounded cosine,
+    ties to the smaller cid."""
+    qcos = round_half_up(cosine(_lit_vec(query_vec), F.col("cv")), ANN_ROUND)
+    return _topk(cells.select("cid", qcos.alias("_qc")), "_qc", "cid", n_probe).select(
+        "cid"
+    )
+
+
+def _lloyd(
+    points: DataFrame,
+    cells: DataFrame,
+    iters: int,
+    keys: Sequence[str] = ("id",),
+    on: Sequence[str] = (),
+    dist: Callable[[Column, Column], Column] | None = None,
+) -> DataFrame:
+    """DF(*on, cid, cv): ``cells`` after ``iters`` Lloyd iterations over
+    ``points`` — assignment by :func:`_nearest_cell`, update by
+    :func:`_mean_vectors`. Lineage is cut per iteration with
+    localCheckpoint so the plan stays O(1) deep, and the superseded
+    iteration's checkpoint is freed (the classic iterative-checkpoint
+    slow leak — same hygiene as the CC fixpoint); the final cells stay
+    materialized for the caller. Cells that lose all members disappear."""
+    from .connected_components import _persistent_ids, _unpersist
+
+    sc = points.sparkSession.sparkContext
+    prev_ids: set[int] = set()
+    for _ in range(iters):
+        assign = _nearest_cell(points, cells, keys, on, dist).select(*keys, "cid")
+        before = _persistent_ids(sc)
+        cells = _mean_vectors(
+            points.join(assign, list(keys)), [*on, "cid"]
+        ).localCheckpoint()
+        _unpersist(sc, prev_ids)
+        prev_ids = _persistent_ids(sc) - before
+    return cells
+
+
+def _ivf_topk(
+    embeddings: DataFrame,
+    query_vec: list[float],
+    cells: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_probe: int,
+    k: int,
+) -> DataFrame:
+    """IVF-Flat top-k over ``cells`` DF(cid, cv): assign every vector to
+    its nearest cell, keep the query's ``n_probe`` nearest cells (a
+    broadcast semi-join), rerank those vectors exactly."""
+    points = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    assign = _nearest_cell(points, cells).select(F.col("id").alias(id_col), "cid")
+    # select only (id, vec) first: embeddings' own columns must not shadow
+    # the ASSIGNED cell in the probe semi-join
+    cand = embeddings.select(id_col, vec_col).join(assign, id_col).join(
+        F.broadcast(_probe(cells, query_vec, n_probe)), "cid", "left_semi"
+    )
+    return _rerank(cand, query_vec, id_col, vec_col, k)
 
 
 def ann_ivf_topk(
@@ -475,41 +598,11 @@ def ann_ivf_topk(
     prunes files. Everything is rounded at ANN_ROUND before ranking (ties
     on label/id) so the plan is engine-portable and oracle-checked.
     """
-    cent = F.broadcast(_centroid_vectors(embeddings, label_col, vec_col))
-    ccos = round_half_up(cosine(F.col(vec_col), F.col("cv")), ANN_ROUND)
-    # assignment argmax as ONE partial-agg-friendly aggregation:
-    # min_by over (-cos, label) == max cos, ties to the smallest label.
-    # (The previous row_number window shuffled all K*n joined rows on id;
-    # min_by combines map-side, so the exchange carries one row per id.)
-    assign = (
-        embeddings.select(id_col, vec_col)
-        .join(cent)
-        .withColumn("_ccos", ccos)
-        .groupBy(id_col)
-        .agg(
-            F.min_by(
-                "label", F.struct((-F.col("_ccos")).alias("a"), F.col("label").alias("b"))
-            ).alias("label")
-        )
+    cells = _mean_vectors(
+        embeddings.select(F.col(label_col).alias("cid"), F.col(vec_col).alias("v")),
+        ["cid"],
     )
-    qcos = round_half_up(cosine(_lit_vec(query_vec), F.col("cv")), ANN_ROUND)
-    probe = (
-        cent.select("label", qcos.alias("_qc"))
-        .orderBy(F.col("_qc").desc(), F.col("label").asc())
-        .limit(n_probe)
-        .select("label")
-    )
-    # select only (id, vec) first: embeddings' own label column must not
-    # shadow the ASSIGNED cell label in the probe semi-join
-    cand = embeddings.select(id_col, vec_col).join(assign, id_col).join(
-        F.broadcast(probe), "label", "left_semi"
-    )
-    c = round_half_up(cosine(F.col(vec_col), _lit_vec(query_vec)), ANN_ROUND)
-    return (
-        cand.select(F.col(id_col), c.alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _ivf_topk(embeddings, query_vec, cells, id_col, vec_col, n_probe, k)
 
 
 def kmeans_centroids(
@@ -527,66 +620,17 @@ def kmeans_centroids(
     Deterministic and engine-portable BY CONSTRUCTION, so the whole
     iterative algorithm is oracle-checkable: init = the k smallest ids'
     vectors; assignment = argmax ROUNDED cosine (ties to smallest cid,
-    the min_by grouped argmax — no window); update = exact_mean4 per
-    component (order-independent integer-exact means). Every iteration is
-    one broadcast join + two partial-agg-friendly aggregations; lineage is
-    cut per iteration with localCheckpoint so the plan stays O(1) deep.
-    Cells that lose all members disappear (k can shrink) — identically in
-    both engines.
+    :func:`_nearest_cell`); update = exact_mean4 per component
+    (:func:`_mean_vectors`), in :func:`_lloyd`. Cells that lose all
+    members disappear (k can shrink) — identically in both engines.
     """
-    from .connected_components import _persistent_ids, _unpersist
-
     emb = embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    cent = emb.orderBy("id").limit(k).select(
+    init = emb.orderBy("id").limit(k).select(
         F.col("id").alias("cid"), F.col("v").alias("cv")
     )
-    sc = embeddings.sparkSession.sparkContext
-    prev_ids: set[int] = set()
-    # vector norms precomputed ONCE (and centroid norms once per
-    # iteration, k rows): the inline cosine would re-fold norm(v) k times
-    # per vector and norm(cv) n times per centroid on the n*k assignment
-    # path — see functions/vectors.staged_cosine for the economics.
-    from ..functions.vectors import norm as _vnorm
-    from ..functions.vectors import staged_cosine
-
-    embn = emb.withColumn("_nv", _vnorm(F.col("v")))
-    for _ in range(iters):
-        centn = cent.withColumn("_nc", _vnorm(F.col("cv")))
-        ccos = staged_cosine(
-            F.col("v"), F.col("cv"), F.col("_nv"), F.col("_nc"), ANN_ROUND
-        )
-        assign = (
-            embn.join(F.broadcast(centn))
-            .withColumn("_c", ccos)
-            .groupBy("id")
-            .agg(
-                F.min_by(
-                    "cid", F.struct((-F.col("_c")).alias("a"), F.col("cid").alias("b"))
-                ).alias("cid")
-            )
-        )
-        before = _persistent_ids(sc)
-        cent = (
-            emb.join(assign, "id")
-            .select("cid", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg((exact_mean4(F.col("x")) + 0.0).alias("c"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-                ).alias("cv")
-            )
-            .localCheckpoint()
-        )
-        # free the superseded iteration's checkpoint blocks (the classic
-        # iterative-checkpoint slow leak — same hygiene as the CC fixpoint);
-        # the final centroids stay materialized for the caller.
-        _unpersist(sc, prev_ids)
-        prev_ids = _persistent_ids(sc) - before
-    return cent
+    return _lloyd(emb, init, iters)
 
 
 def kmeans_cells(
@@ -616,41 +660,10 @@ def ann_ivf_trained_topk(
 ) -> DataFrame:
     """IVF-Flat top-k over TRAINED cells: kmeans_centroids learns the
     coarse quantizer from the vectors (no label column needed), then the
-    usual IVF probe — assign every vector to its nearest cell (grouped
-    argmax, no window), probe the query's n_probe nearest cells, rerank
-    those vectors exactly. At warehouse scale the assigned cell is the
-    partition key and training cost amortizes over every query."""
-    cent = F.broadcast(
-        kmeans_centroids(embeddings, k_cells, iters, id_col, vec_col)
-    )
-    ccos = round_half_up(cosine(F.col(vec_col), F.col("cv")), ANN_ROUND)
-    assign = (
-        embeddings.select(id_col, vec_col)
-        .join(cent)
-        .withColumn("_ccos", ccos)
-        .groupBy(id_col)
-        .agg(
-            F.min_by(
-                "cid", F.struct((-F.col("_ccos")).alias("a"), F.col("cid").alias("b"))
-            ).alias("cid")
-        )
-    )
-    qcos = round_half_up(cosine(_lit_vec(query_vec), F.col("cv")), ANN_ROUND)
-    probe = (
-        cent.select("cid", qcos.alias("_qc"))
-        .orderBy(F.col("_qc").desc(), F.col("cid").asc())
-        .limit(n_probe)
-        .select("cid")
-    )
-    cand = embeddings.select(id_col, vec_col).join(assign, id_col).join(
-        F.broadcast(probe), "cid", "left_semi"
-    )
-    c = round_half_up(cosine(F.col(vec_col), _lit_vec(query_vec)), ANN_ROUND)
-    return (
-        cand.select(F.col(id_col), c.alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    same IVF probe as ann_ivf_topk. At warehouse scale the assigned cell
+    is the partition key and training cost amortizes over every query."""
+    cells = kmeans_centroids(embeddings, k_cells, iters, id_col, vec_col)
+    return _ivf_topk(embeddings, query_vec, cells, id_col, vec_col, n_probe, k)
 
 
 def label_centroids(
@@ -663,12 +676,8 @@ def label_centroids(
 
     posexplode + two-level hash agg: partial means map-side, tiny result.
     """
-    return (
-        embeddings.select(
-            F.col(label_col).alias("label"),
-            F.posexplode(F.col(vec_col)).alias("pos", "x"),
-        )
-        .groupBy("label", "pos")
-        # +0.0 normalizes IEEE negative zero
-        .agg((exact_mean4(F.col("x")) + 0.0).alias("centroid"))
+    return _component_means(
+        embeddings.select(F.col(label_col).alias("label"), F.col(vec_col).alias("v")),
+        ["label"],
+        out="centroid",
     )

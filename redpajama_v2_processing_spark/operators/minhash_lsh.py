@@ -312,12 +312,19 @@ def fuzzy_dedup_keep_best(
     row_number window partitioned by component root — partitions are
     cluster widths (bounded by the same bucket caps that bound the edge
     set), never corpus-sized.
+
+    The scored docs are left-joined straight to the CC labels (root
+    defaults to the id after the join), not to
+    :func:`fuzzy_dedup_labels`: without CBO its left join is sized at the
+    product of the ids and the labels, so the planner would broadcast the
+    corpus-wide scored side instead of the small labels.
     """
-    labels = fuzzy_dedup_labels(
-        docs, id_col, text_col, cfg, base, cc_driver_threshold
-    )
-    scored = docs.select(F.col(id_col).alias("id"), score.alias("_score")).join(
-        labels, "id"
+    cc = _fuzzy_cc(docs, id_col, text_col, cfg, base, cc_driver_threshold)
+    scored = (
+        docs.select(F.col(id_col).alias("id"), score.alias("_score"))
+        .where(F.col("id").isNotNull())
+        .join(cc, "id", "left")
+        .select("id", "_score", F.coalesce("root", F.col("id")).alias("root"))
     )
     w = Window.partitionBy("root").orderBy(
         F.col("_score").desc(), F.col("id").asc()

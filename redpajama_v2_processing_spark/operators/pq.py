@@ -29,7 +29,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ANN_TOPK
-from .ann import exact_mean4
+from .ann import (
+    _lit_vec, _lloyd, _nearest_cell, _probe, _topk, kmeans_centroids,
+)
 
 PQ_M = 4        # subspaces
 PQ_CODES = 16   # codes per subspace (a real deployment uses 256 = 1 byte)
@@ -88,49 +90,20 @@ def pq_codebooks(
     dim: int = 64,
 ) -> DataFrame:
     """DF(sub, cid, cv): per-subspace codebooks after ``iters``
-    deterministic Lloyd iterations. Init = the k_codes smallest ids'
-    subvectors (cid = source id); assignment = integer-exact L2 argmin
-    (ties to the smallest cid); update = exact_mean4 per component. All
-    subspaces train in the SAME jobs (sub is a grouping key, not a loop).
-    Codes that lose all members disappear — identically in both engines."""
-    from .connected_components import _persistent_ids, _unpersist
-
-    sv = subvector_frame(embeddings, id_col, vec_col, m, dim)
+    deterministic Lloyd iterations (ann._lloyd). Init = the k_codes
+    smallest ids' subvectors (cid = source id); assignment =
+    integer-exact L2 argmin (ties to the smallest cid); update =
+    exact_mean4 per component. All subspaces train in the SAME jobs (sub
+    is a grouping key, not a loop). Codes that lose all members
+    disappear — identically in both engines."""
+    sv = subvector_frame(embeddings, id_col, vec_col, m, dim).withColumnRenamed(
+        "sv", "v"
+    )
     init_ids = embeddings.select(F.col(id_col).alias("id")).orderBy("id").limit(k_codes)
     cb = sv.join(init_ids, "id").select(
-        "sub", F.col("id").alias("cid"), F.col("sv").alias("cv")
+        "sub", F.col("id").alias("cid"), F.col("v").alias("cv")
     )
-    sc = embeddings.sparkSession.sparkContext
-    prev_ids: set[int] = set()
-    for _ in range(iters):
-        d2 = _l2_mu(F.col("sv"), F.col("cv"))
-        assign = (
-            sv.join(F.broadcast(cb), "sub")
-            .withColumn("_d2", d2)
-            .groupBy("id", "sub")
-            .agg(
-                F.min_by(
-                    "cid", F.struct(F.col("_d2").alias("a"), F.col("cid").alias("b"))
-                ).alias("cid")
-            )
-        )
-        before = _persistent_ids(sc)
-        cb = (
-            sv.join(assign, ["id", "sub"])
-            .select("sub", "cid", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("sub", "cid", "pos")
-            .agg((exact_mean4(F.col("x")) + 0.0).alias("c"))
-            .groupBy("sub", "cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-                ).alias("cv")
-            )
-            .localCheckpoint()
-        )
-        _unpersist(sc, prev_ids)
-        prev_ids = _persistent_ids(sc) - before
-    return cb
+    return _lloyd(sv, cb, iters, keys=("id", "sub"), on=("sub",), dist=_l2_mu)
 
 
 def pq_encode(
@@ -143,18 +116,39 @@ def pq_encode(
 ) -> DataFrame:
     """DF(id, sub, cid): each vector's code per subspace (integer-exact
     L2 argmin against the trained codebooks, ties to the smallest cid)."""
-    sv = subvector_frame(embeddings, id_col, vec_col, m, dim)
-    d2 = _l2_mu(F.col("sv"), F.col("cv"))
-    return (
-        sv.join(F.broadcast(codebooks), "sub")
-        .withColumn("_d2", d2)
-        .groupBy("id", "sub")
-        .agg(
-            F.min_by(
-                "cid", F.struct(F.col("_d2").alias("a"), F.col("cid").alias("b"))
-            ).alias("cid")
-        )
+    sv = subvector_frame(embeddings, id_col, vec_col, m, dim).withColumnRenamed(
+        "sv", "v"
     )
+    return _nearest_cell(
+        sv, codebooks, keys=("id", "sub"), on=("sub",), dist=_l2_mu
+    ).select("id", "sub", "cid")
+
+
+def _adc_lut(
+    codebooks: DataFrame, query_vec: list[float], m: int, dim: int
+) -> DataFrame:
+    """DF(sub, cid, _qd): the query's ADC lookup table — the exact integer
+    dot of each query subvector with each code word of its subspace."""
+    d = dim // m
+    qlit = F.array(*[_lit_vec(query_vec[s * d : (s + 1) * d]) for s in range(m)])
+    return codebooks.select(
+        "sub", "cid",
+        _dot_mu(F.element_at(qlit, F.col("sub") + 1), F.col("cv")).alias("_qd"),
+    )
+
+
+def _adc_topk(
+    codes: DataFrame, lut: DataFrame, id_col: str, k: int
+) -> DataFrame:
+    """DF(id_col, score): top-k of the codes DF(id, sub, cid) by ADC score
+    (the lookups summed as an exact integer, divided once), ties by id."""
+    scored = (
+        codes.join(F.broadcast(lut), ["sub", "cid"])
+        .groupBy("id")
+        .agg((F.sum("_qd") / F.lit(1e12)).alias("score"))
+        .select(F.col("id").alias(id_col), "score")
+    )
+    return _topk(scored, "score", id_col, k)
 
 
 def ann_ivf_pq_topk(
@@ -178,54 +172,16 @@ def ann_ivf_pq_topk(
     key (files outside the probed cells are never read) and the scan
     touches code columns only — the two compressions compose: ~n_probe/K
     of the corpus, at m integers per vector."""
-    from ..functions.vectors import cosine, round_half_up
-    from .ann import _lit_vec, kmeans_centroids
-    from ..config import ANN_ROUND
-
-    cent = F.broadcast(
-        kmeans_centroids(embeddings, k_cells, cell_iters, id_col, vec_col)
+    cells = kmeans_centroids(embeddings, k_cells, cell_iters, id_col, vec_col)
+    points = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    cand = (
+        _nearest_cell(points, cells)
+        .join(F.broadcast(_probe(cells, query_vec, n_probe)), "cid", "left_semi")
+        .select("id")
     )
-    ccos = round_half_up(cosine(F.col(vec_col), F.col("cv")), ANN_ROUND)
-    assign = (
-        embeddings.select(id_col, vec_col)
-        .join(cent)
-        .withColumn("_c", ccos)
-        .groupBy(id_col)
-        .agg(
-            F.min_by(
-                "cid", F.struct((-F.col("_c")).alias("a"), F.col("cid").alias("b"))
-            ).alias("cid")
-        )
-    )
-    qcos = round_half_up(cosine(_lit_vec(query_vec), F.col("cv")), ANN_ROUND)
-    probe = (
-        cent.select("cid", qcos.alias("_qc"))
-        .orderBy(F.col("_qc").desc(), F.col("cid").asc())
-        .limit(n_probe)
-        .select("cid")
-    )
-    cand = assign.join(F.broadcast(probe), "cid", "left_semi").select(
-        F.col(id_col).alias("id")
-    )
-    d = dim // m
     cb = pq_codebooks(embeddings, id_col, vec_col, m, k_codes, pq_iters, dim)
     codes = pq_encode(embeddings, cb, id_col, vec_col, m, dim).join(cand, "id", "left_semi")
-    qsubs = [
-        [float(x) for x in query_vec[s * d : (s + 1) * d]] for s in range(m)
-    ]
-    qlit = F.array(*[F.array(*[F.lit(x) for x in qs]) for qs in qsubs])
-    lut = cb.select(
-        "sub", "cid",
-        _dot_mu(F.element_at(qlit, F.col("sub") + 1), F.col("cv")).alias("_qd"),
-    )
-    return (
-        codes.join(F.broadcast(lut), ["sub", "cid"])
-        .groupBy("id")
-        .agg((F.sum("_qd") / F.lit(1e12)).alias("score"))
-        .select(F.col("id").alias(id_col), "score")
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _adc_topk(codes, _adc_lut(cb, query_vec, m, dim), id_col, k)
 
 
 def ann_ivf_pq_residual_topk(
@@ -256,79 +212,45 @@ def ann_ivf_pq_residual_topk(
     micro-units^2 (sum of round(a*1e6)*round(b*1e6)), so assignment,
     residuals (computed on micro-unit-rounded components) and scores are
     exact integers — engine-identical, fully oracle-checkable."""
-    from ..functions.vectors import cosine, round_half_up
-    from .ann import _lit_vec, kmeans_centroids
-    from ..config import ANN_ROUND
-
-    cent = F.broadcast(
+    cells = F.broadcast(
         kmeans_centroids(embeddings, k_cells, cell_iters, id_col, vec_col)
     )
-    ccos = round_half_up(cosine(F.col(vec_col), F.col("cv")), ANN_ROUND)
-    assign = (
-        embeddings.select(id_col, vec_col)
-        .join(cent)
-        .withColumn("_c", ccos)
-        .groupBy(id_col)
-        .agg(
-            F.min_by(
-                "cid", F.struct((-F.col("_c")).alias("a"), F.col("cid").alias("b"))
-            ).alias("cid")
-        )
+    emb = embeddings.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
     # residuals on micro-unit-rounded components (exact in both engines):
     # r_i = (round(x_i*1e6) - round(c_i*1e6)) / 1e6
     resid = (
-        embeddings.select(id_col, F.col(vec_col).cast("array<double>").alias("_x"))
-        .join(assign, id_col)
-        .join(cent, "cid")
+        emb.join(_nearest_cell(emb, cells).select("id", "cid"), "id")
+        .join(cells, "cid")
         .select(
-            id_col, "cid",
+            "id", "cid",
             F.zip_with(
-                "_x", "cv", lambda x, c: (_mu(x) - _mu(c)).cast("double") / 1e6
+                "v", "cv", lambda x, c: (_mu(x) - _mu(c)).cast("double") / 1e6
             ).alias("_r"),
         )
     ).localCheckpoint(eager=True)
-    cb = pq_codebooks(resid, id_col, "_r", m, k_codes, pq_iters, dim)
-    codes = pq_encode(resid, cb, id_col, "_r", m, dim)
-    qcos = round_half_up(cosine(_lit_vec(query_vec), F.col("cv")), ANN_ROUND)
-    probe = (
-        cent.select("cid", qcos.alias("_qc"))
-        .orderBy(F.col("_qc").desc(), F.col("cid").asc())
-        .limit(n_probe)
-        .select("cid")
+    cb = pq_codebooks(resid, "id", "_r", m, k_codes, pq_iters, dim)
+    codes = pq_encode(resid, cb, "id", "_r", m, dim)
+    cell_dot = cells.select(
+        F.col("cid").alias("_cell"),
+        _dot_mu(_lit_vec(query_vec), F.col("cv")).alias("_cd"),
     )
-    qlitf = F.array(*[F.lit(float(x)) for x in query_vec])
-    cell_dot = cent.select(
-        "cid", _dot_mu(qlitf, F.col("cv")).alias("_cd")
-    )
-    d = dim // m
-    qsubs = [
-        [float(x) for x in query_vec[s * d : (s + 1) * d]] for s in range(m)
-    ]
-    qlit = F.array(*[F.array(*[F.lit(x) for x in qs]) for qs in qsubs])
-    lut = cb.select(
-        "sub", "cid",
-        _dot_mu(F.element_at(qlit, F.col("sub") + 1), F.col("cv")).alias("_qd"),
-    )
-    cand = (
-        codes.join(
-            resid.select(F.col(id_col).alias("id"), F.col("cid").alias("_cell")),
-            "id",
-        )
-        .join(F.broadcast(probe.select(F.col("cid").alias("_cell"))), "_cell", "left_semi")
-    )
-    return (
-        cand.join(F.broadcast(lut), ["sub", "cid"])
+    probe = _probe(cells, query_vec, n_probe).select(F.col("cid").alias("_cell"))
+    cand = codes.join(
+        resid.select("id", F.col("cid").alias("_cell")), "id"
+    ).join(F.broadcast(probe), "_cell", "left_semi")
+    scored = (
+        cand.join(F.broadcast(_adc_lut(cb, query_vec, m, dim)), ["sub", "cid"])
         .groupBy("id", "_cell")
         .agg(F.sum("_qd").alias("_rsum"))
-        .join(F.broadcast(cell_dot.select(F.col("cid").alias("_cell"), "_cd")), "_cell")
+        .join(F.broadcast(cell_dot), "_cell")
         .select(
             F.col("id").alias(id_col),
             ((F.col("_rsum") + F.col("_cd")) / F.lit(1e12)).alias("score"),
         )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
     )
+    return _topk(scored, "score", id_col, k)
 
 
 def ann_pq_topk(
@@ -348,22 +270,6 @@ def ann_pq_topk(
     value is order-independent and engine-identical). The scan side
     touches only the m code columns; the lookup table (m x k_codes rows)
     broadcasts. Ties break on id."""
-    d = dim // m
     cb = pq_codebooks(embeddings, id_col, vec_col, m, k_codes, iters, dim)
     codes = pq_encode(embeddings, cb, id_col, vec_col, m, dim)
-    qsubs = [
-        [float(x) for x in query_vec[s * d : (s + 1) * d]] for s in range(m)
-    ]
-    qlit = F.array(*[F.array(*[F.lit(x) for x in qs]) for qs in qsubs])
-    lut = cb.select(
-        "sub", "cid",
-        _dot_mu(F.element_at(qlit, F.col("sub") + 1), F.col("cv")).alias("_qd"),
-    )
-    return (
-        codes.join(F.broadcast(lut), ["sub", "cid"])
-        .groupBy("id")
-        .agg((F.sum("_qd") / F.lit(1e12)).alias("score"))
-        .select(F.col("id").alias(id_col), "score")
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _adc_topk(codes, _adc_lut(cb, query_vec, m, dim), id_col, k)

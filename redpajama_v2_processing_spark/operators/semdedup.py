@@ -14,7 +14,7 @@ Spark-first shape, end-to-end:
 
 * the coarse quantizer is the engine's deterministic spherical k-means
   (`operators/ann.kmeans_centroids`: broadcast centroids, grouped
-  `min_by` argmax assignment — no window, no collect);
+  argmin assignment (`ann._nearest_cell`) — no window, no collect);
 * the within-cell self-join carries ONLY (id, cid) — vectors never
   travel through the cell shuffle; the surviving candidate pairs re-join
   the vectors by id for the exact rounded-cosine verify;
@@ -42,8 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import ANN_ROUND
-from .ann import cosine_verify, kmeans_centroids
+from .ann import _nearest_cell, cosine_verify, kmeans_centroids
 from .connected_components import _persistent_ids, _unpersist, connected_components
 
 
@@ -100,50 +99,28 @@ def semdedup_assign(
     Malformed vectors (null or wrong length) are EXCLUDED before
     training and assignment — same contract as banded_keys_frame
     (operators/ann.py): a single over-length vector would otherwise
-    yield NULL zip_with cosines, and NULL sorts FIRST in the min_by
+    yield NULL zip_with cosines, and NULL sorts FIRST in the argmin
     struct ordering, poisoning a centroid and collapsing every vector
     into one cell on the next iteration. ``semdedup_keep`` keeps
     malformed vectors as singletons (they cannot be semantic dups of
     anything), mirroring the text dedups' null-signature guard.
 
-    One broadcast join against the k centroids + one grouped ``min_by``
-    argmax (partial-agg friendly — the exchange carries one row per id;
-    ``min_by`` over (-cos, cid) = max cosine, ties to the smallest cid,
-    the same assignment the Lloyd iterations themselves use).
+    The assignment is ann._nearest_cell, the argmin the Lloyd iterations
+    themselves use: one broadcast join against the k centroids + one
+    grouped ``min`` of (-cos, cid) (max rounded cosine, ties to the
+    smallest cid); ``ccos`` is the winner's cosine.
     """
     if dim is None:
         dim = _modal_dim(embeddings, vec_col)
     ok = embeddings.where(F.size(F.col(vec_col)) == dim)
     if k_cells is None:
         k_cells = derive_k_cells(ok.count(), target_cell_width)
-    from ..functions.vectors import norm as _vnorm
-    from ..functions.vectors import staged_cosine
-
-    # norms precomputed per vector / per centroid: same interpreted-HOF
-    # economics as the kmeans assignment loop (see ann.kmeans_centroids);
-    # identical IEEE arithmetic to the inline cosine.
     emb = ok.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("_nv", _vnorm(F.col("v")))
-    cent = F.broadcast(
-        kmeans_centroids(ok, k_cells, iters, id_col, vec_col).withColumn(
-            "_nc", _vnorm(F.col("cv"))
-        )
     )
-    ccos = staged_cosine(
-        F.col("v"), F.col("cv"), F.col("_nv"), F.col("_nc"), ANN_ROUND
-    )
-    return (
-        emb.join(cent)
-        .withColumn("_c", ccos)
-        .groupBy("id")
-        .agg(
-            F.min_by(
-                F.struct("cid", "_c"),
-                F.struct((-F.col("_c")).alias("a"), F.col("cid").alias("b")),
-            ).alias("_w")
-        )
-        .select("id", F.col("_w.cid").alias("cid"), F.col("_w._c").alias("ccos"))
+    cells = kmeans_centroids(ok, k_cells, iters, id_col, vec_col)
+    return _nearest_cell(emb, cells).select(
+        "id", "cid", (-F.col("_d")).alias("ccos")
     )
 
 

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from redpajama_v2_processing_spark.operators.ann import (
@@ -335,9 +336,12 @@ def test_pq_encode_and_adc_ranking(spark):
     assert set(got) == set(range(10))  # the whole of cluster A, no B
 
 
-def test_pq_training_frees_iteration_checkpoints(spark):
-    """PQ Lloyd iterations must not leak superseded checkpoint blocks
-    (same hygiene as kmeans_centroids / the CC fixpoint)."""
+@pytest.mark.parametrize("name", ["pq_codebooks", "kmeans_centroids"])
+def test_pq_training_frees_iteration_checkpoints(spark, name):
+    """The Lloyd iterations (ann._lloyd, shared by the PQ codebooks and
+    the k-means coarse quantizer) must not leak superseded checkpoint
+    blocks (same hygiene as the CC fixpoint)."""
+    from redpajama_v2_processing_spark.operators.ann import kmeans_centroids
     from redpajama_v2_processing_spark.operators.connected_components import (
         _persistent_ids,
     )
@@ -347,12 +351,16 @@ def test_pq_training_frees_iteration_checkpoints(spark):
         [(i, [float((i * 7 + j) % 5) for j in range(8)]) for i in range(30)],
         "vec_id long, embedding array<double>",
     )
+    train = {
+        "pq_codebooks": lambda: pq_codebooks(emb, m=2, k_codes=4, iters=3, dim=8),
+        "kmeans_centroids": lambda: kmeans_centroids(emb, k=4, iters=3),
+    }
     sc = spark.sparkContext
     before = _persistent_ids(sc)
-    cb = pq_codebooks(emb, m=2, k_codes=4, iters=3, dim=8)
-    cb.count()
+    cells = train[name]()
+    cells.count()
     new = _persistent_ids(sc) - before
-    assert len(new) <= 1  # only the final codebook checkpoint survives
+    assert len(new) <= 1  # only the final iteration's checkpoint survives
 
 
 def test_simhash_empty_and_null_docs_hash_to_zero(spark):

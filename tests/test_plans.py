@@ -4,6 +4,7 @@ where intended, partition-count invariance of results."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from redpajama_v2_processing_spark.fixtures import write_pages
@@ -256,18 +257,59 @@ def test_langid_prunes_unread_staging(pages_small):
         assert _count_exprs(exprs, ngram_expr) == 0, ngram_expr
 
 
-def test_ivf_assign_has_no_window_exchange(spark):
-    """IVF-Flat cell assignment must be a grouped argmax (min_by — partial
-    agg, map-side combine), never a row_number window over the K*n joined
-    rows: at corpus scale the window exchange would dominate the plan."""
-    from redpajama_v2_processing_spark.operators.ann import ann_ivf_topk
+_IVF_FAMILY = [
+    "ann_ivf_topk", "ann_ivf_trained_topk", "ann_ivf_pq_topk",
+    "ann_ivf_pq_residual_topk", "semdedup_assign",
+]
+
+
+@pytest.mark.parametrize("name", _IVF_FAMILY)
+def test_ivf_assign_has_no_window_exchange(spark, name):
+    """Cell assignment (ann._nearest_cell) must be a grouped argmin
+    (partial agg, map-side combine), never a row_number window
+    over the K*n joined rows: at corpus scale the window exchange would
+    dominate the plan. The query's cell probe (ann._probe, keyed on the
+    cell) must be a broadcast semi-join in the initial plan, never a
+    SortMergeJoin; semdedup_assign has no probe, and its cell join is the
+    broadcast centroid cross join."""
+    from redpajama_v2_processing_spark.operators import ann, pq, semdedup
 
     df = spark.createDataFrame(
         [(i, i % 3, [float(i), 1.0, 0.5, -0.25]) for i in range(30)],
         "vec_id long, label long, embedding array<float>",
     )
-    plan = _physical(ann_ivf_topk(df, [1.0, 0.0, 0.0, 0.0], n_probe=2, k=5))
-    assert "Window" not in plan
+    q = [1.0, 0.0, 0.0, 0.0]
+    pq_args = dict(k_cells=3, cell_iters=1, m=2, k_codes=4, pq_iters=1,
+                   n_probe=2, dim=4, k=5)
+    calls = {
+        "ann_ivf_topk": lambda: ann.ann_ivf_topk(df, q, n_probe=2, k=5),
+        "ann_ivf_trained_topk": lambda: ann.ann_ivf_trained_topk(
+            df, q, k_cells=3, iters=1, n_probe=2, k=5
+        ),
+        "ann_ivf_pq_topk": lambda: pq.ann_ivf_pq_topk(df, q, **pq_args),
+        "ann_ivf_pq_residual_topk": lambda: pq.ann_ivf_pq_residual_topk(
+            df, q, **pq_args
+        ),
+        "semdedup_assign": lambda: semdedup.semdedup_assign(
+            df, k_cells=3, iters=1, dim=4
+        ),
+    }
+    out = calls[name]()
+    assert "Window" not in _physical(out)
+    initial = out._jdf.queryExecution().executedPlan().initialPlan()
+    nodes = list(_walk(initial, lambda n: n.children()))
+    names = [n.nodeName() for n in nodes]
+    probes = [
+        n.nodeName() for n in nodes
+        if n.nodeName().endswith("Join") and n.joinType().toString() == "LeftSemi"
+        and n.leftKeys().apply(0).toString().split("#")[0] in ("cid", "_cell")
+    ]
+    if name == "semdedup_assign":
+        assert probes == [], names
+        assert "BroadcastNestedLoopJoin" in names, names
+        assert "SortMergeJoin" not in names, names
+    else:
+        assert probes == ["BroadcastHashJoin"], names
 
 
 def test_star_dedup_plans_have_no_cartesian(spark):
@@ -550,6 +592,50 @@ def test_rpv2_keep_semi_join_broadcasts_before_aqe(spark, tmp_path):
             and n.joinType().toString() == "LeftSemi"]
     assert [n.nodeName() for n in semi] == ["BroadcastHashJoin"], names
     assert {r.id for r in out.collect()} == {str(i) for i in range(97)}
+
+
+def test_keep_best_broadcasts_labels_not_scored_docs(spark, tmp_path):
+    """fuzzy_dedup_keep_best joins the scored docs to the CC labels: in
+    the initial plan that join broadcasts the (small) labels, never the
+    corpus-wide scored side, and no SortMergeJoin shuffles the corpus.
+    Joined against fuzzy_dedup_labels' left join instead, the labels were
+    sized at the product of the ids and the labels, so a parquet-backed
+    corpus was broadcast (BroadcastHashJoin Inner, BuildLeft). The keep
+    set is the longest member per component, ties to the smaller id."""
+    from redpajama_v2_processing_spark.operators.minhash_lsh import (
+        fuzzy_dedup_keep_best, fuzzy_dedup_labels,
+    )
+
+    words = [f"w{c}_{j}" for c in range(4) for j in range(30)]
+    rows = [
+        (c * 10 + m, " ".join(words[c * 30:(c + 1) * 30]) + " pad" * (m % 3))
+        for c in range(4) for m in range(4)
+    ] + [(100 + i, f"singleton {i} " * 12) for i in range(4)]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        str(tmp_path / "docs")
+    )
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    out = fuzzy_dedup_keep_best(docs, "doc_id", F.length("text"))
+    initial = out._jdf.queryExecution().executedPlan().initialPlan()
+    nodes = list(_walk(initial, lambda n: n.children()))
+    names = [n.nodeName() for n in nodes]
+    assert "SortMergeJoin" not in names, names
+    built = []
+    for n in nodes:
+        if n.nodeName() == "BroadcastExchange":
+            out_cols = n.output()
+            built.append({out_cols.apply(i).name() for i in range(out_cols.size())})
+    assert built and all("_score" not in cols for cols in built), built
+    assert any("root" in cols for cols in built), built
+
+    length = {i: len(t) for i, t in rows}
+    best: dict[int, int] = {}
+    for r in fuzzy_dedup_labels(docs, "doc_id").collect():
+        cur = best.get(r.root)
+        if cur is None or (-length[r.id], r.id) < (-length[cur], cur):
+            best[r.root] = r.id
+    assert len(best) < len(rows)  # the fixture has near-dup components
+    assert sorted(r.id for r in out.collect()) == sorted(best.values())
 
 
 def test_domain_cap_windows_are_skew_capped(spark):
