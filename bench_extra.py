@@ -82,10 +82,7 @@ def main() -> int:
                     full_pipeline,
                 )
 
-                df = full_pipeline(
-                    spark.read.parquet(f"{staged}/documents.parquet"),
-                    eager=False,
-                )
+                df = full_pipeline(spark.read.parquet(f"{staged}/documents.parquet"))
             else:
                 df = QUERIES[name](spark, staged)
             txt = df._sc._jvm.PythonSQLUtils.explainString(

@@ -380,7 +380,7 @@ def embedding_dedup_keep(
 
     return dedup_keep_min_id(
         embeddings.select(F.col(id_col).alias("id")),
-        lambda: embedding_near_dup_pairs(
+        embedding_near_dup_pairs(
             embeddings, threshold, id_col, vec_col, dim, nbits, band_bits,
             max_bucket,
         ).select("src", "dst"),
@@ -418,19 +418,15 @@ def embedding_dedup_star_keep(
     from .connected_components import checkpoint_banded, dedup_keep_min_id
     from .minhash_lsh import candidate_edges
 
-    def edges() -> DataFrame:
-        # the 64-sum banding aggregation (the dominant cost) runs once,
-        # into the checkpoint; ids-only star candidates meet the vectors
-        # only in the verify
-        cand = candidate_edges(checkpoint_banded(
-            banded_keys_frame(embeddings, id_col, vec_col, dim, nbits, band_bits)
-        ))
-        vectors = embeddings.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-        )
-        return cosine_verify(cand, vectors, threshold).select("src", "dst")
-
-    return dedup_keep_min_id(embeddings.select(F.col(id_col).alias("id")), edges)
+    # the 64-sum banding aggregation (the dominant cost) runs once, into
+    # the checkpoint; ids-only star candidates meet the vectors only in
+    # the verify
+    cand = candidate_edges(checkpoint_banded(
+        banded_keys_frame(embeddings, id_col, vec_col, dim, nbits, band_bits)
+    ))
+    vectors = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    edges = cosine_verify(cand, vectors, threshold).select("src", "dst")
+    return dedup_keep_min_id(vectors.select("id"), edges)
 
 
 def exact_mean4(col: Column) -> Column:
@@ -538,22 +534,22 @@ def _lloyd(
     """DF(*on, cid, cv): ``cells`` after ``iters`` Lloyd iterations over
     ``points`` — assignment by :func:`_nearest_cell`, update by
     :func:`_mean_vectors`. Lineage is cut per iteration with
-    localCheckpoint so the plan stays O(1) deep, and the superseded
-    iteration's checkpoint is freed (the classic iterative-checkpoint
-    slow leak — same hygiene as the CC fixpoint); the final cells stay
-    materialized for the caller. Cells that lose all members disappear."""
-    from .connected_components import _persistent_ids, _unpersist
+    localCheckpoint so the plan stays O(1) deep, and the loop frees each
+    superseded iteration's checkpoint, the one it made (the classic
+    iterative-checkpoint slow leak — same ownership rule as the CC
+    fixpoint: never the caller's ``cells`` or a cache of ``points``); the
+    final cells stay materialized for the caller. Cells that lose all
+    members disappear."""
+    from .connected_components import _checkpoints, _free
 
-    sc = points.sparkSession.sparkContext
-    prev_ids: set[int] = set()
+    made: dict = {}
     for _ in range(iters):
         assign = _nearest_cell(points, cells, keys, on, dist).select(*keys, "cid")
-        before = _persistent_ids(sc)
         cells = _mean_vectors(
             points.join(assign, list(keys)), [*on, "cid"]
         ).localCheckpoint()
-        _unpersist(sc, prev_ids)
-        prev_ids = _persistent_ids(sc) - before
+        _free(made)
+        made = _checkpoints(cells)
     return cells
 
 
@@ -567,15 +563,16 @@ def _ivf_topk(
     k: int,
 ) -> DataFrame:
     """IVF-Flat top-k over ``cells`` DF(cid, cv): assign every vector to
-    its nearest cell, keep the query's ``n_probe`` nearest cells (a
-    broadcast semi-join), rerank those vectors exactly."""
+    its nearest cell, keep the ids in the query's ``n_probe`` nearest
+    cells (a broadcast semi-join), then fetch the vectors of those ids
+    only and rerank them exactly. The probed ids (~n_probe/K of the
+    corpus, no vectors) are the broadcast side of the fetch, so no vector
+    is shuffled or broadcast for it."""
     points = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    assign = _nearest_cell(points, cells).select(F.col("id").alias(id_col), "cid")
-    # select only (id, vec) first: embeddings' own columns must not shadow
-    # the ASSIGNED cell in the probe semi-join
-    cand = embeddings.select(id_col, vec_col).join(assign, id_col).join(
+    probed = _nearest_cell(points, cells).join(
         F.broadcast(_probe(cells, query_vec, n_probe)), "cid", "left_semi"
-    )
+    ).select(F.col("id").alias(id_col))
+    cand = embeddings.join(F.broadcast(probed), id_col, "left_semi")
     return _rerank(cand, query_vec, id_col, vec_col, k)
 
 

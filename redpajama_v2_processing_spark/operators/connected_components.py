@@ -12,13 +12,16 @@ reference's union-find stays as the hand-off: once a round's edge count is
 at or under the driver threshold (the input being round 0), its checkpoint
 is collected and union-found on the driver.
 
+Checkpoint ownership, here and in every helper that stages checkpoints: a
+helper frees only the checkpoints it made, named by their own LogicalRDDs
+(:func:`_checkpoints`), never by a diff of the session's persistent-RDD
+registry, which also catches a caller's lazy cache that its job filled.
+
 Output invariant (matches the reference's keep rule,
 src/minhashlsh.py:140,169): every node maps to its component's MINIMUM id.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -58,15 +61,27 @@ def _star_round(edges: DataFrame) -> DataFrame:
     )
 
 
-def _persistent_ids(sc) -> set[int]:
+def _persistent_ids(sc) -> set[int]:  # a leak-check observer only
     return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
 
 
-def _unpersist(sc, ids: set[int]) -> None:
-    m = sc._jsc.getPersistentRDDs()
-    for k in m.keySet().toArray():
-        if int(k) in ids:
-            m.get(k).unpersist()
+def _checkpoints(df: DataFrame, but: DataFrame | None = None) -> dict:
+    """id -> RDD of the checkpoints ``df``'s plan reads and ``but``'s does
+    not: its LogicalRDD leaves (a ``localCheckpoint`` frame is one). A
+    cache is never among them: it is swapped in only when a plan runs."""
+    def rdds(frame):
+        leaves = frame._jdf.queryExecution().analyzed().collectLeaves()
+        leaves = [leaves.apply(i) for i in range(leaves.size())]
+        return [n.rdd() for n in leaves if n.nodeName() == "LogicalRDD"]
+
+    skip = set() if but is None else {r.id() for r in rdds(but)}
+    return {r.id(): r for r in rdds(df) if r.id() not in skip}
+
+
+def _free(made: dict) -> None:
+    """Unpersist checkpoints the caller made (from :func:`_checkpoints`)."""
+    for rdd in made.values():
+        rdd.unpersist(False)
 
 
 def _driver_side_cc(edges: DataFrame, edge_rows) -> DataFrame:
@@ -129,19 +144,19 @@ def connected_components(
     distributed fixpoint to convergence.
 
     Each round is localCheckpoint-ed (lineage truncation: without it the
-    plan doubles per round and analysis time explodes). Superseded rounds'
-    checkpoint blocks are explicitly unpersisted once the final result is
-    materialized (or the hand-off has collected them) — iterative
-    checkpoints are the classic slow-leak that degrades every later job in
-    the session. At warehouse scale, persist the returned frame to a table
-    (tableio) rather than holding it cached.
+    plan doubles per round and analysis time explodes). The loop frees its
+    own round checkpoints, and only those, once the final result is
+    materialized (or the hand-off has collected them): iterative
+    checkpoints are the classic slow-leak, and a caller's cache of
+    ``edges`` that round 0 first fills stays cached. At warehouse scale,
+    persist the returned frame to a table (tableio) rather than holding it
+    cached.
     """
     if driver_threshold is None:
         from ..config import CC_DRIVER_THRESHOLD
 
         driver_threshold = CC_DRIVER_THRESHOLD
     sc = edges.sparkSession.sparkContext
-    pre_existing = _persistent_ids(sc)
     # NO distinct here: every in-repo edge producer already emits distinct
     # pairs (candidate_edges/simhash/winnow/jaccard all end in .distinct(),
     # the verify paths consume distinct candidates), so
@@ -162,7 +177,7 @@ def connected_components(
         F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000_007))).alias("h"),
     )
     caller_desc = sc.getLocalProperty("spark.job.description")
-    prev_sig = None
+    prev_sig, made = None, {}
     try:
         for i in range(max_iter + 1):
             sc.setJobDescription(f"connected_components round {i}")
@@ -170,6 +185,7 @@ def connected_components(
             if i:
                 cur = _star_round(cur)
             cur = cur.observe(obs, *signature).localCheckpoint()
+            made.update(_checkpoints(cur))
             sig = tuple(obs.get.values())
             # hybrid strategy: once a round's edge set is at or under the
             # threshold, the rest is union-found on the driver. A round keeps
@@ -180,24 +196,22 @@ def connected_components(
                     f"connected_components driver union-find after round {i}"
                 )
                 result = _driver_side_cc(cur, cur.collect())
-                _unpersist(sc, _persistent_ids(sc) - pre_existing)
+                _free(made)
                 return result
             if sig == prev_sig:
                 break
             prev_sig = sig
     finally:
         sc.setJobDescription(caller_desc)
-    loop_ids = _persistent_ids(sc) - pre_existing
     # converged: every edge is (node, component_min); add roots themselves
     # (duplicates and all: the min-aggregation removes them)
     nodes = cur.select(F.col("src").alias("id"), F.col("dst").alias("root"))
     roots = cur.select(F.col("dst").alias("id"), F.col("dst").alias("root"))
     result = (
         nodes.union(roots).groupBy("id").agg(F.min("root").alias("root"))
-        .localCheckpoint()  # eager: materialized before inputs are freed
+        .localCheckpoint()  # eager: materialized before the rounds are freed
     )
-    final_ids = _persistent_ids(sc) - pre_existing - loop_ids
-    _unpersist(sc, loop_ids - final_ids)
+    _free(made)
     return result
 
 
@@ -218,26 +232,23 @@ def checkpoint_banded(banded: DataFrame) -> DataFrame:
     checkpoint at one partition per core (AQE would coalesce the tiny
     aggregate output to one). Spark 4.1's LogicalRDD does not report
     that partitioning, so a bucket window or self-join over the
-    checkpoint shuffles again. :func:`dedup_keep_min_id` frees it."""
+    checkpoint shuffles again. :func:`dedup_keep_min_id` frees it when
+    the edge plan it feeds reads it."""
     return banded.repartition(
         verify_partitions(banded), "band_idx", "band_hash"
     ).localCheckpoint(eager=True)
 
 
-def dedup_keep_min_id(
-    ids: DataFrame, build_edges: Callable[[], DataFrame]
-) -> DataFrame:
+def dedup_keep_min_id(ids: DataFrame, edges: DataFrame) -> DataFrame:
     """DF(id): the dedup family's keep-list — CC over the DF(src, dst)
-    that ``build_edges()`` returns, then :func:`keep_min_id`. Whatever
-    the build staged (eager checkpoints) is read only by the edge plan,
-    so it is freed once CC has materialized: a call leaves only CC's own
-    result checkpoint (distributed path), none on the driver path."""
-    sc = ids.sparkSession.sparkContext
-    before = _persistent_ids(sc)
-    edges = build_edges()
-    staged = _persistent_ids(sc) - before
+    ``edges``, then :func:`keep_min_id`. The checkpoints the edge plan
+    reads and ``ids`` does not (those its build staged) are read by
+    nothing once CC has materialized, so they are freed then: a call
+    leaves only CC's own result checkpoint (distributed path), none on
+    the driver path, and never frees what the caller persisted."""
+    staged = _checkpoints(edges, but=ids)
     cc = connected_components(edges)
-    _unpersist(sc, staged)
+    _free(staged)
     return keep_min_id(ids, cc)
 
 

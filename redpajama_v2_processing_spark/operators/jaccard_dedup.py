@@ -110,7 +110,7 @@ def ngram_jaccard_dedup_keep(
     kept. Same keep rule as the rest of the dedup family (root == id)."""
     return dedup_keep_min_id(
         docs.select(F.col(id_col).alias("id")),
-        lambda: ngram_jaccard_pairs(
+        ngram_jaccard_pairs(
             docs, id_col, text_col, n, threshold, max_df
         ).select("src", "dst"),
     )

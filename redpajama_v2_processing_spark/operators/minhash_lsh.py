@@ -31,7 +31,7 @@ from ..config import ORACLE_MINHASH
 from ..functions.hashing import PERM_PRIME, md5int, perm_coeffs
 from ..functions.text import tokens, normalize
 from .connected_components import (
-    _persistent_ids, _unpersist, connected_components, keep_min_id,
+    _checkpoints, _free, connected_components, keep_min_id,
 )
 
 
@@ -405,7 +405,8 @@ def incremental_fuzzy_keep_ids(
     The returned plan reads the staged ``hit`` checkpoint (new ids that
     collide with history), so it is not freed here; the staged ``nb``
     bands feed only the edge build and are freed once CC has
-    materialized.
+    materialized. Only that checkpoint is freed: a cache of ``new_docs``
+    that the ``nb`` job first fills stays the caller's.
     """
     if history_bands is None:
         if history is None:
@@ -414,12 +415,9 @@ def incremental_fuzzy_keep_ids(
     # nb feeds the hit probe AND the survivor frame; hit feeds the
     # survivor frame AND the keep ids. Catalyst does not share subplans,
     # so checkpoint both (nb's shingle+banding chain is the dominant cost)
-    sc = new_docs.sparkSession.sparkContext
-    before = _persistent_ids(sc)
     nb = minhash_bands(new_docs, id_col, text_col, cfg, base).localCheckpoint(
         eager=True
     )
-    staged_nb = _persistent_ids(sc) - before
     hit = (
         nb.join(history_bands, ["band_idx", "band_hash"], "left_semi")
         .select("id")
@@ -430,6 +428,6 @@ def incremental_fuzzy_keep_ids(
     cc = connected_components(
         candidate_edges(surv_bands), driver_threshold=cc_driver_threshold
     )
-    _unpersist(sc, staged_nb)
+    _free(_checkpoints(nb))
     ids = new_docs.select(F.col(id_col).alias("id")).join(hit, "id", "left_anti")
     return keep_min_id(ids, cc)

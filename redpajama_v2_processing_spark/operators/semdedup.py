@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .ann import _nearest_cell, cosine_verify, kmeans_centroids
-from .connected_components import _persistent_ids, _unpersist, connected_components
+from .connected_components import _checkpoints, _free, connected_components
 
 
 def _modal_dim(embeddings: DataFrame, vec_col: str) -> int:
@@ -151,16 +151,16 @@ def semdedup_keep(
     malformed-vector anti-join), so it stays persisted with the result
     and is context-cleaned when the result is dropped. The final k-means
     centroid checkpoint is read only through ``assign`` and is freed once
-    ``assign`` has materialized.
+    ``assign`` has materialized: the checkpoints the assignment plan reads
+    and ``embeddings`` does not, so a caller's cache or checkpoint of
+    ``embeddings`` is never freed.
     """
-    sc = embeddings.sparkSession.sparkContext
-    before = _persistent_ids(sc)
     assign = semdedup_assign(
         embeddings, k_cells, iters, id_col, vec_col, dim, target_cell_width
     )
-    staged = _persistent_ids(sc) - before
+    staged = _checkpoints(assign, but=embeddings)
     assign = assign.localCheckpoint(eager=True)
-    _unpersist(sc, staged)
+    _free(staged)
 
     # ids-only within-cell candidate pairs (vectors stay out of the cid
     # shuffle), then the family's exact verify on the re-joined vectors

@@ -149,13 +149,11 @@ def simhash_dedup_keep(
     from .connected_components import checkpoint_banded, dedup_keep_min_id
     from .minhash_lsh import candidate_edges
 
-    def edges() -> DataFrame:
-        sh = with_simhash(docs, id_col, text_col, bits, portable)
-        return candidate_edges(
-            checkpoint_banded(_banded_simhash(sh, bits, band_bits)),
-            lambda h, h_min: F.bit_count(h.bitwiseXOR(h_min)) <= max_hamming,
-        )
-
+    sh = with_simhash(docs, id_col, text_col, bits, portable)
+    edges = candidate_edges(
+        checkpoint_banded(_banded_simhash(sh, bits, band_bits)),
+        lambda h, h_min: F.bit_count(h.bitwiseXOR(h_min)) <= max_hamming,
+    )
     # ids straight from the docs scan (one row per doc == with_simhash's
     # output set) — selecting off the simhash frame would re-run the
     # tokenize+vote aggregation just to list ids

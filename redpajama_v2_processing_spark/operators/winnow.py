@@ -171,12 +171,8 @@ def winnow_dedup_keep(
     """
     from .connected_components import dedup_keep_min_id
 
-    def edges() -> DataFrame:
-        pairs = winnow_near_dup_pairs(
-            docs, id_col, text_col, k, w, min_shared, max_df
-        )
-        return pairs.where(
-            F.greatest("src_containment", "dst_containment") >= min_containment
-        ).select("src", "dst")
-
+    pairs = winnow_near_dup_pairs(docs, id_col, text_col, k, w, min_shared, max_df)
+    edges = pairs.where(
+        F.greatest("src_containment", "dst_containment") >= min_containment
+    ).select("src", "dst")
     return dedup_keep_min_id(docs.select(F.col(id_col).alias("id")), edges)

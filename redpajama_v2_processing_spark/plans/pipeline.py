@@ -90,7 +90,7 @@ def corpus_stages(id_col: str = "doc_id", text_col: str = "text",
         # (dup-cluster-sized) CC drop-list, without fuzzy_dedup_keep_ids'
         # second corpus-wide semi join. Driver-path labels carry a
         # broadcast hint, so the join does not shuffle ``df``.
-        # ``df`` is read twice (bands + join): fused runners persist it.
+        # ``df`` is read twice (bands + join): fused runners checkpoint it.
         bands = minhash_bands(df, id_col, text_col, PROD_MINHASH, "xxhash")
         return keep_min_id(df, connected_components(candidate_edges(bands)), id_col)
 
@@ -102,33 +102,32 @@ def corpus_stages(id_col: str = "doc_id", text_col: str = "text",
 
 
 def full_pipeline(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", eager: bool = True) -> DataFrame:
+                  text_col: str = "text") -> DataFrame:
     """``corpus_stages`` fused into one DAG: quality filter -> exact dedup
     -> fuzzy dedup; returns surviving docs with labels. (The committed
     per-stage variant is tableio.run_stages over the same list.)
 
-    The exact survivors are persisted once, since the fuzzy stage reads
-    them twice. AQE owns the cache's partition count (the session lets it
-    coalesce cached plans), and on the driver CC path the keep join
-    broadcasts the CC drop-list (``keep_min_id``: the labels whose root is
-    not themselves, anti-joined), so the survivors are not shuffled again
-    and the result is estimated no larger than the survivors.
-    The labels number at most 2 x ``CC_DRIVER_THRESHOLD`` rows also when CC
-    hands off after star rounds: the collected round has at most that many
-    edges and every labelled node is on one of them. ``eager=True`` (default)
-    materializes the result once via localCheckpoint while that cache is
-    live, then frees it — no dangling persisted intermediate after the call
-    (the result's own checkpoint blocks belong to the returned DataFrame and
-    are context-cleaned when it is dropped). ``eager=False`` returns the
-    fully lazy plan and the caller owns the survivor cache lifetime
-    (``.unpersist()`` any persisted inputs after the final action)."""
+    The exact survivors are checkpointed once (job description
+    ``full_pipeline survivors``): the bands and the result's keep join read
+    them. The returned plan, that checkpoint anti-joined with the CC
+    drop-list, stays lazy; the checkpoint belongs to it (context-cleaned
+    when it is dropped), and the call leaves nothing else persisted. On
+    the driver CC path the keep join broadcasts the drop-list
+    (``keep_min_id``: the labels whose root is not themselves), so the
+    survivors are not shuffled again and the result is estimated no larger
+    than the survivors. The labels number at most 2 x
+    ``CC_DRIVER_THRESHOLD`` rows also when CC hands off after star rounds:
+    the collected round has at most that many edges and every labelled
+    node is on one of them."""
     *upstream, fuzzy = corpus_stages(id_col, text_col)
     survivors = docs
     for st in upstream:
         survivors = st.fn(survivors)
-    survivors = survivors.persist()
-    out = fuzzy.fn(survivors)
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        survivors.unpersist()
-    return out
+    sc = docs.sparkSession.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("full_pipeline survivors")
+    try:
+        survivors = survivors.localCheckpoint(eager=True)
+    finally:
+        sc.setJobDescription(caller_desc)
+    return fuzzy.fn(survivors)

@@ -1697,13 +1697,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "jaccard_sim_histogram": q_jaccard_sim_histogram,
     "source_overlap": q_source_overlap,
     "bm25_topk": q_bm25_topk,
-    # --- implementation changed: one vector-quantizer kernel -------------
-    # (the IVF / PQ / k-means / SemDeDup family assigns with one
-    # nearest-cell argmin, probes with one cell probe, averages with one
-    # mean-vector update and trains in one Lloyd loop; one IVF and one LSH
-    # top-k body, one cosine rerank, one PQ lookup table. The keep-best
-    # under fuzzy_dedup_keep_longest joins its scored docs straight to the
-    # CC labels; semdedup_keep is also a CC caller)
+    # --- implementation changed: checkpoints owned by their maker, on one
+    # vector-quantizer kernel (one nearest-cell argmin, cell probe,
+    # mean-vector update and Lloyd loop, which frees only the iterations it
+    # made; semdedup_keep only its staged centroids. The IVF top-k pair
+    # probes the assignment before fetching vectors. fuzzy_dedup_keep_longest
+    # joins its scored docs straight to the CC labels; it and semdedup_keep
+    # are CC callers, each of which now frees only CC's own checkpoints)
     "ann_ivf_topk": q_ann_ivf_topk,
     "ann_ivf_trained_topk": q_ann_ivf_trained_topk,
     "ann_lsh_topk": q_ann_lsh_topk,
@@ -1721,10 +1721,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # one drop-list keep rule ---------------------------------------------
     # (every connected_components caller: after each star round whose edge
     # count is at or under the driver threshold, CC collects that round and
-    # union-finds it on the driver. Every MinHash/RPv2 edge build is
-    # candidate_edges (fuzzy_dedup_salted now runs fuzzy_dedup_keep), and
-    # every min-id keep-list is keep_min_id's anti-join against the CC
-    # drop-list. The fuzzy_dedup_* family and incremental_fuzzy_keep /
+    # union-finds it on the driver, freeing only its own checkpoints, as
+    # dedup_keep_min_id and incremental_fuzzy_keep do. Every MinHash/RPv2
+    # edge build is candidate_edges (fuzzy_dedup_salted now runs
+    # fuzzy_dedup_keep), and every min-id keep-list is keep_min_id's
+    # anti-join against the CC drop-list. The fuzzy_dedup_* family and incremental_fuzzy_keep /
     # dedup_cluster_sizes also take the vectorized MinHash signature;
     # fuzzy_dedup_prod is oracle-checked with the xxhash64 SQL twin)
     "incremental_fuzzy_keep": q_incremental_fuzzy_keep,

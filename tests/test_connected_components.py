@@ -236,6 +236,88 @@ def test_cc_and_simhash_keep_free_their_checkpoints(spark, monkeypatch, name):
         assert len(handoffs) == (1 if threshold else 0), (name, threshold, handoffs)
 
 
+def _cache_cases(spark):
+    """name -> (input rows, call over the input) for every helper that
+    stages checkpoints around a caller's frame: CC on both paths and the
+    keep-lists and training loops built on it."""
+    from redpajama_v2_processing_spark.operators.ann import kmeans_centroids
+    from redpajama_v2_processing_spark.operators.minhash_lsh import (
+        fuzzy_dedup_keep_ids, incremental_fuzzy_keep_ids,
+    )
+    from redpajama_v2_processing_spark.operators.semdedup import semdedup_keep
+    from redpajama_v2_processing_spark.operators.simhash_dedup import (
+        simhash_dedup_keep,
+    )
+
+    path = [(i, i + 1) for i in range(20)]
+    edges = spark.createDataFrame(path + [(b, a) for a, b in path], "src long, dst long")
+    docs = spark.createDataFrame(
+        [
+            (i, " ".join(f"w{i % 4}x{j}" for j in range(12)) + f" tail{i % 2}")
+            for i in range(24)
+        ],
+        "doc_id long, text string",
+    )
+    emb = spark.createDataFrame(
+        [(i, [float(i % 5), 1.0, -0.5, 0.25]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    return {
+        "connected_components": (edges, connected_components),
+        "connected_components_distributed": (
+            edges, lambda x: connected_components(x, driver_threshold=0)
+        ),
+        "fuzzy_dedup_keep_ids": (docs, lambda x: fuzzy_dedup_keep_ids(x, "doc_id")),
+        "simhash_dedup_keep": (docs, lambda x: simhash_dedup_keep(x, "doc_id")),
+        "incremental_fuzzy_keep_ids": (
+            docs, lambda x: incremental_fuzzy_keep_ids(
+                x.where("doc_id % 4 != 0"), docs.where("doc_id % 4 = 0"), "doc_id"
+            ),
+        ),
+        "semdedup_keep": (
+            emb, lambda x: semdedup_keep(x, 0.95, k_cells=2, iters=1, dim=4)
+        ),
+        "kmeans_centroids": (emb, lambda x: kmeans_centroids(x, k=4, iters=3)),
+    }
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "connected_components", "connected_components_distributed",
+        "fuzzy_dedup_keep_ids", "simhash_dedup_keep",
+        "incremental_fuzzy_keep_ids", "semdedup_keep", "kmeans_centroids",
+    ],
+)
+def test_callers_cache_survives_the_helper(spark, tmp_path, name):
+    """A helper frees only the checkpoints it made. The caller's input is
+    persisted lazily, so the helper's own job is the first to fill the
+    cache: the cache's RDD must still be registered after the call, and a
+    later count must read the cache alone. The input's files are deleted
+    after the call, so a count that recomputed the input's plan would fail
+    (a diff of the session's persistent-RDD registry around the call
+    unpersisted that cache, and every later read recomputed the plan)."""
+    import shutil
+
+    from redpajama_v2_processing_spark.operators.connected_components import (
+        _persistent_ids,
+    )
+
+    rows, call = _cache_cases(spark)[name]
+    src = str(tmp_path / "input")
+    rows.write.parquet(src)
+    x = spark.read.parquet(src).persist()
+    try:
+        call(x)
+        cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(x._jdf)
+        rdd = cached.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers()
+        assert rdd.id() in _persistent_ids(spark.sparkContext), name
+        shutil.rmtree(src)
+        assert x.count() == rows.count()
+    finally:
+        x.unpersist()
+
+
 def test_driver_path_labels_broadcast_from_one_partition(spark):
     """The driver path returns its labels as one partition with a broadcast
     hint, so keep_min_id plans a BroadcastHashJoin that builds the labels

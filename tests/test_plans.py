@@ -312,6 +312,56 @@ def test_ivf_assign_has_no_window_exchange(spark, name):
         assert probes == ["BroadcastHashJoin"], names
 
 
+@pytest.mark.parametrize("name", ["ann_ivf_topk", "ann_ivf_trained_topk"])
+def test_ivf_probe_precedes_the_vector_fetch(spark, name):
+    """IVF-Flat top-k probes the cell assignment before it reads any vector
+    back. Below the probe semi-join the one join is the nearest-cell join
+    against the broadcast cells, and no join fetches the corpus's vector
+    column by id: that fetch used to sit there, broadcasting every vector
+    (or, on a frame of unknown size like this one, shuffling every vector
+    in a SortMergeJoin) to rerank n_probe of K cells. The vectors are
+    fetched above the probe, by a broadcast semi-join whose build side is
+    the probed ids alone."""
+    from redpajama_v2_processing_spark.operators import ann
+
+    df = spark.createDataFrame(
+        [(i, i % 3, [float(i), 1.0, 0.5, -0.25]) for i in range(30)],
+        "vec_id long, label long, embedding array<float>",
+    )
+    q = [1.0, 0.0, 0.0, 0.0]
+    calls = {
+        "ann_ivf_topk": lambda: ann.ann_ivf_topk(df, q, n_probe=2, k=5),
+        "ann_ivf_trained_topk": lambda: ann.ann_ivf_trained_topk(
+            df, q, k_cells=3, iters=1, n_probe=2, k=5
+        ),
+    }
+    initial = calls[name]()._jdf.queryExecution().executedPlan().initialPlan()
+    nodes = list(_walk(initial, lambda n: n.children()))
+
+    def semi_joins(key):
+        return [
+            n for n in nodes
+            if n.nodeName().endswith("Join") and n.joinType().toString() == "LeftSemi"
+            and n.leftKeys().apply(0).toString().split("#")[0] == key
+        ]
+
+    def output(node):
+        out = node.output()
+        return [out.apply(i) for i in range(out.size())]
+
+    [probe], [fetch] = semi_joins("cid"), semi_joins("vec_id")
+    below = [n for side in (probe.left(), probe.right())
+             for n in _walk(side, lambda n: n.children())
+             if n.nodeName().endswith("Join")]
+    assert [n.nodeName() for n in below] == ["BroadcastNestedLoopJoin"], below
+    for j in below:
+        assert "embedding" not in [a.name() for a in output(j)]
+    assert fetch.nodeName() == "BroadcastHashJoin"
+    build = fetch.right()
+    assert [a.dataType().typeName() for a in output(build)] == ["long"]
+    assert any(n.equals(probe) for n in _walk(build, lambda n: n.children()))
+
+
 def test_star_dedup_plans_have_no_cartesian(spark):
     """The star-edge dedup paths must stay equi-join shaped: no cartesian
     or broadcast-nested-loop fallback anywhere in either plan."""
@@ -472,11 +522,11 @@ def test_pq_adc_scan_is_broadcast_and_native(spark):
 
 
 def test_full_pipeline_frees_intermediate_cache(spark, pages_small):
-    """full_pipeline(eager=True) must not leave its internal survivor
-    cache persisted after the call: the only new persistent RDD is the
-    returned result's own localCheckpoint (context-cleaned when the
-    DataFrame is dropped) — a long-lived session running many pipelines
-    must not accumulate caches."""
+    """full_pipeline must not leave an intermediate persisted after the
+    call and an action over its result: the only new persistent RDD is
+    the survivors checkpoint the returned plan reads (context-cleaned when
+    the DataFrame is dropped) — a long-lived session running many
+    pipelines must not accumulate caches."""
     from redpajama_v2_processing_spark.operators.connected_components import (
         _persistent_ids,
     )
@@ -490,17 +540,19 @@ def test_full_pipeline_frees_intermediate_cache(spark, pages_small):
     out = full_pipeline(docs)
     assert out.count() > 0
     new = _persistent_ids(sc) - before
-    # exactly the result checkpoint survives; the survivors cache is gone
+    # exactly the survivors checkpoint survives; CC's rounds are gone
     assert len(new) <= 1
 
 
 def test_full_pipeline_plan_budget(spark, pages_small):
-    """Plan budget of the headline job: one shuffle Exchange (the exact
-    stage's fingerprint window) and one BroadcastExchange. The fuzzy keep
-    join is a BroadcastHashJoin against the driver-side CC label frame, so
-    the survivors are not shuffled for it (measured: 3 shuffle Exchanges
-    and a SortMergeJoin while that frame was not broadcast). No cartesian
-    product and no Python eval node in the keep plan. Python does run in
+    """Plan budget of the headline job. The returned plan is the survivors
+    checkpoint's scan and one BroadcastExchange, with no shuffle Exchange:
+    the fuzzy keep join is a BroadcastHashJoin against the driver-side CC
+    label frame, so the survivors are not shuffled for it (measured: 3
+    shuffle Exchanges and a SortMergeJoin while that frame was not
+    broadcast). No cartesian product and no Python eval node in the keep
+    plan. The survivors checkpoint's own plan holds the one shuffle
+    Exchange (the exact stage's fingerprint window). Python does run in
     the job, once per Arrow batch: the MinHash signature ``MapInArrow``
     sits in the bands subplan that feeds connected components, which is
     materialized before this plan is built (its budget is
@@ -510,31 +562,34 @@ def test_full_pipeline_plan_budget(spark, pages_small):
     )
 
     docs = pages_small.select(F.xxhash64("url").alias("doc_id"), "text", "lang")
-    try:
-        nodes = _plan_nodes(full_pipeline(docs, eager=False))
-    finally:
-        # eager=False leaves the exact survivors cached: uncache that plan
-        survivors = docs
-        for st in corpus_stages()[:-1]:
-            survivors = st.fn(survivors)
-        survivors.unpersist()
-    assert nodes.count("Exchange") == 1, nodes
+    nodes = _plan_nodes(full_pipeline(docs))
+    assert nodes.count("Scan ExistingRDD") == 1, nodes
+    assert nodes.count("Exchange") == 0, nodes
     assert nodes.count("BroadcastExchange") == 1, nodes
     assert [n for n in nodes if n.endswith("Join")] == ["BroadcastHashJoin"], nodes
     assert "CartesianProduct" not in nodes
     assert not any("EvalPython" in n for n in nodes), nodes
+    survivors = docs
+    for st in corpus_stages()[:-1]:
+        survivors = st.fn(survivors)
+    nodes = _plan_nodes(survivors)
+    assert nodes.count("Exchange") == 1, nodes
+    assert "BroadcastExchange" not in nodes, nodes
 
 
 def test_full_pipeline_task_budget(spark, pages_small):
-    """Spark jobs and tasks of one full_pipeline(eager=True) call on
-    pages_small, counted by job group (local[4], 4 shuffle partitions).
-    AQE may coalesce the exact survivors' cache, and the driver-path CC
-    labels are one broadcast partition, and the MinHash bands are a narrow
-    map (no ``groupBy(id)`` exchange): 8 jobs and 11 tasks. Measured with
-    the signature minima taken in a 117-column ``groupBy(id)`` aggregate:
-    9 jobs and 12 tasks; while every stage reading that cache ran
-    ``shuffle.partitions`` tasks and the keep join shuffled both sides:
-    11 jobs and 26 tasks."""
+    """Spark jobs and tasks of one full_pipeline call plus one collect of
+    its result on pages_small, counted by job group (local[4], 4 shuffle
+    partitions). The exact survivors are one checkpoint that the result's
+    anti join reads, the driver-path CC labels are one broadcast
+    partition, and the MinHash bands are a narrow map (no ``groupBy(id)``
+    exchange): 8 jobs and 11 tasks. While the survivors were a cache that
+    the call freed after checkpointing its result eagerly, the call alone
+    ran 8 jobs and 11 tasks (9 and 12 with this collect); with the
+    signature minima taken in a 117-column ``groupBy(id)`` aggregate as
+    well, the call ran 9 jobs and 12 tasks; while every stage reading that
+    cache ran ``shuffle.partitions`` tasks and the keep join shuffled both
+    sides, 11 jobs and 26 tasks."""
     from redpajama_v2_processing_spark.plans.pipeline import full_pipeline
 
     sc = spark.sparkContext
@@ -542,7 +597,7 @@ def test_full_pipeline_task_budget(spark, pages_small):
     group = "full-pipeline-task-budget"
     try:
         sc.setJobGroup(group, group)
-        full_pipeline(docs)
+        full_pipeline(docs).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
