@@ -204,34 +204,3 @@ def shard_manifest(
         F.min("block_idx").cast("long").alias("first_block"),
         F.max("block_idx").cast("long").alias("last_block"),
     )
-
-
-def write_training_shards(
-    docs: DataFrame,
-    id_col: str,
-    dest: str,
-    text_col: str = "text",
-    block_tokens: int = 128,
-    eod_tokens: int = 1,
-    blocks_per_shard: int = 64,
-) -> None:
-    """Write the (doc, block) span table partitioned by shard_idx plus a
-    ``_manifest`` parquet of per-shard stats — the handoff layout a
-    training loader consumes (read one shard directory = one contiguous
-    token range). Partitioned write keeps each shard's rows co-located;
-    the manifest is tiny and written last so its presence marks a
-    complete layout."""
-    pb = pack_blocks(docs, id_col, text_col, block_tokens, eod_tokens)
-    sh = pb.withColumn("shard_idx", F.expr(f"block_idx div {blocks_per_shard}"))
-    sh.write.mode("overwrite").partitionBy("shard_idx").parquet(f"{dest}/blocks")
-    # the manifest MUST describe the rows actually written (re-deriving it
-    # from ``docs`` would both recompute the whole prefix-scan chain and
-    # certify blocks that may not match if the source moved between the
-    # two actions) — aggregate the read-back of the committed layout
-    written = docs.sparkSession.read.parquet(f"{dest}/blocks")
-    written.groupBy("shard_idx").agg(
-        F.count_distinct("block_idx").cast("long").alias("n_blocks"),
-        F.count_distinct("id").cast("long").alias("n_docs"),
-        F.min("block_idx").cast("long").alias("first_block"),
-        F.max("block_idx").cast("long").alias("last_block"),
-    ).write.mode("overwrite").parquet(f"{dest}/_manifest")

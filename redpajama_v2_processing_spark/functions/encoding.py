@@ -4,8 +4,9 @@ Web crawls carry systematic encoding damage: UTF-8 bytes decoded as
 Latin-1/cp1252 ("Ã©" for "é", "â€™" for a right quote, "Â " before
 NBSP), U+FFFD replacement characters from lossy transcodes, and stray
 C0 control bytes. An ftfy-style *repair* needs per-codepoint logic; the
-*filter* tier — count the artifacts, drop documents past a noise budget
-— is pure native regexp arithmetic and belongs in the signal pass.
+*filter* tier's signals — artifact counts a noise budget can drop
+documents on — are pure native regexp arithmetic and belong in the
+signal pass.
 
 All three counters are single regexp scans (codegen, no Python); the
 ratio divides once by the code-point length, so the rounded signal is
@@ -57,18 +58,6 @@ def with_encoding_noise(docs: DataFrame, text_col: str = "text") -> DataFrame:
     total = F.col("n_replacement") + F.col("n_ctrl") + F.col("n_mojibake")
     return out.withColumn(
         "noise_ratio", ratio6(total, denom, NOISE_ROUND)
-    )
-
-
-def encoding_noise_filter(
-    docs: DataFrame, text_col: str = "text", max_ratio: float = 0.002
-) -> DataFrame:
-    """Drop documents whose encoding-noise ratio exceeds ``max_ratio``
-    (and any document containing a replacement character — U+FFFD means
-    bytes were already destroyed upstream; no repair can recover them)."""
-    sig = with_encoding_noise(docs, text_col)
-    return sig.where(
-        (F.col("n_replacement") == 0) & (F.col("noise_ratio") <= max_ratio)
     )
 
 

@@ -8,10 +8,6 @@ The reference consumes a precomputed ``perplexity`` signal
   (oracle-checked).
 * ``bigram``: interpolated (Jelinek-Mercer) word-bigram LM — the
   KenLM-shaped higher-order signal.
-* ``char_bigram``: add-one-smoothed character bigram LM; counts built with a
-  hash aggregation, scored by an Arrow-batched pandas UDF over a broadcast
-  probability dict (the model is tiny; documents are not). This mirrors
-  "KenLM model broadcast to executors" at cluster scale.
 
 Determinism contract: per-doc log-prob sums are accumulated in integer
 micro-units (``round(ln p * 1e6)`` as bigint — the DSIR pattern), so the
@@ -32,14 +28,10 @@ join is left to AQE — no forced broadcast of an unbounded table.
 
 from __future__ import annotations
 
-import math
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
-from .text import tokens, char_ngrams
+from .text import tokens
 from .vectors import round_half_up
 
 #: the single type every below-floor token folds into (never a real token:
@@ -305,106 +297,3 @@ def perplexity_buckets(
     return scored.join(F.broadcast(th), lang_col).select(
         id_col, lang_col, bucket.alias("ppl_bucket")
     )
-
-
-def char_bigram_model(docs: DataFrame, text_col: str = "text") -> dict[str, float]:
-    """Train an add-one-smoothed char-bigram LM; returns {bigram: logp(c2|c1)}.
-
-    The count aggregation is distributed; only the tiny model is collected.
-    """
-    grams = docs.select(F.explode(char_ngrams(F.col(text_col), 2)).alias("g"))
-    bi = grams.groupBy("g").agg(F.count("*").alias("c"))
-    uni = bi.select(F.substring("g", 1, 1).alias("c1"), "c").groupBy("c1").agg(
-        F.sum("c").alias("n")
-    )
-    vocab_size = bi.select(F.substring("g", 2, 1).alias("c2")).distinct().count()
-    rows = (
-        bi.join(uni, F.substring(bi.g, 1, 1) == uni.c1)
-        .select("g", "c", "n")
-        .collect()
-    )
-    return {
-        r["g"]: math.log((r["c"] + 1.0) / (r["n"] + vocab_size)) for r in rows
-    }
-
-
-# per-process model cache (the loader runs lazily inside the UDF on each
-# executor; model files ship via spark-submit --files / SparkFiles)
-_MODEL_CACHE: dict = {}
-
-
-def perplexity_model_udf(
-    spark: SparkSession,
-    model_path: str | None = None,
-    loader=None,
-    fallback_model: dict[str, float] | None = None,
-    vocab_logp: float = -10.0,
-):
-    """Perplexity slot switched by ``model_path`` (the production swap seam).
-
-    * ``model_path`` set (a KenLM model file, shipped to executors via
-      spark-submit --files / SparkFiles): Arrow-batched scoring through a
-      KenLM-shaped object — ``loader(path)`` must return a model with
-      ``score(sentence) -> log10 prob``; per-doc perplexity =
-      ``10 ** (-score / n_tokens)`` (KenLM's convention). Default loader is
-      ``kenlm.Model``; the model loads lazily per executor process.
-    * ``model_path`` None (the sandbox default — no kenlm wheel):
-      the in-engine char-bigram stand-in (``char_bigram_perplexity_udf``
-      over ``fallback_model``, trained distributively by
-      ``char_bigram_model``).
-
-    Both branches return a ``double`` pandas UDF — schema-identical, so a
-    pipeline swaps models by ``model_path`` alone.
-    """
-    if model_path is None:
-        if fallback_model is None:
-            raise ValueError(
-                "no model_path: pass fallback_model=char_bigram_model(docs)"
-            )
-        return char_bigram_perplexity_udf(spark, fallback_model, vocab_logp)
-
-    if loader is None:
-        def loader(p):  # pragma: no cover - needs the kenlm wheel
-            import kenlm
-
-            return kenlm.Model(p)
-
-    @F.pandas_udf(DoubleType())
-    def real_ppl(text: pd.Series) -> pd.Series:
-        key = ("kenlm", model_path)
-        if key not in _MODEL_CACHE:
-            _MODEL_CACHE[key] = loader(model_path)
-        model = _MODEL_CACHE[key]
-
-        def score(s: str) -> float:
-            n = len(s.split())
-            if n == 0:
-                return 0.0
-            return 10.0 ** (-model.score(s) / n)
-
-        return text.fillna("").map(score)
-
-    return real_ppl
-
-
-def char_bigram_perplexity_udf(spark: SparkSession, model: dict[str, float], vocab_logp: float):
-    """Arrow-batched scorer over a broadcast model dict (no per-row Python
-    in the plan: one pandas UDF node, vectorized batches)."""
-    bc = spark.sparkContext.broadcast(model)
-
-    @F.pandas_udf(DoubleType())
-    def ppl(text: pd.Series) -> pd.Series:
-        m = bc.value
-
-        def score(s: str) -> float:
-            if not s or len(s) < 2:
-                return 0.0
-            lp = 0.0
-            n = len(s) - 1
-            for i in range(n):
-                lp += m.get(s[i : i + 2], vocab_logp)
-            return math.exp(-lp / n)
-
-        return text.fillna("").map(score)
-
-    return ppl

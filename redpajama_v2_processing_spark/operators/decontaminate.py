@@ -1,4 +1,4 @@
-"""Benchmark decontamination: remove training documents that overlap an
+"""Benchmark decontamination: flag training documents that overlap an
 evaluation set by long n-gram collision — the GPT-3/Gopher/Llama
 training-data hygiene step (a doc sharing a verbatim 13-gram with a
 benchmark item leaks that item into training).
@@ -149,20 +149,3 @@ def duplicated_ngram_fraction(
             ).alias("dup_ngram_fraction"),
         )
     )
-
-
-def decontaminate(
-    docs: DataFrame,
-    bench: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    bench_text_col: str = "text",
-    n: int = DECONTAM_NGRAM,
-    min_hits: int = 1,
-) -> DataFrame:
-    """Corpus minus contaminated docs (left_anti against the flagged ids;
-    with AQE the tiny flag table broadcasts the anti join too)."""
-    bad = contaminated_ids(
-        docs, bench, id_col, text_col, bench_text_col, n, min_hits
-    ).select(F.col("id").alias(id_col))
-    return docs.join(bad, id_col, "left_anti")

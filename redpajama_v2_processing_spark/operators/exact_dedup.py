@@ -4,9 +4,10 @@ Reference semantics: drop every doc whose id appears in a published
 duplicates table (src/filter_exact_duplicates.py:89-133), realized there as
 an in-RAM python set (≤51 GB, 3 h build). Spark realization:
 
-* ``dedup_exact``: content dedup — keep the min-id doc per identical
-  (normalized) text. One shuffle on the 60-bit fingerprint; window min-id
-  keeps it a single exchange (no join).
+* ``exact_keep_ids``: content dedup — the min id per identical
+  (normalized) text, one partial-aggregated groupBy on the 60-bit
+  fingerprint (the pipeline's exact stage, ``plans.pipeline``, keeps the
+  same rows with a min-id window).
 * ``anti_join_duplicates``: the reference's Bloom-duplicates stage as a
   ``left_anti`` join; Spark's runtime Bloom-filter join pruning
   (spark.sql.optimizer.runtime.bloomFilter.enabled, on in session.py) gives
@@ -19,26 +20,14 @@ an in-RAM python set (≤51 GB, 3 h build). Spark realization:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_int
 
 
-def dedup_exact(docs: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """Keep min-id row per distinct normalized text. Single shuffle."""
-    fp = fingerprint_int(F.col(text_col))
-    w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
-    return (
-        docs.withColumn("_fp", fp)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_fp", "_rn")
-    )
-
-
 def exact_keep_ids(docs: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """DF(id_col): ids kept by ``dedup_exact`` (min id per fingerprint)."""
+    """DF(id_col): the min id per normalized-text fingerprint."""
     fp = fingerprint_int(F.col(text_col))
     return (
         docs.select(F.col(id_col), fp.alias("_fp"))

@@ -1,5 +1,4 @@
-"""N-gram Jaccard similarity (exact verification stage for LSH candidates,
-and standalone similarity queries).
+"""N-gram Jaccard similarity of every doc against a fixed query set.
 
 Set semantics: shingle sets are distinct word n-grams of the normalized
 text (same shingling as MinHash, operators/minhash_lsh.py), so the LSH
@@ -11,8 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .minhash_lsh import with_shingles, candidate_edges, minhash_bands
-from ..config import ORACLE_MINHASH
+from .minhash_lsh import with_shingles
 from ..functions.signals import ratio6
 
 
@@ -43,35 +41,6 @@ def jaccard_vs_query(
         sh.select(
             "id",
             _jaccard(F.col("_sh"), q).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= min_sim)
-    )
-
-
-def jaccard_candidate_pairs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    cfg: dict = ORACLE_MINHASH,
-    base: str = "md5",
-    min_sim: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard over LSH candidate pairs (verification stage).
-
-    LSH prunes the O(n^2) pair space to bucket-mates; this join re-attaches
-    the two shingle sets and verifies. DF(src, dst, jaccard).
-    """
-    sh = with_shingles(docs, id_col, text_col, cfg["shingle"]).withColumnRenamed(
-        "id", "_jid"
-    )
-    pairs = candidate_edges(minhash_bands(docs, id_col, text_col, cfg, base))
-    return (
-        pairs.join(sh.withColumnRenamed("_jid", "src").withColumnRenamed("_sh", "_sh_a"), "src")
-        .join(sh.withColumnRenamed("_jid", "dst").withColumnRenamed("_sh", "_sh_b"), "dst")
-        .select(
-            "src",
-            "dst",
-            _jaccard(F.col("_sh_a"), F.col("_sh_b")).alias("jaccard"),
         )
         .where(F.col("jaccard") >= min_sim)
     )

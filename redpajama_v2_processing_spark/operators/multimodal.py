@@ -1,7 +1,7 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, processed via Arrow-batched mapInPandas.
 
-Three decode tiers:
+Decode tiers:
 
 * REAL image-container decode (`parse_image_meta` / `decode_image_meta`):
   PNG IHDR, GIF logical-screen, and JPEG SOFn dimensions parsed from the
@@ -21,12 +21,13 @@ Three decode tiers:
   movi '00db'/'00dc' frame chunks, word alignment), frame payloads
   sampled every N and reduced to byte sums — oracle-checked against the
   generator's pixel formula.
-* STUBBED residual deep decode (color/interlaced images, compressed
-  audio/video codecs — no PIL/ffmpeg in this container): binary
-  payloads carry a deterministic fake header `MM1|<kind>|<width>|
-  <height>|`; a real decoder drops in behind the `_HAS_PIL` import
-  guard. The Spark-side contract — schema, batching, partition behavior
-  — is real and tested either way.
+* STUBBED residual metadata decode (`make_fake_payload` /
+  `decode_media_meta`; color/interlaced images, compressed audio/video
+  codecs — no PIL/ffmpeg dependency): binary payloads carry a
+  deterministic fake header `MM1|<kind>|<width>|<height>|`; a real
+  decoder drops in behind the `_HAS_PIL` import guard. The Spark-side
+  contract — schema, batching, partition behavior — is real and tested
+  either way.
 """
 
 from __future__ import annotations
@@ -604,93 +605,3 @@ def with_synth_images(df: DataFrame, id_col: str) -> DataFrame:
             )
 
     return df.select(id_col).mapInPandas(batches, "id long, payload binary")
-
-
-def resize_stub(
-    df: DataFrame, id_col: str, bin_col: str, max_dim: int = 256
-) -> DataFrame:
-    """Resize plumbing: (id, width, height, payload) -> capped dims
-    preserving aspect ratio, payload rewritten with the new header. A real
-    implementation swaps the dimension math + header rewrite for
-    PIL.Image.thumbnail over BytesIO; the binary-in/binary-out Arrow batch
-    shape, schema and partition behavior are identical."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ws, hs, outs = [], [], [], []
-            for i, r in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(r) if r is not None else b""
-                kind, wd, ht, ok = _decode_header(raw)
-                if not ok or wd <= 0 or ht <= 0:
-                    nw, nh = -1, -1
-                    payload = raw
-                else:
-                    scale = min(1.0, max_dim / max(wd, ht))
-                    nw, nh = max(int(wd * scale), 1), max(int(ht * scale), 1)
-                    body = raw.split(b"|", 4)[4] if raw.count(b"|") >= 4 else b""
-                    payload = b"|".join(
-                        [b"MM1", kind.encode(), str(nw).encode(),
-                         str(nh).encode(), body]
-                    )
-                ids.append(int(i)); ws.append(nw); hs.append(nh); outs.append(payload)
-            yield pd.DataFrame({
-                "id": pd.array(ids, dtype="int64"),
-                "width": pd.array(ws, dtype="int32"),
-                "height": pd.array(hs, dtype="int32"),
-                "payload": outs,
-            })
-
-    return df.select(id_col, bin_col).mapInPandas(
-        batches, "id long, width int, height int, payload binary"
-    )
-
-
-def extract_features_stub(
-    df: DataFrame, id_col: str, bin_col: str, dim: int = 8
-) -> DataFrame:
-    """Feature-extraction plumbing: binary payload -> float vector. The
-    deterministic stand-in is a normalized byte histogram over ``dim``
-    buckets (real math over the real bytes — exercises the binary->vector
-    Arrow path end to end); a real extractor replaces the histogram with a
-    model forward pass, same signature and schema."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        # byte histogram via np.frombuffer + bincount — no per-byte Python
-        for pdf in it:
-            ids, feats = [], []
-            for i, r in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(r) if r is not None else b""
-                arr = np.frombuffer(raw, dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim).astype(np.float64)
-                n = float(len(raw)) or 1.0
-                ids.append(int(i))
-                feats.append((hist / n).tolist())
-            yield pd.DataFrame({"id": pd.array(ids, dtype="int64"),
-                                "features": feats})
-
-    return df.select(id_col, bin_col).mapInPandas(
-        batches, "id long, features array<double>"
-    )
-
-
-def frame_sample_stub(df: DataFrame, id_col: str, bin_col: str, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling stub: emits (id, frame_idx) rows for frames the
-    decoder WOULD extract (height acts as fake frame count). Real impl would
-    yield decoded frame bytes; plumbing (explode cardinality change through
-    mapInPandas) is the tested part."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, frames = [], []
-            for i, r in zip(pdf[id_col], pdf[bin_col]):
-                kind, _w, h, ok = _decode_header(bytes(r) if r is not None else b"")
-                if ok and kind == "video":
-                    for f in range(0, max(h, 0), every_n):
-                        ids.append(int(i))
-                        frames.append(f)
-            yield pd.DataFrame({"id": pd.array(ids, dtype="int64"),
-                                "frame_idx": pd.array(frames, dtype="int32")})
-
-    return df.select(id_col, bin_col).mapInPandas(batches, "id long, frame_idx int")

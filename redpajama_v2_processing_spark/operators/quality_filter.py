@@ -37,11 +37,6 @@ def with_quality_label(df_with_signals: DataFrame) -> DataFrame:
     return df_with_signals.withColumn("keep", keep).withColumn("drop_reason", reason)
 
 
-def quality_filter(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """signals + labels + filter, in one narrow pipeline (no shuffle)."""
-    return with_quality_label(with_signals(docs, text_col)).where(F.col("keep"))
-
-
 def source_quality_report(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """DF(source, n_docs, n_keep, keep_rate, mean_words): the per-source
     quality monitoring surface — which feeds are sending junk and at what

@@ -1,15 +1,15 @@
-"""Sampling / repartitioning utilities.
+"""Sampling and mixing utilities.
 
 The reference downsamples with python `random.sample` over row-group
-slices (src/downsample_parquet.py:15-47) and "shuffles" by rewriting files
-(src/shuffle_dataset.py:31-45). Spark-side:
+slices (src/downsample_parquet.py:15-47). Spark-side, every operator here
+is deterministic (key hashes and id order instead of RNG state):
 
-* ``hash_sample`` — deterministic, engine-portable sampling by hash-mod on
-  a key (used by oracle-checked queries and for reproducible threshold
-  sampling);
-* ``seeded_sample`` — Bernoulli `df.sample` (statistical path);
-* ``spread`` — `repartition(n, rand-free key)`: the reference's manual
-  127-shard fan-out (src/shard_parquet.py:50) is just a partition count.
+* ``hash_sample`` — engine-portable sampling by hash-mod on a key (used by
+  oracle-checked queries and for reproducible threshold sampling);
+* ``lang_ratio_downsample`` — the reference's per-language ratios;
+* ``domain_cap`` / ``domain_blocklist_filter`` — per-host controls;
+* ``token_budget_mix`` / ``temperature_token_mix`` — per-source token
+  budgets (downsample or epoch-oversample).
 """
 
 from __future__ import annotations
@@ -55,21 +55,6 @@ def lang_ratio_downsample(
     for lang, r in sorted(ratios.items()):
         thr = F.when(F.col(lang_col) == lang, F.lit(int(round(r * denom)))).otherwise(thr)
     return df.where(h < thr)
-
-
-def seeded_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
-
-
-def spread(df: DataFrame, n: int, key_col: str | None = None) -> DataFrame:
-    return df.repartition(n, F.col(key_col)) if key_col else df.repartition(n)
-
-
-def shuffle_rows(df: DataFrame, seed: int = 66) -> DataFrame:
-    """Seeded full-row shuffle (the reference's buffered HF shuffle,
-    src/shuffle_dataset.py:31-45, seed=66). Only needed when downstream
-    consumers are order-sensitive — the engine's own operators are not."""
-    return df.orderBy(F.rand(seed))
 
 
 def domain_cap(

@@ -1,6 +1,5 @@
 """Event-stream operators over the batch `events` table: tumbling windows
-and gap-based sessionization (window functions; the Structured-Streaming
-variants live in streaming/ingest.py).
+and gap-based sessionization (window functions).
 """
 
 from __future__ import annotations

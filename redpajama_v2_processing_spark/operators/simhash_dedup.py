@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import PROD_SIMHASH, SIMHASH_BITS
+from ..config import SIMHASH_BITS
 from ..functions.hashing import md5int_seeded, xxhash_seeded
 from ..functions.text import tokens, normalize
 
@@ -64,39 +64,6 @@ def with_simhash(docs: DataFrame, id_col: str, text_col: str = "text",
         F.lit(0).cast("bigint"),
     )
     return votes.select("id", sim.alias("simhash"))
-
-
-def token_hash_array(text, portable: bool = True):
-    """array<bigint> of per-token hashes (the simhash vote inputs) as a
-    row-local expression. STAGE this as its own column before consuming —
-    simhash_from_hashes references it once per bit, and an inlined
-    transform would re-hash every token per bit."""
-    fam = md5int_seeded if portable else xxhash_seeded
-    return F.transform(tokens(normalize(text)), lambda t: fam(0, t))
-
-
-def simhash_from_hashes(hv, bits: int = SIMHASH_BITS):
-    """Row-local simhash from a STAGED token-hash array column: bit b is
-    set iff the per-token ±1 votes on bit b sum positive. No aggregation
-    node, so it composes with Structured Streaming (the grouped
-    formulation in with_simhash would be a streaming aggregate); the
-    folds are higher-order functions (interpreted) — fine at ingest
-    rates, while the batch path keeps the flat codegen aggregation.
-    Empty docs yield 0 (same as with_simhash's coalesce)."""
-    def vote(b: int):
-        return F.aggregate(
-            hv,
-            F.lit(0).cast("bigint"),
-            lambda acc, h: acc
-            + (F.shiftright(h, b).bitwiseAND(F.lit(1)).cast("bigint") * 2 - 1),
-        )
-
-    out = F.lit(0).cast("bigint")
-    for b in range(bits):
-        out = out + F.when(vote(b) > 0, F.lit(1 << b).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-    return out
 
 
 def _banded_simhash(sh: DataFrame, bits: int, band_bits: int) -> DataFrame:

@@ -4,7 +4,7 @@ Web corpora are host-skewed: a handful of hosts contribute a large share of
 URLs, and boilerplate pages create hot LSH buckets. AQE splits skewed
 shuffle partitions at runtime (on in session.py); these helpers handle the
 *logical* hot keys AQE cannot fix (a single group-by key that is itself
-huge): two-phase salted aggregation and salted join keys.
+huge): two-phase salted aggregation.
 """
 
 from __future__ import annotations
@@ -31,18 +31,3 @@ def salted_count(df: DataFrame, key_col: str, n_salts: int = 32) -> DataFrame:
     salted = with_salt(df, n_salts)
     partial = salted.groupBy(key_col, "_salt").agg(F.count("*").alias("_c"))
     return partial.groupBy(key_col).agg(F.sum("_c").alias("n"))
-
-
-def salted_join_small_skewed(
-    big: DataFrame, small: DataFrame, key: str, n_salts: int = 16
-) -> DataFrame:
-    """Equi-join where `big` has hot keys: replicate `small` n_salts times
-    with an explicit salt, salt `big` rows randomly-by-hash, join on
-    (key, salt). Same rows out as the plain join."""
-    big_s = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts))
-    )
-    small_s = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return big_s.join(small_s, [key, "_salt"]).drop("_salt")

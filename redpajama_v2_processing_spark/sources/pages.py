@@ -23,14 +23,6 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
 
 
-def read_pages_json(spark: SparkSession, path: str) -> DataFrame:
-    """JSONL ingest variant (the reference's primary document format,
-    README.md:42-48). html arrives base64/binary-less here: text-only."""
-    return spark.read.schema(
-        "url string, warc_ts timestamp, text string, lang string"
-    ).json(path)
-
-
 def with_ids(df: DataFrame) -> DataFrame:
     """id_int = xxhash64(url): the engine's join key (SURVEY.md §1.3 —
     replaces the reference's crawl/file/row_idx composite id,

@@ -32,9 +32,6 @@ from pyspark.sql import functions as F
 from ..operators.connected_components import connected_components, keep_min_id
 from ..operators.minhash_lsh import candidate_edges
 
-# reference band counts per similarity level (src/minhashlsh.py:101)
-RPV2_BAND_COUNTS: dict[str, int] = {"0.7": 14, "0.8": 9, "0.9": 5, "1.0": 1}
-
 _U63 = 1 << 63
 
 

@@ -87,8 +87,7 @@ def parse_warc_records(
 
 
 def _wet_decode(batches):
-    """Arrow-batch WET decoder shared by the batch source (``read_wet``)
-    and the streaming tier (``streaming.ingest.stream_wet_ingest``)."""
+    """Arrow-batch WET decoder behind ``read_wet``."""
     import pandas as pd
 
     for pdf in batches:

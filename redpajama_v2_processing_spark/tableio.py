@@ -101,17 +101,6 @@ def read_table(
     return spark.read.parquet(_live_data_dir(table_dir, version))
 
 
-def write_jsonl(df: DataFrame, path: str, compression: str | None = "gzip") -> None:
-    """JSONL sink (the reference's golden/export format, README.md:42-48;
-    its line-by-line json.dumps writers at src/minhashlsh.py:176-188 are a
-    single distributed write here). Timestamps serialize as ISO-8601 —
-    the DateTimeEncoder concern (src/file_helpers.py:64-68) is native."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
-
-
 def commit_table(
     df: DataFrame,
     table_dir: str,

@@ -9,9 +9,7 @@ from pyspark.sql import functions as F
 from redpajama_v2_processing_spark.operators.ann import (
     ann_lsh_topk, cosine_topk, label_centroids,
 )
-from redpajama_v2_processing_spark.operators.jaccard import (
-    jaccard_candidate_pairs, jaccard_vs_query,
-)
+from redpajama_v2_processing_spark.operators.jaccard import jaccard_vs_query
 from redpajama_v2_processing_spark.operators.minhash_lsh import (
     candidate_edges, lsh_buckets, minhash_bands, salted_bucket_edges,
 )
@@ -59,13 +57,6 @@ def test_jaccard_vs_query_exact_values(spark):
     assert out[0] == 1.0 and out[1] == 1.0
     assert out[2] == round(1 / 3, 6)  # {a b c, b c x} vs {a b c, b c d}
     assert out[3] == 0.0
-
-
-def test_jaccard_candidate_pairs(spark):
-    df = docs_frame(spark, ["one two three four five six", "one two three four five six",
-                            "alpha beta gamma delta eps zeta"])
-    pairs = jaccard_candidate_pairs(df, "doc_id", min_sim=0.9).collect()
-    assert {(r.src, r.dst, r.jaccard) for r in pairs} == {(1, 0, 1.0)}
 
 
 def test_simhash_identity_and_near(spark):

@@ -6,14 +6,10 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from redpajama_v2_processing_spark.functions.perplexity import (
-    char_bigram_model, char_bigram_perplexity_udf, with_unigram_perplexity,
-)
-from redpajama_v2_processing_spark.operators.sampling import hash_sample, seeded_sample
+from redpajama_v2_processing_spark.functions.perplexity import with_unigram_perplexity
+from redpajama_v2_processing_spark.operators.sampling import hash_sample
 from redpajama_v2_processing_spark.operators.sessionize import sessionize, tumbling_counts
-from redpajama_v2_processing_spark.operators.skew import (
-    salted_count, salted_join_small_skewed,
-)
+from redpajama_v2_processing_spark.operators.skew import salted_count
 from tests.conftest import docs_frame
 
 
@@ -54,25 +50,11 @@ def test_hash_sample_deterministic_and_disjoint(spark):
     assert a != c  # different salt, different (deterministic) sample
 
 
-def test_seeded_sample_reproducible(spark):
-    df = spark.range(1000)
-    assert seeded_sample(df, 0.1, seed=5).count() == seeded_sample(df, 0.1, seed=5).count()
-
-
 def test_salted_count_equals_plain(spark, pages_small):
     plain = {r.lang: r.n for r in
              pages_small.groupBy("lang").agg(F.count("*").alias("n")).collect()}
     salted = {r.lang: r.n for r in salted_count(pages_small, "lang").collect()}
     assert plain == salted
-
-
-def test_salted_join_equals_plain(spark):
-    big = spark.range(500).select((F.col("id") % 5).alias("k"), F.col("id").alias("v"))
-    small = spark.createDataFrame([(i, f"dim{i}") for i in range(5)], "k long, name string")
-    plain = big.join(small, "k").select("k", "v", "name")
-    salted = salted_join_small_skewed(big, small, "k", n_salts=4).select("k", "v", "name")
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
 
 
 def test_unigram_perplexity_bounds(spark):
@@ -150,20 +132,6 @@ def test_perplexity_buckets_tercile_balance(spark, pages_small):
         if total >= 9:
             assert set(bs) == {"head", "middle", "tail"}, (lang, bs)
             assert max(bs.values()) - min(bs.values()) <= total // 3 + 2, (lang, bs)
-
-
-def test_char_bigram_perplexity_udf(spark):
-    df = docs_frame(spark, ["abab abab", "zzzz zzzz", ""])
-    model = char_bigram_model(df)
-    udf = char_bigram_perplexity_udf(spark, model, vocab_logp=-10.0)
-    out = {r.doc_id: r.p for r in df.select("doc_id", udf("text").alias("p")).collect()}
-    assert out[2] == 0.0
-    assert out[0] > 1.0 and out[1] > 1.0
-    # arrow-batched plan: the only python node is ArrowEvalPython
-    plan = df.select(udf("text")).queryExecution() if False else (
-        df.select(udf("text"))._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
 
 
 def test_dsir_weights_prefer_target_like_docs(spark):
@@ -264,71 +232,6 @@ def test_perplexity_buckets_approx_knob(spark, pages_small):
     assert n == docs.count()
     # interpolation-vs-nearest-rank can flip only boundary docs
     assert agree >= n - 4 * docs.select("lang").distinct().count()
-
-
-def test_langid_model_udf_swap_seam(spark):
-    """Config-switched langid slot: model_path=None yields the
-    deterministic stand-in; a model path + loader yields real inference —
-    both branches schema-identical (string), so pipelines swap by config."""
-    from redpajama_v2_processing_spark.functions.langid import (
-        langid_model_udf, langid_pandas_udf,
-    )
-
-    df = docs_frame(spark, ["the cat sat on the mat", "der hund und die katze"])
-
-    class FakeFastText:
-        def predict(self, texts):
-            return ([["__label__xx"] for _ in texts],
-                    [[1.0] for _ in texts])
-
-    def loader(path):
-        assert path == "/models/lid.bin"  # surfaces as a task failure if wrong
-        return FakeFastText()
-
-    stand_in = langid_model_udf(None)
-    assert stand_in is langid_pandas_udf
-    real = langid_model_udf("/models/lid.bin", loader=loader)
-
-    a = df.select("doc_id", stand_in("text").alias("langid"))
-    b = df.select("doc_id", real("text").alias("langid"))
-    assert a.schema == b.schema
-    got_a = {r.doc_id: r.langid for r in a.collect()}
-    got_b = {r.doc_id: r.langid for r in b.collect()}
-    assert got_a[0] == "en" and got_a[1] == "de"   # stand-in lexicon
-    assert set(got_b.values()) == {"xx"}            # fake model labels
-    # (the loader runs lazily INSIDE the Python worker — driver-side state
-    # cannot observe it; a wrong path asserts inside the task instead)
-
-
-def test_perplexity_model_udf_swap_seam(spark):
-    """Config-switched KenLM slot: without a model path the in-engine
-    char-bigram stand-in scores; with one, a KenLM-shaped object does
-    (perplexity = 10^(-score/n_tokens)) — schema-identical double."""
-    from redpajama_v2_processing_spark.functions.perplexity import (
-        perplexity_model_udf,
-    )
-
-    df = docs_frame(spark, ["abab abab", "zzzz zzzz", ""])
-
-    class FakeKenLM:
-        def score(self, s):
-            return -2.0 * len(s.split())  # log10 prob
-
-    fb = char_bigram_model(df)
-    stand_in = perplexity_model_udf(spark, None, fallback_model=fb,
-                                    vocab_logp=-10.0)
-    real = perplexity_model_udf(spark, "/models/web.arpa",
-                                loader=lambda p: FakeKenLM())
-    a = df.select("doc_id", stand_in("text").alias("p"))
-    b = df.select("doc_id", real("text").alias("p"))
-    assert a.schema == b.schema
-    got = {r.doc_id: r.p for r in b.collect()}
-    assert got[0] == got[1] == 100.0  # 10^(2n/n)
-    assert got[2] == 0.0
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        perplexity_model_udf(spark, None)  # fallback needs a trained model
 
 
 def test_url_canonicalize_contract(spark):

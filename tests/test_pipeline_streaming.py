@@ -121,36 +121,6 @@ def test_streaming_labels_equal_batch(spark, tmp_path):
     assert batch.exceptAll(stream).count() == 0
 
 
-def test_streaming_windowed_rates(spark, tmp_path):
-    src_dir = str(tmp_path / "pages_rates")
-    write_pages(spark, src_dir, n_rows=60, seed=13, partitions=2)
-    from redpajama_v2_processing_spark.streaming.ingest import stream_lang_rates
-
-    out_dir = str(tmp_path / "rates_out")
-    q = stream_lang_rates(spark, src_dir, out_dir, str(tmp_path / "ckpt2"))
-    q.awaitTermination(120)
-    got1 = spark.read.parquet(out_dir).agg(F.sum("n_pages")).collect()[0][0]
-    # append mode: windows still inside the watermark stay open at stream end
-    assert 0 < got1 <= 60
-
-    # a far-future sentinel row advances the watermark; resuming from the
-    # same checkpoint closes every original window (late-data semantics)
-    sentinel = spark.createDataFrame(
-        [("https://flush/x", __import__("datetime").datetime(2027, 1, 1),
-          bytearray(b"<html></html>"), "flush", "en")],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    sentinel.write.mode("append").parquet(src_dir)
-    q2 = stream_lang_rates(spark, src_dir, out_dir, str(tmp_path / "ckpt2"))
-    q2.awaitTermination(120)
-    got2 = (
-        spark.read.parquet(out_dir)
-        .where(F.col("window_start") < "2026-12-31")
-        .agg(F.sum("n_pages")).collect()[0][0]
-    )
-    assert got2 == 60
-
-
 def test_real_image_decode_roundtrip(spark):
     """parse_image_meta must recover the exact dimensions from REAL
     minimal PNG/GIF/JPEG files (built with stdlib struct/zlib), reject
@@ -209,7 +179,7 @@ def test_jpeg_marker_walk_edge_cases():
 
 def test_multimodal_plumbing(spark):
     from redpajama_v2_processing_spark.operators.multimodal import (
-        decode_media_meta, frame_sample_stub, make_fake_payload,
+        decode_media_meta, make_fake_payload,
     )
 
     df = spark.range(6).select(
@@ -222,13 +192,8 @@ def test_multimodal_plumbing(spark):
     meta = decode_media_meta(df, "id", "payload").collect()
     assert len(meta) == 6 and all(m.ok for m in meta)
     assert {m.kind for m in meta} == {"image", "video"}
-    frames = frame_sample_stub(df, "id", "payload", every_n=10).collect()
-    # only video rows emit frames; id=1 -> h=15 -> frames 0,10
-    by_id = {}
-    for r in frames:
-        by_id.setdefault(r.id, []).append(r.frame_idx)
-    assert by_id[1] == [0, 10]
-    assert 0 not in by_id  # images emit none
+    # header dims round-trip: id=1 -> a 320x15 video
+    assert {m.id: (m.kind, m.width, m.height) for m in meta}[1] == ("video", 320, 15)
 
 
 def test_cli_generate_and_run(tmp_path, spark):
@@ -391,149 +356,6 @@ def test_check_completeness(spark, tmp_path, pages_small):
         check_completeness(str(tmp_path / "nope"))
 
 
-def test_streaming_exact_dedup_matches_batch_count(spark, tmp_path):
-    """Streaming exact dedup keeps exactly one page per content
-    fingerprint (the fixture plants duplicate texts), matching the batch
-    distinct-fingerprint count, with bounded watermark state."""
-    from pyspark.sql import functions as F2
-
-    from redpajama_v2_processing_spark.functions.text import fingerprint_hex
-    from redpajama_v2_processing_spark.streaming.ingest import (
-        stream_exact_dedup,
-    )
-
-    src_dir = str(tmp_path / "pages_dedup_stream")
-    write_pages(spark, src_dir, n_rows=100, seed=13, partitions=3)
-    out_dir = str(tmp_path / "dedup_out")
-    q = stream_exact_dedup(spark, src_dir, out_dir, str(tmp_path / "dckpt"))
-    q.awaitTermination(120)
-
-    batch = read_pages(spark, src_dir)
-    n_distinct = (
-        batch.select(fingerprint_hex(F2.col("text")).alias("fp"))
-        .distinct()
-        .count()
-    )
-    got = spark.read.parquet(out_dir)
-    assert got.count() == n_distinct < batch.count()  # dups existed, removed
-    assert got.select("fingerprint").distinct().count() == n_distinct
-
-
-def test_streaming_wet_ingest_exactly_once(spark, tmp_path):
-    """WET files landing in a directory stream through the same Arrow
-    decoder as the batch source: (1) output rows equal read_wet on the
-    same bytes (byte-identical text per url), (2) a file arriving AFTER
-    the first run is ingested incrementally — the checkpoint never
-    re-emits the first file's records (exactly-once at file
-    granularity)."""
-    from redpajama_v2_processing_spark.sources.warc import (
-        read_wet, synth_wet_bytes,
-    )
-    from redpajama_v2_processing_spark.streaming.ingest import stream_wet_ingest
-
-    src = tmp_path / "wet_land"
-    src.mkdir()
-    out = str(tmp_path / "wet_out")
-    ckpt = str(tmp_path / "wet_ckpt")
-
-    recs1 = [(f"https://a.example/{i}", "2024-01-01T00:00:00Z", f"doc one {i}")
-             for i in range(5)]
-    (src / "f1.warc.wet.gz").write_bytes(synth_wet_bytes(recs1, compress=True))
-    q = stream_wet_ingest(spark, str(src), out, ckpt)
-    q.awaitTermination(120)
-
-    got1 = {(r.url, r.text) for r in spark.read.parquet(out).collect()}
-    want1 = {(r.url, r.text) for r in read_wet(spark, str(src)).collect()}
-    assert got1 == want1 and len(got1) == 5
-
-    recs2 = [("https://b.example/0", "2024-01-02T00:00:00Z", "doc two")]
-    (src / "f2.warc.wet").write_bytes(synth_wet_bytes(recs2))
-    q2 = stream_wet_ingest(spark, str(src), out, ckpt)
-    q2.awaitTermination(120)
-
-    got2 = [(r.url, r.text) for r in spark.read.parquet(out).collect()]
-    assert len(got2) == 6  # 5 + 1: no re-emission of f1's records
-    assert ("https://b.example/0", "doc two") in got2
-
-
-def test_stateful_streaming_sessionize(spark, tmp_path):
-    """applyInPandasWithState sessionization: gap-closed sessions emit in
-    the batch that observes the gap; still-open sessions flush when the
-    event-time watermark (advanced by a later file/batch) passes
-    last_event + gap. Results must match the batch lag-window semantics."""
-    import datetime as dt
-
-    from redpajama_v2_processing_spark.streaming.stateful import stream_sessions
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def ev(eid, ts, uid):
-        return (eid, ts, uid, "click", 1.0, "{}")
-
-    schema = ("event_id long, ts timestamp, user_id long, event_type string, "
-              "value double, props string")
-    m = dt.timedelta(minutes=1)
-    real = [
-        # user 1: session A (3 events), 2h gap, session B (2 events)
-        ev(1, t0, 1), ev(2, t0 + 5 * m, 1), ev(3, t0 + 10 * m, 1),
-        ev(4, t0 + 130 * m, 1), ev(5, t0 + 131 * m, 1),
-        # user 2: one session (2 events)
-        ev(6, t0 + 2 * m, 2), ev(7, t0 + 20 * m, 2),
-    ]
-    sentinel = [ev(99, t0 + dt.timedelta(days=30), 99)]
-    src = str(tmp_path / "events_stream")
-    spark.createDataFrame(real, schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(sentinel, schema).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "sessions_out")
-    q = stream_sessions(
-        spark, src, out, str(tmp_path / "ckpt"), gap_minutes=30,
-        max_files_per_trigger=1, available_now=True,
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.read.parquet(out).collect()
-        if r.user_id != 99
-    }
-    assert got == {
-        (1, t0, t0 + 10 * m, 3),
-        (1, t0 + 130 * m, t0 + 131 * m, 2),
-        (2, t0 + 2 * m, t0 + 20 * m, 2),
-    }
-
-
-def test_multimodal_resize_and_features(spark):
-    from redpajama_v2_processing_spark.operators.multimodal import (
-        decode_media_meta, extract_features_stub, make_fake_payload, resize_stub,
-    )
-
-    df = spark.range(4).select(
-        F.col("id"),
-        make_fake_payload(
-            "image", (F.col("id") * 400 + 100).cast("int"), F.lit(200), F.lit("b|dy"),
-        ).alias("payload"),
-    )
-    rs = {r.id: r for r in resize_stub(df, "id", "payload", max_dim=256).collect()}
-    # id=0: 100x200 fits; id=1: 500x200 -> 256x102 (aspect preserved)
-    assert (rs[0].width, rs[0].height) == (100, 200)
-    assert (rs[1].width, rs[1].height) == (256, 102)
-    assert all(max(r.width, r.height) <= 256 for r in rs.values())
-    # resized payloads re-decode with the new dims and keep the body
-    redec = {r.id: r for r in decode_media_meta(
-        spark.createDataFrame(
-            [(i, bytes(r.payload)) for i, r in rs.items()], "id long, payload binary"
-        ), "id", "payload").collect()}
-    assert redec[1].width == 256 and redec[1].height == 102 and redec[1].ok
-
-    fe = {r.id: r.features for r in extract_features_stub(df, "id", "payload", dim=8).collect()}
-    assert all(len(v) == 8 for v in fe.values())
-    assert all(abs(sum(v) - 1.0) < 1e-9 for v in fe.values())  # normalized
-    # deterministic
-    fe2 = {r.id: r.features for r in extract_features_stub(df, "id", "payload", dim=8).collect()}
-    assert fe == fe2
-
-
 def test_snapshot_history_and_time_travel(spark, tmp_path, pages_small):
     import pytest as _pt
 
@@ -622,148 +444,3 @@ def test_compact_table_rewrites_and_clusters(spark, tmp_path):
         ranges.append((min(col), max(col)))
     ranges.sort()
     assert all(ranges[i][1] < ranges[i + 1][0] for i in range(len(ranges) - 1))
-
-
-def test_row_local_simhash_equals_grouped(spark):
-    """The streaming-compatible row-local simhash expression must agree
-    bit-for-bit with the batch grouped formulation on every doc,
-    including empty/whitespace docs (both yield 0)."""
-    from pyspark.sql import functions as F2
-
-    from redpajama_v2_processing_spark.operators.simhash_dedup import (
-        simhash_from_hashes, token_hash_array, with_simhash,
-    )
-
-    df = spark.createDataFrame(
-        [(0, "the quick brown fox jumps over the lazy dog"),
-         (1, "the quick brown fox jumps over the lazy cat"),
-         (2, ""), (3, "   "), (4, "one"), (5, None)],
-        "doc_id long, text string",
-    )
-    grouped = {r.id: r.simhash
-               for r in with_simhash(df, "doc_id", bits=60).collect()}
-    rowlocal = {
-        r.doc_id: r.sh
-        for r in df.withColumn("_hv", token_hash_array(F2.col("text")))
-        .select("doc_id", simhash_from_hashes(F2.col("_hv"), 60).alias("sh"))
-        .collect()
-    }
-    # null text: token_hash_array(NULL) is NULL -> fold yields NULL; the
-    # grouped path coalesces to 0 — normalize for comparison
-    assert {k: (v if v is not None else 0) for k, v in rowlocal.items()} == grouped
-
-
-def test_streaming_simhash_dedup_collapses_near_dups(spark, tmp_path):
-    """Streaming signature-tier near-dup dedup: one page survives per
-    60-bit simhash (the fixture plants exact + near duplicate texts),
-    matching the batch distinct-signature count."""
-    from redpajama_v2_processing_spark.operators.simhash_dedup import (
-        with_simhash,
-    )
-    from redpajama_v2_processing_spark.streaming.ingest import (
-        stream_simhash_dedup,
-    )
-
-    src_dir = str(tmp_path / "pages_sh_stream")
-    write_pages(spark, src_dir, n_rows=100, seed=13, partitions=3)
-    out_dir = str(tmp_path / "sh_out")
-    q = stream_simhash_dedup(spark, src_dir, out_dir, str(tmp_path / "shckpt"))
-    q.awaitTermination(120)
-
-    batch = read_pages(spark, src_dir)
-    n_distinct = (
-        with_simhash(batch, "url", bits=60)
-        .select("simhash").distinct().count()
-    )
-    got = spark.read.parquet(out_dir)
-    assert got.count() == n_distinct < batch.count()
-    assert got.select("simhash").distinct().count() == n_distinct
-
-
-def test_streaming_url_dedup_collapses_recrawl_variants(spark, tmp_path):
-    """Streaming canonical-URL dedup: messy recrawl variants of one
-    resource (www/case/port/tracking-param noise) collapse to one output
-    page per canonical url, matching the batch canonical-distinct
-    count."""
-    from pyspark.sql import functions as F2
-
-    from redpajama_v2_processing_spark.functions.url import canonicalize_url
-    from redpajama_v2_processing_spark.streaming.ingest import stream_url_dedup
-
-    src_dir = str(tmp_path / "pages_url_stream")
-    write_pages(spark, src_dir, n_rows=60, seed=7, partitions=2)
-    # remap urls so consecutive triples are recrawl variants of one page
-    base = read_pages(spark, src_dir)
-    grp = (F2.xxhash64("url") % 20).cast("string")
-    messy = base.withColumn(
-        "url",
-        F2.element_at(
-            F2.array(
-                F2.concat(F2.lit("http://site-"), grp, F2.lit(".com/p")),
-                F2.concat(F2.lit("HTTP://WWW.SITE-"), grp, F2.lit(".COM:80/p/")),
-                F2.concat(F2.lit("http://site-"), grp, F2.lit(".com/p?utm_s=1#f")),
-            ),
-            (F2.pmod(F2.xxhash64("url", F2.lit(1)), F2.lit(3)) + 1).cast("int"),
-        ),
-    )
-    messy_dir = str(tmp_path / "pages_url_messy")
-    messy.write.parquet(messy_dir)
-
-    out_dir = str(tmp_path / "url_out")
-    q = stream_url_dedup(spark, messy_dir, out_dir, str(tmp_path / "uckpt"))
-    q.awaitTermination(120)
-
-    n_canon = (
-        spark.read.parquet(messy_dir)
-        .select(canonicalize_url(F2.col("url")).alias("c"))
-        .distinct()
-        .count()
-    )
-    got = spark.read.parquet(out_dir)
-    assert got.count() == n_canon < messy.count()
-    assert got.select(canonicalize_url(F2.col("url")).alias("c")).distinct().count() == n_canon
-
-
-def test_stream_incremental_dedup_against_history(spark, tmp_path):
-    """Stream-static probe: pages whose content fingerprint is in the
-    frozen history never reach the sink; within-stream copies collapse to
-    their first sighting. Result equals the batch incremental keep over
-    the same split."""
-    import datetime
-
-    from redpajama_v2_processing_spark.functions.text import fingerprint_int
-    from redpajama_v2_processing_spark.streaming.ingest import (
-        stream_incremental_dedup,
-    )
-
-    ts = datetime.datetime(2024, 1, 1)
-
-    def page(url, text):
-        return (url, ts, bytearray(b"<html></html>"), text, "en")
-
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    history = spark.createDataFrame(
-        [page("https://old/a", "history doc alpha"),
-         page("https://old/b", "history doc beta")], schema)
-    src_dir = str(tmp_path / "pages_inc")
-    spark.createDataFrame(
-        [page("https://new/1", "history  DOC alpha"),   # normalized hit -> drop
-         page("https://new/2", "fresh content one"),    # kept
-         page("https://new/3", "fresh CONTENT one"),    # within-stream dup -> drop
-         page("https://new/4", "fresh content two")],   # kept
-        schema).write.parquet(src_dir)
-
-    hist_keys = history.select(fingerprint_int(F.col("text")))
-    out_dir = str(tmp_path / "inc_out")
-    q = stream_incremental_dedup(
-        spark, src_dir, hist_keys, out_dir, str(tmp_path / "ckpt_inc")
-    )
-    q.awaitTermination(120)
-
-    kept = sorted(r.url for r in spark.read.parquet(out_dir).collect())
-    # the history hit (new/1) never appears; exactly ONE of the
-    # within-stream copies survives — WHICH one is processing-order
-    # dependent (dropDuplicatesWithinWatermark keeps the first row seen,
-    # not the min id; the batch twin is the deterministic min-id rule)
-    assert len(kept) == 2 and kept[1] == "https://new/4"
-    assert kept[0] in ("https://new/2", "https://new/3")

@@ -4,11 +4,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from redpajama_v2_processing_spark.functions.langid import langid_struct
+from redpajama_v2_processing_spark.functions.langid import with_langid
 from redpajama_v2_processing_spark.functions.signals import with_signals
-from redpajama_v2_processing_spark.operators.quality_filter import (
-    quality_filter, with_quality_label,
-)
+from redpajama_v2_processing_spark.operators.quality_filter import with_quality_label
 from redpajama_v2_processing_spark.config import QUANTILE_PROFILES
 from redpajama_v2_processing_spark.functions.vectors import round_half_up
 from redpajama_v2_processing_spark.operators import thresholds
@@ -41,7 +39,8 @@ def test_quality_filter_removes_dropped(spark):
         "the quick brown fox jumps over the lazy dog again and again today",
         "x",
     ])
-    assert [r.doc_id for r in quality_filter(df).select("doc_id").collect()] == [0]
+    kept = with_quality_label(with_signals(df)).where(F.col("keep"))
+    assert [r.doc_id for r in kept.select("doc_id").collect()] == [0]
 
 
 def test_rule_order_precedence(spark):
@@ -243,8 +242,7 @@ def test_langid_markers(spark):
         "这是一个中文文档测试页面": "zh",
     }
     df = spark.createDataFrame([(t,) for t in cases], "text string")
-    s = langid_struct(F.col("text"))
-    got = {r.text: r.lang for r in df.select("text", s["lang"].alias("lang")).collect()}
+    got = {r.text: r.langid for r in with_langid(df).select("text", "langid").collect()}
     for text, want in cases.items():
         assert got[text] == want, (text, got[text], want)
 
@@ -253,8 +251,7 @@ def test_langid_fixture_accuracy(spark, pages_small):
     """On clean fixture pages with correct tags, lexicon langid should hit
     the tag most of the time (contaminated rows excluded by construction
     is impossible here, so just require a solid majority)."""
-    s = langid_struct(F.col("text"))
-    scored = pages_small.select("lang", s["lang"].alias("pred"))
+    scored = with_langid(pages_small).select("lang", F.col("langid").alias("pred"))
     total = scored.count()
     hit = scored.where(F.col("lang") == F.col("pred")).count()
     assert hit / total > 0.8

@@ -1,26 +1,11 @@
-"""JSONL round-trip source/sink, compression codecs, seeded shuffle."""
+"""Sources and sinks: compression codecs, RPv2 signature interop, WET
+parsing, sampling and shard accounting."""
 
 from __future__ import annotations
 
 import glob
 
 from pyspark.sql import functions as F
-
-from redpajama_v2_processing_spark.operators.sampling import shuffle_rows
-from redpajama_v2_processing_spark.sources.pages import read_pages_json
-from redpajama_v2_processing_spark.tableio import write_jsonl
-
-
-def test_jsonl_roundtrip_with_timestamps(spark, tmp_path, pages_small):
-    out = str(tmp_path / "pages_jsonl")
-    write_jsonl(pages_small.select("url", "warc_ts", "text", "lang"), out)
-    assert glob.glob(f"{out}/*.json.gz")  # gzip codec applied
-    back = read_pages_json(spark, out)
-    assert back.count() == pages_small.count()
-    # timestamps survive the ISO round trip exactly
-    a = pages_small.select("url", "warc_ts")
-    b = back.select("url", "warc_ts")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_commit_compression_codec(spark, tmp_path, pages_small):
@@ -32,13 +17,6 @@ def test_commit_compression_codec(spark, tmp_path, pages_small):
 
     files = glob.glob(f"{_live_data_dir(tdir)}/*zstd*.parquet")
     assert files
-
-
-def test_shuffle_rows_seeded(spark):
-    df = spark.range(100)
-    a = [r.id for r in shuffle_rows(df, seed=66).collect()]
-    b = [r.id for r in shuffle_rows(df, seed=66).collect()]
-    assert a == b and sorted(a) == list(range(100))
 
 
 def test_rpv2_signature_interop_roundtrip(spark, tmp_path):
@@ -242,34 +220,24 @@ def test_lang_ratio_downsample_deterministic_and_ratioed(spark):
     assert a == b
 
 
-def test_write_training_shards_layout(spark, tmp_path):
-    """Partitioned shard layout + manifest agree with the relational
-    manifest query; blocks inside a shard stay within its block range."""
-    from pyspark.sql import functions as F
-
+def test_shard_manifest_covers_packed_blocks(spark):
+    """Each manifest shard is a contiguous run of at most 64 packed blocks
+    inside its own block range, and the shards cover every block
+    ``pack_blocks`` emits exactly once."""
     from redpajama_v2_processing_spark.functions.chunking import (
-        shard_manifest, write_training_shards,
+        pack_blocks, shard_manifest,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    dest = str(tmp_path / "shards")
-    write_training_shards(docs, "doc_id", dest, blocks_per_shard=64)
-
-    blocks = spark.read.parquet(f"{dest}/blocks")
-    manifest = {r.shard_idx: r for r in spark.read.parquet(f"{dest}/_manifest").collect()}
-    rel = {r.shard_idx: r for r in shard_manifest(docs, "doc_id").collect()}
-    assert set(manifest) == set(rel)
-    for k, r in rel.items():
-        assert manifest[k].n_blocks == r.n_blocks
-        assert manifest[k].n_docs == r.n_docs
-    got = blocks.groupBy("shard_idx").agg(
-        F.count_distinct("block_idx").alias("nb"),
-        F.min("block_idx").alias("fb"), F.max("block_idx").alias("lb"),
-    )
-    for r in got.collect():
-        m = manifest[r.shard_idx]
-        assert (r.nb, r.fb, r.lb) == (m.n_blocks, m.first_block, m.last_block)
-        assert r.fb >= r.shard_idx * 64 and r.lb < (r.shard_idx + 1) * 64
+    manifest = shard_manifest(docs, "doc_id", blocks_per_shard=64).collect()
+    assert manifest
+    for m in manifest:
+        assert m.first_block >= m.shard_idx * 64
+        assert m.last_block < (m.shard_idx + 1) * 64
+        assert m.n_blocks == m.last_block - m.first_block + 1
+        assert m.n_docs >= 1
+    blocks = pack_blocks(docs, "doc_id").select("block_idx").distinct().count()
+    assert sum(m.n_blocks for m in manifest) == blocks
 
 
 def test_wet_roundtrip_plain_gzip_and_torn(spark, tmp_path):

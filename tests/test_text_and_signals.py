@@ -379,9 +379,7 @@ def test_token_offsets_and_pack_blocks(spark):
 
 
 def test_encoding_noise_signals_and_filter(spark):
-    from redpajama_v2_processing_spark.functions.encoding import (
-        encoding_noise_filter, with_encoding_noise,
-    )
+    from redpajama_v2_processing_spark.functions.encoding import with_encoding_noise
 
     moji = "cafÃ© quote â€œ here"  # 2 mojibake marks
     docs = spark.createDataFrame(
@@ -394,7 +392,8 @@ def test_encoding_noise_signals_and_filter(spark):
         ],
         "doc_id long, text string",
     )
-    sig = {r.doc_id: r for r in with_encoding_noise(docs).collect()}
+    noisy = with_encoding_noise(docs)
+    sig = {r.doc_id: r for r in noisy.collect()}
     assert (sig[0].n_replacement, sig[0].n_ctrl, sig[0].n_mojibake) == (0, 0, 0)
     assert sig[0].noise_ratio == 0.0
     assert sig[1].n_mojibake == 2 and sig[1].n_replacement == 0
@@ -403,7 +402,8 @@ def test_encoding_noise_signals_and_filter(spark):
     assert (sig[4].n_replacement, sig[4].n_ctrl, sig[4].n_mojibake) == (0, 0, 0)
     assert sig[4].noise_ratio == 0.0
 
-    kept = sorted(r.doc_id for r in encoding_noise_filter(docs).collect())
+    budget = (F.col("n_replacement") == 0) & (F.col("noise_ratio") <= 0.002)
+    kept = sorted(r.doc_id for r in noisy.where(budget).collect())
     # 1 and 3 fail the ratio budget on short text; 2 has replacement chars
     assert kept == [0, 4]
 
